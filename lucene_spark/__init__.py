@@ -8,8 +8,9 @@ semantics of Apache Lucene (reference: /root/reference, base version 11.0.0):
 - per-partition segment builds producing blocked, compressed posting lists
   (delta + FOR / VByte / unary-bitset, 128-doc blocks, block-max impacts),
 - shuffle-based sorted segment merge into a global term dictionary,
-- top-k BM25 (k1=1.2, b=0.75) with block-max WAND/MAXSCORE pruning,
-  rank-identical to Lucene's scoring contract (float32, tie-break
+- top-k BM25 (k1=1.2, b=0.75): windowed block-max pruning for single
+  terms and term dismax, an exhaustive leapfrog evaluator for everything
+  else, rank-identical to Lucene's scoring contract (float32, tie-break
   score DESC then docid ASC).
 
 The index is a set of columnar tables (Parquet here; Iceberg in production —

@@ -74,14 +74,11 @@ _ID_ADJ = 6
 _ID_ADV = 7
 _ID_UNK = 8
 
-# JapaneseAnalyzer stoptags.txt top-level classes (subset: the particle /
-# auxiliary / symbol / filler families that file drops)
 # The exact active entries of the reference's default stoptags.txt
 # (analysis/kuromoji/src/resources/.../ja/stoptags.txt — JapaneseAnalyzer's
 # DEFAULT_STOP_TAGS; pinned against the real file in
-# tests/test_javadict_real.py). Both coarse tags (助詞 stops every
-# sub-tag via the top-component match below) and the fine tags are
-# listed, as in the file.
+# tests/test_javadict_real.py). Tags match exactly, so the coarse and the
+# fine tags are both listed, as in the file.
 DEFAULT_STOP_TAGS = frozenset({
     "接続詞", "助詞", "助詞-格助詞", "助詞-格助詞-一般", "助詞-格助詞-引用",
     "助詞-格助詞-連語", "助詞-接続助詞", "助詞-係助詞", "助詞-副助詞",

@@ -9,9 +9,10 @@ Mirrors the *semantics* of the reference's block postings format
   (Lucene103PostingsWriter.java:421-455); freqs PFOR-packed (:458);
 - tail blocks (<128 docs): VByte (PostingsUtil.writeVIntBlock analog, :391-394);
 - per-block competitive (freq, norm) skyline
-  (codecs/CompetitiveImpactAccumulator.java:104-125);
-- level-1 rollup of impacts every 32 blocks (Lucene103PostingsWriter.java:480-532)
-  is represented by ``merge_skylines`` over a block group;
+  (codecs/CompetitiveImpactAccumulator.java:104-125); there is no level-1
+  rollup of impacts (Lucene103PostingsWriter.java:480-532): the only reader
+  of impacts, the windowed block-max top-k in search/segment.py, was faster
+  on per-block skylines alone;
 - singleton pulsing (df==1 -> docid inlined in the term dict, no blocks;
   Lucene103PostingsWriter.java:564-571) is handled by the index builder.
 
@@ -42,10 +43,7 @@ __all__ = [
     "ENC_FOR_DELTA",
     "ENC_BITSET",
     "ENC_VBYTE_TAIL",
-    "ENC_L1_ROLLUP",
-    "L1_GROUP_BLOCKS",
     "skyline",
-    "merge_skylines",
     "encode_term_postings",
     "decode_block_docids",
     "decode_block_freqs",
@@ -59,9 +57,6 @@ ENC_FOR_DELTA = 1    # FOR-packed deltas (delta[0] relative to base)
 ENC_BITSET = 2       # unary bitmap over (base, last_docid]
 ENC_VBYTE_TAIL = 3   # VByte deltas (tail block)
 # 4/5 are runtime pseudo-rows (singleton / delete-list, search/segment.py)
-ENC_L1_ROLLUP = 6    # level-1 skip row: merged skyline of 32 blocks, no
-                     # payload (Lucene103PostingsWriter.java:480-532)
-L1_GROUP_BLOCKS = 32  # LEVEL1_NUM_DOCS / BLOCK_SIZE (Lucene103PostingsFormat.java:345)
 
 
 def skyline(freqs: np.ndarray, norms: np.ndarray) -> list[tuple[int, int]]:
@@ -82,17 +77,6 @@ def skyline(freqs: np.ndarray, norms: np.ndarray) -> list[tuple[int, int]]:
             out.append((f, int(norm)))
             best = f
     return out
-
-
-def merge_skylines(skylines: list[list[tuple[int, int]]]) -> list[tuple[int, int]]:
-    """Union skylines (level-1 rollup / merge accumulation)."""
-    if not skylines:
-        return []
-    freqs = np.array([f for s in skylines for (f, _) in s], dtype=np.int64)
-    norms = np.array([n for s in skylines for (_, n) in s], dtype=np.int64)
-    if freqs.size == 0:
-        return []
-    return skyline(freqs, norms)
 
 
 def skylines_grouped(

@@ -1,7 +1,7 @@
 """Engine constants mirroring the reference's fixed parameters.
 
 Reference citations (paths relative to /root/reference/lucene/):
-- BLOCK_SIZE=128, LEVEL1_FACTOR=32:
+- BLOCK_SIZE=128 (the level-1 skip factor of 32 blocks has no analog here):
   core/src/java/org/apache/lucene/codecs/lucene103/Lucene103PostingsFormat.java:343-353
 - BM25 defaults k1=1.2 b=0.75 discountOverlaps=true:
   core/src/java/org/apache/lucene/search/similarities/BM25Similarity.java:96-98
@@ -12,7 +12,6 @@ Reference citations (paths relative to /root/reference/lucene/):
 """
 
 BLOCK_SIZE = 128            # docs per postings block
-LEVEL1_FACTOR = 32          # blocks per level-1 skip group (4096 docs)
 BM25_K1 = 1.2
 BM25_B = 0.75
 MAX_TOKEN_LENGTH = 255      # tokens longer than this are skipped (position still advances)

@@ -33,8 +33,9 @@ from .search import Searcher
 __all__ = ["gate_queries", "gate_oracle_sql", "entry_query"]
 
 K1, B = "1.2", "0.75"
-_FORMAT_V = "v4"  # bump when the index layout changes to invalidate caches
+_FORMAT_V = "v5"  # bump when the index layout changes to invalidate caches
 # v3: multi-field postings, feature fields, level-1 rollup rows (round 2)
+# v5: level-1 rollup rows removed (older caches would read them as blocks)
 _GATE_ROOT = os.environ.get("LUCENE_SPARK_GATE_DIR", "/tmp/lucene_spark_gate")
 
 # ---------------------------------------------------------------------------

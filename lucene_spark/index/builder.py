@@ -132,12 +132,9 @@ from ..analysis.tokenizer import analyze_terms_positions
 from ..analysis.vectorized import analyze_batch
 from ..analysis.html_extract import extract_text
 from ..codecs.blocks import (
-    ENC_L1_ROLLUP,
     ENC_VBYTE_TAIL,
-    L1_GROUP_BLOCKS,
     encode_positions,
     encode_term_postings,
-    merge_skylines,
 )
 from ..codecs.intcodecs import vbyte_encode_concat
 from ..constants import BLOCK_SIZE
@@ -880,47 +877,6 @@ def _emit_field_postings(
                 impact_freqs=[[int(f) for f, _ in r["impacts"]] for r in rows],
                 impact_norms=[[int(n) for _, n in r["impacts"]] for r in rows],
             )
-            _emit_l1_rollups(extend, term, rows)
-
-
-def _emit_l1_rollups(extend, term: str, rows: list[dict]) -> None:
-    """Level-1 skip rows: one merged skyline per full 32-block group
-    (Lucene103PostingsWriter.writeLevel1SkipData, :480-532). Payload-free
-    (encoding ENC_L1_ROLLUP); the pruner scores these instead of 32
-    per-block skylines and maps them back to blocks by docid span, so the
-    linkage survives merge rebase and re-blocking. The trailing partial
-    group is uncovered — those blocks keep level-0 granularity."""
-    n_groups = len(rows) // L1_GROUP_BLOCKS
-    if n_groups < 1:
-        return
-    g_term, g_no, g_nd, g_first, g_last, g_if, g_in = [], [], [], [], [], [], []
-    for g in range(n_groups):
-        grp = rows[g * L1_GROUP_BLOCKS : (g + 1) * L1_GROUP_BLOCKS]
-        sky = merge_skylines([r["impacts"] for r in grp])
-        g_term.append(term)
-        g_no.append(len(rows) + g)  # sorts after every level-0 block
-        g_nd.append(len(grp))
-        g_first.append(int(grp[0]["first_docid"]))
-        g_last.append(int(grp[-1]["last_docid"]))
-        g_if.append([int(f) for f, _ in sky])
-        g_in.append([int(n) for _, n in sky])
-    extend(
-        KIND_BLOCK,
-        n_groups,
-        term=g_term,
-        block_no=g_no,
-        n_docs=g_nd,
-        base_docid=[0] * n_groups,
-        first_docid=g_first,
-        last_docid=g_last,
-        encoding=[ENC_L1_ROLLUP] * n_groups,
-        docids_enc=[None] * n_groups,
-        freqs_enc=[None] * n_groups,
-        norms_enc=[None] * n_groups,
-        positions_enc=[None] * n_groups,
-        impact_freqs=g_if,
-        impact_norms=g_in,
-    )
 
 
 def _skylines_grouped(

@@ -38,15 +38,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs.blocks import (
-    ENC_L1_ROLLUP,
-    L1_GROUP_BLOCKS,
     decode_block_docids,
     decode_block_freqs,
     decode_payloads,
     decode_positions,
     encode_positions,
     encode_term_postings,
-    merge_skylines,
 )
 from ..codecs.intcodecs import vbyte_encode
 from .reader import IndexReader
@@ -69,9 +66,6 @@ def _rewrite_term_group(
     seg = int(pdf["segment_id"].iloc[0])
     term = pdf["term"].iloc[0]
     dele = deleted_by_seg.get(seg)
-    # drop level-1 rollups (payload-free): regenerated from the re-encoded
-    # blocks below so group spans track the new block boundaries
-    pdf = pdf[pdf["encoding"] != ENC_L1_ROLLUP]
     pdf = pdf.sort_values("block_no", kind="mergesort")
     d_parts, f_parts, n_parts, p_parts, y_parts = [], [], [], [], []
     with_pos = pdf["positions_enc"].iloc[0] is not None
@@ -166,21 +160,6 @@ def _rewrite_term_group(
                 ),
                 "impact_freqs": [int(f) for f, _ in r["impacts"]],
                 "impact_norms": [int(n) for _, n in r["impacts"]],
-            }
-        )
-    for g in range(len(rows) // L1_GROUP_BLOCKS):
-        grp = rows[g * L1_GROUP_BLOCKS : (g + 1) * L1_GROUP_BLOCKS]
-        sky = merge_skylines([r["impacts"] for r in grp])
-        emit(
-            {
-                "kind": KIND_BLOCK, "segment_id": seg, "term": term,
-                "block_no": len(rows) + g, "n_docs": len(grp),
-                "base_docid": 0,
-                "first_docid": int(grp[0]["first_docid"]),
-                "last_docid": int(grp[-1]["last_docid"]),
-                "encoding": ENC_L1_ROLLUP,
-                "impact_freqs": [int(f) for f, _ in sky],
-                "impact_norms": [int(n) for _, n in sky],
             }
         )
     return frame()

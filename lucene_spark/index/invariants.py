@@ -26,12 +26,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..codecs.blocks import (
-    ENC_L1_ROLLUP,
-    decode_block_docids,
-    decode_block_freqs,
-    merge_skylines,
-)
+from ..codecs.blocks import decode_block_docids, decode_block_freqs
 from .reader import IndexReader
 
 __all__ = ["check_index"]
@@ -44,38 +39,9 @@ def _check_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
     seg = int(pdf["segment_id"].iloc[0])
     for (term,), grp in pdf.groupby(["term"], sort=False):
         grp = grp.sort_values("block_no")
-        l1 = grp[grp["encoding"] == ENC_L1_ROLLUP]
-        grp = grp[grp["encoding"] != ENC_L1_ROLLUP]
         prev_last = -1
         walked = 0
         ttf = 0
-        blk_first = grp["first_docid"].to_numpy(np.int64)
-        blk_last = grp["last_docid"].to_numpy(np.int64)
-        for r in l1.itertuples():
-            # level-1 rollup (Lucene103PostingsWriter.java:480-532, checked
-            # like CheckIndex.java:2502-2532): skyline strictly increasing,
-            # span aligned to whole blocks, and == merged covered skylines
-            imf, imn = np.asarray(r.impact_freqs), np.asarray(r.impact_norms)
-            if imf.size == 0 or np.any(np.diff(imf) <= 0) or np.any(np.diff(imn) <= 0):
-                viols.append(f"seg={seg} term={term} l1={r.block_no}: bad rollup skyline")
-            lo = int(np.searchsorted(blk_first, r.first_docid, side="left"))
-            hi = int(np.searchsorted(blk_last, r.last_docid, side="right"))
-            if (
-                hi - lo < 1
-                or lo >= blk_first.size
-                or blk_first[lo] != r.first_docid
-                or blk_last[hi - 1] != r.last_docid
-            ):
-                viols.append(f"seg={seg} term={term} l1={r.block_no}: span not block-aligned")
-                continue
-            cov = grp.iloc[lo:hi]
-            want = merge_skylines(
-                [list(zip(x, y)) for x, y in zip(cov["impact_freqs"], cov["impact_norms"])]
-            )
-            if [(int(f), int(n)) for f, n in zip(imf, imn)] != [
-                (int(f), int(n)) for f, n in want
-            ]:
-                viols.append(f"seg={seg} term={term} l1={r.block_no}: rollup != merged level-0 skylines")
         for r in grp.itertuples():
             d = decode_block_docids(
                 r.encoding, r.docids_enc, r.n_docs, r.base_docid, r.last_docid

@@ -51,7 +51,6 @@ import pandas as pd
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..codecs.blocks import ENC_L1_ROLLUP
 from ..codecs.intcodecs import vbyte_encode
 from .pseudo import singleton_pseudo_blocks
 from .smallio import FIELD_STATS_SCHEMA, MANIFEST_SCHEMA, write_driver_table
@@ -243,12 +242,7 @@ def merge_segments(
         .select(rebased.columns)
         .mapInPandas(_materialize_singletons, schema=rebased.schema)
     )
-    win = Window.partitionBy("segment_id", "term").orderBy(
-        # level-1 rollup rows sort after every level-0 block so real
-        # blocks keep the contiguous 0..n-1 numbering (rollup block_no
-        # is never consulted — query-side linkage is by docid span)
-        (F.col("encoding") == ENC_L1_ROLLUP).cast("int"), "first_docid"
-    )
+    win = Window.partitionBy("segment_id", "term").orderBy("first_docid")
     postings_rows = (
         rebased.unionByName(demoted)
         .withColumn("block_no", (F.row_number().over(win) - 1).cast("int"))
@@ -472,12 +466,7 @@ def execute_merge_plan(spark: SparkSession, index_dir: str, plan) -> dict:
         .select(rebased.columns)
         .mapInPandas(_materialize_singletons, schema=rebased.schema)
     )
-    win = Window.partitionBy("segment_id", "term").orderBy(
-        # level-1 rollup rows sort after every level-0 block so real
-        # blocks keep the contiguous 0..n-1 numbering (rollup block_no
-        # is never consulted — query-side linkage is by docid span)
-        (F.col("encoding") == ENC_L1_ROLLUP).cast("int"), "first_docid"
-    )
+    win = Window.partitionBy("segment_id", "term").orderBy("first_docid")
     postings_rows = (
         rebased.unionByName(demoted)
         .withColumn("block_no", (F.row_number().over(win) - 1).cast("int"))

@@ -84,6 +84,7 @@ from .segment import (
     WINDOW_DOCS,
     SegmentContext,
     batch_search_segment,
+    exhaustive_hits,
     search_segment,
 )
 
@@ -163,15 +164,19 @@ def _slice_bounds(pdf: pd.DataFrame, seg_meta, span):
 
 
 def _segment_search_fn(
-    pdf: pd.DataFrame, query, scorers, seg_meta, k, prune, after=None,
+    pdf: pd.DataFrame, query, scorers, seg_meta, k, after=None,
     span=None, cache_tag=None,
 ) -> pd.DataFrame:
+    """Top-k hits of one (segment, slice) task; ``k=None`` returns every
+    hit (exhaustive evaluator, no top-k cut)."""
     doc_base, min_doc, max_doc = _slice_bounds(pdf, seg_meta, span)
     ctx = SegmentContext.from_pdf(
-        pdf, scorers, min_doc, max_doc, prune, cache_tag=cache_tag,
-        doc_base=doc_base,
+        pdf, scorers, min_doc, max_doc, cache_tag=cache_tag, doc_base=doc_base,
     )
-    d, s = search_segment(ctx, query, k, after=after)
+    if k is None:
+        d, s = exhaustive_hits(ctx, query, after)
+    else:
+        d, s = search_segment(ctx, query, k, after=after)
     return pd.DataFrame(
         {"docid": d + doc_base, "score": s.astype(np.float64)}
     )
@@ -202,14 +207,12 @@ class Searcher:
         analyzer: str = "standard",
         stopwords: frozenset[str] | None = None,
         mode: str = "lucene",
-        prune: bool = True,
         slice_docs: int | None = None,
         snapshot: str | None = None,
     ):
         self.spark = spark
         self.reader = IndexReader(spark, index_dir, snapshot=snapshot)
         self.mode = mode
-        self.prune = prune
         # intra-segment search concurrency (IndexSearcher leaf slices,
         # IndexSearcher.java:106-108): None = auto-pick a docid span so a
         # few merged segments still fan out across every core; 0 = disable
@@ -1279,7 +1282,6 @@ class Searcher:
             scorers=scorers,
             seg_meta=seg_meta,
             k=k,
-            prune=self.prune,
             after=after,
             span=span,
             cache_tag=self._cache_tag(),
@@ -1329,7 +1331,6 @@ class Searcher:
         blocks = self._postings_blocks(
             all_terms, need_positions, span, need_payloads=need_payloads
         )
-        prune = self.prune
         # broadcast the (large) query batch + scorer table: deserialized once
         # per python worker and reused across its tasks, instead of being
         # unpickled from the task command for every (segment, slice) group
@@ -1341,7 +1342,7 @@ class Searcher:
             b_parsed, b_scorers, b_meta = bc.value
             doc_base, min_doc, max_doc = _slice_bounds(pdf, b_meta, span)
             ctx = SegmentContext.from_pdf(
-                pdf, b_scorers, min_doc, max_doc, prune, cache_tag=tag,
+                pdf, b_scorers, min_doc, max_doc, cache_tag=tag,
                 doc_base=doc_base,
             )
             qids, docids, scores = batch_search_segment(ctx, b_parsed, k)
@@ -1384,8 +1385,7 @@ class Searcher:
             query=query,
             scorers=scorers,
             seg_meta=seg_meta,
-            k=2**31,
-            prune=False,
+            k=None,
             span=span,
         )
         return self._balanced_grouping(blocks, seg_meta, span).applyInPandas(
@@ -1734,8 +1734,7 @@ class Searcher:
 
             doc_base, min_doc, max_doc = _slice_bounds(pdf, seg_meta, span)
             ctx = SegmentContext.from_pdf(
-                pdf, {}, min_doc, max_doc, False, cache_tag=tag,
-                doc_base=doc_base,
+                pdf, {}, min_doc, max_doc, cache_tag=tag, doc_base=doc_base,
             )
             d = _SegmentSearcher(ctx, 0).matching_docs(query)
             d = d[(d >= min_doc) & (d < max_doc)]

@@ -10,19 +10,36 @@ evaluation happens on decoded numpy arrays:
   prefilter — blocks of a term are only decoded if their [first,last] docid
   span contains a current candidate (ConjunctionDISI lead/advance semantics,
   search/ConjunctionDISI.java, at 128-doc granularity);
-- disjunction top-k: windowed block-max MAXSCORE
-  (search/MaxScoreBulkScorer.java:28-67 + WANDScorer.java:31-53): the docid
-  space is cut into 4096-doc windows (INNER_WINDOW_SIZE), each window's upper
-  bound is Σ_t max(block impact ub overlapping it), windows are processed in
-  descending-UB order and evaluation stops when UB ≤ θ (the k-th best score
-  so far) — rank-identical to the exhaustive path by construction since ub
-  is a true per-block upper bound (ImpactsDISI/MaxScoreCache semantics,
-  search/MaxScoreCache.java:72-79);
 - exclusion: ``np.isin(..., invert=True)`` (ReqExclScorer);
 - phrases: position adjacency via decoded .pos runs (ExactPhraseMatcher).
 
+``search_segment`` picks the evaluator by one rule:
+
+- a ``TermQuery``, or a ``DisjunctionMaxQuery`` whose disjuncts are all
+  ``TermQuery``, runs the windowed block-max top-k (ImpactsDISI /
+  MaxScoreCache semantics, search/MaxScoreCache.java:72-79, with the
+  WANDScorer dismax bound): the docid space is cut into 4096-doc windows
+  (MaxScoreBulkScorer.INNER_WINDOW_SIZE), each window's upper bound comes
+  from the per-block impact skylines, windows run in descending-UB order and
+  evaluation stops once UB < θ (the k-th best score so far);
+- every other query runs the exhaustive evaluator + top-k.
+
+The rule is measured, not assumed (tools/evaluator_probe.py: 1M docs merged
+to one segment, k=10, 4-core VM, two runs, every result bit-identical). On
+one 1M-doc slice the windowed path takes the 9 single-term shapes in
+97–147 ms against 737–992 ms exhaustive, and two hot-term dismax queries
+in 176–217 ms against 1,480–1,781 ms; on 127k-doc slices it still wins
+1.6–2.3×, on 16k-doc slices single terms lose 17–32%. Block-max pruning
+of the 13 multi-term boolean shapes lost to the exhaustive evaluator in
+sum at 16k, 127k and 1M-doc slices (1M: 4.3 s against 3.9 s, 8.0 s
+against 7.0 s), and by 9× on ``hot AND rare`` (178 ms against 20 ms),
+where the rarest-lead leapfrog of ``_conjunction_terms`` already skips
+the work.
+``batch_search_segment`` keeps the dense ``_BatchEvaluator`` for term-only
+booleans: it decodes and scores each term once for a whole query batch.
+
 Float accumulation order is "ascending clause index, then doc", identical in
-the exhaustive and pruned paths, so float32 scores are bit-identical across
+the exhaustive and windowed paths, so float32 scores are bit-identical across
 strategies (CheckHits-style invariant, tested).
 """
 
@@ -64,6 +81,7 @@ from .spans import is_span
 __all__ = [
     "SegmentContext",
     "search_segment",
+    "exhaustive_hits",
     "batch_search_segment",
     "WINDOW_DOCS",
 ]
@@ -75,7 +93,6 @@ _EMPTY = np.zeros(0, dtype=np.int64)
 
 ENC_SINGLETON = 4
 ENC_DELETE = 5  # pseudo rows carrying the live-docs delete list (deletes.py)
-ENC_L1 = 6      # level-1 rollup rows (codecs.blocks.ENC_L1_ROLLUP)
 
 
 class _TermPostings:
@@ -89,7 +106,6 @@ class _TermPostings:
         "lo", "hi", "encoding", "n_docs", "base", "block_first", "block_last",
         "docids_enc", "freqs_enc", "norms_enc", "positions_enc", "payloads_enc",
         "impact_freqs", "impact_norms", "singleton", "_decoded",
-        "l1_first", "l1_last", "l1_impact_freqs", "l1_impact_norms",
     )
 
     def __init__(
@@ -98,15 +114,9 @@ class _TermPostings:
         lo: int,
         hi: int,
         singleton: dict | None = None,
-        l1: tuple | None = None,
     ):
         self.singleton = singleton
         self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        self.l1_first = self.l1_last = None
-        self.l1_impact_freqs = self.l1_impact_norms = None
-        if l1 is not None:
-            (self.l1_first, self.l1_last,
-             self.l1_impact_freqs, self.l1_impact_norms) = l1
         if singleton is not None:
             self.block_first = np.array([singleton["singleton_docid"]], dtype=np.int64)
             self.block_last = self.block_first
@@ -151,55 +161,6 @@ class _TermPostings:
         scores = scorer.score(all_f, all_n).astype(np.float64)
         bounds = np.concatenate(([0], np.cumsum(counts)))
         return np.maximum.reduceat(scores, bounds[:-1])
-
-    def coarse_block_ub(self, scorer) -> np.ndarray:
-        """Per-block UB via the level-1 rollups when present: groups' merged
-        skylines are scored (1/32 the level-0 entries) and broadcast to
-        every block fully inside the group's docid span; blocks outside any
-        group (tails, merged-in singletons) keep their own level-0 skyline.
-        A group UB equals the max of its blocks' UBs (skyline union keeps
-        every argmax pair), so pruning quality is unchanged at block
-        granularity ≥ the group span — the Lucene level-1 skip tradeoff
-        (Lucene103PostingsWriter.java:480-532)."""
-        if self.singleton is not None or self.l1_first is None:
-            return self.block_ub(scorer)
-        n = len(self.block_first)
-        # fully-contained coverage by docid span: robust to merge rebase
-        # and compaction re-blocking (partial overlap → level-0 fallback)
-        g_lo = np.searchsorted(self.block_first, self.l1_first, side="left")
-        g_hi = np.searchsorted(self.block_last, self.l1_last, side="right")
-        covered = np.zeros(n, dtype=bool)
-        gcounts = np.fromiter(
-            (len(x) for x in self.l1_impact_freqs), dtype=np.int64,
-            count=len(self.l1_impact_freqs),
-        )
-        gf = np.concatenate([np.asarray(x, dtype=np.int64) for x in self.l1_impact_freqs])
-        gn = np.concatenate([np.asarray(x, dtype=np.int64) for x in self.l1_impact_norms])
-        gscores = scorer.score(gf, gn).astype(np.float64)
-        gb = np.concatenate(([0], np.cumsum(gcounts)))
-        g_ub = np.maximum.reduceat(gscores, gb[:-1])
-        ubs = np.empty(n, dtype=np.float64)
-        for g in range(len(g_ub)):
-            lo, hi = int(g_lo[g]), int(g_hi[g])
-            if hi > lo:
-                ubs[lo:hi] = g_ub[g]
-                covered[lo:hi] = True
-        rest = np.flatnonzero(~covered)
-        if rest.size:
-            counts = np.fromiter(
-                (len(self.impact_freqs[i]) for i in rest), dtype=np.int64,
-                count=rest.size,
-            )
-            all_f = np.concatenate(
-                [np.asarray(self.impact_freqs[i], dtype=np.int64) for i in rest]
-            )
-            all_n = np.concatenate(
-                [np.asarray(self.impact_norms[i], dtype=np.int64) for i in rest]
-            )
-            scores = scorer.score(all_f, all_n).astype(np.float64)
-            bounds = np.concatenate(([0], np.cumsum(counts)))
-            ubs[rest] = np.maximum.reduceat(scores, bounds[:-1])
-        return ubs
 
     def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docids, freqs, norms) of block i."""
@@ -280,7 +241,6 @@ class SegmentContext:
         scorers: dict[object, object],  # keyed by frozen AST leaf node
         min_doc: int,
         max_doc: int,  # exclusive
-        prune: bool = True,
         deleted: np.ndarray | None = None,  # sorted stored docids (.liv analog)
         cache_key: tuple | None = None,  # (index tag, segment, slice) for the LRU
         doc_base: int = 0,  # global docid = stored docid + doc_base
@@ -289,7 +249,6 @@ class SegmentContext:
         self.scorers = scorers
         self.min_doc = min_doc
         self.max_doc = max_doc
-        self.prune = prune
         self.doc_base = doc_base
         self.deleted = deleted if deleted is not None and deleted.size else None
         self.cache_key = cache_key
@@ -305,7 +264,7 @@ class SegmentContext:
         scorers,
         min_doc: int,
         max_doc: int,
-        prune: bool = True,
+        _unused=None,  # ignored: perfbench/layers.py passes a 5th positional
         cache_tag: str | None = None,
         doc_base: int = 0,
     ) -> "SegmentContext":
@@ -323,23 +282,18 @@ class SegmentContext:
             dmask = enc_all == ENC_DELETE
             deleted = np.unique(pdf["first_docid"].to_numpy()[dmask])
             pdf = pdf[~dmask]
-        # level-1 rollup rows sort AFTER a term's level-0 blocks regardless
-        # of their block_no (merge renumbering may interleave the numbers)
-        is_l1 = pdf["encoding"].to_numpy().astype(np.int64) == ENC_L1
-        pdf = pdf.assign(_l1=is_l1).sort_values(
-            ["term", "_l1", "block_no"], kind="mergesort"
-        )
+        pdf = pdf.sort_values(["term", "block_no"], kind="mergesort")
         cols = {
             c: pdf[c].to_numpy()
             for c in pdf.columns
-            if c not in ("segment_id", "term", "slice_id", "_l1")
+            if c not in ("segment_id", "term", "slice_id")
         }
         terms = pdf["term"].to_numpy()
         enc = cols["encoding"].astype(np.int64)
         postings: dict[str, _TermPostings] = {}
         n = len(terms)
         if n == 0:
-            return cls(postings, scorers, min_doc, max_doc, prune, deleted, ckey, doc_base)
+            return cls(postings, scorers, min_doc, max_doc, deleted, ckey, doc_base)
         tchange = np.empty(n, dtype=bool)
         tchange[0] = True
         tchange[1:] = terms[1:] != terms[:-1]
@@ -368,20 +322,8 @@ class SegmentContext:
                     },
                 )
             else:
-                split = int(hi)
-                l1 = None
-                if enc[hi - 1] == ENC_L1:
-                    split = int(lo) + int(
-                        np.searchsorted(enc[lo:hi] == ENC_L1, True)
-                    )
-                    l1 = (
-                        cols["first_docid"][split:hi],
-                        cols["last_docid"][split:hi],
-                        cols["impact_freqs"][split:hi],
-                        cols["impact_norms"][split:hi],
-                    )
-                postings[term] = _TermPostings(cols, int(lo), split, l1=l1)
-        return cls(postings, scorers, min_doc, max_doc, prune, deleted, ckey, doc_base)
+                postings[term] = _TermPostings(cols, int(lo), int(hi))
+        return cls(postings, scorers, min_doc, max_doc, deleted, ckey, doc_base)
 
 
 class _FilterLRU:
@@ -2644,231 +2586,36 @@ class _SegmentSearcher:
             return _EMPTY, np.zeros(0, dtype=dtype)
         return d, sc.score(f, m).astype(dtype)
 
-    # --- pruned boolean-of-terms (BlockMaxConjunction / WAND analog) ----
+    # --- windowed block-max top-k over term disjuncts -------------------
     def _term_winmap(self, tq, tp, sc, off: int, n_win: int):
         """Memoized (per-window UB, window-sorted incidence) for one term."""
         got = self.ctx.eval_cache.get(("winmap", tq))
         if got is None:
-            ubs = self.ctx.eval_cache.get(("ub", tq))
-            if ubs is None:
-                ubs = tp.coarse_block_ub(sc)
-                self.ctx.eval_cache[("ub", tq)] = ubs
-            got = _term_window_map(tp, ubs, off, n_win)
+            got = _term_window_map(tp, tp.block_ub(sc), off, n_win)
             self.ctx.eval_cache[("winmap", tq)] = got
         return got
 
-    def _window_leaf(self, tp, wmap, w: int, lo_doc: int, hi_doc: int):
-        """(docids, freqs, norms) of one term inside window w."""
-        wins_s, blocks_s = wmap
-        lo_i = np.searchsorted(wins_s, w, side="left")
-        hi_i = np.searchsorted(wins_s, w, side="right")
-        if hi_i == lo_i:
-            return _EMPTY, _EMPTY, _EMPTY
-        d, f, m = tp.decode_blocks(blocks_s[lo_i:hi_i])
-        sel = (d >= lo_doc) & (d < hi_doc)
-        if not sel.all():
-            d, f, m = d[sel], f[sel], m[sel]
-        return d, f, m
+    def blockmax_topk(self, term_qs: list, tie: float, k: int, after=None):
+        """Windowed block-max top-k of a DisjunctionMaxQuery over term
+        disjuncts; a single term is its one-disjunct case.
 
-    def pruned_boolean_terms(
-        self, must, should, must_not, msm: int, k: int, after=None
-    ):
-        """Windowed block-max evaluation of a boolean of plain term leaves —
-        the BlockMaxConjunctionBulkScorer / WANDScorer analog
-        (search/BlockMaxConjunctionBulkScorer.java:35,
-        search/WANDScorer.java:31-53) at 4096-doc window granularity:
-
-        - window UB = Σ must-term UB + Σ should-term UB (a true bound: NOT
-          clauses only remove docs);
-        - windows missing ANY must term are skipped outright (the
-          conjunction lead-advance at window granularity), and pure-should
-          windows with fewer than msm distinct present terms are skipped
-          (WAND's minShouldMatch contract);
-        - remaining windows evaluate in descending-UB order with the θ
-          break of MaxScoreBulkScorer; inside a window the combination
-          replicates _evaluate_bool exactly (same operands, same
-          clause-order float adds per doc — a doc's postings live in one
-          block per term, so window restriction never splits them), making
-          results rank- and score-identical to the exhaustive path."""
-        ctx = self.ctx
-        off = ctx.min_doc
-        n_win = (ctx.max_doc - 1 - off) // WINDOW_DOCS + 1
-        dtype = None
-        ub_w = np.zeros(n_win, dtype=np.float64)
-        must_maps, should_maps = [], []
-        must_present = np.ones(n_win, dtype=bool)
-        scount_w = np.zeros(n_win, dtype=np.int32)
-        for tq in must:
-            tp = self.term_postings(tq.term)
-            if tp is None:
-                return _EMPTY, np.zeros(0, dtype=np.float32)
-            sc = ctx.scorers[tq]
-            dtype = dtype or _float_dtype(sc)
-            t_ub, wins_s, blocks_s = self._term_winmap(tq, tp, sc, off, n_win)
-            ub_w += t_ub
-            pres = np.zeros(n_win, dtype=bool)
-            pres[wins_s] = True
-            must_present &= pres
-            must_maps.append((tq, tp, sc, (wins_s, blocks_s)))
-        for tq in should:
-            tp = self.term_postings(tq.term)
-            if tp is None:
-                continue
-            sc = ctx.scorers[tq]
-            dtype = dtype or _float_dtype(sc)
-            t_ub, wins_s, blocks_s = self._term_winmap(tq, tp, sc, off, n_win)
-            ub_w += t_ub
-            scount_w[np.unique(wins_s)] += 1
-            should_maps.append((tq, tp, sc, (wins_s, blocks_s)))
-        if must:
-            if not must_maps:
-                return _EMPTY, np.zeros(0, dtype=np.float32)
-            cand_w = must_present
-            if msm > 0:
-                cand_w = cand_w & (scount_w >= msm)
-        else:
-            if not should_maps:
-                return _EMPTY, np.zeros(0, dtype=np.float32)
-            cand_w = scount_w >= max(msm, 1)
-        excl_maps = []
-        for tq in must_not:
-            tp = self.term_postings(tq.term)
-            if tp is not None:
-                excl_maps.append((tp, tp.block_first, tp.block_last))
-        ub_w *= 1.0 + 4e-6  # float32 accumulation headroom (see disjunction)
-        wsel = np.flatnonzero(cand_w)
-        order = wsel[np.argsort(-ub_w[wsel], kind="stable")]
-        top_d = _EMPTY
-        top_s = np.zeros(0, dtype=dtype)
-
-        def eval_windows(wins: np.ndarray):
-            """One vectorized boolean evaluation restricted to a SET of
-            windows. Every doc lives wholly inside one window, so per-doc
-            float adds are the exhaustive path's, regardless of how the
-            window set is batched."""
-            win_mask = np.zeros(n_win, dtype=bool)
-            win_mask[wins] = True
-
-            def leaf(tp, wmap):
-                wins_s, blocks_s = wmap
-                sel = win_mask[wins_s]
-                if not sel.any():
-                    return _EMPTY, _EMPTY, _EMPTY
-                d, f, m = tp.decode_blocks(np.unique(blocks_s[sel]))
-                keep = (d >= off) & (d < ctx.max_doc)
-                keep &= win_mask[np.clip((d - off) // WINDOW_DOCS, 0, n_win - 1)]
-                if not keep.all():
-                    d, f, m = d[keep], f[keep], m[keep]
-                return d, f, m
-
-            if must:
-                base = None
-                leaves = []
-                for tq, tp, sc, wmap in must_maps:
-                    d, f, m = leaf(tp, wmap)
-                    if d.size == 0:
-                        return _EMPTY, np.zeros(0, dtype=dtype)
-                    leaves.append((d, f, m, sc))
-                    base = d if base is None else base[np.isin(base, d)]
-                    if base.size == 0:
-                        return _EMPTY, np.zeros(0, dtype=dtype)
-                score = np.zeros(base.size, dtype=dtype)
-                for d, f, m, sc in leaves:  # clause order
-                    pos = np.searchsorted(d, base)
-                    score += sc.score(f[pos], m[pos]).astype(dtype)
-                if should_maps:
-                    parts = [(base, score)]
-                    n_matched = np.zeros(base.size, dtype=np.int64)
-                    for tq, tp, sc, wmap in should_maps:
-                        d, f, m = leaf(tp, wmap)
-                        s = sc.score(f, m).astype(dtype)
-                        keep = np.isin(d, base)
-                        d, s = d[keep], s[keep]
-                        parts.append((d, s))
-                        if msm > 0 and d.size:
-                            n_matched[np.searchsorted(base, d)] += 1
-                    keep_docs = base if msm <= 0 else base[n_matched >= msm]
-                    base, score = _sum_contributions(parts, dtype)
-                    if msm > 0:
-                        keep = np.isin(base, keep_docs)
-                        base, score = base[keep], score[keep]
-            else:
-                parts = []
-                for tq, tp, sc, wmap in should_maps:
-                    d, f, m = leaf(tp, wmap)
-                    if d.size:
-                        parts.append((d, sc.score(f, m).astype(dtype)))
-                if msm > 1:
-                    counts_d = [p[0] for p in parts]
-                    if counts_d:
-                        alld = np.concatenate(counts_d)
-                        uniq, cnt = np.unique(alld, return_counts=True)
-                        keep_docs = uniq[cnt >= msm]
-                    else:
-                        keep_docs = _EMPTY
-                    base, score = _sum_contributions(parts, dtype)
-                    keep = np.isin(base, keep_docs)
-                    base, score = base[keep], score[keep]
-                else:
-                    base, score = _sum_contributions(parts, dtype)
-            if base.size and excl_maps:
-                # block [bw_lo, bw_hi] overlaps the window set iff any
-                # selected window falls in its range (prefix-sum test —
-                # endpoint checks would miss straddled middle windows)
-                pref = np.concatenate(([0], np.cumsum(win_mask)))
-                ex_parts = []
-                for tp, bf, bl in excl_maps:
-                    bw_lo = np.clip((bf - off) // WINDOW_DOCS, 0, n_win - 1)
-                    bw_hi = np.clip((bl - off) // WINDOW_DOCS, 0, n_win - 1)
-                    bidx = np.flatnonzero(pref[bw_hi + 1] - pref[bw_lo] > 0)
-                    if bidx.size:
-                        ex_parts.append(tp.decode_blocks(bidx)[0])
-                if ex_parts:
-                    excl = np.concatenate(ex_parts)
-                    keep = np.isin(base, excl, invert=True)
-                    base, score = base[keep], score[keep]
-            if base.size and ctx.deleted is not None:
-                keep = np.isin(base, ctx.deleted, invert=True)
-                base, score = base[keep], score[keep]
-            if base.size and after is not None:
-                base, score = _after_filter(base, score, after)
-            return base, score
-
-        # phase 1: descending-UB windows one at a time, only until the
-        # top-k floor θ exists (usually 1-2 windows)
-        i = 0
-        while i < order.size and top_d.size < k:
-            base, score = eval_windows(order[i : i + 1])
-            i += 1
-            if base.size:
-                top_d = np.concatenate((top_d, base))
-                top_s = np.concatenate((top_s, score))
-                top_d, top_s = _topk(top_d, top_s, k)
-        # phase 2: every remaining window that can still beat θ, in ONE
-        # vectorized pass (exhaustive-shaped work when nothing is
-        # skippable; a short tail when block-max skew prunes)
-        rest = order[i:]
-        if rest.size:
-            if top_d.size >= k:
-                theta = float(top_s[-1])
-                rest = rest[ub_w[rest] >= theta]
-            if rest.size:
-                base, score = eval_windows(rest)
-                if base.size:
-                    top_d = np.concatenate((top_d, base))
-                    top_s = np.concatenate((top_s, score))
-                    top_d, top_s = _topk(top_d, top_s, k)
-        return top_d, top_s
-
-    # --- pruned disjunction (windowed block-max MAXSCORE) ---------------
-    def pruned_disjunction_terms(self, term_qs: list, k: int, after=None):
-        tps, scs, kept_tqs = [], [], []
+        Lucene routes dismax top-k through WANDScorer
+        (BooleanScorerSupplier / DisjunctionMaxQuery.java rewrite to
+        WAND-eligible shape) and single terms through ImpactsDISI
+        (search/ImpactsDISI.java:67-110); here both use the MAXSCORE window
+        machinery with the dismax upper bound per window:
+        ``(1 - tie)·max_t ub_t + tie·Σ_t ub_t`` — for any doc in the
+        window, score = max + tie·(sum − max) ≤ that bound since every
+        per-term score is ≤ its window UB. Per-window evaluation applies
+        the exact ``_evaluate_dismax`` combine (same operands, same float64
+        accumulation order restricted to the window's docs), so results
+        are rank- and score-identical to the exhaustive path."""
+        tps, scs = [], []
         for tq in term_qs:
             tp = self.term_postings(tq.term)
             if tp is not None:
                 tps.append(tp)
                 scs.append(self.ctx.scorers[tq])
-                kept_tqs.append(tq)
         if not tps:
             return _EMPTY, np.zeros(0, dtype=np.float32)
         dtype = _float_dtype(scs[0])
@@ -2877,16 +2624,20 @@ class _SegmentSearcher:
         # over 10^12 ids would not fit — the offset keeps it O(segment size)
         off = self.ctx.min_doc
         n_win = (self.ctx.max_doc - 1 - off) // WINDOW_DOCS + 1
-        ub_w = np.zeros(n_win, dtype=np.float64)
+        sum_w = np.zeros(n_win, dtype=np.float64)
+        max_w = np.zeros(n_win, dtype=np.float64)
         term_maps: list[tuple[np.ndarray, np.ndarray]] = []
-        for tq, tp, sc in zip(kept_tqs, tps, scs):
-            t_ub, _wins_s, _blocks_s = self._term_winmap(tq, tp, sc, off, n_win)
-            ub_w += t_ub
-            term_maps.append((_wins_s, _blocks_s))
+        for i, (tp, sc) in enumerate(zip(tps, scs)):
+            t_ub, wins_s, blocks_s = self._term_winmap(
+                term_qs[i], tp, sc, off, n_win
+            )
+            sum_w += t_ub
+            np.maximum(max_w, t_ub, out=max_w)
+            term_maps.append((wins_s, blocks_s))
         # inflate by a few float32 ulps: the true doc score is accumulated in
         # float32 (round-to-nearest can round *up* past the float64 UB sum);
         # WANDScorer solves the same problem with scaled-long math (:61-117)
-        ub_w *= 1.0 + 4e-6
+        ub_w = (max_w + tie * (sum_w - max_w)) * (1.0 + 4e-6)
         order = np.argsort(-ub_w, kind="stable")
         top_d = _EMPTY
         top_s = np.zeros(0, dtype=dtype)
@@ -2913,89 +2664,20 @@ class _SegmentSearcher:
                 parts.append((d[sel], sc.score(f[sel], m[sel]).astype(dtype)))
             if not parts:
                 continue
-            d, s = _sum_contributions(parts, dtype)
-            if self.ctx.deleted is not None:
-                keep = np.isin(d, self.ctx.deleted, invert=True)
-                d, s = d[keep], s[keep]
-            if after is not None:
-                d, s = _after_filter(d, s, after)
-            top_d = np.concatenate((top_d, d))
-            top_s = np.concatenate((top_s, s))
-            top_d, top_s = _topk(top_d, top_s, k)
-            if top_d.size >= k:
-                theta = float(top_s[-1])
-        return top_d, top_s
-
-    def pruned_dismax_terms(
-        self, term_qs: list, tie: float, k: int, after=None
-    ):
-        """Windowed block-max DisjunctionMaxQuery over term disjuncts.
-
-        Lucene routes dismax top-k through WANDScorer
-        (BooleanScorerSupplier / DisjunctionMaxQuery.java rewrite to
-        WAND-eligible shape); the Spark analog reuses the MAXSCORE window
-        machinery with the dismax upper bound per window:
-        ``(1 - tie)·max_t ub_t + tie·Σ_t ub_t`` — for any doc in the
-        window, score = max + tie·(sum − max) ≤ that bound since every
-        per-term score is ≤ its window UB. Per-window evaluation applies
-        the exact ``_evaluate_dismax`` combine (same operands, same float64
-        accumulation order restricted to the window's docs), so results
-        are rank- and score-identical to the exhaustive path."""
-        tps, scs = [], []
-        for tq in term_qs:
-            tp = self.term_postings(tq.term)
-            if tp is not None:
-                tps.append(tp)
-                scs.append(self.ctx.scorers[tq])
-        if not tps:
-            return _EMPTY, np.zeros(0, dtype=np.float32)
-        dtype = _float_dtype(scs[0])
-        off = self.ctx.min_doc
-        n_win = (self.ctx.max_doc - 1 - off) // WINDOW_DOCS + 1
-        sum_w = np.zeros(n_win, dtype=np.float64)
-        max_w = np.zeros(n_win, dtype=np.float64)
-        term_maps: list[tuple[np.ndarray, np.ndarray]] = []
-        for i, (tp, sc) in enumerate(zip(tps, scs)):
-            t_ub, wins_s, blocks_s = self._term_winmap(
-                term_qs[i], tp, sc, off, n_win
-            )
-            sum_w += t_ub
-            np.maximum(max_w, t_ub, out=max_w)
-            term_maps.append((wins_s, blocks_s))
-        ub_w = (max_w + tie * (sum_w - max_w)) * (1.0 + 4e-6)
-        order = np.argsort(-ub_w, kind="stable")
-        top_d = _EMPTY
-        top_s = np.zeros(0, dtype=dtype)
-        theta = -np.inf
-        for w in order:
-            w = int(w)
-            if top_d.size >= k and ub_w[w] < theta:
-                break
-            lo_doc = off + w * WINDOW_DOCS
-            hi_doc = min(lo_doc + WINDOW_DOCS, self.ctx.max_doc)
-            parts = []
-            for tp, sc, (wins_s, blocks_s) in zip(tps, scs, term_maps):
-                lo_i = np.searchsorted(wins_s, w, side="left")
-                hi_i = np.searchsorted(wins_s, w, side="right")
-                if hi_i == lo_i:
-                    continue
-                d, f, m = tp.decode_blocks(blocks_s[lo_i:hi_i])
-                sel = (d >= lo_doc) & (d < hi_doc)
-                if not sel.any():
-                    continue
-                parts.append((d[sel], sc.score(f[sel], m[sel]).astype(dtype)))
-            if not parts:
-                continue
-            # exact _evaluate_dismax combine on the window's docs
-            alld = np.concatenate([p[0] for p in parts])
-            alls = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            uniq, inv = np.unique(alld, return_inverse=True)
-            sums = np.zeros(uniq.size, dtype=np.float64)
-            maxs = np.full(uniq.size, -np.inf, dtype=np.float64)
-            np.add.at(sums, inv, alls)
-            np.maximum.at(maxs, inv, alls)
-            d = uniq
-            s = (maxs + tie * (sums - maxs)).astype(dtype)
+            if len(parts) == 1:
+                # one list: max + tie·(sum − max) is the score itself
+                d, s = parts[0]
+            else:
+                # exact _evaluate_dismax combine on the window's docs
+                alld = np.concatenate([p[0] for p in parts])
+                alls = np.concatenate([p[1] for p in parts]).astype(np.float64)
+                uniq, inv = np.unique(alld, return_inverse=True)
+                sums = np.zeros(uniq.size, dtype=np.float64)
+                maxs = np.full(uniq.size, -np.inf, dtype=np.float64)
+                np.add.at(sums, inv, alls)
+                np.maximum.at(maxs, inv, alls)
+                d = uniq
+                s = (maxs + tie * (sums - maxs)).astype(dtype)
             if self.ctx.deleted is not None:
                 keep = np.isin(d, self.ctx.deleted, invert=True)
                 d, s = d[keep], s[keep]
@@ -3239,61 +2921,11 @@ def _after_filter(d: np.ndarray, s: np.ndarray, after: tuple):
     return d[keep], s[keep]
 
 
-def search_segment(
-    ctx: SegmentContext, query, k: int, after: tuple | None = None
+def exhaustive_hits(
+    ctx: SegmentContext, query, after: tuple | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k (docids, scores) for this segment, tie-break score DESC then
-    docid ASC (HitQueue.java:76-82). ``after=(score, docid)`` restricts to
-    hits ranking strictly below the anchor (searchAfter pagination)."""
-    s = _SegmentSearcher(ctx, k)
-    if ctx.prune and isinstance(query, TermQuery):
-        # single term: block-max skipping over one list (ImpactsDISI /
-        # MaxScoreCache semantics, search/ImpactsDISI.java:67-110) — the
-        # 1-clause case of the windowed MAXSCORE path
-        d, sc = s.pruned_disjunction_terms([query], k, after=after)
-        return d, sc
-    if (
-        ctx.prune
-        and isinstance(query, BooleanQuery)
-        and not query.must
-        and not query.must_not
-        and query.min_should_match <= 1
-        and len(query.should) >= 2
-        and all(isinstance(c, TermQuery) for c in query.should)
-    ):
-        d, sc = s.pruned_disjunction_terms(list(query.should), k, after=after)
-        return d, sc
-    if (
-        ctx.prune
-        and isinstance(query, DisjunctionMaxQuery)
-        and len(query.disjuncts) >= 2
-        and all(isinstance(c, TermQuery) for c in query.disjuncts)
-    ):
-        # dismax top-k pruning (WANDScorer handles DisMax in Lucene)
-        d, sc = s.pruned_dismax_terms(
-            list(query.disjuncts), query.tie_breaker, k, after=after
-        )
-        return d, sc
-    if ctx.prune and isinstance(query, BooleanQuery):
-        clauses = (*query.must, *query.should, *query.must_not)
-        if (
-            clauses
-            and (query.must or query.should)
-            and all(isinstance(c, TermQuery) for c in clauses)
-        ):
-            # conjunctions, MUST+SHOULD, minShouldMatch>1, and NOT-bearing
-            # term booleans: windowed block-max with window-level leapfrog
-            # (BlockMaxConjunctionBulkScorer / WANDScorer analog)
-            d, sc = s.pruned_boolean_terms(
-                query.must,
-                query.should,
-                query.must_not,
-                query.min_should_match,
-                k,
-                after=after,
-            )
-            return d, sc
-    d, sc = s.evaluate(query)
+    """Every live hit (docid, score) of this segment slice, unsorted."""
+    d, sc = _SegmentSearcher(ctx, 0).evaluate(query)
     # docid-slice mask: straddling blocks decode docs owned by neighbor
     # slices; each doc must be scored by exactly one (segment, slice) task
     mask = (d >= ctx.min_doc) & (d < ctx.max_doc)
@@ -3303,4 +2935,22 @@ def search_segment(
         d, sc = d[mask], sc[mask]
     if after is not None:
         d, sc = _after_filter(d, sc, after)
-    return _topk(d, sc, k)
+    return d, sc
+
+
+def search_segment(
+    ctx: SegmentContext, query, k: int, after: tuple | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k (docids, scores) for this segment, tie-break score DESC then
+    docid ASC (HitQueue.java:76-82). ``after=(score, docid)`` restricts to
+    hits ranking strictly below the anchor (searchAfter pagination)."""
+    s = _SegmentSearcher(ctx, k)
+    if isinstance(query, TermQuery):
+        return s.blockmax_topk([query], 0.0, k, after=after)
+    if isinstance(query, DisjunctionMaxQuery) and all(
+        isinstance(c, TermQuery) for c in query.disjuncts
+    ):
+        return s.blockmax_topk(
+            list(query.disjuncts), query.tie_breaker, k, after=after
+        )
+    return _topk(*exhaustive_hits(ctx, query, after), k)

@@ -13,7 +13,6 @@ from lucene_spark.codecs.blocks import (
     decode_block_docids,
     decode_block_freqs,
     encode_term_postings,
-    merge_skylines,
     skyline,
 )
 from lucene_spark.codecs.intcodecs import (
@@ -142,13 +141,3 @@ def test_skyline_semantics():
     f = [p[0] for p in sky2]
     n = [p[1] for p in sky2]
     assert f == sorted(f) and n == sorted(n)
-
-
-def test_merge_skylines_dominates_members():
-    a = [(2, 4), (5, 10)]
-    b = [(3, 4), (4, 8)]
-    merged = merge_skylines([a, b])
-    # (2,4) is dominated by (3,4); (4,8) and (5,10) are both competitive
-    assert merged == [(3, 4), (4, 8), (5, 10)]
-    # max-freq per norm is the union max
-    assert merge_skylines([[(9, 4)], [(3, 4)]]) == [(9, 4)]

@@ -146,7 +146,7 @@ def test_wgs84_planet_point_matches_reference_surface_point(spark):
     assert abs(px - x) < 1e-7 and abs(py - y) < 1e-7 and abs(pz - z) < 1e-7
 
 
-def test_wgs84_and_sphere_disagree_on_tight_circle(spark):
+def test_wgs84_and_sphere_agree_inside_tight_circle(spark):
     # Sanity that the WGS84 arm is not the sphere arm in disguise: the
     # first BKD circle is ~1.3e-4 rad wide at lat ~ -0.006 where the
     # ellipsoid scaling shifts the boundary; a point just inside the

@@ -90,11 +90,18 @@ def test_deletes_exclude_docs(spark, corpus, tmp_path_factory):
     assert not (hits_urls & set(victim_urls))
     # counts reflect deletes for term and match-all queries
     assert s2.count("*") == 240 - 2
-    # pruned and exhaustive agree under deletes
-    s3 = Searcher(spark, d, stopwords=STOP, prune=False)
-    a = [(r["docid"], np.float32(r["score"])) for r in s2.search("w0000 OR w0001", k=10).collect()]
-    b = [(r["docid"], np.float32(r["score"])) for r in s3.search("w0000 OR w0001", k=10).collect()]
-    assert a == b
+    # search() and the batched search_many() agree under deletes, for the
+    # exhaustive evaluator (OR) and the windowed block-max one (term)
+    for q in ("w0000 OR w0001", "w0000"):
+        a = [(r["docid"], np.float32(r["score"])) for r in s2.search(q, k=10).collect()]
+        b = [
+            (r["docid"], np.float32(r["score"]))
+            for r in sorted(
+                s2.search_many({"q": q}, k=10).collect(),
+                key=lambda r: (-r["score"], r["docid"]),
+            )
+        ]
+        assert a == b, q
 
 
 def test_deletes_survive_merge(spark, corpus, tmp_path_factory):

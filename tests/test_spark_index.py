@@ -83,33 +83,32 @@ def test_reference_query_rank_identity(searcher, oracle, qid, qs):
         assert np.float32(gs) == np.float32(es), (qid, gd, gs, es)
 
 
-def test_pruned_equals_exhaustive(spark, index_dir, oracle):
-    """CheckHits analog: the block-max pruned OR path must return exactly
-    what the exhaustive path returns."""
-    s_pruned = Searcher(spark, index_dir, stopwords=STOP, prune=True)
-    s_exh = Searcher(spark, index_dir, stopwords=STOP, prune=False)
-    for qs in [
-        # disjunctions (MAXSCORE path)
+def test_pruned_equals_exhaustive(searcher, oracle):
+    """CheckHits analog: ``search()`` — windowed block-max for terms and
+    term dismax, the exhaustive evaluator otherwise — returns exactly the
+    brute-force oracle's top-k (docids and float32 bits), and exactly what
+    the batched ``search_many()`` path returns."""
+    from lucene_spark.search.query import (
+        BooleanQuery,
+        DisjunctionMaxQuery,
+        TermQuery,
+    )
+
+    queries = [
+        # disjunctions
         "w0000 OR w0001",
         "w0001 OR w0002 OR w0100 OR w0203 OR w9999",
         "the OR w0350",
         "w8000 OR w9100",
-        # conjunctions (block-max conjunction path)
+        # conjunctions
         "w0000 AND w0001",
         "w0000 AND w0001 AND w0002",
         "w0000 AND w9999",
-        # MUST+SHOULD (req-opt), NOT, minShouldMatch (WAND analog)
+        # MUST+SHOULD (req-opt), NOT
         "+w0000 w0001",
         "+w0000 +w0001 w0002 w0100",
         "w0000 AND NOT w0001",
-    ]:
-        a = [(r["docid"], np.float32(r["score"])) for r in s_pruned.search(qs, k=10).collect()]
-        b = [(r["docid"], np.float32(r["score"])) for r in s_exh.search(qs, k=10).collect()]
-        assert a == b, qs
-    # minShouldMatch > 1 (no string syntax: AST-built)
-    from lucene_spark.search.query import BooleanQuery, TermQuery
-
-    for ast in [
+        # minShouldMatch > 1 (no string syntax: AST-built)
         BooleanQuery(
             should=(TermQuery("w0000"), TermQuery("w0001"), TermQuery("w0002"),
                     TermQuery("w0100")),
@@ -125,14 +124,7 @@ def test_pruned_equals_exhaustive(spark, index_dir, oracle):
             must_not=(TermQuery("w9999"),),
             min_should_match=2,
         ),
-    ]:
-        a = [(r["docid"], np.float32(r["score"])) for r in s_pruned.search(ast, k=10).collect()]
-        b = [(r["docid"], np.float32(r["score"])) for r in s_exh.search(ast, k=10).collect()]
-        assert a == b, ast
-    # dismax over terms (pruned via the windowed dismax UB)
-    from lucene_spark.search.query import DisjunctionMaxQuery
-
-    for ast in [
+        # dismax over terms (windowed dismax UB)
         DisjunctionMaxQuery(
             disjuncts=(TermQuery("w0000"), TermQuery("w0001")), tie_breaker=0.3
         ),
@@ -148,24 +140,45 @@ def test_pruned_equals_exhaustive(spark, index_dir, oracle):
             disjuncts=(TermQuery("w0000", boost=2.0), TermQuery("w8000")),
             tie_breaker=0.5,
         ),
-    ]:
-        a = [(r["docid"], np.float32(r["score"])) for r in s_pruned.search(ast, k=10).collect()]
-        b = [(r["docid"], np.float32(r["score"])) for r in s_exh.search(ast, k=10).collect()]
-        assert a == b, ast
+    ]
+    batch = searcher.search_many(
+        {f"q{i}": q for i, q in enumerate(queries)}, k=10
+    ).collect()
+    many: dict[str, list] = {}
+    for r in sorted(batch, key=lambda r: (r["query_id"], -r["score"], r["docid"])):
+        many.setdefault(r["query_id"], []).append(
+            (r["docid"], np.float32(r["score"]))
+        )
+    for i, q in enumerate(queries):
+        ast = parse_query(q, lambda t: _an(t)) if isinstance(q, str) else q
+        want = [(d, np.float32(s)) for d, s in oracle.search_query(ast, k=10)]
+        got = [(r["docid"], np.float32(r["score"])) for r in searcher.search(q, k=10).collect()]
+        assert got == want, q
+        assert many.get(f"q{i}", []) == want, q
 
 
-def test_conjunction_blockmax_decode_reduction(spark, tmp_path_factory):
+def test_windowed_topk_contract_on_skew(spark, tmp_path_factory):
     """Under impact skew (a few very-high-freq docs, the real-web-text
-    shape), the block-max boolean path must (a) return exactly the
-    exhaustive result and (b) decode strictly fewer blocks — the
-    BlockMaxConjunctionBulkScorer contract."""
+    shape), the windowed block-max top-k that ``search_segment`` runs for a
+    term and for a term dismax must (a) return exactly the exhaustive
+    evaluator's top-k and (b) decode fewer than half of its blocks. A
+    conjunction runs the exhaustive evaluator itself."""
     import glob
 
     import pyarrow.parquet as pq
 
-    from lucene_spark.search.query import BooleanQuery, TermQuery
+    from lucene_spark.search.query import (
+        BooleanQuery,
+        DisjunctionMaxQuery,
+        TermQuery,
+    )
     from lucene_spark.search.scorers import build_scorers
-    from lucene_spark.search.segment import SegmentContext, search_segment
+    from lucene_spark.search.segment import (
+        SegmentContext,
+        _SegmentSearcher,
+        _topk,
+        search_segment,
+    )
 
     n = 40960  # 10 block-max windows of 4096 docs
     rows = []
@@ -187,17 +200,34 @@ def test_conjunction_blockmax_decode_reduction(spark, tmp_path_factory):
     sub = pdf[pdf["term"].isin(["wa", "wb"])].copy()
     sub["segment_id"] = 0
     sub["slice_id"] = 0
-    q = BooleanQuery(must=(TermQuery("wa"), TermQuery("wb")))
-    scorers = build_scorers([q], {"wa": (n, n), "wb": (n, n)}, n, 3 * n, "lucene")
-    decodes = {}
-    results = {}
-    for prune in (True, False):
-        ctx = SegmentContext.from_pdf(sub, scorers, 0, n, prune)
-        dd, ss = search_segment(ctx, q, 5)
-        results[prune] = (list(dd), [np.float32(x) for x in ss])
-        decodes[prune] = sum(len(tp._decoded) for tp in ctx.postings.values())
-    assert results[True] == results[False]
-    assert decodes[True] < decodes[False] * 0.5, decodes
+    term = TermQuery("wa")
+    dismax = DisjunctionMaxQuery(
+        disjuncts=(TermQuery("wa"), TermQuery("wb")), tie_breaker=0.1
+    )
+    conj = BooleanQuery(must=(TermQuery("wa"), TermQuery("wb")))
+    scorers = build_scorers(
+        [term, dismax, conj], {"wa": (n, n), "wb": (n, n)}, n, 3 * n, "lucene"
+    )
+
+    def run(q, fn):
+        ctx = SegmentContext.from_pdf(sub, scorers, 0, n)
+        dd, ss = fn(ctx, q)
+        decoded = sum(len(tp._decoded) for tp in ctx.postings.values())
+        return (list(dd), [np.float32(x) for x in ss]), decoded
+
+    def exhaustive(ctx, q):
+        return _topk(*_SegmentSearcher(ctx, 5).evaluate(q), 5)
+
+    def kept(ctx, q):
+        return search_segment(ctx, q, 5)
+
+    for q in (term, dismax, conj):
+        got, dec_kept = run(q, kept)
+        want, dec_exh = run(q, exhaustive)
+        assert len(got[0]) == 5
+        assert got == want, q
+        if q is not conj:
+            assert dec_kept < dec_exh * 0.5, (q, dec_kept, dec_exh)
 
 
 def test_prefix_query(searcher, oracle):

@@ -1,0 +1,267 @@
+#!/usr/bin/env python
+"""Kernel probe for the per-segment evaluator choice in search/segment.py.
+
+Builds a seeded ``generate_webtext`` index (N docs, 8 segments merged to
+one) in a temp dir, then, for each reference query shape, replays on the
+driver the block rows every (segment, slice) task receives through
+
+- ``search_segment`` (the path the engine picks), and
+- the exhaustive evaluator (``_SegmentSearcher.evaluate`` + slice mask +
+  ``_topk``),
+
+at each docid slice span. Every per-slice top-k must be bit-identical
+(docids and float32 scores) between the two. Prints best-of-R kernel
+milliseconds per shape and span; ``SegmentContext.from_pdf`` is outside the
+timed region and every timed call gets a fresh context, so no decode is
+cached across calls.
+
+Usage:
+    python tools/evaluator_probe.py [--docs 100000] [--spans 16384,126976,0]
+                                    [--k 10] [--reps 3] [--cores 4]
+
+A span of 0 means one slice per segment. At 1M docs the build and merge
+take about 3 min at local[4].
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import shutil
+import sys
+import tempfile
+import time
+
+os.environ.setdefault("OMP_NUM_THREADS", "1")
+os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
+import pyarrow.dataset as ds  # noqa: E402
+
+from lucene_spark.constants import ENGLISH_STOP_WORDS  # noqa: E402
+from lucene_spark.fixtures import reference_queries  # noqa: E402
+from lucene_spark.index.pseudo import ENC_SINGLETON  # noqa: E402
+from lucene_spark.index.schemas import KIND_BLOCK, KIND_TERM, POSTINGS_COLS  # noqa: E402
+from lucene_spark.search.query import (  # noqa: E402
+    DisjunctionMaxQuery,
+    TermQuery,
+    collect_terms,
+)
+from lucene_spark.search.segment import (  # noqa: E402
+    SegmentContext,
+    _SegmentSearcher,
+    _topk,
+    search_segment,
+)
+
+CHUNK = 5000  # docs per generated corpus chunk
+
+
+def shapes() -> dict[str, object]:
+    """The reference shapes (minus the stopword-only ``single_9``) plus two
+    dismax queries over hot terms."""
+    out: dict[str, object] = {
+        qid: qs for qid, qs in reference_queries() if qid != "single_9"
+    }
+    out["dismax_0"] = DisjunctionMaxQuery(
+        disjuncts=(TermQuery("w0000"), TermQuery("w0001")), tie_breaker=0.1
+    )
+    out["dismax_1"] = DisjunctionMaxQuery(
+        disjuncts=(TermQuery("w0002"), TermQuery("w0004"), TermQuery("w0100")),
+        tie_breaker=0.3,
+    )
+    return out
+
+
+def family(qid: str) -> str:
+    fam = qid.split("_")[0]
+    return "boolean" if fam in ("and", "or", "mixed") else fam
+
+
+def build(spark, n_docs: int, seed: int, root: str) -> str:
+    from lucene_spark.index import build_index
+    from lucene_spark.index.merge import merge_segments
+
+    n_chunks = (n_docs + CHUNK - 1) // CHUNK
+
+    def gen(batches):
+        from lucene_spark.fixtures import generate_webtext
+
+        for pdf in batches:
+            for cid in pdf["id"]:
+                cid = int(cid)
+                rows = generate_webtext(
+                    min(CHUNK, n_docs - cid * CHUNK), seed=seed + cid,
+                    start_id=cid * CHUNK,
+                )
+                yield pd.DataFrame(
+                    {"url": [r["url"] for r in rows], "text": [r["text"] for r in rows]}
+                )
+
+    corpus = f"{root}/corpus"
+    (
+        spark.range(n_chunks).repartition(n_chunks)
+        .mapInPandas(gen, schema="url string, text string")
+        .write.parquet(corpus)
+    )
+    build_index(
+        spark, spark.read.parquet(corpus), f"{root}/idx8", num_segments=8,
+        stopwords=ENGLISH_STOP_WORDS,
+    )
+    merge_segments(spark, f"{root}/idx8", f"{root}/idx1", target_segments=1)
+    return f"{root}/idx1"
+
+
+def segment_rows(index_dir: str, seg: int, terms: list[str]) -> pd.DataFrame:
+    """Every block row of ``terms`` in one segment, plus the term
+    dictionary's pulsed singletons as one-doc pseudo blocks (what
+    ``index.pseudo.singleton_pseudo_blocks`` ships to a task)."""
+    data = ds.dataset(f"{index_dir}/data", format="parquet", partitioning="hive")
+    in_seg = (ds.field("segment_id") == seg) & ds.field("term").isin(terms)
+    blocks = data.to_table(
+        columns=[c for c in POSTINGS_COLS if c != "segment_id"],
+        filter=in_seg & (ds.field("kind") == KIND_BLOCK),
+    ).to_pandas()
+    td = data.to_table(
+        filter=in_seg & (ds.field("kind") == KIND_TERM)
+        & ds.field("singleton_docid").is_valid(),
+    ).to_pandas()
+    singles = pd.DataFrame({
+        "term": td["term"],
+        "block_no": 0,
+        "n_docs": 1,
+        "base_docid": td["singleton_docid"] - 1,
+        "first_docid": td["singleton_docid"],
+        "last_docid": td["singleton_docid"],
+        "encoding": ENC_SINGLETON,
+        "docids_enc": None,
+        "freqs_enc": None,
+        "norms_enc": None,
+        "positions_enc": td["singleton_positions"],
+        "payloads_enc": td["singleton_payloads"],
+        "impact_freqs": [[int(f)] for f in td["singleton_freq"]],
+        "impact_norms": [[int(n)] for n in td["singleton_norm"]],
+    })
+    return pd.concat([blocks, singles], ignore_index=True).assign(segment_id=seg)
+
+
+def slices(seg_meta: dict, span: int) -> list[tuple[int, int, int]]:
+    """(segment, lo, hi) docid slices as the Searcher plans them."""
+    out = []
+    for seg, (_base, lo, hi) in sorted(seg_meta.items()):
+        if hi <= lo:
+            continue
+        if not span:
+            out.append((seg, lo, hi))
+            continue
+        for sl in range(lo // span, (hi - 1) // span + 1):
+            out.append((seg, max(lo, sl * span), min(hi, (sl + 1) * span)))
+    return out
+
+
+def exhaustive(ctx: SegmentContext, ast, k: int):
+    d, s = _SegmentSearcher(ctx, k).evaluate(ast)
+    keep = (d >= ctx.min_doc) & (d < ctx.max_doc)
+    return _topk(d[keep], s[keep], k)
+
+
+def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
+    """Best-of-reps Σ over tasks of fn's time, and the last rep's results."""
+    best, results = float("inf"), []
+    for _ in range(reps):
+        total, results = 0.0, []
+        for pdf, lo, hi in tasks:
+            # True selects the pruned paths on a checkout that still has the
+            # prune flag (to measure it); the current from_pdf ignores it
+            ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi, True)
+            t0 = time.perf_counter()
+            d, s = fn(ctx, ast, k)
+            total += time.perf_counter() - t0
+            results.append((d.tolist(), np.asarray(s, dtype=np.float32).tobytes()))
+        best = min(best, total)
+    return 1e3 * best, results
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--docs", type=int, default=100_000)
+    ap.add_argument("--spans", default="16384,126976,0")
+    ap.add_argument("--k", type=int, default=10)
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--cores", type=int, default=4)
+    ap.add_argument("--seed", type=int, default=42)
+    args = ap.parse_args()
+    spans = [int(x) for x in args.spans.split(",")]
+
+    from pyspark.sql import SparkSession
+
+    from lucene_spark.search import Searcher
+
+    root = tempfile.mkdtemp(prefix="evaluator_probe_")
+    spark = (
+        SparkSession.builder.master(f"local[{args.cores}]")
+        .appName("evaluator-probe")
+        .config("spark.sql.shuffle.partitions", str(2 * args.cores))
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.driver.memory", "4g")
+        .config("spark.local.dir", f"{root}/spark-local")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    try:
+        t0 = time.perf_counter()
+        idx = build(spark, args.docs, args.seed, root)
+        print(f"# {args.docs} docs, 8 segments merged to 1, built in "
+              f"{time.perf_counter() - t0:.0f} s at local[{args.cores}]; "
+              f"k={args.k}, best of {args.reps}", flush=True)
+        searcher = Searcher(spark, idx, stopwords=ENGLISH_STOP_WORDS)
+        seg_meta = searcher._seg_meta()
+        asts = {qid: searcher._prepared(q) for qid, q in shapes().items()}
+        scorers = {qid: searcher._make_scorers([a]) for qid, a in asts.items()}
+        terms = sorted(set().union(*(collect_terms(a) for a in asts.values())))
+        rows = {seg: segment_rows(idx, seg, terms) for seg in seg_meta}
+        spark.stop()
+        spark = None
+
+        print("| shape | family | span | search_segment ms | exhaustive ms | identical |")
+        print("|---|---|---:|---:|---:|---|")
+        totals: dict[tuple[str, int], list[float]] = {}
+        all_identical = True
+        for span in spans:
+            for qid, ast in asts.items():
+                qterms = collect_terms(ast)
+                tasks = []
+                for seg, lo, hi in slices(seg_meta, span):
+                    r = rows[seg]
+                    sub = r[
+                        r["term"].isin(qterms)
+                        & (r["last_docid"] >= lo) & (r["first_docid"] < hi)
+                    ]
+                    tasks.append((sub.assign(slice_id=0), lo, hi))
+                kms, kres = kernel_ms(tasks, scorers[qid], ast, args.k, search_segment, args.reps)
+                ems, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
+                same = kres == eres
+                all_identical &= same
+                t = totals.setdefault((family(qid), span), [0.0, 0.0])
+                t[0] += kms
+                t[1] += ems
+                print(f"| {qid} | {family(qid)} | {span or 'segment'} | "
+                      f"{kms:.1f} | {ems:.1f} | {'yes' if same else 'NO'} |", flush=True)
+        print()
+        print("| family | span | search_segment ms | exhaustive ms |")
+        print("|---|---:|---:|---:|")
+        for (fam, span), (kms, ems) in sorted(totals.items(), key=lambda x: (x[0][1] or 1 << 62, x[0][0])):
+            print(f"| {fam} | {span or 'segment'} | {kms:.1f} | {ems:.1f} |")
+        print(f"\nall bit-identical: {all_identical}")
+        return 0 if all_identical else 1
+    finally:
+        if spark is not None:
+            spark.stop()
+        shutil.rmtree(root, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    sys.exit(main())
