@@ -136,6 +136,7 @@ def write_term_blooms(
 
     out = terms.groupBy("segment_id").applyInPandas(pack, schema=_BLOOM_SCHEMA)
     out.write.mode("overwrite").parquet(f"{index_dir}/{BLOOMS_DIR}")
+    bc.destroy()
     return {
         "segments": len(n_terms),
         "total_bits": int(sum(nbits_by_seg.values())),

@@ -315,6 +315,7 @@ def compact_deletes(
         .parquet(f"{index_dir}/data")
     )
     kept_docmap.unpersist()
+    bc.destroy()
 
     def _fs_row(old: int, sid: int):
         if old in stats_rows:

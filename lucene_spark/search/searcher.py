@@ -19,6 +19,25 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
   n_segments·k rows — Spark's TakeOrderedAndProject, the TopDocs.merge
   analog (search/TopDocs.java:206-234).
 
+One pipeline serves ``search``, ``search_many``, ``search_all`` and
+``count``, as IndexSearcher.search(Query, CollectorManager) serves every
+collector: ``Searcher._slices`` plans stats, scan and slicing once, and
+``_run_slice`` is the one task body. Only the kernel each task runs and the
+shape of the result differ:
+
+===============  ========================  ==================================
+entry point      kernel (segment.py)       result shape
+===============  ========================  ==================================
+``search``       ``search_segment``        ``orderBy(score DESC, docid ASC)
+                                           .limit(k)``
+``search_many``  ``batch_search_segment``  ``row_number`` ≤ k per query_id
+``search_all``   ``exhaustive_hits``       every hit, no cut
+``count``        ``matching_docs``         sum of per-slice counts
+===============  ========================  ==================================
+
+MatchAllDocsQuery and MatchNoDocsQuery read no postings: all four entry
+points answer them from the docmap minus live deletes (``_docs_only``).
+
 Multi-term queries expand on the driver against term_dict (the rewrite
 layer of ScoringRewrite.java / TopTermsRewrite.java):
 - PrefixQuery → SHOULD-of-terms (prefix pushed down as startswith);
@@ -83,6 +102,7 @@ from .scorers import build_scorers, scoring_leaves
 from .segment import (
     WINDOW_DOCS,
     SegmentContext,
+    _SegmentSearcher,
     batch_search_segment,
     exhaustive_hits,
     search_segment,
@@ -151,35 +171,49 @@ def _needs_payloads(q) -> bool:
     )
 
 
-def _slice_bounds(pdf: pd.DataFrame, seg_meta, span):
-    """(doc_base, lo, hi) of this task's docid slice — the intersection of
-    the segment's stored-docid range with the slice's span window."""
+def _run_slice(pdf: pd.DataFrame, body, scorers, seg_meta, span, cache_tag):
+    """One (segment, slice) task of every entry point: build the context of
+    the task's docid slice — the intersection of the segment's stored-docid
+    range with the slice's span window — run the entry point's kernel
+    ``body`` on it, and lift the stored docids it returns to global ids."""
     seg = int(pdf["segment_id"].iloc[0])
     doc_base, min_doc, max_doc = seg_meta[seg]
     if span:
         sl = int(pdf["slice_id"].iloc[0])
         min_doc = max(min_doc, sl * span)
         max_doc = min(max_doc, (sl + 1) * span)
-    return doc_base, min_doc, max_doc
-
-
-def _segment_search_fn(
-    pdf: pd.DataFrame, query, scorers, seg_meta, k, after=None,
-    span=None, cache_tag=None,
-) -> pd.DataFrame:
-    """Top-k hits of one (segment, slice) task; ``k=None`` returns every
-    hit (exhaustive evaluator, no top-k cut)."""
-    doc_base, min_doc, max_doc = _slice_bounds(pdf, seg_meta, span)
     ctx = SegmentContext.from_pdf(
         pdf, scorers, min_doc, max_doc, cache_tag=cache_tag, doc_base=doc_base,
     )
-    if k is None:
-        d, s = exhaustive_hits(ctx, query, after)
-    else:
-        d, s = search_segment(ctx, query, k, after=after)
-    return pd.DataFrame(
-        {"docid": d + doc_base, "score": s.astype(np.float64)}
-    )
+    out = body(ctx)
+    if "docid" in out:
+        out["docid"] += doc_base
+    return out
+
+
+def _top_k_body(ctx, query, k, after) -> pd.DataFrame:
+    d, s = search_segment(ctx, query, k, after=after)
+    return pd.DataFrame({"docid": d, "score": s.astype(np.float64)})
+
+
+def _batch_body(ctx, queries, k) -> pd.DataFrame:
+    qids, d, s = batch_search_segment(ctx, queries, k)
+    return pd.DataFrame({"query_id": qids, "docid": d, "score": s})
+
+
+def _all_body(ctx, query) -> pd.DataFrame:
+    d, s = exhaustive_hits(ctx, query)
+    return pd.DataFrame({"docid": d, "score": s.astype(np.float64)})
+
+
+def _count_body(ctx, query) -> pd.DataFrame:
+    # docid-set algebra only (TotalHitCountCollector): no scorers, no top-k,
+    # no float work
+    d = _SegmentSearcher(ctx, 0).matching_docs(query)
+    d = d[(d >= ctx.min_doc) & (d < ctx.max_doc)]
+    if ctx.deleted is not None and d.size:
+        d = d[np.isin(d, ctx.deleted, invert=True)]
+    return pd.DataFrame({"n": [int(d.size)]})
 
 
 class _PerFieldQueryAnalyzer:
@@ -1224,6 +1258,51 @@ class Searcher:
             queries, tstats, doc_count, sum_ttf, self.mode, field_stats=field_stats
         )
 
+    def _slices(self, queries: list, body, schema, scored: bool = True) -> DataFrame:
+        """The one plan behind search, search_many, search_all and count
+        (IndexSearcher.search(Query, CollectorManager)): global stats for
+        the union of the queries' terms, one postings scan, then one task
+        per (segment, docid slice) that runs ``body`` on its
+        SegmentContext. ``scored=False`` skips the stats (count needs none);
+        no term at all plans no scan."""
+        terms = sorted(set().union(*(collect_terms(q) for q in queries)))
+        if not terms:
+            return self.spark.createDataFrame([], schema)
+        scorers = self._make_scorers(queries) if scored else {}
+        seg_meta = self._seg_meta()
+        # doc blocks never cross segments but may straddle docid slices:
+        # block-join trees evaluate on whole segments
+        span = (
+            None
+            if any(contains_block_join(q) for q in queries)
+            else self._slice_span()
+        )
+        blocks = self._postings_blocks(
+            terms,
+            any(_needs_positions(q) for q in queries),
+            span,
+            need_payloads=any(_needs_payloads(q) for q in queries),
+        )
+        tag = self._cache_tag()
+        return self._balanced_grouping(blocks, seg_meta, span).applyInPandas(
+            lambda pdf: _run_slice(pdf, body, scorers, seg_meta, span, tag),
+            schema=schema,
+        )
+
+    def _docs_only(self, query) -> DataFrame | None:
+        """(docid, score) of a query answered without postings: every live
+        doc at the query's boost for MatchAllDocsQuery, nothing for
+        MatchNoDocsQuery; None for every other query."""
+        if isinstance(query, MatchNoDocsQuery):
+            return self._empty_hits()
+        if isinstance(query, MatchAllDocsQuery):
+            return self._minus_deletes(
+                self._docmap_global().select(
+                    "docid", F.lit(float(query.boost)).alias("score")
+                )
+            )
+        return None
+
     # --- search ---------------------------------------------------------
     def search(
         self,
@@ -1234,61 +1313,13 @@ class Searcher:
         analyzer: str | None = None,
     ) -> DataFrame:
         query = self._prepared(query, analyzer=analyzer)
-
-        if isinstance(query, MatchNoDocsQuery):
-            return self._empty_hits()
-        if isinstance(query, MatchAllDocsQuery):
-            dm = self._docmap_global().withColumn(
-                "score", F.lit(float(query.boost))
-            )
-            out = dm.select("docid", "score")
-            if self.reader.deletes is not None:
-                # live-docs check, still at DataFrame level (anti-join on the
-                # globalized delete list)
-                bases = [
-                    (int(s), int(b)) for s, b in self.reader.doc_bases.items()
-                ]
-                base_df = self.spark.createDataFrame(
-                    bases, "segment_id int, doc_base long"
-                )
-                dele = (
-                    self.reader.deletes.join(F.broadcast(base_df), "segment_id")
-                    .select((F.col("docid") + F.col("doc_base")).alias("docid"))
-                )
-                out = out.join(dele, "docid", "left_anti")
-            if after is not None:
-                out = out.filter(F.col("docid") > int(after[1]))
-            out = out.orderBy(F.asc("docid")).limit(k)
-            return self._maybe_url(out, with_url)
-
-        terms = sorted(collect_terms(query))
-        if not terms:
-            return self._empty_hits()
-        scorers = self._make_scorers([query])
-        if not scorers and not terms:
-            return self._empty_hits()
-        seg_meta = self._seg_meta()
-        # doc blocks never cross segments but may straddle docid slices:
-        # block-join trees evaluate on whole segments
-        span = None if contains_block_join(query) else self._slice_span()
-        blocks = self._postings_blocks(
-            terms, _needs_positions(query), span,
-            need_payloads=_needs_payloads(query),
-        )
-
-        fn = partial(
-            _segment_search_fn,
-            query=query,
-            scorers=scorers,
-            seg_meta=seg_meta,
-            k=k,
-            after=after,
-            span=span,
-            cache_tag=self._cache_tag(),
-        )
-        hits = self._balanced_grouping(blocks, seg_meta, span).applyInPandas(
-            lambda pdf: fn(pdf), schema=SEARCH_HIT_SCHEMA
-        )
+        hits = self._docs_only(query)
+        if hits is None:
+            body = partial(_top_k_body, query=query, k=k, after=after)
+            hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
+        elif after is not None:
+            # constant score: a page boundary is a docid
+            hits = hits.filter(F.col("docid") > int(after[1]))
         out = hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
         return self._maybe_url(out, with_url)
 
@@ -1303,56 +1334,25 @@ class Searcher:
         benchmark/byTask/tasks/SearchTask.java).
 
         Returns (query_id, docid, score), k rows per query, ordered within
-        each query by (score DESC, docid ASC).
+        each query by (score DESC, docid ASC). A match-all query gets the
+        rows ``search("*", k)`` gives.
         """
         from pyspark.sql.window import Window
 
-        parsed: dict[str, object] = {}
-        for qid, q in queries.items():
-            q = self._prepared(q)
-            if not isinstance(q, (MatchNoDocsQuery, MatchAllDocsQuery)):
-                parsed[qid] = q
-        all_terms = sorted(
-            set().union(*(collect_terms(q) for q in parsed.values())) if parsed else set()
+        parsed = {qid: self._prepared(q) for qid, q in queries.items()}
+        kernel = {
+            qid: q
+            for qid, q in parsed.items()
+            if not isinstance(q, (MatchAllDocsQuery, MatchNoDocsQuery))
+        }
+        body = partial(_batch_body, queries=kernel, k=k)
+        hits = self._slices(
+            list(kernel.values()), body, "query_id string, docid long, score double"
         )
-        if not all_terms:
-            return self.spark.createDataFrame(
-                [], "query_id string, docid long, score double"
-            )
-        scorers = self._make_scorers(list(parsed.values()))
-        seg_meta = self._seg_meta()
-        span = (
-            None
-            if any(contains_block_join(q) for q in parsed.values())
-            else self._slice_span()
-        )
-        need_positions = any(_needs_positions(q) for q in parsed.values())
-        need_payloads = any(_needs_payloads(q) for q in parsed.values())
-        blocks = self._postings_blocks(
-            all_terms, need_positions, span, need_payloads=need_payloads
-        )
-        # broadcast the (large) query batch + scorer table: deserialized once
-        # per python worker and reused across its tasks, instead of being
-        # unpickled from the task command for every (segment, slice) group
-        bc = self.spark.sparkContext.broadcast((parsed, scorers, seg_meta))
-
-        tag = self._cache_tag()
-
-        def many_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            b_parsed, b_scorers, b_meta = bc.value
-            doc_base, min_doc, max_doc = _slice_bounds(pdf, b_meta, span)
-            ctx = SegmentContext.from_pdf(
-                pdf, b_scorers, min_doc, max_doc, cache_tag=tag,
-                doc_base=doc_base,
-            )
-            qids, docids, scores = batch_search_segment(ctx, b_parsed, k)
-            return pd.DataFrame(
-                {"query_id": qids, "docid": docids + doc_base, "score": scores}
-            )
-
-        hits = self._balanced_grouping(blocks, seg_meta, span).applyInPandas(
-            many_fn, schema="query_id string, docid long, score double"
-        )
+        for qid, q in parsed.items():
+            if isinstance(q, MatchAllDocsQuery):
+                first = self._docs_only(q).orderBy("docid").limit(k)
+                hits = hits.unionByName(first.withColumn("query_id", F.lit(qid)))
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
         return (
             hits.withColumn("rk", F.row_number().over(w))
@@ -1364,33 +1364,11 @@ class Searcher:
         """All matching (docid, score) rows, distributed (no top-k cut) —
         the building block for field-sort / rescoring / function scoring."""
         query = self._prepared(query)
-        if isinstance(query, MatchNoDocsQuery):
-            return self._empty_hits()
-        if isinstance(query, MatchAllDocsQuery):
-            return self._docmap_global().select(
-                "docid", F.lit(float(query.boost)).alias("score")
-            )
-        terms = sorted(collect_terms(query))
-        if not terms:
-            return self._empty_hits()
-        scorers = self._make_scorers([query])
-        seg_meta = self._seg_meta()
-        span = None if contains_block_join(query) else self._slice_span()
-        blocks = self._postings_blocks(
-            terms, _needs_positions(query), span,
-            need_payloads=_needs_payloads(query),
-        )
-        fn = partial(
-            _segment_search_fn,
-            query=query,
-            scorers=scorers,
-            seg_meta=seg_meta,
-            k=None,
-            span=span,
-        )
-        return self._balanced_grouping(blocks, seg_meta, span).applyInPandas(
-            lambda pdf: fn(pdf), schema=SEARCH_HIT_SCHEMA
-        )
+        hits = self._docs_only(query)
+        if hits is None:
+            body = partial(_all_body, query=query)
+            hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
+        return hits
 
     def search_sorted_by(
         self,
@@ -1708,43 +1686,12 @@ class Searcher:
         """Total hit count (TotalHitCountCollector analog) — per-segment
         docid-set sizes summed, no scoring, no top-k."""
         query = self._prepared(query)
-        if isinstance(query, MatchNoDocsQuery):
-            return 0
-        if isinstance(query, MatchAllDocsQuery):
-            n = self.reader.global_stats[0]
-            if self.reader.deletes is not None:
-                n -= self.reader.deletes.distinct().count()
-            return n
-        terms = sorted(collect_terms(query))
-        if not terms:
-            return 0
-        seg_meta = self._seg_meta()
-        span = None if contains_block_join(query) else self._slice_span()
-        blocks = self._postings_blocks(
-            terms, _needs_positions(query), span,
-            need_payloads=_needs_payloads(query),
-        )
-
-        tag = self._cache_tag()
-
-        def count_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            # docid-set algebra only (TotalHitCountCollector): no scorers,
-            # no top-k, no float work
-            from .segment import _SegmentSearcher
-
-            doc_base, min_doc, max_doc = _slice_bounds(pdf, seg_meta, span)
-            ctx = SegmentContext.from_pdf(
-                pdf, {}, min_doc, max_doc, cache_tag=tag, doc_base=doc_base,
-            )
-            d = _SegmentSearcher(ctx, 0).matching_docs(query)
-            d = d[(d >= min_doc) & (d < max_doc)]
-            if ctx.deleted is not None and d.size:
-                d = d[np.isin(d, ctx.deleted, invert=True)]
-            return pd.DataFrame({"n": [int(d.size)]})
-
+        hits = self._docs_only(query)
+        if hits is not None:
+            return hits.count()
+        body = partial(_count_body, query=query)
         rows = (
-            self._balanced_grouping(blocks, seg_meta, span)
-            .applyInPandas(count_fn, schema="n long")
+            self._slices([query], body, "n long", scored=False)
             .agg(F.sum("n").alias("n"))
             .collect()
         )

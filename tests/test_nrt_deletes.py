@@ -88,20 +88,29 @@ def test_deletes_exclude_docs(spark, corpus, tmp_path_factory):
     after = s2.search("w0000 OR w0001", k=5, with_url=True).collect()
     hits_urls = {r["url"] for r in after}
     assert not (hits_urls & set(victim_urls))
+
+    def bits(rows):
+        # scores compared as float32 bits
+        return [(r["docid"], np.float32(r["score"]).tobytes()) for r in rows]
+
+    def ranked(rows):
+        return bits(sorted(rows, key=lambda r: (-r["score"], r["docid"])))
+
+    # the four entry points agree under deletes, for the exhaustive evaluator
+    # (OR), the windowed block-max one (term) and match-all, at k=0, k=10
+    # and k past every live hit count
+    qs = ("w0000 OR w0001", "w0000", "*")
+    every = {q: ranked(s2.search_all(q).collect()) for q in qs}
     # counts reflect deletes for term and match-all queries
-    assert s2.count("*") == 240 - 2
-    # search() and the batched search_many() agree under deletes, for the
-    # exhaustive evaluator (OR) and the windowed block-max one (term)
-    for q in ("w0000 OR w0001", "w0000"):
-        a = [(r["docid"], np.float32(r["score"])) for r in s2.search(q, k=10).collect()]
-        b = [
-            (r["docid"], np.float32(r["score"]))
-            for r in sorted(
-                s2.search_many({"q": q}, k=10).collect(),
-                key=lambda r: (-r["score"], r["docid"]),
-            )
-        ]
-        assert a == b, q
+    assert s2.search_all("*").count() == 240 - 2
+    for q in qs:
+        assert s2.count(q) == len(every[q]), q
+    for k in (0, 10, max(map(len, every.values())) + 5):
+        many = s2.search_many({q: q for q in qs}, k=k).collect()
+        for q in qs:
+            a = bits(s2.search(q, k=k).collect())
+            b = ranked([r for r in many if r["query_id"] == q])
+            assert a == b == every[q][:k], (q, k)
 
 
 def test_deletes_survive_merge(spark, corpus, tmp_path_factory):

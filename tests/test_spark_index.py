@@ -339,7 +339,7 @@ def test_merged_global_stats_preserved(spark, index_dir, merged_dir):
 
 def test_search_many_matches_single(spark, index_dir, searcher):
     """Batched execution must return exactly the per-query results."""
-    qs = dict(reference_queries()[:12])
+    qs = dict(reference_queries()[:12], all="*")
     batched = searcher.search_many(qs, k=10).collect()
     by_q = {}
     for r in batched:

@@ -15,9 +15,17 @@ milliseconds per shape and span; ``SegmentContext.from_pdf`` is outside the
 timed region and every timed call gets a fresh context, so no decode is
 cached across calls.
 
+``--batch N`` replays instead one ``perfbench.corpus.batch_queries`` batch
+of N queries per slice through ``batch_search_segment`` (the dense batch
+evaluator ``search_many`` runs) and through a per-query ``search_segment``
+loop, checks that every per-query top-k is bit-identical, and prints
+best-of-R milliseconds per query family — the evidence for keeping the
+batch evaluator.
+
 Usage:
     python tools/evaluator_probe.py [--docs 100000] [--spans 16384,126976,0]
                                     [--k 10] [--reps 3] [--cores 4]
+                                    [--batch 1000]
 
 A span of 0 means one slice per segment. At 1M docs the build and merge
 take about 3 min at local[4].
@@ -54,6 +62,7 @@ from lucene_spark.search.segment import (  # noqa: E402
     SegmentContext,
     _SegmentSearcher,
     _topk,
+    batch_search_segment,
     search_segment,
 )
 
@@ -185,6 +194,112 @@ def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
     return 1e3 * best, results
 
 
+def slice_tasks(rows: dict, seg_meta: dict, span: int, terms) -> list:
+    """(block rows, lo, hi) of every (segment, slice) task for ``terms``."""
+    tasks = []
+    for seg, lo, hi in slices(seg_meta, span):
+        r = rows[seg]
+        sub = r[
+            r["term"].isin(terms)
+            & (r["last_docid"] >= lo) & (r["first_docid"] < hi)
+        ]
+        tasks.append((sub.assign(slice_id=0), lo, hi))
+    return tasks
+
+
+def shape_report(asts, scorers, rows, seg_meta, spans, args) -> bool:
+    """Per reference shape: ``search_segment`` against the exhaustive
+    evaluator. True when every top-k is bit-identical."""
+    print("| shape | family | span | search_segment ms | exhaustive ms | identical |")
+    print("|---|---|---:|---:|---:|---|")
+    totals: dict[tuple[str, int], list[float]] = {}
+    all_identical = True
+    for span in spans:
+        for qid, ast in asts.items():
+            tasks = slice_tasks(rows, seg_meta, span, collect_terms(ast))
+            kms, kres = kernel_ms(tasks, scorers[qid], ast, args.k, search_segment, args.reps)
+            ems, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
+            same = kres == eres
+            all_identical &= same
+            t = totals.setdefault((family(qid), span), [0.0, 0.0])
+            t[0] += kms
+            t[1] += ems
+            print(f"| {qid} | {family(qid)} | {span or 'segment'} | "
+                  f"{kms:.1f} | {ems:.1f} | {'yes' if same else 'NO'} |", flush=True)
+    print()
+    print("| family | span | search_segment ms | exhaustive ms |")
+    print("|---|---:|---:|---:|")
+    for (fam, span), (kms, ems) in sorted(totals.items(), key=lambda x: (x[0][1] or 1 << 62, x[0][0])):
+        print(f"| {fam} | {span or 'segment'} | {kms:.1f} | {ems:.1f} |")
+    print(f"\nall bit-identical: {all_identical}")
+    return all_identical
+
+
+def ranked(d, s) -> list:
+    """(docid, float32 score bits) in (score DESC, docid ASC) order."""
+    s = np.asarray(s, dtype=np.float32)
+    order = np.lexsort((d, -s.astype(np.float64)))
+    return [(int(d[i]), s[i].tobytes()) for i in order]
+
+
+def batch_report(asts, scorers, rows, seg_meta, spans, args) -> bool:
+    """One query batch per (segment, slice) task, through the dense
+    ``batch_search_segment`` (what ``search_many`` runs) and through a
+    per-query ``search_segment`` loop (what ``search`` runs), each on one
+    context per slice shared by the whole batch. The batch kernel is called
+    once per family on that shared context, so its decode memo is shared
+    across families as in one whole-batch call. True when every per-query
+    top-k is bit-identical."""
+    by_fam: dict[str, dict] = {}
+    for qid, ast in asts.items():
+        by_fam.setdefault(family(qid), {})[qid] = ast
+    print(f"# batch of {len(asts)} queries: "
+          + ", ".join(f"{f} {len(q)}" for f, q in sorted(by_fam.items())))
+    print("| span | slices | family | queries | batch ms | per-query loop ms | identical |")
+    print("|---:|---:|---|---:|---:|---:|---|")
+    terms = set().union(*(collect_terms(a) for a in asts.values()))
+    all_identical = True
+    for span in spans:
+        tasks = slice_tasks(rows, seg_meta, span, terms)
+        best_b = {f: float("inf") for f in by_fam}
+        best_l = dict(best_b)
+        same = {f: True for f in by_fam}
+        for _ in range(args.reps):
+            t_b = dict.fromkeys(by_fam, 0.0)
+            t_l = dict.fromkeys(by_fam, 0.0)
+            for pdf, lo, hi in tasks:
+                got: dict[str, list] = {}
+                ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi)
+                for fam, qs in by_fam.items():
+                    t0 = time.perf_counter()
+                    qids, d, s = batch_search_segment(ctx, qs, args.k)
+                    t_b[fam] += time.perf_counter() - t0
+                    qids = np.asarray(qids, dtype=object)
+                    for qid in qs:
+                        m = qids == qid
+                        got[qid] = ranked(d[m], s[m])
+                ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi)
+                for fam, qs in by_fam.items():
+                    for qid, ast in qs.items():
+                        t0 = time.perf_counter()
+                        d, s = search_segment(ctx, ast, args.k)
+                        t_l[fam] += time.perf_counter() - t0
+                        same[fam] &= ranked(d, s) == got[qid]
+            for fam in by_fam:
+                best_b[fam] = min(best_b[fam], t_b[fam])
+                best_l[fam] = min(best_l[fam], t_l[fam])
+        for fam, qs in sorted(by_fam.items()):
+            all_identical &= same[fam]
+            print(f"| {span or 'segment'} | {len(tasks)} | {fam} | {len(qs)} | "
+                  f"{1e3 * best_b[fam]:.1f} | {1e3 * best_l[fam]:.1f} | "
+                  f"{'yes' if same[fam] else 'NO'} |", flush=True)
+        print(f"| {span or 'segment'} | {len(tasks)} | **all** | {len(asts)} | "
+              f"**{1e3 * sum(best_b.values()):.1f}** | "
+              f"**{1e3 * sum(best_l.values()):.1f}** | |", flush=True)
+    print(f"\nall bit-identical: {all_identical}")
+    return all_identical
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--docs", type=int, default=100_000)
@@ -193,6 +308,8 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--cores", type=int, default=4)
     ap.add_argument("--seed", type=int, default=42)
+    ap.add_argument("--batch", type=int, default=0,
+                    help="replay a perfbench batch of this many queries")
     args = ap.parse_args()
     spans = [int(x) for x in args.spans.split(",")]
 
@@ -219,44 +336,21 @@ def main() -> int:
               f"k={args.k}, best of {args.reps}", flush=True)
         searcher = Searcher(spark, idx, stopwords=ENGLISH_STOP_WORDS)
         seg_meta = searcher._seg_meta()
-        asts = {qid: searcher._prepared(q) for qid, q in shapes().items()}
-        scorers = {qid: searcher._make_scorers([a]) for qid, a in asts.items()}
+        if args.batch:
+            from perfbench.corpus import batch_queries
+
+            queries = batch_queries(args.seed, 0, args.batch)
+            asts = {qid: searcher._prepared(q) for qid, q in queries.items()}
+            scorers = searcher._make_scorers(list(asts.values()))
+        else:
+            asts = {qid: searcher._prepared(q) for qid, q in shapes().items()}
+            scorers = {qid: searcher._make_scorers([a]) for qid, a in asts.items()}
         terms = sorted(set().union(*(collect_terms(a) for a in asts.values())))
         rows = {seg: segment_rows(idx, seg, terms) for seg in seg_meta}
         spark.stop()
         spark = None
-
-        print("| shape | family | span | search_segment ms | exhaustive ms | identical |")
-        print("|---|---|---:|---:|---:|---|")
-        totals: dict[tuple[str, int], list[float]] = {}
-        all_identical = True
-        for span in spans:
-            for qid, ast in asts.items():
-                qterms = collect_terms(ast)
-                tasks = []
-                for seg, lo, hi in slices(seg_meta, span):
-                    r = rows[seg]
-                    sub = r[
-                        r["term"].isin(qterms)
-                        & (r["last_docid"] >= lo) & (r["first_docid"] < hi)
-                    ]
-                    tasks.append((sub.assign(slice_id=0), lo, hi))
-                kms, kres = kernel_ms(tasks, scorers[qid], ast, args.k, search_segment, args.reps)
-                ems, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
-                same = kres == eres
-                all_identical &= same
-                t = totals.setdefault((family(qid), span), [0.0, 0.0])
-                t[0] += kms
-                t[1] += ems
-                print(f"| {qid} | {family(qid)} | {span or 'segment'} | "
-                      f"{kms:.1f} | {ems:.1f} | {'yes' if same else 'NO'} |", flush=True)
-        print()
-        print("| family | span | search_segment ms | exhaustive ms |")
-        print("|---|---:|---:|---:|")
-        for (fam, span), (kms, ems) in sorted(totals.items(), key=lambda x: (x[0][1] or 1 << 62, x[0][0])):
-            print(f"| {fam} | {span or 'segment'} | {kms:.1f} | {ems:.1f} |")
-        print(f"\nall bit-identical: {all_identical}")
-        return 0 if all_identical else 1
+        report = batch_report if args.batch else shape_report
+        return 0 if report(asts, scorers, rows, seg_meta, spans, args) else 1
     finally:
         if spark is not None:
             spark.stop()
