@@ -6,16 +6,18 @@ Reimplements the contract of Lucene's BloomFilteringPostingsFormat
 keys [...] able to quickly confirm if a term is NOT present in a segment")
 and FuzzySet (codecs/bloom/FuzzySet.java — the bitset sized to the saturation
 target). The Spark shape differs by design: Lucene answers "is this term in
-THIS segment's term dict" before a disk seek; here the postings tree is
-partitioned by ``segment_id``, so the same membership test run driver-side
-over all segments turns into a ``segment_id IN (...)`` partition filter —
-whole segment DIRECTORIES are skipped by the parquet scan. At web scale
-(thousands of segments, selective terms) that is the difference between
-touching every partition and touching the few that can match.
+THIS segment's term dict" before a disk seek; here the searcher plans one
+task per (segment, docid slice) on the driver, so the same membership test
+run driver-side over all segments decides which segments get tasks at all —
+a pruned segment gets none, and its directories are never opened. At web
+scale (thousands of segments, selective terms) that is the difference
+between touching every partition and touching the few that can match.
 
 Pruning is semantically a no-op by construction: a Bloom false positive only
-ADDS a segment to the scan (its postings filter then matches nothing), and a
-segment without a valid bloom row is always a candidate. Staleness is
+ADDS a segment's tasks (their term filter then matches nothing), and a
+segment without a valid bloom row is always a candidate. A query holding a
+MatchAllDocsQuery matches docs without its terms, so the searcher prunes
+nothing for it. Staleness is
 fingerprinted: each row records the segment's ``doc_count`` at bloom-build
 time and is ignored if the live ``field_stats`` row disagrees (the same
 guard persisted HNSW graphs use), so appends/merges that don't refresh
@@ -185,7 +187,7 @@ def bloom_candidate_segments(
     """Segments that can contribute postings for ANY of ``terms``.
 
     Returns None when pruning buys nothing (no blooms, no terms, or every
-    segment is a candidate) so the caller skips the extra filter. Segments
+    segment is a candidate) so the caller prunes nothing. Segments
     without a (valid) bloom row are always candidates.
     """
     if not blooms or not terms:

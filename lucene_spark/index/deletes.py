@@ -4,10 +4,10 @@ Lucene marks deletions in a per-segment bitset applied by every scorer
 (codecs/lucene90/Lucene90LiveDocsFormat.java; liveDocs checks in
 search/Weight.java bulk scorers). Here deletes are a small parquet table
 ``deletes/(segment_id, docid)`` in STORED docid coordinates, appended per
-delete batch. At search time they ride into each (segment, slice) task as
-postings-shaped pseudo rows (encoding=ENC_DELETE) — the same distribution
-path as singleton pulsing, so the whole plan stays shuffle-free on the
-driver and a deleted doc is filtered before it can occupy a top-k slot.
+delete batch. At search time each (segment, docid slice) task reads the
+rows of its own range next to its postings (``index.reader.read_slice``),
+and they become its context's ``deleted`` array, so a deleted doc is
+filtered before it can occupy a top-k slot.
 
 ``updateDocument(term, doc)`` ≡ append new segment + delete-by-url of the
 old doc (index/DocumentsWriterDeleteQueue.java buffered-delete semantics,
@@ -22,15 +22,10 @@ from pyspark.sql import functions as F
 from .reader import IndexReader
 
 __all__ = [
-    "ENC_DELETE",
     "DELETES_SCHEMA",
     "add_deletes_by_url",
     "add_deletes_by_query",
-    "delete_pseudo_blocks",
 ]
-
-ENC_DELETE = 5
-_DELETE_TERM = "\x00deleted"  # NUL prefix: unreachable by any analyzed term
 
 DELETES_SCHEMA = "segment_id int, docid long"
 
@@ -50,29 +45,6 @@ def add_deletes_by_url(
     if n:
         hits.write.mode("append").parquet(f"{index_dir}/deletes")
     return n
-
-
-def delete_pseudo_blocks(deletes: DataFrame) -> DataFrame:
-    """POSTINGS_COLS-shaped rows carrying the delete list into the per-
-    (segment, slice) search tasks; ``first_docid == last_docid == docid`` so
-    docid-slice replication routes each tombstone to exactly its slice."""
-    return deletes.select(
-        "segment_id",
-        F.lit(_DELETE_TERM).alias("term"),
-        F.lit(0).alias("block_no"),
-        F.lit(1).alias("n_docs"),
-        (F.col("docid") - 1).alias("base_docid"),
-        F.col("docid").alias("first_docid"),
-        F.col("docid").alias("last_docid"),
-        F.lit(ENC_DELETE).cast("tinyint").alias("encoding"),
-        F.lit(None).cast("binary").alias("docids_enc"),
-        F.lit(None).cast("binary").alias("freqs_enc"),
-        F.lit(None).cast("binary").alias("norms_enc"),
-        F.lit(None).cast("binary").alias("positions_enc"),
-        F.lit(None).cast("binary").alias("payloads_enc"),
-        F.array().cast("array<long>").alias("impact_freqs"),
-        F.array().cast("array<int>").alias("impact_norms"),
-    )
 
 
 def add_deletes_by_query(

@@ -13,14 +13,19 @@ segment manifest (one row per segment). Postings are never collected.
 
 from __future__ import annotations
 
+import os
 from functools import cached_property
 
+import numpy as np
+import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pseudo import singleton_pseudo_rows
 from .schemas import DOCMAP_COLS, KIND_BLOCK, KIND_DOC, KIND_TERM, POSTINGS_COLS, TERM_DICT_COLS
 
-__all__ = ["IndexReader"]
+__all__ = ["IndexReader", "read_slice"]
 
 
 def _sql_term_literal(t: str) -> str:
@@ -69,6 +74,67 @@ def term_in_filter(col: str, terms: list[str]):
         pass
     quoted = ",".join(_sql_term_literal(t) for t in terms)
     return F.expr(f"`{col}` IN ({quoted})")
+
+
+def _read_parquet(path: str, columns: list[str], where) -> pd.DataFrame:
+    """``columns`` of the rows of parquet directory ``path`` that pass the
+    pyarrow expression ``where``. A missing directory reads as no rows and
+    a column an older index lacks as nulls, as ``_select_compat`` reads
+    them through Spark."""
+    if not os.path.isdir(path):
+        return pd.DataFrame({c: pd.Series(dtype=object) for c in columns})
+    data = ds.dataset(path, format="parquet")
+    have = [c for c in columns if c in data.schema.names]
+    out = data.to_table(columns=have, filter=where).to_pandas()
+    for c in columns:
+        if c not in have:
+            out[c] = None
+    return out[columns]
+
+
+def read_slice(
+    index_dir: str,
+    deletes_dir: str | None,
+    seg: int,
+    lo: int,
+    hi: int,
+    terms: list[str],
+    cols: list[str],
+) -> tuple[pd.DataFrame, np.ndarray | None]:
+    """What the search task of segment ``seg``, stored docids [lo, hi),
+    reads with pyarrow from the segment's own directories, filtered by
+    ``term IN terms`` and the docid range: ``cols`` (of POSTINGS_COLS) of
+    the block rows overlapping the range plus the pulsed singletons inside
+    it as pseudo blocks, and the sorted deleted docids of the range in
+    ``deletes_dir`` (None when there are none, or no ``deletes_dir``).
+    Positions and payloads are read only when ``cols`` holds them."""
+    in_terms = ds.field("term").isin(terms)
+    blocks = _read_parquet(
+        f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}",
+        [c for c in cols if c != "segment_id"],
+        in_terms & (ds.field("last_docid") >= lo) & (ds.field("first_docid") < hi),
+    )
+    single = ds.field("singleton_docid")
+    td = _read_parquet(
+        f"{index_dir}/data/kind={KIND_TERM}/segment_id={seg}",
+        ["term", "singleton_docid", "singleton_freq", "singleton_norm"]
+        + (["singleton_positions"] if "positions_enc" in cols else [])
+        + (["singleton_payloads"] if "payloads_enc" in cols else []),
+        in_terms & (single >= lo) & (single < hi),
+    )
+    if len(td):
+        singles = singleton_pseudo_rows(td)[blocks.columns]
+        blocks = pd.concat([blocks, singles], ignore_index=True) if len(blocks) else singles
+    deleted = None
+    if deletes_dir is not None:
+        docid = ds.field("docid")
+        dels = _read_parquet(
+            deletes_dir, ["docid"],
+            (ds.field("segment_id") == seg) & (docid >= lo) & (docid < hi),
+        )
+        if len(dels):
+            deleted = np.unique(dels["docid"].to_numpy(dtype=np.int64))
+    return blocks.assign(segment_id=seg)[cols], deleted
 
 
 class IndexReader:
@@ -231,8 +297,8 @@ class IndexReader:
     @cached_property
     def term_blooms(self) -> dict:
         """Per-segment term Bloom filters (index/blooms.py), {} when the
-        index has none. Advisory only: consulted to PRUNE segment partitions
-        from term scans, never to assert membership."""
+        index has none. Advisory only: consulted to PRUNE segments from the
+        search task plan, never to assert membership."""
         from .blooms import load_term_blooms
 
         return load_term_blooms(self.spark, self.index_dir, self.doc_counts)
@@ -325,23 +391,3 @@ class IndexReader:
             .collect()
         )
         return [(r["term"], int(r["df"])) for r in rows]
-
-    def singleton_rows(self, terms: list[str]) -> list[dict]:
-        """Pulsed (df==1) postings for the given terms, tiny by construction."""
-        if not terms:
-            return []
-        rows = (
-            self.term_dict.filter(
-                F.col("term").isin(terms) & F.col("singleton_docid").isNotNull()
-            )
-            .select(
-                "segment_id",
-                "term",
-                "singleton_docid",
-                "singleton_freq",
-                "singleton_norm",
-                "singleton_positions",
-            )
-            .collect()
-        )
-        return [r.asDict() for r in rows]

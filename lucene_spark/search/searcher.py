@@ -7,21 +7,25 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
   for global TermStatistics and one of ``field_stats`` for
   CollectionStatistics (IndexSearcher.java:1140-1150 — stats are summed
   across segments BEFORE scoring; per-segment IDF would break rank identity);
-- postings for the query terms are read with ``term IN (...)`` pushed into
-  the Parquet scan (row-group pruning via the term min/max stats written by
-  the builder's sortWithinPartitions) and only the needed columns
-  (positions are read ONLY for phrase queries — column pruning);
-- singleton (pulsed) terms are joined in as pseudo-blocks from term_dict, so
-  the whole plan stays distributed — nothing posting-sized ever reaches the
-  driver;
-- each segment group evaluates locally (segment.py) and emits ≤ k hits;
-  the global answer is ``orderBy(score DESC, docid ASC).limit(k)`` over
-  n_segments·k rows — Spark's TakeOrderedAndProject, the TopDocs.merge
-  analog (search/TopDocs.java:206-234).
+- the driver also plans the task list (``plan_slices``): one
+  (segment, lo, hi) per manifest segment its term Blooms keep and per docid
+  slice, widest first. The tasks run as one map-only stage,
+  ``spark.range(0, n, 1, n).mapInPandas``, so partition i is task i — no
+  scan → shuffle → grouped-map exchange;
+- each task reads its own rows with pyarrow (``index.reader.read_slice``,
+  the per-leaf read of IndexSearcher.searchLeaf): the block rows of its
+  segment's partition directory with ``term IN (...)`` and the docid range
+  as filters, its pulsed singletons as pseudo blocks and its deletes.
+  Positions and payloads are read only for queries that consume them —
+  column pruning. Nothing posting-sized ever reaches the driver;
+- each task evaluates locally (segment.py) and emits ≤ k hits; the global
+  answer is ``orderBy(score DESC, docid ASC).limit(k)`` over n_tasks·k
+  rows — Spark's TakeOrderedAndProject, the TopDocs.merge analog
+  (search/TopDocs.java:206-234).
 
 One pipeline serves ``search``, ``search_many``, ``search_all`` and
 ``count``, as IndexSearcher.search(Query, CollectorManager) serves every
-collector: ``Searcher._slices`` plans stats, scan and slicing once, and
+collector: ``Searcher._slices`` plans stats and tasks once, and
 ``_run_slice`` is the one task body. Only the kernel each task runs and the
 shape of the result differ:
 
@@ -62,14 +66,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.builder import (
-    FIELD_SEP,
-    _balanced_segment_labels,
-    exists_term,
-    field_term,
-)
-from ..index.pseudo import singleton_pseudo_blocks
-from ..index.reader import IndexReader, term_in_filter
+from ..index.builder import FIELD_SEP, exists_term, field_term
+from ..index.reader import IndexReader, read_slice
 from ..index.schemas import POSTINGS_COLS, SEARCH_HIT_SCHEMA
 from .fuzzy import fuzzy_similarity
 from .query import (
@@ -171,24 +169,60 @@ def _needs_payloads(q) -> bool:
     )
 
 
-def _run_slice(pdf: pd.DataFrame, body, scorers, seg_meta, span, cache_tag):
-    """One (segment, slice) task of every entry point: build the context of
-    the task's docid slice — the intersection of the segment's stored-docid
-    range with the slice's span window — run the entry point's kernel
-    ``body`` on it, and lift the stored docids it returns to global ids."""
-    seg = int(pdf["segment_id"].iloc[0])
-    doc_base, min_doc, max_doc = seg_meta[seg]
-    if span:
-        sl = int(pdf["slice_id"].iloc[0])
-        min_doc = max(min_doc, sl * span)
-        max_doc = min(max_doc, (sl + 1) * span)
-    ctx = SegmentContext.from_pdf(
-        pdf, scorers, min_doc, max_doc, cache_tag=cache_tag, doc_base=doc_base,
+def _matches_without_postings(q) -> bool:
+    """True when ``q`` holds a MatchAllDocsQuery anywhere in its tree: it
+    can then match docs of a segment that holds none of its terms, so no
+    segment may be skipped on its term Blooms."""
+    if isinstance(q, MatchAllDocsQuery):
+        return True
+    if isinstance(q, tuple):
+        return any(_matches_without_postings(c) for c in q)
+    return dataclasses.is_dataclass(q) and any(
+        _matches_without_postings(getattr(q, f.name))
+        for f in dataclasses.fields(q)
     )
-    out = body(ctx)
-    if "docid" in out:
-        out["docid"] += doc_base
-    return out
+
+
+def plan_slices(seg_meta: dict, span: int | None) -> list[tuple[int, int, int]]:
+    """(segment, lo, hi) of every search task: the stored docids [lo, hi)
+    where a segment's range meets one ``span``-doc window (the whole range
+    when ``span`` is None), widest first.
+
+    Task i runs as partition i and the scheduler launches partitions in
+    order, so widest first (LPT) lets the short partial slices fill the
+    ragged final wave instead of starting one — measured ~6% of the
+    batched-query stage at 8 cores with 66 slices. Stable on ties, so
+    full-width slices keep (segment, slice) order."""
+    out = []
+    for seg, (_base, lo, hi) in sorted(seg_meta.items()):
+        if hi <= lo:
+            continue
+        if not span:
+            out.append((seg, lo, hi))
+            continue
+        for sl in range(lo // span, (hi - 1) // span + 1):
+            out.append((seg, max(lo, sl * span), min(hi, (sl + 1) * span)))
+    return sorted(out, key=lambda t: t[1] - t[2])
+
+
+def _run_slice(batches, tasks, read, body, scorers, seg_meta, cache_tag):
+    """The task body of every entry point. For each task index in the
+    partition (one, as planned): read the task's rows, build the
+    SegmentContext of its docid slice, run the entry point's kernel ``body``
+    on it and lift the stored docids it returns to global ids."""
+    for batch in batches:
+        for i in batch["id"]:
+            seg, lo, hi = tasks[i]
+            doc_base = seg_meta[seg][0]
+            pdf, deleted = read(seg, lo, hi)
+            ctx = SegmentContext.from_pdf(
+                pdf, scorers, lo, hi, cache_tag=cache_tag, doc_base=doc_base,
+            )
+            ctx.deleted = deleted
+            out = body(ctx)
+            if "docid" in out:
+                out["docid"] += doc_base
+            yield out
 
 
 def _top_k_body(ctx, query, k, after) -> pd.DataFrame:
@@ -1127,121 +1161,6 @@ class Searcher:
             )
         return rewrite(self.expand_multiterm(query, max_terms))
 
-    def _postings_blocks(
-        self,
-        terms: list[str],
-        need_positions: bool,
-        span: int | None = None,
-        need_payloads: bool = False,
-    ) -> DataFrame:
-        # column pruning: positions/payloads reach the parquet scan only for
-        # queries that consume them (ReadSchema stays narrow otherwise)
-        drop = set()
-        if not need_positions:
-            drop.add("positions_enc")
-        if not need_payloads:
-            drop.add("payloads_enc")
-        cols = [c for c in POSTINGS_COLS if c not in drop]
-        blocks = self.reader.postings.filter(
-            term_in_filter("term", terms)
-        ).select(*cols)
-        singles = singleton_pseudo_blocks(
-            self.reader.term_dict.filter(term_in_filter("term", terms)),
-            need_positions,
-        ).select(*cols)
-        out = blocks.unionByName(singles)
-        if self.reader.deletes is not None:
-            from ..index.deletes import delete_pseudo_blocks
-
-            out = out.unionByName(
-                delete_pseudo_blocks(self.reader.deletes).select(*cols)
-            )
-        # Bloom segment-skip (BloomFilteringPostingsFormat semantics,
-        # index/blooms.py): segments whose bloom rules out EVERY query term
-        # can contribute no postings rows to this scan, so dropping them is
-        # a plan-only change — segment_id is a partition column and the isin
-        # prunes whole directories. False positives only add segments back.
-        from ..index.blooms import bloom_candidate_segments
-
-        cand = bloom_candidate_segments(
-            self.reader.term_blooms,
-            [int(r["segment_id"]) for r in self.reader.manifest_rows],
-            terms,
-        )
-        if cand is not None:
-            out = out.filter(F.col("segment_id").isin(cand))
-        if span:
-            # replicate each block to every docid slice its [first,last]
-            # range overlaps; slice tasks mask decoded docs to their range
-            out = out.withColumn(
-                "slice_id",
-                F.explode(
-                    F.sequence(
-                        (F.col("first_docid") / span).cast("int"),
-                        (F.col("last_docid") / span).cast("int"),
-                    )
-                ),
-            )
-        else:
-            out = out.withColumn("slice_id", F.lit(0))
-        return out
-
-    def _balanced_grouping(self, blocks: DataFrame, seg_meta, span):
-        """Group block rows by (segment, slice) with every group on its OWN
-        shuffle partition.
-
-        ``groupBy(segment_id, slice_id)`` hashes G leaf-slice groups into
-        ``spark.sql.shuffle.partitions`` buckets; birthday collisions put
-        2-3 groups on one core and none on another, and the straggler sets
-        the stage time at EVERY parallelism level (the dominant query-stage
-        scaling loss measured on this engine). Fix = the builder's balanced
-        labels applied query-side: a driver-planned gkey per group whose
-        Murmur3 hash lands on a distinct residue mod G, then
-        ``repartition(G, gkey)`` (explicit numPartitions — AQE never
-        coalesces it) so the exchange assigns exactly one leaf slice per
-        task and the scheduler balances the waves. Beyond the map-literal
-        budget (at web scale, G ≫ cores), plain hash grouping is already
-        balanced by the law of large numbers."""
-        pairs: list[tuple[int, int]] = []
-        widths: list[int] = []
-        for seg in sorted(seg_meta):
-            _base, lo, hi = seg_meta[seg]
-            if hi <= lo:
-                continue
-            if span:
-                for sl in range(lo // span, (hi - 1) // span + 1):
-                    pairs.append((seg, sl))
-                    widths.append(
-                        min((sl + 1) * span, hi) - max(sl * span, lo)
-                    )
-            else:
-                pairs.append((seg, 0))
-                widths.append(hi - lo)
-        n = len(pairs)
-        if n == 0 or n > 8192:
-            return blocks.groupBy("segment_id", "slice_id")
-        # LPT task order: pairs[i] executes as partition i (labels below put
-        # group i on residue i, and the scheduler launches partitions in
-        # order), so widest slices first lets the short partial slices fill
-        # the ragged final wave instead of starting one — measured ~6% of
-        # the batched-query stage at 8 cores with 66 groups (the makespan
-        # loss when G/cores has a fractional tail). Stable on ties, so
-        # full-width slices keep (segment, slice) order.
-        order = sorted(range(n), key=lambda i: -widths[i])
-        pairs = [pairs[i] for i in order]
-        stride = max(sl for _seg, sl in pairs) + 1
-        labels = _balanced_segment_labels(n)
-        entries: list = []
-        for i, (seg, sl) in enumerate(pairs):
-            entries.append(F.lit(seg * stride + sl))
-            entries.append(F.lit(labels[i]))
-        key = F.col("segment_id").cast("long") * F.lit(stride) + F.col("slice_id")
-        # coalesce fallback: an unplanned (segment, slice) pair keeps its own
-        # distinct group key rather than collapsing into a null group
-        gkey = F.coalesce(F.create_map(*entries)[key], key).cast("int")
-        blocks = blocks.withColumn("gkey", gkey)
-        return blocks.repartition(n, "gkey").groupBy("gkey")
-
     def _make_scorers(self, queries: list) -> dict:
         all_terms = sorted(set().union(*(collect_terms(q) for q in queries)))
         doc_count, sum_ttf = self.reader.global_stats
@@ -1261,15 +1180,26 @@ class Searcher:
     def _slices(self, queries: list, body, schema, scored: bool = True) -> DataFrame:
         """The one plan behind search, search_many, search_all and count
         (IndexSearcher.search(Query, CollectorManager)): global stats for
-        the union of the queries' terms, one postings scan, then one task
-        per (segment, docid slice) that runs ``body`` on its
-        SegmentContext. ``scored=False`` skips the stats (count needs none);
-        no term at all plans no scan."""
+        the union of the queries' terms, then one map-only stage of
+        driver-planned (segment, docid slice) tasks, each reading its own
+        rows (``index.reader.read_slice``) and running ``body`` on its
+        SegmentContext. ``scored=False`` skips the stats (count needs
+        none); no term at all plans no task."""
         terms = sorted(set().union(*(collect_terms(q) for q in queries)))
         if not terms:
             return self.spark.createDataFrame([], schema)
         scorers = self._make_scorers(queries) if scored else {}
         seg_meta = self._seg_meta()
+        if not any(_matches_without_postings(q) for q in queries):
+            # Bloom segment-skip (index/blooms.py): a segment whose bloom
+            # rules out every query term gets no task
+            from ..index.blooms import bloom_candidate_segments
+
+            cand = bloom_candidate_segments(
+                self.reader.term_blooms, sorted(seg_meta), terms
+            )
+            if cand is not None:
+                seg_meta = {seg: seg_meta[seg] for seg in cand}
         # doc blocks never cross segments but may straddle docid slices:
         # block-join trees evaluate on whole segments
         span = (
@@ -1277,15 +1207,33 @@ class Searcher:
             if any(contains_block_join(q) for q in queries)
             else self._slice_span()
         )
-        blocks = self._postings_blocks(
-            terms,
-            any(_needs_positions(q) for q in queries),
-            span,
-            need_payloads=any(_needs_payloads(q) for q in queries),
+        tasks = plan_slices(seg_meta, span)
+        if not tasks:
+            return self.spark.createDataFrame([], schema)
+        # column pruning: positions/payloads are read only for queries that
+        # consume them
+        skip = {
+            "positions_enc": not any(map(_needs_positions, queries)),
+            "payloads_enc": not any(map(_needs_payloads, queries)),
+        }
+        # whether deletes exist is the reader's view: the first tombstone
+        # write (add_deletes_by_query) runs these tasks while it creates
+        # the directory
+        deletes = self.reader.deletes is not None
+        read = partial(
+            read_slice,
+            self.reader.index_dir,
+            f"{self.reader._meta_root}/deletes" if deletes else None,
+            terms=terms,
+            cols=[c for c in POSTINGS_COLS if not skip.get(c)],
         )
         tag = self._cache_tag()
-        return self._balanced_grouping(blocks, seg_meta, span).applyInPandas(
-            lambda pdf: _run_slice(pdf, body, scorers, seg_meta, span, tag),
+        n = len(tasks)
+        return self.spark.range(0, n, 1, n).mapInPandas(
+            partial(
+                _run_slice, tasks=tasks, read=read, body=body,
+                scorers=scorers, seg_meta=seg_meta, cache_tag=tag,
+            ),
             schema=schema,
         )
 

@@ -92,7 +92,6 @@ _EMPTY = np.zeros(0, dtype=np.int64)
 
 
 ENC_SINGLETON = 4
-ENC_DELETE = 5  # pseudo rows carrying the live-docs delete list (deletes.py)
 
 
 class _TermPostings:
@@ -276,24 +275,18 @@ class SegmentContext:
         if cache_tag is not None and len(pdf):
             seg = int(pdf["segment_id"].iloc[0])
             ckey = (cache_tag, seg, min_doc, max_doc)
-        deleted = None
-        enc_all = pdf["encoding"].to_numpy().astype(np.int64)
-        if (enc_all == ENC_DELETE).any():
-            dmask = enc_all == ENC_DELETE
-            deleted = np.unique(pdf["first_docid"].to_numpy()[dmask])
-            pdf = pdf[~dmask]
         pdf = pdf.sort_values(["term", "block_no"], kind="mergesort")
         cols = {
             c: pdf[c].to_numpy()
             for c in pdf.columns
-            if c not in ("segment_id", "term", "slice_id")
+            if c not in ("segment_id", "term")
         }
         terms = pdf["term"].to_numpy()
         enc = cols["encoding"].astype(np.int64)
         postings: dict[str, _TermPostings] = {}
         n = len(terms)
         if n == 0:
-            return cls(postings, scorers, min_doc, max_doc, deleted, ckey, doc_base)
+            return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
         tchange = np.empty(n, dtype=bool)
         tchange[0] = True
         tchange[1:] = terms[1:] != terms[:-1]
@@ -323,7 +316,7 @@ class SegmentContext:
                 )
             else:
                 postings[term] = _TermPostings(cols, int(lo), int(hi))
-        return cls(postings, scorers, min_doc, max_doc, deleted, ckey, doc_base)
+        return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
 
 
 class _FilterLRU:

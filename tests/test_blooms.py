@@ -99,17 +99,34 @@ def test_stale_blooms_degrade_to_no_pruning(spark, idx, tmp_path_factory):
     assert cand2 is not None and len(cand2) < len(live)
 
 
-def test_partition_filter_reaches_plan(spark, idx):
+def test_pruned_segments_get_no_task(spark, idx):
+    """The search job of a rare term runs one task per (segment, slice) of
+    its Bloom-candidate segments, fewer than all segments, and still finds
+    the term's one doc."""
+    from perfbench.tracing import JobCounter
+
+    from lucene_spark.search.searcher import plan_slices
+
     s = Searcher(spark, idx, stopwords=STOP)
-    blocks = s._postings_blocks(["uniqmarkerterm"], need_positions=False)
-    plan = blocks._jdf.queryExecution().executedPlan().toString()
-    assert "segment_id" in plan
-    # the pruned scan reads fewer than NSEG segment partitions
-    reader = IndexReader(spark, idx)
     cand = bloom_candidate_segments(
-        reader.term_blooms,
-        [int(r["segment_id"]) for r in reader.manifest_rows],
+        s.reader.term_blooms,
+        [int(r["segment_id"]) for r in s.reader.manifest_rows],
         ["uniqmarkerterm"],
     )
-    segs = {int(r["segment_id"]) for r in blocks.select("segment_id").distinct().collect()}
-    assert segs <= set(cand)
+    meta = s._seg_meta()
+    n_tasks = len(plan_slices({seg: meta[seg] for seg in cand}, s._slice_span()))
+    assert 1 <= len(cand) < NSEG and n_tasks >= len(cand)
+    # the first call fills the term-stats cache: the second runs only the
+    # search job
+    first = s.search("uniqmarkerterm", k=5, with_url=True).collect()
+    assert [r["url"] for r in first] == ["https://marker.example/1"]
+    jobs = JobCounter(spark.sparkContext)
+    with jobs.call("bloom-pruned-search") as gid:
+        hits = s.search("uniqmarkerterm", k=5).collect()
+    assert jobs.counts(gid) == (1, 1, n_tasks)
+    assert [(r["docid"], r["score"]) for r in hits] == [
+        (r["docid"], r["score"]) for r in first
+    ]
+    # match-all in the tree matches docs without the term: no segment is
+    # skipped
+    assert s.count("* -uniqmarkerterm") == 400

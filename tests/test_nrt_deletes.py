@@ -96,15 +96,49 @@ def test_deletes_exclude_docs(spark, corpus, tmp_path_factory):
     def ranked(rows):
         return bits(sorted(rows, key=lambda r: (-r["score"], r["docid"])))
 
+    # a term held by one segment only, and not by a segment with a victim:
+    # with it, match-all inside a boolean must still cover the slices that
+    # hold no postings row of the query (but do hold deletes)
+    from pyspark.sql import functions as F
+
+    from lucene_spark.oracle.pyindex import PyIndex
+
+    dm = {r["url"]: r["docid"] for r in s2._docmap_global().collect()}
+    victim_segs = [
+        r["segment_id"]
+        for r in s2.reader.docmap.filter(F.col("url").isin(victim_urls)).collect()
+    ]
+    t = (
+        s2.reader.term_dict.groupBy("term")
+        .agg(F.countDistinct("segment_id").alias("n"), F.sum("df").alias("df"),
+             F.first("segment_id").alias("seg"))
+        .filter((F.col("n") == 1) & ~F.col("seg").isin(victim_segs))
+        .orderBy(F.desc("df"), "term")
+        .first()["term"]
+    )
+    oracle = PyIndex(stopwords=STOP)
+    for r_ in corpus:
+        oracle.add(dm[r_["url"]], r_["text"])
+    dead = {dm[u] for u in victim_urls}
+    live_df = len({d_ for d_, _f, _p in oracle.postings[t]} - dead)
+
     # the four entry points agree under deletes, for the exhaustive evaluator
-    # (OR), the windowed block-max one (term) and match-all, at k=0, k=10
-    # and k past every live hit count
-    qs = ("w0000 OR w0001", "w0000", "*")
+    # (OR), the windowed block-max one (term) and match-all, alone and in a
+    # boolean, at k=0, k=10 and k past every live hit count
+    qs = ("w0000 OR w0001", "w0000", "*", f"* -{t}", f"* {t}")
     every = {q: ranked(s2.search_all(q).collect()) for q in qs}
     # counts reflect deletes for term and match-all queries
     assert s2.search_all("*").count() == 240 - 2
+    assert len(every[f"* -{t}"]) == 240 - 2 - live_df
     for q in qs:
         assert s2.count(q) == len(every[q]), q
+    for q in (f"* -{t}", f"* {t}"):
+        want = [
+            (d_, np.float32(sc).tobytes())
+            for d_, sc in oracle.search_query(s2.parse(q), k=240)
+            if d_ not in dead
+        ]
+        assert every[q] == want, q
     for k in (0, 10, max(map(len, every.values())) + 5):
         many = s2.search_many({q: q for q in qs}, k=k).collect()
         for q in qs:

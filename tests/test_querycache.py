@@ -39,7 +39,6 @@ def seg_pdf(spark, tmp_path_factory):
     pdf = pq.read_table(glob.glob(f"{d}/data/kind=2/segment_id=*")[0]).to_pandas()
     sub = pdf[pdf["term"].isin(["wa", "wb"])].copy()
     sub["segment_id"] = 0
-    sub["slice_id"] = 0
     return sub
 
 

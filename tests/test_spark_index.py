@@ -199,7 +199,6 @@ def test_windowed_topk_contract_on_skew(spark, tmp_path_factory):
     pdf = pq.read_table(glob.glob(f"{d}/data/kind=2/segment_id=*")[0]).to_pandas()
     sub = pdf[pdf["term"].isin(["wa", "wb"])].copy()
     sub["segment_id"] = 0
-    sub["slice_id"] = 0
     term = TermQuery("wa")
     dismax = DisjunctionMaxQuery(
         disjuncts=(TermQuery("wa"), TermQuery("wb")), tie_breaker=0.1

@@ -3,7 +3,9 @@
 
 Builds a seeded ``generate_webtext`` index (N docs, 8 segments merged to
 one) in a temp dir, then, for each reference query shape, replays on the
-driver the block rows every (segment, slice) task receives through
+driver the rows every (segment, slice) task reads (planned and read by the
+engine's own ``search.searcher.plan_slices`` and ``index.reader.read_slice``)
+through
 
 - ``search_segment`` (the path the engine picks), and
 - the exhaustive evaluator (``_SegmentSearcher.evaluate`` + slice mask +
@@ -47,12 +49,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
-import pyarrow.dataset as ds  # noqa: E402
 
 from lucene_spark.constants import ENGLISH_STOP_WORDS  # noqa: E402
 from lucene_spark.fixtures import reference_queries  # noqa: E402
-from lucene_spark.index.pseudo import ENC_SINGLETON  # noqa: E402
-from lucene_spark.index.schemas import KIND_BLOCK, KIND_TERM, POSTINGS_COLS  # noqa: E402
+from lucene_spark.index.reader import read_slice  # noqa: E402
+from lucene_spark.index.schemas import POSTINGS_COLS  # noqa: E402
 from lucene_spark.search.query import (  # noqa: E402
     DisjunctionMaxQuery,
     TermQuery,
@@ -65,6 +66,7 @@ from lucene_spark.search.segment import (  # noqa: E402
     batch_search_segment,
     search_segment,
 )
+from lucene_spark.search.searcher import plan_slices  # noqa: E402
 
 CHUNK = 5000  # docs per generated corpus chunk
 
@@ -124,53 +126,6 @@ def build(spark, n_docs: int, seed: int, root: str) -> str:
     return f"{root}/idx1"
 
 
-def segment_rows(index_dir: str, seg: int, terms: list[str]) -> pd.DataFrame:
-    """Every block row of ``terms`` in one segment, plus the term
-    dictionary's pulsed singletons as one-doc pseudo blocks (what
-    ``index.pseudo.singleton_pseudo_blocks`` ships to a task)."""
-    data = ds.dataset(f"{index_dir}/data", format="parquet", partitioning="hive")
-    in_seg = (ds.field("segment_id") == seg) & ds.field("term").isin(terms)
-    blocks = data.to_table(
-        columns=[c for c in POSTINGS_COLS if c != "segment_id"],
-        filter=in_seg & (ds.field("kind") == KIND_BLOCK),
-    ).to_pandas()
-    td = data.to_table(
-        filter=in_seg & (ds.field("kind") == KIND_TERM)
-        & ds.field("singleton_docid").is_valid(),
-    ).to_pandas()
-    singles = pd.DataFrame({
-        "term": td["term"],
-        "block_no": 0,
-        "n_docs": 1,
-        "base_docid": td["singleton_docid"] - 1,
-        "first_docid": td["singleton_docid"],
-        "last_docid": td["singleton_docid"],
-        "encoding": ENC_SINGLETON,
-        "docids_enc": None,
-        "freqs_enc": None,
-        "norms_enc": None,
-        "positions_enc": td["singleton_positions"],
-        "payloads_enc": td["singleton_payloads"],
-        "impact_freqs": [[int(f)] for f in td["singleton_freq"]],
-        "impact_norms": [[int(n)] for n in td["singleton_norm"]],
-    })
-    return pd.concat([blocks, singles], ignore_index=True).assign(segment_id=seg)
-
-
-def slices(seg_meta: dict, span: int) -> list[tuple[int, int, int]]:
-    """(segment, lo, hi) docid slices as the Searcher plans them."""
-    out = []
-    for seg, (_base, lo, hi) in sorted(seg_meta.items()):
-        if hi <= lo:
-            continue
-        if not span:
-            out.append((seg, lo, hi))
-            continue
-        for sl in range(lo // span, (hi - 1) // span + 1):
-            out.append((seg, max(lo, sl * span), min(hi, (sl + 1) * span)))
-    return out
-
-
 def exhaustive(ctx: SegmentContext, ast, k: int):
     d, s = _SegmentSearcher(ctx, k).evaluate(ast)
     keep = (d >= ctx.min_doc) & (d < ctx.max_doc)
@@ -194,20 +149,15 @@ def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
     return 1e3 * best, results
 
 
-def slice_tasks(rows: dict, seg_meta: dict, span: int, terms) -> list:
-    """(block rows, lo, hi) of every (segment, slice) task for ``terms``."""
-    tasks = []
-    for seg, lo, hi in slices(seg_meta, span):
-        r = rows[seg]
-        sub = r[
-            r["term"].isin(terms)
-            & (r["last_docid"] >= lo) & (r["first_docid"] < hi)
-        ]
-        tasks.append((sub.assign(slice_id=0), lo, hi))
-    return tasks
+def read_tasks(index_dir: str, seg_meta: dict, span: int, terms) -> list:
+    """(rows, lo, hi) of every (segment, slice) task for ``terms``."""
+    return [
+        (read_slice(index_dir, None, seg, lo, hi, sorted(terms), POSTINGS_COLS)[0], lo, hi)
+        for seg, lo, hi in plan_slices(seg_meta, span)
+    ]
 
 
-def shape_report(asts, scorers, rows, seg_meta, spans, args) -> bool:
+def shape_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
     """Per reference shape: ``search_segment`` against the exhaustive
     evaluator. True when every top-k is bit-identical."""
     print("| shape | family | span | search_segment ms | exhaustive ms | identical |")
@@ -216,7 +166,7 @@ def shape_report(asts, scorers, rows, seg_meta, spans, args) -> bool:
     all_identical = True
     for span in spans:
         for qid, ast in asts.items():
-            tasks = slice_tasks(rows, seg_meta, span, collect_terms(ast))
+            tasks = read_tasks(index_dir, seg_meta, span, collect_terms(ast))
             kms, kres = kernel_ms(tasks, scorers[qid], ast, args.k, search_segment, args.reps)
             ems, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
             same = kres == eres
@@ -242,7 +192,7 @@ def ranked(d, s) -> list:
     return [(int(d[i]), s[i].tobytes()) for i in order]
 
 
-def batch_report(asts, scorers, rows, seg_meta, spans, args) -> bool:
+def batch_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
     """One query batch per (segment, slice) task, through the dense
     ``batch_search_segment`` (what ``search_many`` runs) and through a
     per-query ``search_segment`` loop (what ``search`` runs), each on one
@@ -260,7 +210,7 @@ def batch_report(asts, scorers, rows, seg_meta, spans, args) -> bool:
     terms = set().union(*(collect_terms(a) for a in asts.values()))
     all_identical = True
     for span in spans:
-        tasks = slice_tasks(rows, seg_meta, span, terms)
+        tasks = read_tasks(index_dir, seg_meta, span, terms)
         best_b = {f: float("inf") for f in by_fam}
         best_l = dict(best_b)
         same = {f: True for f in by_fam}
@@ -345,12 +295,10 @@ def main() -> int:
         else:
             asts = {qid: searcher._prepared(q) for qid, q in shapes().items()}
             scorers = {qid: searcher._make_scorers([a]) for qid, a in asts.items()}
-        terms = sorted(set().union(*(collect_terms(a) for a in asts.values())))
-        rows = {seg: segment_rows(idx, seg, terms) for seg in seg_meta}
         spark.stop()
         spark = None
         report = batch_report if args.batch else shape_report
-        return 0 if report(asts, scorers, rows, seg_meta, spans, args) else 1
+        return 0 if report(asts, scorers, idx, seg_meta, spans, args) else 1
     finally:
         if spark is not None:
             spark.stop()
