@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .smallio import read_driver_table
+
 __all__ = [
     "write_term_blooms",
     "load_term_blooms",
@@ -94,10 +96,7 @@ def write_term_blooms(
     from .reader import IndexReader
 
     reader = IndexReader(spark, index_dir)
-    doc_counts = {
-        int(r["segment_id"]): int(r["doc_count"])
-        for r in reader.field_stats.select("segment_id", "doc_count").collect()
-    }
+    doc_counts = reader.doc_counts
     terms = reader.term_dict.select("segment_id", "term")
     n_terms = {
         int(r["segment_id"]): int(r["n"])
@@ -148,16 +147,18 @@ def write_term_blooms(
 
 
 def load_term_blooms(
-    spark: SparkSession, index_dir: str, live_doc_counts: dict[int, int]
+    index_dir: str, live_doc_counts: dict[int, int]
 ) -> dict[int, tuple[int, int, np.ndarray]]:
     """Driver-side bloom map {segment_id: (nbits, k, bitset bytes)} for live
     segments whose doc_count fingerprint still matches; {} when the index
-    has no bloom table. The table is one tiny row per segment — collecting
-    it is metadata, not data."""
+    has no bloom table. The table is one tiny row per segment, read on the
+    driver with pyarrow (no Spark job). It lives in ``index_dir`` for every
+    reader, snapshot readers too: a snapshot copies no blooms, and the
+    fingerprint drops the rows of segments rewritten since."""
     path = f"{index_dir}/{BLOOMS_DIR}"
     if not os.path.exists(path):
         return {}
-    rows = spark.read.parquet(path).collect()
+    rows = read_driver_table(path)
     out: dict[int, tuple[int, int, np.ndarray]] = {}
     for r in rows:
         seg = int(r["segment_id"])

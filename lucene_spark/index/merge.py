@@ -289,9 +289,7 @@ def merge_segments(
     # merged stats derive from the SOURCE stats driver-side — no read-back
     # job: counts/ttf sum per group; docid bounds come from doc_base + the
     # source segment's local bounds (groups are contiguous in doc_base order)
-    src_stats = {
-        int(r["segment_id"]): r.asDict() for r in reader.field_stats.collect()
-    }
+    src_stats = {int(r["segment_id"]): r for r in reader.field_stats_rows}
     agg: dict[int, dict] = {}
     for r in manifest:
         s = int(r["segment_id"])
@@ -538,9 +536,7 @@ def execute_merge_plan(spark: SparkSession, index_dir: str, plan) -> dict:
     _propagate_index_meta(index_dir)
     # commit: stats + manifest swap (old rows out, merged row in)
     fs_rows, man_rows = [], []
-    src_stats = {
-        int(r["segment_id"]): r.asDict() for r in reader.field_stats.collect()
-    }
+    src_stats = {int(r["segment_id"]): r for r in reader.field_stats_rows}
     m_docs = sum(int(by_id[s]["n_docs"]) for s in merge_ids)
     m_sttf = sum(int(src_stats[s]["sum_ttf"]) for s in merge_ids)
     m_min = min(doc_bases[s] + int(src_stats[s]["min_docid"]) for s in merge_ids)

@@ -6,9 +6,16 @@ lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:1140-1150) —
 IDF/avgdl are collection-wide, so any per-segment shortcut would break rank
 identity with the reference.
 
-All driver-side collects here are *planning-sized*: per-query terms (a
-handful of rows from term_dict via predicate-pushdown parquet scans) and the
-segment manifest (one row per segment). Postings are never collected.
+Everything the driver reads to plan a term query is *planning-sized* and is
+read with pyarrow, with no Spark job: the segment manifest and field_stats
+(one row per segment, from the commit point's directory, so a snapshot
+reader sees its snapshot) and the per-query term statistics (a
+``term IN (...)`` scan of the manifest's ``kind=1`` partitions, where the
+sorted term column lets row-group min/max statistics skip most of each
+file). Postings are never read on the driver: each search task reads its
+own (``read_slice``). The DataFrame views (``term_dict``, ``postings``,
+``docmap``, ``field_stats``, ``deletes``) serve Spark-side work such as
+merges, compaction and multi-term expansion.
 """
 
 from __future__ import annotations
@@ -24,56 +31,9 @@ from pyspark.sql import functions as F
 
 from .pseudo import singleton_pseudo_rows
 from .schemas import DOCMAP_COLS, KIND_BLOCK, KIND_DOC, KIND_TERM, POSTINGS_COLS, TERM_DICT_COLS
+from .smallio import read_driver_table
 
 __all__ = ["IndexReader", "read_slice"]
-
-
-def _sql_term_literal(t: str) -> str:
-    """One Spark-SQL single-quoted string literal for ``t``: backslash
-    and quote use C-style escapes, ASCII control chars (e.g. the \\x1f
-    multi-field separator of field_term) use \\uXXXX — both are standard
-    Spark string-literal escape processing."""
-    out = []
-    for ch in t:
-        o = ord(ch)
-        if ch == "\\":
-            out.append("\\\\")
-        elif ch == "'":
-            out.append("\\'")
-        elif o < 0x20 or o == 0x7F:
-            out.append(f"\\u{o:04X}")
-        else:
-            out.append(ch)
-    return "'" + "".join(out) + "'"
-
-
-def term_in_filter(col: str, terms: list[str]):
-    """``col IN (...)`` as ONE parsed SQL expression instead of
-    ``Column.isin(*terms)``.
-
-    isin builds one py4j literal object per term — ~0.6 s of driver
-    round-trips for a 4k-term batched query set, paid per search_many
-    call at EVERY parallelism level (a scaling-efficiency constant, not
-    just latency). A single F.expr string is one round-trip and parses
-    JVM-side to the same In/InSet predicate with the same parquet
-    pushdown. Multi-field term keys (``field\\x1ftoken``) and arbitrary
-    user terms are covered via string-literal escapes; the only
-    unsupported configuration is the legacy
-    ``spark.sql.parser.escapedStringLiterals=true`` mode, detected via
-    the active session and routed back to isin."""
-    try:
-        from pyspark.sql import SparkSession
-
-        sess = SparkSession.getActiveSession()
-        if sess is not None and (
-            sess.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-            == "true"
-        ):
-            return F.col(col).isin(terms)
-    except Exception:
-        pass
-    quoted = ",".join(_sql_term_literal(t) for t in terms)
-    return F.expr(f"`{col}` IN ({quoted})")
 
 
 def _read_parquet(path: str, columns: list[str], where) -> pd.DataFrame:
@@ -221,8 +181,6 @@ class IndexReader:
     def dv_updates(self) -> DataFrame | None:
         """Numeric doc-value update deltas (segment_id, docid, name, value,
         gen), or None when the index has none (one os.path check)."""
-        import os
-
         if not os.path.isdir(f"{self._meta_root}/dv_updates"):
             return None
         live = [int(r["segment_id"]) for r in self.manifest_rows]
@@ -268,12 +226,27 @@ class IndexReader:
         return self._table("field_stats").filter(F.col("segment_id").isin(live))
 
     @cached_property
+    def field_stats_rows(self) -> list[dict]:
+        """``field_stats`` as rows read on the driver, gated on the
+        manifest's segment list like the DataFrame view."""
+        live = {int(r["segment_id"]) for r in self.manifest_rows}
+        return [
+            r for r in read_driver_table(f"{self._meta_root}/field_stats")
+            if int(r["segment_id"]) in live
+        ]
+
+    @cached_property
+    def deletes_dir(self) -> str | None:
+        """The commit's delete-list directory, or None when the index has no
+        deletions (one os.path check)."""
+        path = f"{self._meta_root}/deletes"
+        return path if os.path.isdir(path) else None
+
+    @cached_property
     def deletes(self) -> DataFrame | None:
         """Live-docs delete list (segment_id, stored docid), or None when the
-        index has no deletions (the common case costs one os.path check)."""
-        import os
-
-        if not os.path.isdir(f"{self._meta_root}/deletes"):
+        index has no deletions."""
+        if self.deletes_dir is None:
             return None
         live = [int(r["segment_id"]) for r in self.manifest_rows]
         return self._table("deletes").filter(F.col("segment_id").isin(live))
@@ -283,16 +256,13 @@ class IndexReader:
         """segment_id → (min_docid, max_docid) of stored docids."""
         return {
             int(r["segment_id"]): (int(r["min_docid"]), int(r["max_docid"]))
-            for r in self.field_stats.collect()
+            for r in self.field_stats_rows
         }
 
     @cached_property
     def doc_counts(self) -> dict[int, int]:
         """segment_id → live doc_count (the bloom staleness fingerprint)."""
-        return {
-            int(r["segment_id"]): int(r["doc_count"])
-            for r in self.field_stats.select("segment_id", "doc_count").collect()
-        }
+        return {int(r["segment_id"]): int(r["doc_count"]) for r in self.field_stats_rows}
 
     @cached_property
     def term_blooms(self) -> dict:
@@ -301,12 +271,12 @@ class IndexReader:
         search task plan, never to assert membership."""
         from .blooms import load_term_blooms
 
-        return load_term_blooms(self.spark, self.index_dir, self.doc_counts)
+        return load_term_blooms(self.index_dir, self.doc_counts)
 
     @cached_property
     def manifest_rows(self) -> list[dict]:
-        rows = self._table("segment_manifest").collect()
-        return sorted((r.asDict() for r in rows), key=lambda r: r["segment_id"])
+        rows = read_driver_table(f"{self._meta_root}/segment_manifest")
+        return sorted(rows, key=lambda r: r["segment_id"])
 
     @cached_property
     def doc_bases(self) -> dict[int, int]:
@@ -315,22 +285,41 @@ class IndexReader:
     @cached_property
     def global_stats(self) -> tuple[int, int]:
         """(doc_count, sum_total_term_freq) across all segments."""
-        row = self.field_stats.agg(
-            F.sum("doc_count").alias("dc"), F.sum("sum_ttf").alias("sttf")
-        ).collect()[0]
-        return int(row["dc"] or 0), int(row["sttf"] or 0)
+        rows = self.field_stats_rows
+        return (
+            sum(int(r["doc_count"]) for r in rows),
+            sum(int(r["sum_ttf"]) for r in rows),
+        )
+
+    @cached_property
+    def _term_dicts(self) -> ds.Dataset | None:
+        """The ``kind=1`` partitions of the manifest's segments as one
+        pyarrow dataset, built once: the commit point is immutable."""
+        dirs = [
+            f"{self.index_dir}/data/kind={KIND_TERM}/segment_id={r['segment_id']}"
+            for r in self.manifest_rows
+        ]
+        parts = [ds.dataset(d, format="parquet") for d in dirs if os.path.isdir(d)]
+        return ds.dataset(parts) if parts else None
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """Global (docFreq, totalTermFreq) per term (TermStatistics analog)."""
-        if not terms:
+        """Global (docFreq, totalTermFreq) per term (TermStatistics analog),
+        summed over the live segments; a term no live segment holds is
+        absent from the result."""
+        if not terms or self._term_dicts is None:
             return {}
-        rows = (
-            self.term_dict.filter(term_in_filter("term", terms))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-            .collect()
+        sums = (
+            self._term_dicts.to_table(
+                columns=["term", "df", "ttf"], filter=ds.field("term").isin(terms)
+            )
+            .group_by("term")
+            .aggregate([("df", "sum"), ("ttf", "sum")])
+            .to_pydict()
         )
-        return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+        return {
+            t: (int(df), int(ttf))
+            for t, df, ttf in zip(sums["term"], sums["df_sum"], sums["ttf_sum"])
+        }
 
     def expand_terms(
         self,

@@ -1,11 +1,13 @@
-"""Driver-side parquet writes for tiny, driver-known tables.
+"""Driver-side parquet reads and writes for tiny, driver-known tables.
 
 ``createDataFrame(...).coalesce(1).write`` costs seconds per call (a
 one-task Spark job over a local relation); the manifest and field_stats are
 a few dozen rows the driver already holds, so they are written directly with
 pyarrow (~ms) into a directory Spark reads like any parquet table. The
 manifest swap stays last-writer-atomic at the directory level (Iceberg
-snapshot commit in production)."""
+snapshot commit in production). Reading them back through Spark costs a
+schema-inference job plus a collect job per table, so the driver reads them
+with pyarrow too (``read_driver_table``)."""
 
 from __future__ import annotations
 
@@ -13,9 +15,12 @@ import os
 import shutil
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
-__all__ = ["write_driver_table", "FIELD_STATS_SCHEMA", "MANIFEST_SCHEMA"]
+__all__ = [
+    "read_driver_table", "write_driver_table", "FIELD_STATS_SCHEMA", "MANIFEST_SCHEMA",
+]
 
 FIELD_STATS_SCHEMA = pa.schema(
     [
@@ -55,3 +60,10 @@ def write_driver_table(path: str, rows: list[tuple], schema: pa.Schema) -> None:
         os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def read_driver_table(path: str) -> list[dict]:
+    """Every row of the parquet table in directory ``path``, as dicts. Files
+    whose names start with ``.`` or ``_`` (checksums, ``_SUCCESS``) are
+    skipped, as Spark skips them."""
+    return ds.dataset(path, format="parquet").to_table().to_pylist()

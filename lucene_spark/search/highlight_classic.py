@@ -128,7 +128,7 @@ def idf_weighted_terms(searcher, terms: list[str]) -> dict[str, float]:
     from ..index.builder import FIELD_SEP
 
     ns = searcher.default_field + FIELD_SEP if searcher.fields else ""
-    stats = searcher._cached_term_stats([ns + t for t in terms])
+    stats = searcher._term_stats([ns + t for t in terms])
     max_doc = max(int(searcher.reader.global_stats[0]), 1)
     return {
         t: float(np.log(max_doc / (stats[ns + t][0] + 1.0)) + 1.0)

@@ -78,7 +78,7 @@ class MoreLikeThis:
             from ..index.builder import field_term
 
             ns = field_term(s.default_field, "")
-        stats = s._cached_term_stats([ns + w for w in cands])
+        stats = s._term_stats([ns + w for w in cands])
         n_docs = int(s.reader.global_stats[0])
         out = []
         for w in cands:

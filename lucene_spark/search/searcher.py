@@ -2,10 +2,11 @@
 
 Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 
-- planning (Weight creation) happens on the driver: parse → rewrite →
-  multi-term expansion → one tiny predicate-pushdown scan of ``term_dict``
-  for global TermStatistics and one of ``field_stats`` for
-  CollectionStatistics (IndexSearcher.java:1140-1150 — stats are summed
+- planning (Weight creation) happens on the driver with no Spark job:
+  parse → rewrite → multi-term expansion → a pyarrow ``term IN (...)`` read
+  of the live segments' term dictionaries for global TermStatistics
+  (``IndexReader.term_stats``) and the ``field_stats`` rows read at open
+  for CollectionStatistics (IndexSearcher.java:1140-1150 — stats are summed
   across segments BEFORE scoring; per-segment IDF would break rank identity);
 - the driver also plans the task list (``plan_slices``): one
   (segment, lo, hi) per manifest segment its term Blooms keep and per docid
@@ -21,7 +22,8 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 - each task evaluates locally (segment.py) and emits ≤ k hits; the global
   answer is ``orderBy(score DESC, docid ASC).limit(k)`` over n_tasks·k
   rows — Spark's TakeOrderedAndProject, the TopDocs.merge analog
-  (search/TopDocs.java:206-234).
+  (search/TopDocs.java:206-234). A term query therefore runs as one Spark
+  job of one stage.
 
 One pipeline serves ``search``, ``search_many``, ``search_all`` and
 ``count``, as IndexSearcher.search(Query, CollectorManager) serves every
@@ -34,9 +36,11 @@ entry point      kernel (segment.py)       result shape
 ===============  ========================  ==================================
 ``search``       ``search_segment``        ``orderBy(score DESC, docid ASC)
                                            .limit(k)``
-``search_many``  ``batch_search_segment``  ``row_number`` ≤ k per query_id
+``search_many``  ``batch_search_segment``  top k per query_id, merged on the
+                                           driver
 ``search_all``   ``exhaustive_hits``       every hit, no cut
-``count``        ``matching_docs``         sum of per-slice counts
+``count``        ``matching_docs``         per-slice counts summed on the
+                                           driver
 ===============  ========================  ==================================
 
 MatchAllDocsQuery and MatchNoDocsQuery read no postings: all four entry
@@ -62,9 +66,12 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from ..index.builder import FIELD_SEP, exists_term, field_term
 from ..index.reader import IndexReader, read_slice
@@ -285,7 +292,6 @@ class Searcher:
         # IndexSearcher.java:106-108): None = auto-pick a docid span so a
         # few merged segments still fan out across every core; 0 = disable
         self.slice_docs = slice_docs
-        self._term_stats_cache: dict[str, tuple[int, int]] = {}
         self._expand_cache: dict[object, object] = {}
         from ..index.builder import get_analyzer
 
@@ -323,10 +329,8 @@ class Searcher:
                 )
         # Open-time metadata, loaded eagerly the way SegmentReader/
         # DirectoryReader.open does (collection statistics and the bloom
-        # tables live with the commit point, not with any one query):
-        # each is a tiny driver collect, but as lazy properties they fire
-        # as separate Spark jobs inside the FIRST search call — a
-        # parallelism-independent constant that lands in the query path.
+        # tables live with the commit point, not with any one query): a
+        # few small pyarrow reads, no Spark job.
         self.reader.global_stats
         self.reader.term_blooms
 
@@ -580,7 +584,7 @@ class Searcher:
             return MatchNoDocsQuery()
         if boosts is None:
             boosts = [1.0] * len(terms)
-        stats = self._cached_term_stats(list(terms))
+        stats = self._term_stats(list(terms))
         df = max(stats[t][0] for t in terms)
         ttf = sum(stats[t][1] for t in terms)
         subs = tuple(
@@ -620,7 +624,7 @@ class Searcher:
             return MatchNoDocsQuery()
         if len(terms) == 1:
             return TermQuery(terms[0])
-        stats = self._cached_term_stats(terms)
+        stats = self._term_stats(terms)
         max_doc = self.reader.global_stats[0]
         # (int) Math.ceil(maxTermFrequency * (float) maxDoc) — float32 mul
         cutoff = int(
@@ -708,13 +712,12 @@ class Searcher:
             .drop("doc_base")
         )
 
-    def _cached_term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        missing = [t for t in terms if t not in self._term_stats_cache]
-        if missing:
-            got = self.reader.term_stats(missing)
-            for t in missing:
-                self._term_stats_cache[t] = got.get(t, (0, 0))
-        return {t: self._term_stats_cache[t] for t in terms}
+    def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """Global (docFreq, totalTermFreq) of each of ``terms``, (0, 0) for
+        a term no live segment holds. Uncached: a read costs milliseconds
+        and no Spark job, so a long-lived Searcher keeps no per-term state."""
+        got = self.reader.term_stats(terms)
+        return {t: got.get(t, (0, 0)) for t in terms}
 
     def _cache_tag(self) -> str:
         """Index-generation tag for the worker-level filter LRU: digest of
@@ -1170,9 +1173,9 @@ class Searcher:
         if self.fields:
             # per-field CollectionStatistics from the existence lists
             # (df = docCount(field), ttf = sumTotalTermFreq(field))
-            est = self._cached_term_stats([exists_term(f) for f in self.fields])
+            est = self._term_stats([exists_term(f) for f in self.fields])
             field_stats = {f: est[exists_term(f)] for f in self.fields}
-        tstats = self._cached_term_stats(all_terms)
+        tstats = self._term_stats(all_terms)
         return build_scorers(
             queries, tstats, doc_count, sum_ttf, self.mode, field_stats=field_stats
         )
@@ -1187,7 +1190,7 @@ class Searcher:
         none); no term at all plans no task."""
         terms = sorted(set().union(*(collect_terms(q) for q in queries)))
         if not terms:
-            return self.spark.createDataFrame([], schema)
+            return self._local_rows(schema)
         scorers = self._make_scorers(queries) if scored else {}
         seg_meta = self._seg_meta()
         if not any(_matches_without_postings(q) for q in queries):
@@ -1209,7 +1212,7 @@ class Searcher:
         )
         tasks = plan_slices(seg_meta, span)
         if not tasks:
-            return self.spark.createDataFrame([], schema)
+            return self._local_rows(schema)
         # column pruning: positions/payloads are read only for queries that
         # consume them
         skip = {
@@ -1219,11 +1222,10 @@ class Searcher:
         # whether deletes exist is the reader's view: the first tombstone
         # write (add_deletes_by_query) runs these tasks while it creates
         # the directory
-        deletes = self.reader.deletes is not None
         read = partial(
             read_slice,
             self.reader.index_dir,
-            f"{self.reader._meta_root}/deletes" if deletes else None,
+            self.reader.deletes_dir,
             terms=terms,
             cols=[c for c in POSTINGS_COLS if not skip.get(c)],
         )
@@ -1276,17 +1278,17 @@ class Searcher:
 
         This is the engine's query-throughput path: postings for the union
         of all query terms are scanned once, each segment evaluates every
-        query against its per-term decode cache, and a single window takes
-        top-k per query — amortizing job/scan overhead across the batch
+        query against its per-term decode cache and emits ≤ k hits per
+        query, and the driver merges those into the top-k per query
+        (TopDocs.merge) — amortizing job/scan overhead across the batch
         (the Spark analog of Lucene's SearchTask loop throughput,
-        benchmark/byTask/tasks/SearchTask.java).
+        benchmark/byTask/tasks/SearchTask.java). The job runs during this
+        call; the returned DataFrame holds the merged rows.
 
         Returns (query_id, docid, score), k rows per query, ordered within
         each query by (score DESC, docid ASC). A match-all query gets the
         rows ``search("*", k)`` gives.
         """
-        from pyspark.sql.window import Window
-
         parsed = {qid: self._prepared(q) for qid, q in queries.items()}
         kernel = {
             qid: q
@@ -1294,19 +1296,21 @@ class Searcher:
             if not isinstance(q, (MatchAllDocsQuery, MatchNoDocsQuery))
         }
         body = partial(_batch_body, queries=kernel, k=k)
-        hits = self._slices(
-            list(kernel.values()), body, "query_id string, docid long, score double"
+        schema = "query_id string, docid long, score double"
+        hits = self._slices(list(kernel.values()), body, schema).toPandas()
+        top = (
+            hits.sort_values(
+                ["query_id", "score", "docid"], ascending=[True, False, True]
+            )
+            .groupby("query_id", sort=False)
+            .head(k)
         )
+        out = self._local_rows(schema, top)
         for qid, q in parsed.items():
             if isinstance(q, MatchAllDocsQuery):
                 first = self._docs_only(q).orderBy("docid").limit(k)
-                hits = hits.unionByName(first.withColumn("query_id", F.lit(qid)))
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
-        return (
-            hits.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .drop("rk")
-        )
+                out = out.unionByName(first.withColumn("query_id", F.lit(qid)))
+        return out
 
     def search_all(self, query) -> DataFrame:
         """All matching (docid, score) rows, distributed (no top-k cut) —
@@ -1480,7 +1484,7 @@ class Searcher:
             raise ValueError("indri_and requires mode='indri_dirichlet'")
         boosts = [float(b) for b in (boosts or [1.0] * len(terms))]
         ns = self.default_field + FIELD_SEP if self.fields else ""
-        stats = self._cached_term_stats([ns + t for t in terms])
+        stats = self._term_stats([ns + t for t in terms])
         _, sum_ttf = self.reader.global_stats
         sum_ttf = max(sum_ttf, 1)
         joined = None
@@ -1638,12 +1642,8 @@ class Searcher:
         if hits is not None:
             return hits.count()
         body = partial(_count_body, query=query)
-        rows = (
-            self._slices([query], body, "n long", scored=False)
-            .agg(F.sum("n").alias("n"))
-            .collect()
-        )
-        return int(rows[0]["n"] or 0)
+        rows = self._slices([query], body, "n long", scored=False).collect()
+        return sum(int(r["n"]) for r in rows)
 
     def explain(self, query, docid: int) -> dict:
         """IndexSearcher.explain analog (search/IndexSearcher.java explain →
@@ -1732,5 +1732,18 @@ class Searcher:
             .orderBy(F.desc("score"), F.asc("docid"))
         )
 
+    def _local_rows(self, schema, pdf: pd.DataFrame | None = None) -> DataFrame:
+        """The rows of ``pdf`` (none when None) as a DataFrame of ``schema``
+        (a StructType or DDL string), made from an Arrow table: a local
+        relation, so collecting it runs no Spark job and starts no Python
+        worker."""
+        st = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+        arrow = to_arrow_schema(st)
+        table = (
+            arrow.empty_table() if pdf is None
+            else pa.Table.from_pandas(pdf, schema=arrow, preserve_index=False)
+        )
+        return self.spark.createDataFrame(table, st)
+
     def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame([], SEARCH_HIT_SCHEMA)
+        return self._local_rows(SEARCH_HIT_SCHEMA)

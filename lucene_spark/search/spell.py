@@ -130,7 +130,7 @@ class DirectSpellChecker:
         return ""
 
     def _query_df(self, ns: str, term: str) -> int:
-        stats = self.searcher._cached_term_stats([ns + term])
+        stats = self.searcher._term_stats([ns + term])
         return stats[ns + term][0]
 
     def _candidates_df(self, term: str, min_df: int) -> DataFrame:
@@ -321,7 +321,7 @@ class NGramSpellChecker:
             raise ValueError(f"mode must be one of {MODES}")
         ns = self._namespace()
         s = self.searcher
-        docfreq = s._cached_term_stats([ns + word])[ns + word][0]
+        docfreq = s._term_stats([ns + word])[ns + word][0]
         if mode == "when_not_in_index" and docfreq > 0:
             # the reference returns the word itself (:332-334)
             return s.spark.createDataFrame(

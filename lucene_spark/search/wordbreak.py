@@ -83,7 +83,7 @@ class WordBreakSpellChecker:
     def _freqs(self, words: list[str]) -> dict[str, int]:
         """docFreq of many words in ONE batched term_dict lookup."""
         ns = self._namespace()
-        stats = self.searcher._cached_term_stats([ns + w for w in words])
+        stats = self.searcher._term_stats([ns + w for w in words])
         return {w: stats[ns + w][0] for w in words}
 
     # --- breaks ----------------------------------------------------------

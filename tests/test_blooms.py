@@ -42,7 +42,7 @@ def idx(spark, tmp_path_factory):
 def test_rare_term_prunes_segments(spark, idx):
     reader = IndexReader(spark, idx)
     live = [int(r["segment_id"]) for r in reader.manifest_rows]
-    blooms = load_term_blooms(spark, idx, reader.doc_counts)
+    blooms = load_term_blooms(idx, reader.doc_counts)
     assert set(blooms) == set(live) and len(live) == NSEG
     cand = bloom_candidate_segments(blooms, live, ["uniqmarkerterm"])
     assert cand is not None and 1 <= len(cand) < NSEG
@@ -82,7 +82,7 @@ def test_stale_blooms_degrade_to_no_pruning(spark, idx, tmp_path_factory):
     reader = IndexReader(spark, d)
     live = [int(r["segment_id"]) for r in reader.manifest_rows]
     assert len(live) == NSEG + 1
-    blooms = load_term_blooms(spark, d, reader.doc_counts)
+    blooms = load_term_blooms(d, reader.doc_counts)
     # the appended segment has no (valid) bloom row -> always a candidate
     appended = set(live) - set(blooms)
     assert len(appended) == 1
@@ -93,7 +93,7 @@ def test_stale_blooms_degrade_to_no_pruning(spark, idx, tmp_path_factory):
     # refresh picks the new segment up and keeps pruning the rest
     write_term_blooms(spark, d)
     reader2 = IndexReader(spark, d)
-    blooms2 = load_term_blooms(spark, d, reader2.doc_counts)
+    blooms2 = load_term_blooms(d, reader2.doc_counts)
     assert set(blooms2) == set(live)
     cand2 = bloom_candidate_segments(blooms2, live, ["latearrivalterm"])
     assert cand2 is not None and len(cand2) < len(live)
@@ -116,8 +116,7 @@ def test_pruned_segments_get_no_task(spark, idx):
     meta = s._seg_meta()
     n_tasks = len(plan_slices({seg: meta[seg] for seg in cand}, s._slice_span()))
     assert 1 <= len(cand) < NSEG and n_tasks >= len(cand)
-    # the first call fills the term-stats cache: the second runs only the
-    # search job
+    # with_url joins the docmap: the counted call runs without it
     first = s.search("uniqmarkerterm", k=5, with_url=True).collect()
     assert [r["url"] for r in first] == ["https://marker.example/1"]
     jobs = JobCounter(spark.sparkContext)
@@ -130,3 +129,27 @@ def test_pruned_segments_get_no_task(spark, idx):
     # match-all in the tree matches docs without the term: no segment is
     # skipped
     assert s.count("* -uniqmarkerterm") == 400
+
+
+def test_spark_work_budget(spark, idx):
+    """Planning reads on the driver: opening a Searcher launches no Spark
+    job, and each term call on never-seen terms launches exactly its one
+    map-only search job."""
+    from perfbench.tracing import JobCounter
+
+    jobs = JobCounter(spark.sparkContext)
+    with jobs.call("open") as gid:
+        s = Searcher(spark, idx, stopwords=STOP)
+    assert jobs.counts(gid)[0] == 0
+    with jobs.call("search") as gid:
+        hits = s.search("w0002 OR w0003", k=5).collect()
+    assert len(hits) == 5
+    assert jobs.counts(gid)[:2] == (1, 1)
+    with jobs.call("count") as gid:
+        n = s.count("w0004 AND w0005")
+    assert n > 0
+    assert jobs.counts(gid)[0] == 1
+    with jobs.call("search_many") as gid:
+        got = s.search_many({"a": "w0006", "b": "w0007 w0008"}, k=3).collect()
+    assert sorted(r["query_id"] for r in got) == ["a"] * 3 + ["b"] * 3
+    assert jobs.counts(gid)[0] == 1

@@ -75,16 +75,87 @@ def test_read_webtext_adapter(spark, tmp_path):
         read_webtext(spark, p, require=("url", "nope"))
 
 
-def test_term_in_filter_escapes(spark):
-    # multi-field \x1f keys, quotes, backslashes and plain terms all
-    # resolve through the single parsed SQL IN expression
-    from lucene_spark.index.reader import term_in_filter
+@pytest.fixture(scope="module")
+def escape_index(spark, tmp_path_factory):
+    """A tiny two-segment multi-field index whose term keys
+    (``field\\x1ftoken``) hold a quote, a backslash (an index-time
+    synonym) and non-ASCII letters."""
+    from lucene_spark.index import build_index
 
-    rows = [("body\x1fhello",), ("plain",), ("a'b\\c",), ("miss",)]
-    df = spark.createDataFrame(rows, "term string")
-    got = sorted(
-        r["term"] for r in df.filter(
-            term_in_filter("term", ["body\x1fhello", "plain", "a'b\\c"])
-        ).collect()
+    d = str(tmp_path_factory.mktemp("escape_idx"))
+    rows = [
+        ("u1", "o'neil went to the café", "naïve o'neil"),
+        ("u2", "a slash and a café", "slash"),
+        ("u3", "o'neil wrote slash fiction", "café naïve"),
+        ("u4", "plain words only", "plain"),
+    ]
+    df = spark.createDataFrame(rows, "url string, text string, title string")
+    build_index(
+        spark, df, d, num_segments=2,
+        fields={"body": "text", "title": "title"},
+        synonyms={"slash": "back\\slash"},
     )
-    assert got == sorted(["body\x1fhello", "plain", "a'b\\c"])
+    return d
+
+
+def _escape_keys():
+    from lucene_spark.index.builder import field_term
+
+    return [
+        field_term("body", "o'neil"), field_term("title", "o'neil"),
+        field_term("body", "back\\slash"), field_term("title", "back\\slash"),
+        field_term("body", "café"), field_term("title", "naïve"),
+    ]
+
+
+def test_term_stats_escapes(spark, escape_index):
+    """The driver's pyarrow term-stats read sums exactly what a Spark
+    groupBy over ``term_dict`` sums, for keys with \\x1f, quotes,
+    backslashes and non-ASCII letters; an absent term is missing."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.index.builder import field_term
+    from lucene_spark.index.reader import IndexReader
+
+    keys = _escape_keys()
+    r = IndexReader(spark, escape_index)
+    want = {
+        row["term"]: (row["sum(df)"], row["sum(ttf)"])
+        for row in r.term_dict.filter(F.col("term").isin(keys))
+        .groupBy("term").sum("df", "ttf").collect()
+    }
+    assert sorted(want) == sorted(keys)
+    absent = field_term("body", "o'brien")
+    got = r.term_stats(keys + [absent])
+    assert got == want
+    assert absent not in got
+
+
+def test_driver_reads_respect_commit_point(spark, escape_index, tmp_path):
+    """Partitions and stats rows of a segment no manifest lists (an orphan
+    left by a crash before the manifest swap) change no driver read."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_spark.index.reader import IndexReader
+    from lucene_spark.index.smallio import FIELD_STATS_SCHEMA
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(escape_index, d)
+    keys = _escape_keys()
+
+    def reads():
+        r = IndexReader(spark, d)
+        return r.term_stats(keys), r.global_stats, r.segment_bounds, r.doc_counts
+
+    before = reads()
+    seg = IndexReader(spark, d).manifest_rows[0]["segment_id"]
+    shutil.copytree(f"{d}/data/kind=1/segment_id={seg}", f"{d}/data/kind=1/segment_id=999")
+    orphan = {"segment_id": [999], "doc_count": [7], "sum_ttf": [70],
+              "max_docid": [6], "min_docid": [0]}
+    pq.write_table(
+        pa.table(orphan, schema=FIELD_STATS_SCHEMA), f"{d}/field_stats/orphan.parquet"
+    )
+    assert reads() == before

@@ -100,7 +100,7 @@ def test_meta_and_default_field(searcher):
 
 
 def test_field_stats_from_exists_lists(searcher, fields_py):
-    est = searcher._cached_term_stats(
+    est = searcher._term_stats(
         [exists_term("body"), exists_term("title")]
     )
     for f in ("body", "title"):

@@ -11,6 +11,7 @@ from lucene_spark.constants import ENGLISH_STOP_WORDS
 from lucene_spark.fixtures import generate_webtext
 from lucene_spark.index import build_index
 from lucene_spark.index.mergepolicy import MergePlan
+from lucene_spark.index.reader import IndexReader
 from lucene_spark.index.merge import execute_merge_plan
 from lucene_spark.index.snapshots import (
     create_snapshot,
@@ -48,12 +49,18 @@ def test_snapshot_isolates_appends(spark, idx):
     before = _hits(s_live)
     n_before = s_live.count(s_live.parse(Q))
     create_snapshot(idx, "pre_append")
+    snap_reader = IndexReader(spark, idx, snapshot="pre_append")
+    pinned = (snap_reader.manifest_rows, snap_reader.global_stats)
     rows = generate_webtext(120, seed=99)
     df = spark.createDataFrame(
         [("app://" + r["url"], r["text"]) for r in rows],
         "url string, text string",
     )
     build_index(spark, df, idx, num_segments=2, stopwords=STOP, append=True)
+    # the driver's stats reads resolve from the snapshot's commit metadata
+    after = IndexReader(spark, idx, snapshot="pre_append")
+    assert (after.manifest_rows, after.global_stats) == pinned
+    assert IndexReader(spark, idx).global_stats[0] == pinned[1][0] + 120
 
     s_snap = Searcher(spark, idx, stopwords=STOP, snapshot="pre_append")
     assert _hits(s_snap) == before, "snapshot view changed after append"
