@@ -13,7 +13,8 @@ reader sees its snapshot) and the per-query term statistics (a
 ``term IN (...)`` scan of the manifest's ``kind=1`` partitions, where the
 sorted term column lets row-group min/max statistics skip most of each
 file). Postings are never read on the driver: each search task reads its
-own (``read_slice``). The DataFrame views (``term_dict``, ``postings``,
+own (``read_slice``), and the stored docids of its docmap partition when
+its query matches docs without postings. The DataFrame views (``term_dict``, ``postings``,
 ``docmap``, ``field_stats``, ``deletes``) serve Spark-side work such as
 merges, compaction and multi-term expansion.
 """
@@ -25,6 +26,7 @@ from functools import cached_property
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,15 +62,19 @@ def read_slice(
     hi: int,
     terms: list[str],
     cols: list[str],
-) -> tuple[pd.DataFrame, np.ndarray | None]:
+    docs: bool = False,
+) -> tuple[pd.DataFrame, np.ndarray | None, np.ndarray | None]:
     """What the search task of segment ``seg``, stored docids [lo, hi),
     reads with pyarrow from the segment's own directories, filtered by
     ``term IN terms`` and the docid range: ``cols`` (of POSTINGS_COLS) of
     the block rows overlapping the range plus the pulsed singletons inside
-    it as pseudo blocks, and the sorted deleted docids of the range in
-    ``deletes_dir`` (None when there are none, or no ``deletes_dir``).
+    it as pseudo blocks, the sorted deleted docids of the range in
+    ``deletes_dir`` (None when there are none, or no ``deletes_dir``), and,
+    when ``docs`` is set, the sorted stored docids of the range from the
+    segment's docmap (None otherwise). The docmap is the only record of
+    which docs the range holds: compaction drops docs without renumbering.
     Positions and payloads are read only when ``cols`` holds them."""
-    in_terms = ds.field("term").isin(terms)
+    in_terms = ds.field("term").isin(pa.array(terms, pa.string()))
     blocks = _read_parquet(
         f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}",
         [c for c in cols if c != "segment_id"],
@@ -85,16 +91,22 @@ def read_slice(
     if len(td):
         singles = singleton_pseudo_rows(td)[blocks.columns]
         blocks = pd.concat([blocks, singles], ignore_index=True) if len(blocks) else singles
+    docid = ds.field("docid")
+    in_range = (docid >= lo) & (docid < hi)
     deleted = None
     if deletes_dir is not None:
-        docid = ds.field("docid")
         dels = _read_parquet(
-            deletes_dir, ["docid"],
-            (ds.field("segment_id") == seg) & (docid >= lo) & (docid < hi),
+            deletes_dir, ["docid"], (ds.field("segment_id") == seg) & in_range
         )
         if len(dels):
             deleted = np.unique(dels["docid"].to_numpy(dtype=np.int64))
-    return blocks.assign(segment_id=seg)[cols], deleted
+    stored = None
+    if docs:
+        dm = _read_parquet(
+            f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}", ["docid"], in_range
+        )
+        stored = np.sort(dm["docid"].to_numpy(dtype=np.int64))
+    return blocks.assign(segment_id=seg)[cols], deleted, stored
 
 
 class IndexReader:

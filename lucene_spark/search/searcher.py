@@ -43,8 +43,11 @@ entry point      kernel (segment.py)       result shape
                                            driver
 ===============  ========================  ==================================
 
-MatchAllDocsQuery and MatchNoDocsQuery read no postings: all four entry
-points answer them from the docmap minus live deletes (``_docs_only``).
+MatchAllDocsQuery runs in the same kernel, at the top level or inside a
+tree: a plan that holds one also reads each task's stored docids from its
+segment's docmap partition (Lucene's MatchAllDocsQuery iterates every doc
+of a leaf; deletes are masked where hits are collected). A plan with no
+term and no match-all plans no task.
 
 Multi-term queries expand on the driver against term_dict (the rewrite
 layer of ScoringRewrite.java / TopTermsRewrite.java):
@@ -95,6 +98,7 @@ from .query import (
     TermInSetQuery,
     TermQuery,
     TermRangeQuery,
+    ToChildBlockJoinQuery,
     WildcardQuery,
     boosted,
     collect_terms,
@@ -176,17 +180,14 @@ def _needs_payloads(q) -> bool:
     )
 
 
-def _matches_without_postings(q) -> bool:
-    """True when ``q`` holds a MatchAllDocsQuery anywhere in its tree: it
-    can then match docs of a segment that holds none of its terms, so no
-    segment may be skipped on its term Blooms."""
-    if isinstance(q, MatchAllDocsQuery):
+def _holds(q, types) -> bool:
+    """True when a node anywhere in ``q``'s tree is one of ``types``."""
+    if isinstance(q, types):
         return True
     if isinstance(q, tuple):
-        return any(_matches_without_postings(c) for c in q)
+        return any(_holds(c, types) for c in q)
     return dataclasses.is_dataclass(q) and any(
-        _matches_without_postings(getattr(q, f.name))
-        for f in dataclasses.fields(q)
+        _holds(getattr(q, f.name), types) for f in dataclasses.fields(q)
     )
 
 
@@ -221,11 +222,12 @@ def _run_slice(batches, tasks, read, body, scorers, seg_meta, cache_tag):
         for i in batch["id"]:
             seg, lo, hi = tasks[i]
             doc_base = seg_meta[seg][0]
-            pdf, deleted = read(seg, lo, hi)
+            pdf, deleted, docs = read(seg, lo, hi)
             ctx = SegmentContext.from_pdf(
                 pdf, scorers, lo, hi, cache_tag=cache_tag, doc_base=doc_base,
             )
             ctx.deleted = deleted
+            ctx.docs = docs
             out = body(ctx)
             if "docid" in out:
                 out["docid"] += doc_base
@@ -233,6 +235,9 @@ def _run_slice(batches, tasks, read, body, scorers, seg_meta, cache_tag):
 
 
 def _top_k_body(ctx, query, k, after) -> pd.DataFrame:
+    if after is not None:
+        # the anchor's docid is global, the kernel's are stored docids
+        after = (after[0], after[1] - ctx.doc_base)
     d, s = search_segment(ctx, query, k, after=after)
     return pd.DataFrame({"docid": d, "score": s.astype(np.float64)})
 
@@ -741,8 +746,10 @@ class Searcher:
     def _seg_meta(self) -> dict[int, tuple[int, int, int]]:
         """segment_id → (doc_base, min_docid, max_docid+1) — doc_base remaps
         local→global ids (0 when ids are already global, i.e. post-merge);
-        the [min,max) stored-docid range bounds MatchAll and the block-max
-        window array."""
+        the [min,max) stored-docid range bounds the docid slices of the
+        task plan and the block-max window array. It is a span, not a doc
+        list: compaction leaves gaps in it, so the docs a match-all visits
+        come from the docmap (``read_slice(docs=True)``)."""
         bounds = self.reader.segment_bounds
         out: dict[int, tuple[int, int, int]] = {}
         for r in self.reader.manifest_rows:
@@ -789,7 +796,7 @@ class Searcher:
             return ConstantScoreQuery(
                 query=self.expand_multiterm(q.query, max_terms), boost=q.boost
             )
-        from .query import ToChildBlockJoinQuery, ToParentBlockJoinQuery
+        from .query import ToParentBlockJoinQuery
 
         if isinstance(q, ToParentBlockJoinQuery):
             return ToParentBlockJoinQuery(
@@ -1187,15 +1194,17 @@ class Searcher:
         driver-planned (segment, docid slice) tasks, each reading its own
         rows (``index.reader.read_slice``) and running ``body`` on its
         SegmentContext. ``scored=False`` skips the stats (count needs
-        none); no term at all plans no task."""
+        none); a plan with no term and no match-all plans no task."""
         terms = sorted(set().union(*(collect_terms(q) for q in queries)))
-        if not terms:
+        match_all = any(_holds(q, MatchAllDocsQuery) for q in queries)
+        if not terms and not match_all:
             return self._local_rows(schema)
         scorers = self._make_scorers(queries) if scored else {}
         seg_meta = self._seg_meta()
-        if not any(_matches_without_postings(q) for q in queries):
+        if not match_all:
             # Bloom segment-skip (index/blooms.py): a segment whose bloom
-            # rules out every query term gets no task
+            # rules out every query term gets no task; a match-all can
+            # match docs of a segment that holds none of the terms
             from ..index.blooms import bloom_candidate_segments
 
             cand = bloom_candidate_segments(
@@ -1219,6 +1228,11 @@ class Searcher:
             "positions_enc": not any(map(_needs_positions, queries)),
             "payloads_enc": not any(map(_needs_payloads, queries)),
         }
+        # the docmap's stored docids, for the nodes whose docs do not come
+        # from postings
+        docs = any(
+            _holds(q, (MatchAllDocsQuery, ToChildBlockJoinQuery)) for q in queries
+        )
         # whether deletes exist is the reader's view: the first tombstone
         # write (add_deletes_by_query) runs these tasks while it creates
         # the directory
@@ -1228,6 +1242,7 @@ class Searcher:
             self.reader.deletes_dir,
             terms=terms,
             cols=[c for c in POSTINGS_COLS if not skip.get(c)],
+            docs=docs,
         )
         tag = self._cache_tag()
         n = len(tasks)
@@ -1239,20 +1254,6 @@ class Searcher:
             schema=schema,
         )
 
-    def _docs_only(self, query) -> DataFrame | None:
-        """(docid, score) of a query answered without postings: every live
-        doc at the query's boost for MatchAllDocsQuery, nothing for
-        MatchNoDocsQuery; None for every other query."""
-        if isinstance(query, MatchNoDocsQuery):
-            return self._empty_hits()
-        if isinstance(query, MatchAllDocsQuery):
-            return self._minus_deletes(
-                self._docmap_global().select(
-                    "docid", F.lit(float(query.boost)).alias("score")
-                )
-            )
-        return None
-
     # --- search ---------------------------------------------------------
     def search(
         self,
@@ -1263,13 +1264,8 @@ class Searcher:
         analyzer: str | None = None,
     ) -> DataFrame:
         query = self._prepared(query, analyzer=analyzer)
-        hits = self._docs_only(query)
-        if hits is None:
-            body = partial(_top_k_body, query=query, k=k, after=after)
-            hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
-        elif after is not None:
-            # constant score: a page boundary is a docid
-            hits = hits.filter(F.col("docid") > int(after[1]))
+        body = partial(_top_k_body, query=query, k=k, after=after)
+        hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
         out = hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
         return self._maybe_url(out, with_url)
 
@@ -1286,18 +1282,13 @@ class Searcher:
         call; the returned DataFrame holds the merged rows.
 
         Returns (query_id, docid, score), k rows per query, ordered within
-        each query by (score DESC, docid ASC). A match-all query gets the
-        rows ``search("*", k)`` gives.
+        each query by (score DESC, docid ASC): the rows ``search(q, k)``
+        gives.
         """
         parsed = {qid: self._prepared(q) for qid, q in queries.items()}
-        kernel = {
-            qid: q
-            for qid, q in parsed.items()
-            if not isinstance(q, (MatchAllDocsQuery, MatchNoDocsQuery))
-        }
-        body = partial(_batch_body, queries=kernel, k=k)
+        body = partial(_batch_body, queries=parsed, k=k)
         schema = "query_id string, docid long, score double"
-        hits = self._slices(list(kernel.values()), body, schema).toPandas()
+        hits = self._slices(list(parsed.values()), body, schema).toPandas()
         top = (
             hits.sort_values(
                 ["query_id", "score", "docid"], ascending=[True, False, True]
@@ -1305,22 +1296,14 @@ class Searcher:
             .groupby("query_id", sort=False)
             .head(k)
         )
-        out = self._local_rows(schema, top)
-        for qid, q in parsed.items():
-            if isinstance(q, MatchAllDocsQuery):
-                first = self._docs_only(q).orderBy("docid").limit(k)
-                out = out.unionByName(first.withColumn("query_id", F.lit(qid)))
-        return out
+        return self._local_rows(schema, top)
 
     def search_all(self, query) -> DataFrame:
         """All matching (docid, score) rows, distributed (no top-k cut) —
         the building block for field-sort / rescoring / function scoring."""
         query = self._prepared(query)
-        hits = self._docs_only(query)
-        if hits is None:
-            body = partial(_all_body, query=query)
-            hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
-        return hits
+        body = partial(_all_body, query=query)
+        return self._slices([query], body, SEARCH_HIT_SCHEMA)
 
     def search_sorted_by(
         self,
@@ -1638,9 +1621,6 @@ class Searcher:
         """Total hit count (TotalHitCountCollector analog) — per-segment
         docid-set sizes summed, no scoring, no top-k."""
         query = self._prepared(query)
-        hits = self._docs_only(query)
-        if hits is not None:
-            return hits.count()
         body = partial(_count_body, query=query)
         rows = self._slices([query], body, "n long", scored=False).collect()
         return sum(int(r["n"]) for r in rows)

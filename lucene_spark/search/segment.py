@@ -250,6 +250,12 @@ class SegmentContext:
         self.max_doc = max_doc
         self.doc_base = doc_base
         self.deleted = deleted if deleted is not None and deleted.size else None
+        # sorted stored docids of [min_doc, max_doc) from the docmap, deleted
+        # ones included (deletes are masked where hits are collected); set
+        # by the planner for MatchAllDocsQuery and ToChildBlockJoinQuery,
+        # whose docs do not come from postings. Compaction leaves gaps in
+        # the range, so it is not np.arange(min_doc, max_doc).
+        self.docs: np.ndarray | None = None
         self.cache_key = cache_key
         # per-leaf (docids, scores) memo shared across a batch of queries
         # evaluated against this context (search_many runs hundreds of
@@ -681,10 +687,9 @@ class _SegmentSearcher:
             if parents.size == 0 or pd.size == 0:
                 return _EMPTY
             pd = pd[np.isin(pd, parents)]
-            children, _cnt, _keep = self._child_docs_of(pd, parents)
-            return children
+            return self._child_docs_of(pd, parents)[0]
         if isinstance(q, MatchAllDocsQuery):
-            return np.arange(self.ctx.min_doc, self.ctx.max_doc, dtype=np.int64)
+            return self.ctx.docs
         if isinstance(q, MatchNoDocsQuery):
             return _EMPTY
         if isinstance(q, ConstantScoreQuery):
@@ -788,7 +793,7 @@ class _SegmentSearcher:
         if isinstance(q, DisjunctionMaxQuery):
             return self._evaluate_dismax(q)
         if isinstance(q, MatchAllDocsQuery):
-            d = np.arange(self.ctx.min_doc, self.ctx.max_doc, dtype=np.int64)
+            d = self.ctx.docs
             return d, np.full(d.size, q.boost, dtype=np.float32)
         if isinstance(q, MatchNoDocsQuery):
             return _EMPTY, np.zeros(0, dtype=np.float32)
@@ -809,25 +814,25 @@ class _SegmentSearcher:
         raise TypeError(f"unsupported query node {type(q)}")
 
     def _child_docs_of(self, pd: np.ndarray, parents: np.ndarray):
-        """Child docid ranges (prev parent, parent) of the given matching
-        parent docids, plus the per-parent child counts (for score
-        propagation). Docids are dense per segment, so children = the
-        integer range — deletes are masked at the collection points like
+        """Children of the given matching parent docids — the segment's
+        stored docids (``ctx.docs``) between the previous parent and each
+        parent — plus the per-parent child counts (for score propagation).
+        Compaction drops docs without renumbering, so a block's docid range
+        may have gaps; deletes are masked at the collection points like
         every other docid source."""
+        docs = self.ctx.docs
         idx = np.searchsorted(parents, pd, side="left")
         prev = np.where(
             idx > 0, parents[np.maximum(idx - 1, 0)], self.ctx.min_doc - 1
         )
-        counts = pd - prev - 1
-        keep = counts > 0
-        pd, prev, counts = pd[keep], prev[keep], counts[keep]
+        first = np.searchsorted(docs, prev, side="right")
+        counts = np.searchsorted(docs, pd, side="left") - first
         total = int(counts.sum())
         if total == 0:
-            return _EMPTY, np.zeros(0, dtype=np.int64), keep
+            return _EMPTY, counts
         cum = np.cumsum(counts)
         intra = np.arange(total, dtype=np.int64) - np.repeat(cum - counts, counts)
-        children = np.repeat(prev + 1, counts) + intra
-        return children, counts, keep
+        return docs[np.repeat(first, counts) + intra], counts
 
     def _evaluate_child_join(self, q: ToChildBlockJoinQuery):
         """ToChildBlockJoinQuery: children of each matching parent score
@@ -842,12 +847,10 @@ class _SegmentSearcher:
         pd, ps = pd[ok], ps[ok]
         if pd.size == 0:
             return _EMPTY, np.zeros(0, dtype=dtype)
-        children, counts, keep = self._child_docs_of(pd, parents)
+        children, counts = self._child_docs_of(pd, parents)
         if children.size == 0:
             return _EMPTY, np.zeros(0, dtype=dtype)
-        scores = np.repeat(
-            (ps[keep].astype(np.float64) * q.boost), counts
-        ).astype(dtype)
+        scores = np.repeat(ps.astype(np.float64) * q.boost, counts).astype(dtype)
         return children, scores
 
     def _evaluate_parent_children(self, q: ParentChildrenBlockJoinQuery):

@@ -172,6 +172,52 @@ def test_child_join_roundtrip_with_parent_join(searcher, pyidx, corpus, docmap):
     assert got_children == exp
 
 
+def test_child_join_after_compaction(spark, tmp_path_factory):
+    """Compaction drops deleted docs without renumbering, so a block's docid
+    range has gaps: a parent's children are the docmap's docs between two
+    parents, each scoring its own parent's score."""
+    from lucene_spark.index.compaction import compact_deletes
+    from lucene_spark.index.deletes import add_deletes_by_url
+
+    rows = [
+        {
+            "url": f"doc://{g:04d}-{m}",
+            "text": f"parentmarker {' '.join(['pm'] * (g % 4 + 1))}"
+            if m == "p"
+            else f"child {m}",
+            "family": g,
+        }
+        for g in range(N_FAMILIES)
+        for m in ("c0", "c1", "c2", "p")
+    ]
+    d = str(tmp_path_factory.mktemp("idx_bj_compact"))
+    build_index(
+        spark, spark.createDataFrame(rows), d, num_segments=3, stopwords=None,
+        block_key="family",
+    )
+    victims = {r["url"] for r in rows if r["url"].endswith("-c1")}
+    add_deletes_by_url(
+        spark, d, spark.createDataFrame([(u,) for u in victims], "url string")
+    )
+    # one doc in four per family: every segment is over the 20% threshold
+    assert compact_deletes(spark, d, max_deletes_pct=20.0)["reclaimed_docs"] == 60
+    s = Searcher(spark, d, stopwords=None)
+    live = {r["url"] for r in rows if "-c" in r["url"]} - victims
+    q = ToChildBlockJoinQuery(TermQuery("pm"), PARENTS, boost=2.0)
+    assert s.count(q) == len(live)
+    assert s.count(ConstantScoreQuery(q)) == len(live)
+    assert s.search_all(q).count() == len(live)
+    parent = {
+        r["url"][:-2]: np.float32(r["score"])
+        for r in s.search(TermQuery("pm"), k=N_FAMILIES, with_url=True).collect()
+    }
+    hits = s.search(q, k=len(rows), with_url=True).collect()
+    assert {r["url"] for r in hits} == live  # no deleted child comes back
+    for r in hits:
+        exp = np.float32(np.float64(parent[r["url"][:-3]]) * 2.0)
+        assert np.float32(r["score"]) == exp, r["url"]
+
+
 def test_child_join_rewrite():
     from lucene_spark.search.query import MatchNoDocsQuery, rewrite
 

@@ -134,7 +134,8 @@ def test_pruned_segments_get_no_task(spark, idx):
 def test_spark_work_budget(spark, idx):
     """Planning reads on the driver: opening a Searcher launches no Spark
     job, and each term call on never-seen terms launches exactly its one
-    map-only search job."""
+    map-only search job. A match-all runs in the same job: its tasks read
+    their docs from the docmap partitions."""
     from perfbench.tracing import JobCounter
 
     jobs = JobCounter(spark.sparkContext)
@@ -153,3 +154,16 @@ def test_spark_work_budget(spark, idx):
         got = s.search_many({"a": "w0006", "b": "w0007 w0008"}, k=3).collect()
     assert sorted(r["query_id"] for r in got) == ["a"] * 3 + ["b"] * 3
     assert jobs.counts(gid)[0] == 1
+    with jobs.call("search *") as gid:
+        hits = s.search("*", k=5).collect()
+    assert [r["docid"] for r in hits] == [0, 1, 2, 3, 4]
+    assert jobs.counts(gid)[:2] == (1, 1)
+    with jobs.call("count *") as gid:
+        n = s.count("*")
+    assert n == 401
+    assert jobs.counts(gid)[:2] == (1, 1)
+    with jobs.call("search_many *") as gid:
+        got = s.search_many({"a": "*", "b": "w0009"}, k=3).collect()
+    assert [r["docid"] for r in got if r["query_id"] == "a"] == [0, 1, 2]
+    assert len(got) == 6
+    assert jobs.counts(gid)[:2] == (1, 1)

@@ -251,27 +251,38 @@ def test_streaming_index(spark, corpus, tmp_path_factory):
     assert check_index(spark, idx) == []
 
 
-def test_compact_deletes_physical_reclaim(spark, corpus, tmp_path_factory):
-    """compact_deletes drops tombstoned docs from the postings payloads.
-    Oracle: after compaction the index must score IDENTICALLY (per url,
-    bit-for-bit float32) to a fresh index built from only the live docs —
-    same segment assignment (url-hash), same stats, same postings."""
-    import os
-
+@pytest.fixture(scope="module")
+def compacted(spark, corpus, tmp_path_factory):
+    """A 3-segment index with every third doc deleted and then compacted
+    away (33% > the 20% threshold), a fresh index of only the live docs,
+    the deleted urls and the compaction metrics."""
     from lucene_spark.index.compaction import compact_deletes
-    from lucene_spark.index.invariants import check_index
 
     d = str(tmp_path_factory.mktemp("idx_compact"))
     fresh = str(tmp_path_factory.mktemp("idx_fresh"))
-    victims = {r["url"] for r in corpus[::3]}  # 33% > 20% threshold
+    victims = {r["url"] for r in corpus[::3]}
     build_index(spark, _df(spark, corpus), d, num_segments=3, stopwords=STOP)
     add_deletes_by_url(
         spark, d, spark.createDataFrame([(u,) for u in victims], "url string")
     )
     live = [r for r in corpus if r["url"] not in victims]
     build_index(spark, _df(spark, live), fresh, num_segments=3, stopwords=STOP)
-
     metrics = compact_deletes(spark, d, max_deletes_pct=20.0)
+    return d, fresh, victims, metrics
+
+
+def test_compact_deletes_physical_reclaim(spark, corpus, compacted):
+    """compact_deletes drops tombstoned docs from the postings payloads.
+    Oracle: after compaction the index must score IDENTICALLY (per url,
+    bit-for-bit float32) to a fresh index built from only the live docs —
+    same segment assignment (url-hash), same stats, same postings. A
+    match-all visits the docmap's docs, not the compacted docid span."""
+    import os
+
+    from lucene_spark.index.invariants import check_index
+
+    d, fresh, victims, metrics = compacted
+    live = [r for r in corpus if r["url"] not in victims]
     assert metrics["compacted_segments"] == 3
     assert metrics["reclaimed_docs"] == len(victims)
     assert not os.path.isdir(f"{d}/deletes")  # every tombstone reclaimed
@@ -280,7 +291,10 @@ def test_compact_deletes_physical_reclaim(spark, corpus, tmp_path_factory):
     s_c = Searcher(spark, d, stopwords=STOP)
     s_f = Searcher(spark, fresh, stopwords=STOP)
     assert s_c.count("*") == len(live)
-    for qs in ["w0000", "w0000 OR w0001", "w0000 AND w0001", '"w0000 w0001"']:
+    for qs in [
+        "w0000", "w0000 OR w0001", "w0000 AND w0001", '"w0000 w0001"',
+        "* -w0000", "* w0000",
+    ]:
         got = {
             (r["url"], np.float32(r["score"]))
             for r in s_c.search(qs, k=len(live), with_url=True).collect()
@@ -291,6 +305,36 @@ def test_compact_deletes_physical_reclaim(spark, corpus, tmp_path_factory):
         }
         assert got == exp, qs
         assert not {u for u, _ in got} & victims
+        if qs.startswith("*"):
+            assert s_c.count(qs) == s_f.count(qs) == len(exp), qs
+
+
+def test_read_slice_docs_after_compaction(spark, compacted):
+    """``read_slice(docs=True)`` returns the docmap's stored docids of the
+    range — with the gaps compaction left — and, for no terms, no block
+    rows (a typed empty ``term IN ()``)."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.index.reader import read_slice
+    from lucene_spark.index.schemas import POSTINGS_COLS
+
+    d = compacted[0]
+    r = IndexReader(spark, d)
+    seg, (lo, hi) = next(iter(sorted(r.segment_bounds.items())))
+    hi += 1
+    blocks, deleted, docs = read_slice(d, None, seg, lo, hi, [], POSTINGS_COLS, docs=True)
+    assert len(blocks) == 0 and list(blocks.columns) == POSTINGS_COLS
+    assert deleted is None
+    stored = sorted(
+        x["docid"]
+        for x in r.docmap.filter(
+            (F.col("segment_id") == seg) & F.col("docid").between(lo, hi - 1)
+        ).collect()
+    )
+    assert list(docs) == stored
+    assert 0 < len(stored) < hi - lo  # compaction left gaps in the span
+    # without docs=True no docmap is read
+    assert read_slice(d, None, seg, lo, hi, ["w0000"], POSTINGS_COLS)[2] is None
 
 
 def test_streaming_batch_replay_idempotent(spark, corpus, tmp_path_factory):

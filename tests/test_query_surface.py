@@ -188,6 +188,26 @@ def test_search_after_pagination(searcher, oracle):
         assert np.float32(gs) == np.float32(es)
 
 
+def test_search_after_crosses_segments(searcher):
+    """Pages of all-tied hits: every anchor after the first page lies in a
+    segment with a nonzero doc_base, so the anchor's global docid must be
+    compared with global docids in every segment."""
+    for qs in ["*", ConstantScoreQuery(TermQuery("w0000"), boost=2.0)]:
+        full = [(r["docid"], r["score"]) for r in searcher.search(qs, k=N_DOCS).collect()]
+        assert len({s for _d, s in full}) == 1, qs
+        got, anchor = [], None
+        while True:
+            page = [
+                (r["docid"], r["score"])
+                for r in searcher.search(qs, k=len(full) // 3 + 1, after=anchor).collect()
+            ]
+            if not page:
+                break
+            got += page
+            anchor = (page[-1][1], page[-1][0])
+        assert got == full, qs
+
+
 def test_fuzzy_blended_df(searcher, oracle):
     """Every fuzzy-expanded term scores with the blended (max) df."""
     from lucene_spark.search.query import FuzzyQuery
