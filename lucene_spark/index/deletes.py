@@ -59,34 +59,32 @@ def add_deletes_by_query(
     deleteDocuments(Query...) — buffered query deletes resolved against a
     reader at flush; here resolved immediately against the committed
     index): every doc matching ``query`` (string or AST) gets a tombstone.
-    The match runs the normal distributed evaluation; global docids map
-    back to (segment, stored docid) through the broadcast segment-range
-    table — no collect of the hit set."""
+    The match runs the normal evaluation once, inside the tombstone write;
+    global docids map back to (segment, stored docid) through a CASE over
+    the segments' docid ranges — no collect of the hit set and no join.
+    The count of new tombstones is the drop in live docs across the write,
+    read from metadata."""
     from ..search.searcher import Searcher
 
     s = Searcher(
         spark, index_dir, analyzer=analyzer, stopwords=stopwords
     )
-    seg_df = F.broadcast(
-        spark.createDataFrame(
-            [
-                (int(sid), int(b), int(b) + int(mn), int(b) + int(mx))
-                for sid, (b, mn, mx) in s._seg_meta().items()
-            ],
-            "seg int, doc_base long, lo long, hi long",
-        )
+    ranges = sorted(s._seg_meta().items())
+    if not ranges:
+        return 0  # an empty index has no doc to delete
+    # F.when opens each CASE, Column.when adds a branch per segment
+    seg = base = F
+    for sid, (b, mn, mx) in ranges:
+        docid = F.col("docid")
+        inside = (docid >= int(b) + int(mn)) & (docid < int(b) + int(mx))
+        seg, base = seg.when(inside, int(sid)), base.when(inside, int(b))
+    mapped = s.search_all(query).select(
+        seg.cast("int").alias("segment_id"),
+        (F.col("docid") - base).alias("docid"),
     )
-    hits = s.search_all(query).select("docid")
-    mapped = (
-        hits.join(seg_df, (hits.docid >= F.col("lo")) & (hits.docid < F.col("hi")))
-        .select(
-            F.col("seg").alias("segment_id"),
-            (F.col("docid") - F.col("doc_base")).alias("docid"),
-        )
-    )
-    # don't double-tombstone already-deleted docs (search_all is already
-    # live-docs-filtered, so this is just the idempotent-replay guard)
-    n = mapped.count()
-    if n:
-        mapped.write.mode("append").parquet(f"{index_dir}/deletes")
-    return n
+    # search_all is live-docs-filtered, so no doc is tombstoned twice; its
+    # tasks read the deletes the Searcher saw at open, so the first
+    # tombstone write does not read the directory it creates
+    live = s.reader.live_doc_count()
+    mapped.write.mode("append").parquet(f"{index_dir}/deletes")
+    return live - IndexReader(spark, index_dir).live_doc_count()

@@ -12,11 +12,14 @@ read with pyarrow, with no Spark job: the segment manifest and field_stats
 reader sees its snapshot) and the per-query term statistics (a
 ``term IN (...)`` scan of the manifest's ``kind=1`` partitions, where the
 sorted term column lets row-group min/max statistics skip most of each
-file). Postings are never read on the driver: each search task reads its
-own (``read_slice``), and the stored docids of its docmap partition when
-its query matches docs without postings. The DataFrame views (``term_dict``, ``postings``,
-``docmap``, ``field_stats``, ``deletes``) serve Spark-side work such as
-merges, compaction and multi-term expansion.
+file). Each search task reads its own postings (``read_slice``), and the
+stored docids of its docmap partition when its query matches docs without
+postings, in a Spark task or, for a plan the driver finishes sooner than
+one Spark wave, in the driver process. The urls of a top k
+(``doc_urls``) and the live doc count (``live_doc_count``) are read on the
+driver too. The DataFrame views (``term_dict``, ``postings``, ``docmap``, ``field_stats``,
+``deletes``) serve Spark-side work such as merges, compaction and
+multi-term expansion.
 """
 
 from __future__ import annotations
@@ -262,6 +265,35 @@ class IndexReader:
             return None
         live = [int(r["segment_id"]) for r in self.manifest_rows]
         return self._table("deletes").filter(F.col("segment_id").isin(live))
+
+    def doc_urls(self, seg: int, docids: np.ndarray) -> dict[int, str]:
+        """stored docid → url of ``docids`` in segment ``seg``, read with
+        pyarrow from the segment's docmap partition."""
+        dm = _read_parquet(
+            f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}",
+            ["docid", "url"],
+            ds.field("docid").isin(pa.array(docids, pa.int64())),
+        )
+        return dict(zip(dm["docid"].tolist(), dm["url"].tolist()))
+
+    def live_doc_count(self) -> int:
+        """Docs of the manifest's segments minus their distinct deleted
+        docs: the docmap row counts come from parquet metadata, the deletes
+        are read as they stand now (a Searcher sees later delete batches,
+        as its search tasks do)."""
+        live = [int(r["segment_id"]) for r in self.manifest_rows]
+        n = 0
+        for seg in live:
+            path = f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}"
+            if os.path.isdir(path):
+                n += ds.dataset(path, format="parquet").count_rows()
+        if self.deletes_dir is not None:
+            dels = _read_parquet(
+                self.deletes_dir, ["segment_id", "docid"],
+                ds.field("segment_id").isin(pa.array(live, pa.int32())),
+            )
+            n -= len(dels.drop_duplicates())
+        return n
 
     @cached_property
     def segment_bounds(self) -> dict[int, tuple[int, int]]:

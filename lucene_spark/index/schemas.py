@@ -111,3 +111,10 @@ SEARCH_HIT_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
+URL_HIT_SCHEMA = T.StructType(
+    [
+        T.StructField("docid", T.LongType(), False),
+        T.StructField("url", T.StringType(), True),
+        T.StructField("score", T.DoubleType(), False),
+    ]
+)

@@ -10,37 +10,54 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
   across segments BEFORE scoring; per-segment IDF would break rank identity);
 - the driver also plans the task list (``plan_slices``): one
   (segment, lo, hi) per manifest segment its term Blooms keep and per docid
-  slice, widest first. The tasks run as one map-only stage,
-  ``spark.range(0, n, 1, n).mapInPandas``, so partition i is task i — no
-  scan → shuffle → grouped-map exchange;
+  slice, widest first;
 - each task reads its own rows with pyarrow (``index.reader.read_slice``,
   the per-leaf read of IndexSearcher.searchLeaf): the block rows of its
   segment's partition directory with ``term IN (...)`` and the docid range
   as filters, its pulsed singletons as pseudo blocks and its deletes.
   Positions and payloads are read only for queries that consume them —
-  column pruning. Nothing posting-sized ever reaches the driver;
-- each task evaluates locally (segment.py) and emits ≤ k hits; the global
-  answer is ``orderBy(score DESC, docid ASC).limit(k)`` over n_tasks·k
-  rows — Spark's TakeOrderedAndProject, the TopDocs.merge analog
-  (search/TopDocs.java:206-234). A term query therefore runs as one Spark
-  job of one stage.
+  column pruning;
+- each task evaluates locally (segment.py) and emits ≤ k hits, which are
+  merged by (score DESC, docid ASC) — the TopDocs.merge analog
+  (search/TopDocs.java:206-234).
+
+Where the tasks run is sized by their work, as IndexSearcher runs its leaf
+slices on the caller thread when it has no executor. The driver estimates
+the plan's work (``_driver_ms``: a read per task that grows with its docid
+span, Σdf of the plan's terms, dearer when positions are read, the tasks'
+docs when the plan reads the docmap, and a kernel per query) from numbers
+it already holds. Run on Spark, the same work is shared by min(tasks,
+cores) cores after the measured price of one wave, WAVE_MS
+(``_on_driver``; tools/driver_cost_probe.py fits the constants):
+
+- when the driver is sooner, it runs the tasks itself, one after another,
+  and merges their rows; the call launches no Spark job;
+- otherwise the tasks run as one map-only stage,
+  ``spark.range(0, n, 1, n).mapInPandas``, so partition i is task i — no
+  scan → shuffle → grouped-map exchange. When ``slice_docs`` is unset the
+  span aims at ``defaultParallelism`` tasks, one wave.
 
 One pipeline serves ``search``, ``search_many``, ``search_all`` and
 ``count``, as IndexSearcher.search(Query, CollectorManager) serves every
 collector: ``Searcher._slices`` plans stats and tasks once, and
-``_run_slice`` is the one task body. Only the kernel each task runs and the
-shape of the result differ:
+``_run_slice`` is the one task body wherever it runs. Only the kernel each
+task runs and the shape of the result differ:
 
 ===============  ========================  ==================================
 entry point      kernel (segment.py)       result shape
 ===============  ========================  ==================================
-``search``       ``search_segment``        ``orderBy(score DESC, docid ASC)
-                                           .limit(k)``
+``search``       ``search_segment``        top k by (score DESC, docid ASC),
+                                           merged on the driver inside the
+                                           call; ``with_url`` reads the k
+                                           urls with pyarrow
 ``search_many``  ``batch_search_segment``  top k per query_id, merged on the
-                                           driver
-``search_all``   ``exhaustive_hits``       every hit, no cut
+                                           driver inside the call
+``search_all``   ``exhaustive_hits``       every hit, no cut: local rows
+                                           when run on the driver, else the
+                                           lazy Spark stage
 ``count``        ``matching_docs``         per-slice counts summed on the
-                                           driver
+                                           driver; ``count("*")`` reads only
+                                           metadata
 ===============  ========================  ==================================
 
 MatchAllDocsQuery runs in the same kernel, at the top level or inside a
@@ -78,7 +95,7 @@ from pyspark.sql.types import DataType
 
 from ..index.builder import FIELD_SEP, exists_term, field_term
 from ..index.reader import IndexReader, read_slice
-from ..index.schemas import POSTINGS_COLS, SEARCH_HIT_SCHEMA
+from ..index.schemas import POSTINGS_COLS, SEARCH_HIT_SCHEMA, URL_HIT_SCHEMA
 from .fuzzy import fuzzy_similarity
 from .query import (
     BooleanQuery,
@@ -123,6 +140,27 @@ __all__ = ["Searcher", "wildcard_to_regex"]
 # the stand-in for an interval slot whose multiterm leaf expanded to
 # nothing (the slot stays in place; it simply never has occurrences)
 _NO_MATCH_TERM = "\x00no-match"
+
+# Where a plan runs (``Searcher._slices``, ``_on_driver``). Fitted by
+# tools/driver_cost_probe.py over perfbench.corpus indexes of 2k / 20k /
+# 100k docs in 2 segments at once (local[4], a 4-core box, medians of 5),
+# so the estimate follows the index size. Measured / fitted ms per size:
+# no postings 21.9/23.7, 65.5/61.1, 128.8/129.5; the 27 reference and
+# phrase shapes 802/728, 2897/2532, 8108/7903; "*" 32/25, 92/71, 173/178;
+# a search_many batch of 1000 queries 435/368, 2684/2540, 11844/12055.
+# one empty mapInPandas wave at 1 task (434 ms at 4 tasks, so for a wide
+# plan the estimate errs towards Spark)
+WAVE_MS = 245.0
+# a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span
+TASK_MS = 11.0
+TASK_DOC_MS = 0.000855
+# per posting of the plan's terms (Σdf), without / with positions
+POSTING_MS = 0.000594
+POSITION_POSTING_MS = 0.00425
+# per doc of the tasks' spans when the plan reads the docmap
+DOC_MS = 0.000481
+# per query of the plan (a batch's kernels beyond its shared postings)
+QUERY_MS = 0.109
 
 
 def _needs_positions(q) -> bool:
@@ -196,11 +234,11 @@ def plan_slices(seg_meta: dict, span: int | None) -> list[tuple[int, int, int]]:
     where a segment's range meets one ``span``-doc window (the whole range
     when ``span`` is None), widest first.
 
-    Task i runs as partition i and the scheduler launches partitions in
-    order, so widest first (LPT) lets the short partial slices fill the
-    ragged final wave instead of starting one — measured ~6% of the
-    batched-query stage at 8 cores with 66 slices. Stable on ties, so
-    full-width slices keep (segment, slice) order."""
+    On Spark, task i runs as partition i and the scheduler launches
+    partitions in order, so widest first (LPT) lets the short partial
+    slices fill the ragged final wave instead of starting one — measured
+    ~6% of the batched-query stage at 8 cores with 66 slices. Stable on
+    ties, so full-width slices keep (segment, slice) order."""
     out = []
     for seg, (_base, lo, hi) in sorted(seg_meta.items()):
         if hi <= lo:
@@ -214,10 +252,11 @@ def plan_slices(seg_meta: dict, span: int | None) -> list[tuple[int, int, int]]:
 
 
 def _run_slice(batches, tasks, read, body, scorers, seg_meta, cache_tag):
-    """The task body of every entry point. For each task index in the
-    partition (one, as planned): read the task's rows, build the
-    SegmentContext of its docid slice, run the entry point's kernel ``body``
-    on it and lift the stored docids it returns to global ids."""
+    """The task body of every entry point, wherever it runs. For each task
+    index in ``batches``' ``id`` column (one per Spark partition, as
+    planned; all of them on the driver): read the task's rows, build the
+    SegmentContext of its docid slice, run the entry point's kernel
+    ``body`` on it and lift the stored docids it returns to global ids."""
     for batch in batches:
         for i in batch["id"]:
             seg, lo, hi = tasks[i]
@@ -232,6 +271,49 @@ def _run_slice(batches, tasks, read, body, scorers, seg_meta, cache_tag):
             if "docid" in out:
                 out["docid"] += doc_base
             yield out
+
+
+def _arrow_schema(schema) -> pa.Schema:
+    """The Arrow schema of a StructType or DDL string."""
+    return to_arrow_schema(
+        DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    )
+
+
+def _driver_ms(
+    tasks, postings: int, positions: bool, docs: bool, n_queries: int
+) -> float:
+    """Estimated milliseconds of the work of ``tasks``, run one after
+    another: a read per task that grows with its docid span, the postings
+    of the plan's terms (Σdf, read and decoded once for all the queries;
+    dearer when positions are read), the tasks' docs when the plan reads
+    the docmap, and a kernel per query."""
+    span = sum(hi - lo for _seg, lo, hi in tasks)
+    return (
+        TASK_MS * len(tasks)
+        + (TASK_DOC_MS + (DOC_MS if docs else 0.0)) * span
+        + (POSITION_POSTING_MS if positions else POSTING_MS) * postings
+        + QUERY_MS * n_queries
+    )
+
+
+def _on_driver(work_ms: float, n_tasks: int, par: int) -> bool:
+    """Whether ``work_ms`` of ``n_tasks`` tasks is done sooner in the
+    driver process than as one Spark wave, which pays WAVE_MS and then
+    shares the same work among min(n_tasks, par) cores. A one-task plan
+    therefore always runs on the driver."""
+    return work_ms < WAVE_MS + work_ms / min(n_tasks, par)
+
+
+def _to_pandas(rows) -> pd.DataFrame:
+    """The rows ``Searcher._slices`` returned, on the driver: as they are
+    when the plan ran there, else collected (the plan's one Spark job)."""
+    return rows if isinstance(rows, pd.DataFrame) else rows.toPandas()
+
+
+def _top(hits: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The first ``k`` hits by (score DESC, docid ASC) — TopDocs.merge."""
+    return hits.sort_values(["score", "docid"], ascending=[False, True]).head(k)
 
 
 def _top_k_body(ctx, query, k, after) -> pd.DataFrame:
@@ -294,8 +376,12 @@ class Searcher:
         self.reader = IndexReader(spark, index_dir, snapshot=snapshot)
         self.mode = mode
         # intra-segment search concurrency (IndexSearcher leaf slices,
-        # IndexSearcher.java:106-108): None = auto-pick a docid span so a
-        # few merged segments still fan out across every core; 0 = disable
+        # IndexSearcher.java:106-108): None = auto-pick a docid span that
+        # gives about defaultParallelism tasks, so a few merged segments
+        # still fan out across every core in one wave; 0 = one task per
+        # segment. The span shapes the tasks wherever they run; whether
+        # they run on the driver or on Spark is sized by their work
+        # (``_slices``).
         self.slice_docs = slice_docs
         self._expand_cache: dict[object, object] = {}
         from ..index.builder import get_analyzer
@@ -352,16 +438,17 @@ class Searcher:
         return key
 
     def _slice_span(self) -> int | None:
-        """Docid span per search slice, or None for one slice per segment."""
+        """Docid span per search slice, or None for one slice per segment.
+        The auto span aims at ``defaultParallelism`` tasks, so a plan that
+        runs on Spark runs in one wave."""
         if self.slice_docs is not None:
             return self.slice_docs or None
         n_seg = len(self.reader.manifest_rows)
         par = self.spark.sparkContext.defaultParallelism
-        target = par * 2
-        if n_seg >= target:
+        if n_seg >= par:
             return None  # segment-level parallelism already saturates cores
         total = self.reader.global_stats[0]
-        span = max(WINDOW_DOCS, -(-total // target))
+        span = max(WINDOW_DOCS, -(-total // par))
         return ((span + WINDOW_DOCS - 1) // WINDOW_DOCS) * WINDOW_DOCS
 
     # --- planning -------------------------------------------------------
@@ -1171,8 +1258,9 @@ class Searcher:
             )
         return rewrite(self.expand_multiterm(query, max_terms))
 
-    def _make_scorers(self, queries: list) -> dict:
-        all_terms = sorted(set().union(*(collect_terms(q) for q in queries)))
+    def _make_scorers(self, queries: list, tstats: dict) -> dict:
+        """Scorers of ``queries`` from ``tstats``, the ``_term_stats`` of
+        their terms."""
         doc_count, sum_ttf = self.reader.global_stats
         if doc_count == 0:
             return {}
@@ -1182,26 +1270,27 @@ class Searcher:
             # (df = docCount(field), ttf = sumTotalTermFreq(field))
             est = self._term_stats([exists_term(f) for f in self.fields])
             field_stats = {f: est[exists_term(f)] for f in self.fields}
-        tstats = self._term_stats(all_terms)
         return build_scorers(
             queries, tstats, doc_count, sum_ttf, self.mode, field_stats=field_stats
         )
 
-    def _slices(self, queries: list, body, schema, scored: bool = True) -> DataFrame:
+    def _slices(self, queries: list, body, schema, scored: bool = True):
         """The one plan behind search, search_many, search_all and count
         (IndexSearcher.search(Query, CollectorManager)): global stats for
-        the union of the queries' terms, then one map-only stage of
-        driver-planned (segment, docid slice) tasks, each reading its own
-        rows (``index.reader.read_slice``) and running ``body`` on its
-        SegmentContext. ``scored=False`` skips the stats (count needs
-        none); a plan with no term and no match-all plans no task."""
+        the union of the queries' terms, then driver-planned (segment,
+        docid slice) tasks, each reading its own rows
+        (``index.reader.read_slice``) and running ``body`` on its
+        SegmentContext. Only where the tasks run depends on their size, as
+        IndexSearcher runs its leaf slices on the caller thread when it has
+        no executor: a plan that ``_on_driver`` finds sooner in this
+        process runs here, and its rows come back as a pandas DataFrame;
+        any other comes back as the lazy one-stage ``mapInPandas``
+        DataFrame. ``scored=False`` builds no scorers (count needs none); a
+        plan with no term and no match-all plans no task."""
         terms = sorted(set().union(*(collect_terms(q) for q in queries)))
         match_all = any(_holds(q, MatchAllDocsQuery) for q in queries)
-        if not terms and not match_all:
-            return self._local_rows(schema)
-        scorers = self._make_scorers(queries) if scored else {}
-        seg_meta = self._seg_meta()
-        if not match_all:
+        seg_meta = self._seg_meta() if terms or match_all else {}
+        if seg_meta and not match_all:
             # Bloom segment-skip (index/blooms.py): a segment whose bloom
             # rules out every query term gets no task; a match-all can
             # match docs of a segment that holds none of the terms
@@ -1221,11 +1310,14 @@ class Searcher:
         )
         tasks = plan_slices(seg_meta, span)
         if not tasks:
-            return self._local_rows(schema)
+            return _arrow_schema(schema).empty_table().to_pandas()
+        tstats = self._term_stats(terms)
+        scorers = self._make_scorers(queries, tstats) if scored else {}
         # column pruning: positions/payloads are read only for queries that
         # consume them
+        positions = any(map(_needs_positions, queries))
         skip = {
-            "positions_enc": not any(map(_needs_positions, queries)),
+            "positions_enc": not positions,
             "payloads_enc": not any(map(_needs_payloads, queries)),
         }
         # the docmap's stored docids, for the nodes whose docs do not come
@@ -1245,14 +1337,17 @@ class Searcher:
             docs=docs,
         )
         tag = self._cache_tag()
-        n = len(tasks)
-        return self.spark.range(0, n, 1, n).mapInPandas(
-            partial(
-                _run_slice, tasks=tasks, read=read, body=body,
-                scorers=scorers, seg_meta=seg_meta, cache_tag=tag,
-            ),
-            schema=schema,
+        run = partial(
+            _run_slice, tasks=tasks, read=read, body=body, scorers=scorers,
+            seg_meta=seg_meta, cache_tag=tag,
         )
+        postings = sum(df for df, _ttf in tstats.values())
+        n = len(tasks)
+        work = _driver_ms(tasks, postings, positions, docs, len(queries))
+        if _on_driver(work, n, self.spark.sparkContext.defaultParallelism):
+            ids = pd.DataFrame({"id": np.arange(n)})
+            return pd.concat(list(run([ids])), ignore_index=True)
+        return self.spark.range(0, n, 1, n).mapInPandas(run, schema=schema)
 
     # --- search ---------------------------------------------------------
     def search(
@@ -1263,14 +1358,20 @@ class Searcher:
         after: tuple[float, int] | None = None,
         analyzer: str | None = None,
     ) -> DataFrame:
+        """Top ``k`` hits (docid, score), or (docid, url, score) with
+        ``with_url``, by (score DESC, docid ASC); ``after=(score, docid)``
+        pages past that anchor (searchAfter). The tasks run and their hits
+        are merged during this call, in the driver process or as one Spark
+        stage; the returned DataFrame holds the merged rows."""
         query = self._prepared(query, analyzer=analyzer)
         body = partial(_top_k_body, query=query, k=k, after=after)
-        hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
-        out = hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        return self._maybe_url(out, with_url)
+        top = _top(_to_pandas(self._slices([query], body, SEARCH_HIT_SCHEMA)), k)
+        if with_url:
+            return self._local_rows(URL_HIT_SCHEMA, self._with_urls(top))
+        return self._local_rows(SEARCH_HIT_SCHEMA, top)
 
     def search_many(self, queries: dict[str, object], k: int = 10) -> DataFrame:
-        """Batched top-k for many queries in ONE Spark job.
+        """Batched top-k for many queries in at most ONE Spark job.
 
         This is the engine's query-throughput path: postings for the union
         of all query terms are scanned once, each segment evaluates every
@@ -1278,8 +1379,9 @@ class Searcher:
         query, and the driver merges those into the top-k per query
         (TopDocs.merge) — amortizing job/scan overhead across the batch
         (the Spark analog of Lucene's SearchTask loop throughput,
-        benchmark/byTask/tasks/SearchTask.java). The job runs during this
-        call; the returned DataFrame holds the merged rows.
+        benchmark/byTask/tasks/SearchTask.java). The tasks run during this
+        call, in the driver process when that is sooner than a Spark
+        wave; the returned DataFrame holds the merged rows.
 
         Returns (query_id, docid, score), k rows per query, ordered within
         each query by (score DESC, docid ASC): the rows ``search(q, k)``
@@ -1288,7 +1390,7 @@ class Searcher:
         parsed = {qid: self._prepared(q) for qid, q in queries.items()}
         body = partial(_batch_body, queries=parsed, k=k)
         schema = "query_id string, docid long, score double"
-        hits = self._slices(list(parsed.values()), body, schema).toPandas()
+        hits = _to_pandas(self._slices(list(parsed.values()), body, schema))
         top = (
             hits.sort_values(
                 ["query_id", "score", "docid"], ascending=[True, False, True]
@@ -1303,7 +1405,10 @@ class Searcher:
         the building block for field-sort / rescoring / function scoring."""
         query = self._prepared(query)
         body = partial(_all_body, query=query)
-        return self._slices([query], body, SEARCH_HIT_SCHEMA)
+        hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
+        if isinstance(hits, DataFrame):
+            return hits
+        return self._local_rows(SEARCH_HIT_SCHEMA, hits)
 
     def search_sorted_by(
         self,
@@ -1619,11 +1724,14 @@ class Searcher:
 
     def count(self, query) -> int:
         """Total hit count (TotalHitCountCollector analog) — per-segment
-        docid-set sizes summed, no scoring, no top-k."""
+        docid-set sizes summed, no scoring, no top-k. ``count("*")`` reads
+        only metadata (``IndexReader.live_doc_count``)."""
         query = self._prepared(query)
+        if isinstance(query, MatchAllDocsQuery):
+            return self.reader.live_doc_count()
         body = partial(_count_body, query=query)
-        rows = self._slices([query], body, "n long", scored=False).collect()
-        return sum(int(r["n"]) for r in rows)
+        rows = self._slices([query], body, "n long", scored=False)
+        return int(_to_pandas(rows)["n"].sum())
 
     def explain(self, query, docid: int) -> dict:
         """IndexSearcher.explain analog (search/IndexSearcher.java explain →
@@ -1701,15 +1809,19 @@ class Searcher:
             return n, "EQUAL_TO"
         return total_hits_threshold, "GREATER_THAN_OR_EQUAL_TO"
 
-    def _maybe_url(self, hits: DataFrame, with_url: bool) -> DataFrame:
-        if not with_url:
-            return hits
-        # hits is ≤ k rows: broadcast it against the docmap scan
-        dm = self._docmap_global().select("docid", "url")
-        return (
-            dm.join(F.broadcast(hits), "docid")
-            .select("docid", "url", "score")
-            .orderBy(F.desc("score"), F.asc("docid"))
+    def _with_urls(self, top: pd.DataFrame) -> pd.DataFrame:
+        """(docid, url, score) of the ≤ k hits ``top``, in its order: the
+        urls are read with pyarrow from the docmap partitions of the hits'
+        segments, so no Spark job runs."""
+        docid = top["docid"].to_numpy(dtype=np.int64)
+        url = np.empty(len(top), dtype=object)
+        for seg, (base, lo, hi) in self._seg_meta().items():
+            mine = np.flatnonzero((docid >= base + lo) & (docid < base + hi))
+            if mine.size:
+                got = self.reader.doc_urls(seg, docid[mine] - base)
+                url[mine] = [got[d] for d in docid[mine] - base]
+        return pd.DataFrame(
+            {"docid": docid, "url": url, "score": top["score"].to_numpy()}
         )
 
     def _local_rows(self, schema, pdf: pd.DataFrame | None = None) -> DataFrame:
@@ -1718,7 +1830,7 @@ class Searcher:
         relation, so collecting it runs no Spark job and starts no Python
         worker."""
         st = DataType.fromDDL(schema) if isinstance(schema, str) else schema
-        arrow = to_arrow_schema(st)
+        arrow = _arrow_schema(st)
         table = (
             arrow.empty_table() if pdf is None
             else pa.Table.from_pandas(pdf, schema=arrow, preserve_index=False)

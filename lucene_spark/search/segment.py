@@ -45,6 +45,8 @@ strategies (CheckHits-style invariant, tested).
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 
 from ..codecs.blocks import (
@@ -337,7 +339,9 @@ class _FilterLRU:
     Spark-native placement: python workers are reused across tasks AND
     jobs (spark.python.worker.reuse default), so a module-level instance
     caches across queries/batches on the same executor — the same
-    lifetime an IndexSearcher-attached LRUQueryCache has per JVM. Keys
+    lifetime an IndexSearcher-attached LRUQueryCache has per JVM. Plans
+    small enough to run in the driver process use the driver's instance,
+    from any caller thread, hence the lock. Keys
     carry the index generation tag, so an append/merge (new manifest)
     naturally invalidates without coordination. Deletes stay OUTSIDE the
     cached value (live-docs masking happens after matching), matching
@@ -348,6 +352,9 @@ class _FilterLRU:
 
         self.max_entries = max_entries
         self.max_bytes = max_bytes
+        # plans that run in the driver process may run on several caller
+        # threads at once
+        self.lock = threading.Lock()
         self.data: "OrderedDict[tuple, np.ndarray]" = OrderedDict()
         self.seen: "OrderedDict[tuple, int]" = OrderedDict()
         self.bytes = 0
@@ -355,41 +362,45 @@ class _FilterLRU:
         self.misses = 0
 
     def get(self, key):
-        v = self.data.get(key)
-        if v is not None:
-            self.data.move_to_end(key)
-            self.hits += 1
-        else:
-            self.misses += 1
-        return v
+        with self.lock:
+            v = self.data.get(key)
+            if v is not None:
+                self.data.move_to_end(key)
+                self.hits += 1
+            else:
+                self.misses += 1
+            return v
 
     def admit(self, key) -> bool:
         """Record a sighting; True once the filter is worth caching."""
-        n = self.seen.get(key, 0) + 1
-        self.seen[key] = n
-        self.seen.move_to_end(key)
-        while len(self.seen) > 4 * self.max_entries:
-            self.seen.popitem(last=False)
-        return n >= 2
+        with self.lock:
+            n = self.seen.get(key, 0) + 1
+            self.seen[key] = n
+            self.seen.move_to_end(key)
+            while len(self.seen) > 4 * self.max_entries:
+                self.seen.popitem(last=False)
+            return n >= 2
 
     def put(self, key, arr: np.ndarray) -> None:
-        if key in self.data:
-            return
         if arr.base is not None:  # never pin a decode buffer via a view
             arr = arr.copy()
         arr.flags.writeable = False  # shared across callers
-        self.data[key] = arr
-        self.bytes += arr.nbytes
-        while self.data and (
-            len(self.data) > self.max_entries or self.bytes > self.max_bytes
-        ):
-            _, old = self.data.popitem(last=False)
-            self.bytes -= old.nbytes
+        with self.lock:
+            if key in self.data:
+                return
+            self.data[key] = arr
+            self.bytes += arr.nbytes
+            while self.data and (
+                len(self.data) > self.max_entries or self.bytes > self.max_bytes
+            ):
+                _, old = self.data.popitem(last=False)
+                self.bytes -= old.nbytes
 
     def clear(self):
-        self.data.clear()
-        self.seen.clear()
-        self.bytes = self.hits = self.misses = 0
+        with self.lock:
+            self.data.clear()
+            self.seen.clear()
+            self.bytes = self.hits = self.misses = 0
 
 
 FILTER_CACHE = _FilterLRU()
@@ -2940,6 +2951,8 @@ def search_segment(
     """Top-k (docids, scores) for this segment, tie-break score DESC then
     docid ASC (HitQueue.java:76-82). ``after=(score, docid)`` restricts to
     hits ranking strictly below the anchor (searchAfter pagination)."""
+    if k <= 0:
+        return _EMPTY, np.zeros(0, dtype=np.float64)
     s = _SegmentSearcher(ctx, k)
     if isinstance(query, TermQuery):
         return s.blockmax_topk([query], 0.0, k, after=after)

@@ -99,12 +99,15 @@ def test_stale_blooms_degrade_to_no_pruning(spark, idx, tmp_path_factory):
     assert cand2 is not None and len(cand2) < len(live)
 
 
-def test_pruned_segments_get_no_task(spark, idx):
-    """The search job of a rare term runs one task per (segment, slice) of
-    its Bloom-candidate segments, fewer than all segments, and still finds
-    the term's one doc."""
+def test_pruned_segments_get_no_task(spark, idx, monkeypatch):
+    """The plan of a rare term has one task per (segment, slice) of its
+    Bloom-candidate segments, fewer than all segments. It is small, so it
+    runs in the driver process with no Spark job; forced onto Spark, it
+    runs those tasks as one stage, and it finds the term's one doc either
+    way."""
     from perfbench.tracing import JobCounter
 
+    import lucene_spark.search.searcher as searcher_mod
     from lucene_spark.search.searcher import plan_slices
 
     s = Searcher(spark, idx, stopwords=STOP)
@@ -116,10 +119,12 @@ def test_pruned_segments_get_no_task(spark, idx):
     meta = s._seg_meta()
     n_tasks = len(plan_slices({seg: meta[seg] for seg in cand}, s._slice_span()))
     assert 1 <= len(cand) < NSEG and n_tasks >= len(cand)
-    # with_url joins the docmap: the counted call runs without it
-    first = s.search("uniqmarkerterm", k=5, with_url=True).collect()
-    assert [r["url"] for r in first] == ["https://marker.example/1"]
     jobs = JobCounter(spark.sparkContext)
+    with jobs.call("bloom-pruned-search-url") as gid:
+        first = s.search("uniqmarkerterm", k=5, with_url=True).collect()
+    assert jobs.counts(gid) == (0, 0, 0)
+    assert [r["url"] for r in first] == ["https://marker.example/1"]
+    monkeypatch.setattr(searcher_mod, "WAVE_MS", 0.0)
     with jobs.call("bloom-pruned-search") as gid:
         hits = s.search("uniqmarkerterm", k=5).collect()
     assert jobs.counts(gid) == (1, 1, n_tasks)
@@ -131,39 +136,59 @@ def test_pruned_segments_get_no_task(spark, idx):
     assert s.count("* -uniqmarkerterm") == 400
 
 
-def test_spark_work_budget(spark, idx):
+def test_spark_work_budget(spark, idx, monkeypatch):
     """Planning reads on the driver: opening a Searcher launches no Spark
-    job, and each term call on never-seen terms launches exactly its one
-    map-only search job. A match-all runs in the same job: its tasks read
-    their docs from the docmap partitions."""
+    job. A plan on this 401-doc index costs less than one Spark wave, so
+    every call runs in the driver process and launches none, url lookups
+    and a match-all included. Forced onto Spark, each call is one job of
+    one map-only stage of at most one task per (segment, slice), and
+    ``with_url`` adds no job: the urls of the top k are read with pyarrow.
+    ``count("*")`` reads only metadata either way."""
     from perfbench.tracing import JobCounter
+
+    import lucene_spark.search.searcher as searcher_mod
+    from lucene_spark.search.searcher import plan_slices
 
     jobs = JobCounter(spark.sparkContext)
     with jobs.call("open") as gid:
         s = Searcher(spark, idx, stopwords=STOP)
     assert jobs.counts(gid)[0] == 0
-    with jobs.call("search") as gid:
-        hits = s.search("w0002 OR w0003", k=5).collect()
-    assert len(hits) == 5
-    assert jobs.counts(gid)[:2] == (1, 1)
-    with jobs.call("count") as gid:
-        n = s.count("w0004 AND w0005")
-    assert n > 0
-    assert jobs.counts(gid)[0] == 1
-    with jobs.call("search_many") as gid:
-        got = s.search_many({"a": "w0006", "b": "w0007 w0008"}, k=3).collect()
-    assert sorted(r["query_id"] for r in got) == ["a"] * 3 + ["b"] * 3
-    assert jobs.counts(gid)[0] == 1
-    with jobs.call("search *") as gid:
-        hits = s.search("*", k=5).collect()
-    assert [r["docid"] for r in hits] == [0, 1, 2, 3, 4]
-    assert jobs.counts(gid)[:2] == (1, 1)
-    with jobs.call("count *") as gid:
-        n = s.count("*")
-    assert n == 401
-    assert jobs.counts(gid)[:2] == (1, 1)
-    with jobs.call("search_many *") as gid:
-        got = s.search_many({"a": "*", "b": "w0009"}, k=3).collect()
-    assert [r["docid"] for r in got if r["query_id"] == "a"] == [0, 1, 2]
-    assert len(got) == 6
-    assert jobs.counts(gid)[:2] == (1, 1)
+    n_tasks = len(plan_slices(s._seg_meta(), s._slice_span()))
+
+    def calls(expect):
+        with jobs.call("search") as gid:
+            hits = s.search("w0002 OR w0003", k=5).collect()
+        assert len(hits) == 5
+        assert expect(jobs.counts(gid))
+        with jobs.call("search url") as gid:
+            urls = s.search("w0002 OR w0003", k=5, with_url=True).collect()
+        assert [(r["docid"], r["score"]) for r in urls] == [
+            (r["docid"], r["score"]) for r in hits
+        ]
+        assert all(r["url"].startswith("https://") for r in urls)
+        assert expect(jobs.counts(gid))
+        with jobs.call("count") as gid:
+            n = s.count("w0004 AND w0005")
+        assert n > 0
+        assert expect(jobs.counts(gid))
+        with jobs.call("search_many") as gid:
+            got = s.search_many({"a": "w0006", "b": "w0007 w0008"}, k=3).collect()
+        assert sorted(r["query_id"] for r in got) == ["a"] * 3 + ["b"] * 3
+        assert expect(jobs.counts(gid))
+        with jobs.call("search *") as gid:
+            hits = s.search("*", k=5).collect()
+        assert [r["docid"] for r in hits] == [0, 1, 2, 3, 4]
+        assert expect(jobs.counts(gid))
+        with jobs.call("count *") as gid:
+            n = s.count("*")
+        assert n == 401
+        assert jobs.counts(gid) == (0, 0, 0)
+        with jobs.call("search_many *") as gid:
+            got = s.search_many({"a": "*", "b": "w0009"}, k=3).collect()
+        assert [r["docid"] for r in got if r["query_id"] == "a"] == [0, 1, 2]
+        assert len(got) == 6
+        assert expect(jobs.counts(gid))
+
+    calls(lambda counts: counts == (0, 0, 0))
+    monkeypatch.setattr(searcher_mod, "WAVE_MS", 0.0)
+    calls(lambda counts: counts[:2] == (1, 1) and 1 <= counts[2] <= n_tasks)

@@ -59,3 +59,34 @@ def test_delete_by_query(spark, idx):
     assert s2.count(s2.parse("w0000 OR w0009")) < n_before_all
     # idempotent replay: already-dead docs don't re-tombstone
     assert add_deletes_by_query(spark, idx, q, stopwords=STOP) == 0
+
+
+def test_delete_by_query_evaluates_once(spark, idx, monkeypatch):
+    """The query runs once, inside the tombstone write. Forced onto Spark,
+    a delete of many docs is one job whose one stage runs the plan's
+    tasks, and no hit reaches the driver; run on the driver, the write job
+    is the only job. The returned count is the drop in live docs."""
+    from perfbench.tracing import JobCounter
+
+    import lucene_spark.search.searcher as searcher_mod
+    from lucene_spark.search.searcher import plan_slices
+
+    jobs = JobCounter(spark.sparkContext)
+    for q, wave_ms in (("w0002", 0.0), ("w0000", float("inf"))):
+        monkeypatch.setattr(searcher_mod, "WAVE_MS", wave_ms)
+        s = Searcher(spark, idx, stopwords=STOP)
+        victims = s.count(q)
+        assert victims
+        live = s.count("*")
+        n_tasks = len(plan_slices(s._seg_meta(), s._slice_span()))
+        with jobs.call(f"delete {q}") as gid:
+            n = add_deletes_by_query(spark, idx, q, stopwords=STOP)
+        assert n == victims
+        if wave_ms == 0.0:
+            assert victims >= 40  # a quarter of the live docs
+            assert jobs.counts(gid) == (1, 1, n_tasks)
+        else:
+            assert jobs.counts(gid)[:2] == (1, 1)
+        s2 = Searcher(spark, idx, stopwords=STOP)
+        assert s2.count(q) == 0
+        assert s2.count("*") == live - n

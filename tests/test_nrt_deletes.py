@@ -290,7 +290,7 @@ def test_compact_deletes_physical_reclaim(spark, corpus, compacted):
 
     s_c = Searcher(spark, d, stopwords=STOP)
     s_f = Searcher(spark, fresh, stopwords=STOP)
-    assert s_c.count("*") == len(live)
+    assert s_c.count("*") == len(live) == s_c.search_all("*").count()
     for qs in [
         "w0000", "w0000 OR w0001", "w0000 AND w0001", '"w0000 w0001"',
         "* -w0000", "* w0000",

@@ -126,6 +126,12 @@ def build(spark, n_docs: int, seed: int, root: str) -> str:
     return f"{root}/idx1"
 
 
+def make_scorers(searcher, asts: list) -> dict:
+    """The scorers the engine builds for ``asts`` from their term stats."""
+    terms = sorted(set().union(*(collect_terms(a) for a in asts)))
+    return searcher._make_scorers(asts, searcher._term_stats(terms))
+
+
 def exhaustive(ctx: SegmentContext, ast, k: int):
     d, s = _SegmentSearcher(ctx, k).evaluate(ast)
     keep = (d >= ctx.min_doc) & (d < ctx.max_doc)
@@ -291,10 +297,10 @@ def main() -> int:
 
             queries = batch_queries(args.seed, 0, args.batch)
             asts = {qid: searcher._prepared(q) for qid, q in queries.items()}
-            scorers = searcher._make_scorers(list(asts.values()))
+            scorers = make_scorers(searcher, list(asts.values()))
         else:
             asts = {qid: searcher._prepared(q) for qid, q in shapes().items()}
-            scorers = {qid: searcher._make_scorers([a]) for qid, a in asts.items()}
+            scorers = {qid: make_scorers(searcher, [a]) for qid, a in asts.items()}
         spark.stop()
         spark = None
         report = batch_report if args.batch else shape_report
