@@ -6,20 +6,21 @@ lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:1140-1150) —
 IDF/avgdl are collection-wide, so any per-segment shortcut would break rank
 identity with the reference.
 
-Everything the driver reads to plan a term query is *planning-sized* and is
+Everything the driver reads to plan a query is *planning-sized* and is
 read with pyarrow, with no Spark job: the segment manifest and field_stats
 (one row per segment, from the commit point's directory, so a snapshot
-reader sees its snapshot) and the per-query term statistics (a
-``term IN (...)`` scan of the manifest's ``kind=1`` partitions, where the
-sorted term column lets row-group min/max statistics skip most of each
-file). Each search task reads its own postings (``read_slice``), and the
-stored docids of its docmap partition when its query matches docs without
+reader sees its snapshot) and every query-time read of the term dictionary
+(``term_stats``, ``expand_terms_df``, ``fuzzy_terms``): filters over the
+manifest's ``kind=1`` partitions, summed per term by ``_term_sums`` — the
+in-process terms-dictionary walk of Lucene's MultiTermQuery rewrite.
+Each search task reads its own postings (``read_slice``), and the stored
+docids of its docmap partition when its query matches docs without
 postings, in a Spark task or, for a plan the driver finishes sooner than
 one Spark wave, in the driver process. The urls of a top k
 (``doc_urls``) and the live doc count (``live_doc_count``) are read on the
-driver too. The DataFrame views (``term_dict``, ``postings``, ``docmap``, ``field_stats``,
-``deletes``) serve Spark-side work such as merges, compaction and
-multi-term expansion.
+driver too. The DataFrame views (``term_dict``, ``postings``, ``docmap``,
+``field_stats``, ``deletes``) serve Spark-side work such as merges,
+compaction, Bloom building and index checks.
 """
 
 from __future__ import annotations
@@ -30,10 +31,12 @@ from functools import cached_property
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .builder import FIELD_SEP
 from .pseudo import singleton_pseudo_rows
 from .schemas import DOCMAP_COLS, KIND_BLOCK, KIND_DOC, KIND_TERM, POSTINGS_COLS, TERM_DICT_COLS
 from .smallio import read_driver_table
@@ -55,6 +58,27 @@ def _read_parquet(path: str, columns: list[str], where) -> pd.DataFrame:
         if c not in have:
             out[c] = None
     return out[columns]
+
+
+def _prefix(prefix: str) -> ds.Expression:
+    """``term`` starts with ``prefix``, as comparisons that row-group
+    min/max statistics prune on (UTF-8 byte order is code point order)."""
+    term = ds.field("term")
+    nxt = ord(prefix[-1]) + 1
+    nxt += 0x800 if nxt == 0xD800 else 0  # no string holds a surrogate
+    upper = term < prefix[:-1] + chr(nxt) if nxt <= 0x10FFFF else pc.starts_with(term, prefix)
+    return (term >= prefix) & upper
+
+
+def _namespace(ns: str) -> ds.Expression:
+    """The keys of namespace ``ns``: a field's ``"<field>\\x1f"`` without
+    the field's existence key (``exists_term``), or, for ``""``, the keys of
+    a classic single-field index, i.e. none holding FIELD_SEP (field and
+    feature keys)."""
+    term = ds.field("term")
+    if ns:
+        return (term > ns) & (term < ns[:-1] + chr(ord(FIELD_SEP) + 1))
+    return ~pc.match_substring(term, FIELD_SEP)
 
 
 def read_slice(
@@ -346,23 +370,37 @@ class IndexReader:
         parts = [ds.dataset(d, format="parquet") for d in dirs if os.path.isdir(d)]
         return ds.dataset(parts) if parts else None
 
+    def _term_sums(
+        self, where: ds.Expression, ns: str | None = None, cols: tuple[str, ...] = ("df",)
+    ) -> pa.Table:
+        """(term, *cols) of the live segments' term-dictionary rows passing
+        ``where``, summed per term: the one query-time read of the term
+        dictionary. ``ns`` (see ``_namespace``) confines an expansion to
+        one field's keys; None reads keys as given."""
+        if ns is not None:
+            where = _namespace(ns) & where
+        if self._term_dicts is None:
+            return pa.table({"term": pa.array([], pa.string()),
+                             **{c: pa.array([], pa.int64()) for c in cols}})
+        sums = (
+            self._term_dicts.to_table(columns=["term", *cols], filter=where)
+            .group_by("term")
+            .aggregate([(c, "sum") for c in cols])
+        )
+        return sums.select(["term", *[f"{c}_sum" for c in cols]]).rename_columns(
+            ["term", *cols]
+        )
+
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """Global (docFreq, totalTermFreq) per term (TermStatistics analog),
         summed over the live segments; a term no live segment holds is
         absent from the result."""
-        if not terms or self._term_dicts is None:
+        if not terms:
             return {}
-        sums = (
-            self._term_dicts.to_table(
-                columns=["term", "df", "ttf"], filter=ds.field("term").isin(terms)
-            )
-            .group_by("term")
-            .aggregate([("df", "sum"), ("ttf", "sum")])
-            .to_pydict()
-        )
+        sums = self._term_sums(ds.field("term").isin(terms), cols=("df", "ttf"))
         return {
             t: (int(df), int(ttf))
-            for t, df, ttf in zip(sums["term"], sums["df_sum"], sums["ttf_sum"])
+            for t, df, ttf in zip(*(sums[c].to_pylist() for c in ("term", "df", "ttf")))
         }
 
     def expand_terms(
@@ -373,7 +411,6 @@ class IndexReader:
         high: str | None = None,
         include_low: bool = True,
         include_high: bool = True,
-        length_band: tuple[int, int] | None = None,
         max_terms: int = 128,
     ) -> list[str]:
         """MultiTermQuery expansion (PrefixQuery/RegexpQuery/TermRangeQuery →
@@ -383,7 +420,7 @@ class IndexReader:
         return [t for t, _df in self.expand_terms_df(
             prefix=prefix, pattern=pattern, low=low, high=high,
             include_low=include_low, include_high=include_high,
-            length_band=length_band, max_terms=max_terms,
+            max_terms=max_terms,
         )]
 
     def expand_terms_df(
@@ -394,33 +431,63 @@ class IndexReader:
         high: str | None = None,
         include_low: bool = True,
         include_high: bool = True,
-        length_band: tuple[int, int] | None = None,
         max_terms: int = 128,
     ) -> list[tuple[str, int]]:
         """expand_terms returning (term, global df) pairs — FuzzyQuery's
         blended-frequency rewrite needs the dfs of the whole expanded set.
-        prefix/low/high push into the parquet scan (row-group min/max on the
-        sorted term column); pattern/length filter after the scan."""
-        td = self.term_dict
-        if prefix is not None and prefix:
-            td = td.filter(F.col("term").startswith(prefix))
-        if pattern is not None:
-            td = td.filter(F.col("term").rlike(pattern))
+        Terms stay in the namespace of ``prefix``, else of ``low`` or
+        ``high``, so an open-ended range stays inside its field.
+        ``pattern`` is an anchored RE2 regex; one RE2 rejects raises
+        ValueError."""
+        term = ds.field("term")
+        where = pc.scalar(True)
+        if prefix:
+            where &= _prefix(prefix)
         if low is not None:
-            td = td.filter(
-                F.col("term") >= low if include_low else F.col("term") > low
-            )
+            where &= term >= low if include_low else term > low
         if high is not None:
-            td = td.filter(
-                F.col("term") <= high if include_high else F.col("term") < high
-            )
-        if length_band is not None:
-            td = td.filter(F.length("term").between(*length_band))
-        rows = (
-            td.groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_terms)
-            .collect()
+            where &= term <= high if include_high else term < high
+        if pattern is not None:
+            try:  # compile once up front, so a bad pattern names itself
+                pc.match_substring_regex(pa.array([""]), pattern)
+            except pa.ArrowInvalid as e:
+                raise ValueError(f"invalid term pattern {pattern!r}: {e}") from None
+            where &= pc.match_substring_regex(term, pattern)
+        key = prefix or low or high or ""
+        sums = self._term_sums(where, key[: key.find(FIELD_SEP) + 1])
+        top = sums.sort_by([("df", "descending"), ("term", "ascending")]).slice(0, max_terms)
+        return list(zip(top["term"].to_pylist(), top["df"].to_pylist()))
+
+    def fuzzy_terms(
+        self,
+        target: str,
+        max_edits: int,
+        prefix_len: int,
+        ns: str = "",
+        transpositions: bool = True,
+    ) -> list[tuple[str, int, int]]:
+        """(term, edits, global df), in term order, of every key of
+        namespace ``ns`` whose token is within ``max_edits`` OSA edits of
+        ``target`` (plain Levenshtein without ``transpositions``) and
+        shares its first ``prefix_len`` characters: the FuzzyTermsEnum
+        analog. The shared prefix and the length band, both automaton
+        invariants, filter the read; ``osa_many`` verifies what is left."""
+        from ..search.fuzzy import osa_many
+
+        length = pc.utf8_length(ds.field("term"))
+        where = (length >= len(ns) + max(0, len(target) - max_edits)) & (
+            length <= len(ns) + len(target) + max_edits
         )
-        return [(r["term"], int(r["df"])) for r in rows]
+        head = ns + target[: min(prefix_len, len(target))]
+        if head:
+            where &= _prefix(head)
+        sums = self._term_sums(where, ns).sort_by("term")
+        words = pc.utf8_slice_codeunits(sums["term"], len(ns))
+        edits = osa_many(target, words.to_numpy(zero_copy_only=False), max_edits,
+                         transpositions)
+        hit = np.flatnonzero(edits <= max_edits)
+        return list(zip(
+            sums["term"].take(hit).to_pylist(),
+            edits[hit].tolist(),
+            sums["df"].take(hit).to_pylist(),
+        ))

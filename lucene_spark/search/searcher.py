@@ -66,14 +66,17 @@ segment's docmap partition (Lucene's MatchAllDocsQuery iterates every doc
 of a leaf; deletes are masked where hits are collected). A plan with no
 term and no match-all plans no task.
 
-Multi-term queries expand on the driver against term_dict (the rewrite
-layer of ScoringRewrite.java / TopTermsRewrite.java):
-- PrefixQuery → SHOULD-of-terms (prefix pushed down as startswith);
+Multi-term queries expand on the driver with no Spark job, through the
+reader's pyarrow read of the live segments' term dictionaries (the rewrite
+layer of ScoringRewrite.java / TopTermsRewrite.java), each inside its
+field's namespace:
+- PrefixQuery → SHOULD-of-terms (the prefix read as a term range);
 - WildcardQuery → regex translation (WildcardQuery.java:38 toAutomaton:
-  ``*``→any run, ``?``→any char), literal prefix extracted for pushdown;
-- RegexpQuery → anchored rlike on term_dict;
-- TermRangeQuery → range pushdown with bound inclusivity;
-- FuzzyQuery → prefix+length-band pushdown, OSA edit-distance verify, then
+  ``*``→any run, ``?``→any char), literal prefix extracted as a range;
+- RegexpQuery → anchored RE2 match over the term column;
+- TermRangeQuery → term comparisons with bound inclusivity;
+- FuzzyQuery → prefix range + length band, vectorized OSA edit-distance
+  verify (``IndexReader.fuzzy_terms``), then
   TopTermsBlendedFreqScoringRewrite: per-term boost = similarity, every
   expanded term scores with the blended docFreq = max over the set
   (BlendedTermQuery.adjustFrequencies).
@@ -383,7 +386,6 @@ class Searcher:
         # they run on the driver or on Spark is sized by their work
         # (``_slices``).
         self.slice_docs = slice_docs
-        self._expand_cache: dict[object, object] = {}
         from ..index.builder import get_analyzer
 
         self._analyzer = partial(get_analyzer(analyzer), stopwords=stopwords)
@@ -859,14 +861,7 @@ class Searcher:
                 PhraseWildcardQuery,
             ),
         ):
-            # memoize per (node, cap): expansion is a term_dict collect (a
-            # Spark job) and the index is immutable for this reader's life
-            key = (q, max_terms)
-            got = self._expand_cache.get(key)
-            if got is None:
-                got = self._expand_leaf(q, max_terms)
-                self._expand_cache[key] = got
-            return got
+            return self._expand_leaf(q, max_terms)
         if isinstance(q, BooleanQuery):
             return BooleanQuery(
                 must=tuple(self.expand_multiterm(c, max_terms) for c in q.must),
@@ -1052,6 +1047,7 @@ class Searcher:
                 rx = "^" + rx
             if not rx.endswith("$"):
                 rx = rx + "$"
+            pfx = None
             if self.fields:
                 # regex applies to the token; anchor it inside the default
                 # field's namespace
@@ -1059,12 +1055,15 @@ class Searcher:
 
                 pfx = field_term(self.default_field, "")
                 rx = "^" + _re.escape(pfx) + rx[1:]
-            terms = self.reader.expand_terms(pattern=rx, max_terms=max_terms)
+            terms = self.reader.expand_terms(prefix=pfx, pattern=rx, max_terms=max_terms)
             if not terms:
                 return MatchNoDocsQuery()
             return BooleanQuery(should=tuple(TermQuery(t, q.boost) for t in terms))
         if isinstance(q, TermRangeQuery):
+            # ``[* TO *]`` carries no key to name its field: the default one
+            open_all = self.fields and q.lower is None and q.upper is None
             terms = self.reader.expand_terms(
+                prefix=field_term(self.default_field, "") if open_all else None,
                 low=q.lower,
                 high=q.upper,
                 include_low=q.include_lower,
@@ -1112,33 +1111,10 @@ class Searcher:
     def _fuzzy_matches(
         self, target: str, max_edits: int, prefix_length: int, ns: str = ""
     ) -> list[tuple[str, int, int]]:
-        """All within-max_edits term-dict entries of ``target`` as
-        (term, edits, df): prefix + length-band pushdown, OSA verification
-        executor-side (the shared FuzzyTermsEnum analog)."""
-        pl = min(prefix_length, len(target))
-        band = (
-            len(ns) + max(0, len(target) - max_edits),
-            len(ns) + len(target) + max_edits,
-        )
-        td = self.reader.term_dict
-        td = td.filter(F.col("term").startswith(ns + target[:pl]))
-        td = td.filter(F.length("term").between(*band))
-        tgt, me, ns_len = target, max_edits, len(ns)
-
-        @F.pandas_udf("int")
-        def osa_udf(terms: pd.Series) -> pd.Series:
-            from lucene_spark.search.fuzzy import osa_distance as _osa
-
-            return terms.map(lambda t: _osa(tgt, t[ns_len:], me))
-
-        rows = (
-            td.groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .withColumn("edits", osa_udf("term"))
-            .filter(F.col("edits") <= me)
-            .collect()
-        )
-        return [(r["term"], int(r["edits"]), int(r["df"])) for r in rows]
+        """All within-max_edits term-dict entries of ``target`` in namespace
+        ``ns`` as (term, edits, df) (the shared FuzzyTermsEnum analog,
+        ``IndexReader.fuzzy_terms``)."""
+        return self.reader.fuzzy_terms(target, max_edits, prefix_length, ns)
 
     def fuzzy_like_this(
         self,
@@ -1201,11 +1177,11 @@ class Searcher:
         )
 
     def _expand_fuzzy(self, q: FuzzyQuery, max_terms: int):
-        """Prefix+length-band pushdown, then OSA verification EXECUTOR-side
-        (a pandas UDF over the filtered term_dict scan), so only true
-        within-max_edits terms are ever collected — no pre-verification
-        candidate cap to silently drop matches on a large vocabulary, the
-        distributed analog of FuzzyQuery's automaton-intersects-term-dict
+        """Prefix range + length band, then a vectorized OSA verification of
+        every candidate on the driver (``_fuzzy_matches``), so only true
+        within-max_edits terms are kept — no pre-verification candidate cap
+        to silently drop matches on a large vocabulary, the analog of
+        FuzzyQuery's automaton-intersects-term-dict
         (search/FuzzyQuery.java:52); ranking + max_terms cap happen after,
         as in TopTermsBlendedFreqScoringRewrite."""
         target = q.term

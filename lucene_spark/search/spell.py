@@ -1,16 +1,14 @@
-"""Spell correction + prefix suggestion over the distributed term dictionary.
+"""Spell correction + prefix suggestion over the index's term dictionary.
 
 DirectSpellChecker analog (suggest/src/java/org/apache/lucene/search/spell/
 DirectSpellChecker.java). Lucene enumerates candidates with a FuzzyTermsEnum
-over the term dictionary and ranks survivors in a priority queue; the
-Spark-first shape is the same as FuzzyQuery expansion (_expand_fuzzy):
-push the cheap automaton invariants (shared prefix + length band) into the
-term_dict parquet scan, verify edit distance EXECUTOR-side with an
-Arrow-batched pandas UDF over the filtered scan, and rank the verified
-survivors. The verified set is one term's neighborhood (planning-sized),
-never postings-sized, so the final top-``num_sug`` collect is tiny; at
-100 TB the scan is the only distributed stage and it prunes on the sorted
-term column's row-group min/max.
+over the term dictionary and ranks survivors in a priority queue; here the
+enumeration is the one FuzzyQuery expansion uses, ``IndexReader.fuzzy_terms``:
+the cheap automaton invariants (shared prefix + length band) filter the
+driver's pyarrow read of the term dictionary, a vectorized OSA verifies
+the survivors, and the verified set (one term's neighborhood) is ranked on
+the driver. Neither checker launches a Spark job; ``suggestions_df`` wraps
+the ranked rows in a DataFrame.
 
 Semantics mirrored from DirectSpellChecker.suggestSimilar
 (DirectSpellChecker.java:321-392 and the candidate loop :410-476):
@@ -38,9 +36,8 @@ Semantics mirrored from DirectSpellChecker.suggestSimilar
 Deliberate deviation: Lucene runs an edits=1 pass first and tops up with a
 maxEdits pass capped at ``num_sug * maxInspections`` candidates — a
 sequential-enumeration optimization whose caps can silently drop matches.
-The distributed scan verifies EVERY banded candidate, which equals the
-uncapped limit of Lucene's two-pass union, so no ``max_inspections`` knob
-exists here.
+The read verifies EVERY banded candidate, which equals the uncapped limit
+of Lucene's two-pass union, so no ``max_inspections`` knob exists here.
 
 docFreq is summed over segment term_dict rows and counts tombstoned docs
 until physical compaction — exactly IndexReader.docFreq's contract
@@ -59,12 +56,15 @@ import math
 import re as _re
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
-
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.builder import FIELD_SEP
+from .fuzzy import osa_many
 
 __all__ = [
     "SuggestWord",
@@ -89,7 +89,7 @@ class SuggestWord:
 
 
 class DirectSpellChecker:
-    """Distributed DirectSpellChecker over a ``Searcher``'s term dict."""
+    """DirectSpellChecker over a ``Searcher``'s term dict."""
 
     def __init__(
         self,
@@ -121,68 +121,27 @@ class DirectSpellChecker:
         self.field = field
 
     # --- internals -------------------------------------------------------
-    def _namespace(self) -> str:
-        if self.field:
-            return self.field + FIELD_SEP
-        s = self.searcher
-        if s.fields:
-            return s.default_field + FIELD_SEP
-        return ""
-
-    def _query_df(self, ns: str, term: str) -> int:
-        stats = self.searcher._term_stats([ns + term])
-        return stats[ns + term][0]
-
-    def _candidates_df(self, term: str, min_df: int) -> DataFrame:
-        """(word, score, freq) of every verified candidate — the distributed
-        half of suggestSimilar, before the driver-side rank/trim."""
-        ns = self._namespace()
-        reader = self.searcher.reader
-        # weak prefix gates every candidate (pushed into the scan); the
-        # strong one re-gates distance>1 candidates after verification
+    def _candidates(self, term: str, min_df: int) -> list[SuggestWord]:
+        """Every verified candidate of ``term`` — suggestSimilar before the
+        rank/trim."""
+        ns = _namespace(self.searcher, self.field)
+        # the weak prefix gates every candidate (in the read); the strong
+        # one re-gates distance>1 candidates after verification
         pl_weak = min(self.min_prefix, len(term))
         pl_strong = min(max(self.min_prefix, self.max_edits - 1), len(term))
-        band = (
-            len(ns) + max(1, len(term) - self.max_edits),
-            len(ns) + len(term) + self.max_edits,
-        )
-        td = reader.term_dict
-        if ns or pl_weak:
-            td = td.filter(F.col("term").startswith(ns + term[:pl_weak]))
-        td = td.filter(F.length("term").between(*band))
-        tgt, me, ns_len, transp = term, self.max_edits, len(ns), self.transpositions
-
-        @F.pandas_udf("int")
-        def dist_udf(terms: pd.Series) -> pd.Series:
-            from lucene_spark.search.fuzzy import osa_distance as _d
-
-            return terms.map(lambda t: _d(tgt, t[ns_len:], me, transp))
-
-        out = (
-            td.groupBy("term")
-            .agg(F.sum("df").alias("freq"))
-            .withColumn("edits", dist_udf("term"))
-            .filter(
-                (F.col("edits") <= me)
-                & (F.col("edits") > 0)  # never suggest the query itself
-                & (F.col("freq") > min_df)
-            )
-            .filter(  # strong-prefix re-gate for distance>1 candidates
-                (F.col("edits") <= 1)
-                | F.col("term").startswith(ns + term[:pl_strong])
-            )
-            .withColumn(
-                "word", F.col("term").substr(F.lit(ns_len + 1), F.length("term"))
-            )
-            .withColumn(
-                "score",
-                1.0
-                - F.col("edits").cast("double")
-                / F.least(F.length("word"), F.lit(len(term))).cast("double"),
-            )
-            .filter(F.col("score") >= self.accuracy)
-            .select("word", "score", "freq")
-        )
+        out = []
+        for key, edits, freq in self.searcher.reader.fuzzy_terms(
+            term, self.max_edits, pl_weak, ns, self.transpositions
+        ):
+            word = key[len(ns):]
+            if edits == 0 or freq <= min_df:  # never suggest the query itself
+                continue
+            if edits > 1 and not word.startswith(term[:pl_strong]):
+                continue
+            shorter = min(len(word), len(term))
+            score = 1.0 - edits / shorter if shorter else -math.inf
+            if score >= self.accuracy:
+                out.append(SuggestWord(word, score, freq))
         return out
 
     # --- public API -------------------------------------------------------
@@ -190,45 +149,55 @@ class DirectSpellChecker:
         self, term: str, num_sug: int = 5, mode: str = "when_not_in_index"
     ) -> DataFrame:
         """Top suggestions as a DataFrame (word, score, freq) in SuggestWord
-        ranking order — the distributed entry point the gate exercises."""
+        ranking order, built from ``suggest_similar``'s local rows."""
+        return _suggestions_frame(self.searcher, self.suggest_similar(term, num_sug, mode))
+
+    def suggest_similar(
+        self, term: str, num_sug: int = 5, mode: str = "when_not_in_index"
+    ) -> list[SuggestWord]:
         if mode not in MODES:
             raise ValueError(f"mode must be one of {MODES}")
         s = self.searcher
-        empty = s.spark.createDataFrame(
-            [], "word string, score double, freq long"
-        )
         if not (self.min_query_length <= len(term) <= self.max_query_length):
-            return empty
-        ns = self._namespace()
-        docfreq = self._query_df(ns, term)
+            return []
+        ns = _namespace(self.searcher, self.field)
+        docfreq = s._term_stats([ns + term])[ns + term][0]
         if mode == "when_not_in_index" and docfreq > 0:
-            return empty
+            return []
         max_doc = int(s.reader.global_stats[0])
         mqf = self.max_query_frequency
         if mqf >= 1.0:
             if docfreq > mqf:
-                return empty
+                return []
         elif docfreq > int(math.ceil(mqf * float(max_doc))):
-            return empty
+            return []
         min_df = docfreq if mode == "more_popular" else 0
         tf = self.threshold_frequency
         if tf >= 1.0:
             min_df = max(min_df, int(tf))
         elif tf > 0.0:
             min_df = max(min_df, int(tf * float(max_doc)) - 1)
-        return (
-            self._candidates_df(term, min_df)
-            .orderBy(F.desc("score"), F.desc("freq"), F.asc("word"))
-            .limit(num_sug)
-        )
+        return _ranked(self._candidates(term, min_df), num_sug)
 
-    def suggest_similar(
-        self, term: str, num_sug: int = 5, mode: str = "when_not_in_index"
-    ) -> list[SuggestWord]:
-        return [
-            SuggestWord(r["word"], float(r["score"]), int(r["freq"]))
-            for r in self.suggestions_df(term, num_sug, mode).collect()
-        ]
+
+def _namespace(searcher, field: str | None) -> str:
+    """The term-key namespace a checker reads: ``field``'s, else the
+    searcher's default field's, else the classic keys' (``""``)."""
+    field = field or (searcher.default_field if searcher.fields else None)
+    return field + FIELD_SEP if field else ""
+
+
+def _ranked(words: list[SuggestWord], n: int) -> list[SuggestWord]:
+    """The first ``n`` by score DESC, freq DESC, word ASC
+    (SuggestWordScoreComparator.java:32-50)."""
+    return sorted(words, key=lambda w: (-w.score, -w.freq, w.word))[:n]
+
+
+def _suggestions_frame(searcher, words: list[SuggestWord]) -> DataFrame:
+    return searcher.spark.createDataFrame(
+        [(w.word, w.score, w.freq) for w in words],
+        "word string, score double, freq long",
+    )
 
 
 def _spell_gram_sizes(l: int) -> tuple[int, int]:
@@ -281,10 +250,10 @@ class NGramSpellChecker:
     - ranking: score DESC, freq DESC, word ASC
       (SuggestWordScoreComparator.java:32-50)
 
-    Scale shape: the gram predicates push into the sorted term_dict
-    parquet scan, the Levenshtein verify is an Arrow-batched pandas UDF
-    over the pruned candidates only, and just ``num_sug`` rows reach the
-    driver."""
+    Shape: the gram predicates filter the driver's pyarrow read of the
+    term dictionary (``IndexReader._term_sums``), and the Levenshtein
+    verify (``osa_many`` without transpositions) runs over the cut
+    candidates only; no Spark job."""
 
     def __init__(
         self,
@@ -301,14 +270,6 @@ class NGramSpellChecker:
         self.b_end = b_end
         self.field = field
 
-    def _namespace(self) -> str:
-        if self.field:
-            return self.field + FIELD_SEP
-        s = self.searcher
-        if s.fields:
-            return s.default_field + FIELD_SEP
-        return ""
-
     def suggestions_df(
         self,
         word: str,
@@ -316,114 +277,69 @@ class NGramSpellChecker:
         mode: str = "always",
         max_hits: int | None = None,
     ) -> DataFrame:
-        """(word, score, freq) suggestions in SuggestWord ranking order."""
+        """(word, score, freq) suggestions in SuggestWord ranking order,
+        built from local rows."""
+        return _suggestions_frame(self.searcher, self._suggest(word, num_sug, mode, max_hits))
+
+    def suggest_similar(
+        self, word: str, num_sug: int = 5, mode: str = "always"
+    ) -> list[SuggestWord]:
+        return self._suggest(word, num_sug, mode, None)
+
+    def _suggest(self, word: str, num_sug: int, mode: str, max_hits: int | None):
         if mode not in MODES:
             raise ValueError(f"mode must be one of {MODES}")
-        ns = self._namespace()
+        ns = _namespace(self.searcher, self.field)
         s = self.searcher
         docfreq = s._term_stats([ns + word])[ns + word][0]
         if mode == "when_not_in_index" and docfreq > 0:
             # the reference returns the word itself (:332-334)
-            return s.spark.createDataFrame(
-                [(word, 1.0, int(docfreq))],
-                "word string, score double, freq long",
-            )
+            return [SuggestWord(word, 1.0, int(docfreq))]
         lo, hi = _spell_gram_sizes(len(word))
-        clauses: list[tuple[str, str, float]] = []  # (kind, gram, boost)
+        clauses: list[tuple[object, str, float]] = []  # (predicate, gram, boost)
         for ng in range(lo, hi + 1):
             grams = _spell_form_grams(word, ng)
             if not grams:
                 continue
             if self.b_start > 0:
-                clauses.append(("start", grams[0], self.b_start))
+                clauses.append((pc.starts_with, grams[0], self.b_start))
             if self.b_end > 0:
-                clauses.append(("end", grams[-1], self.b_end))
-            clauses.extend(("gram", g, 1.0) for g in grams)
-        td = self.searcher.reader.term_dict
-        if ns:
-            td = td.filter(F.col("term").startswith(ns))
-        w = F.col("term").substr(F.lit(len(ns) + 1), F.length("term"))
-        preds = []
-        cut = F.lit(0.0)
-        for kind, g, boost in clauses:
-            if kind == "start":
-                p = w.startswith(g)
-            elif kind == "end":
-                p = w.endswith(g)
-            else:
-                p = w.contains(g)
-            preds.append(p)
-            cut = cut + F.when(p, F.lit(boost)).otherwise(F.lit(0.0))
-        match_any = preds[0]
-        for p in preds[1:]:
-            match_any = match_any | p
-        cand = (
-            td.groupBy("term")
-            .agg(F.sum("df").alias("freq"))
-            .withColumn("word", w)
-            .filter(match_any & (F.col("word") != word))
-        )
+                clauses.append((pc.ends_with, grams[-1], self.b_end))
+            clauses.extend((pc.match_substring, g, 1.0) for g in grams)
+        w = pc.utf8_slice_codeunits(ds.field("term"), len(ns))
+        match_any = pc.scalar(False)
+        for pred, g, _b in clauses:
+            match_any |= pred(w, g)
+        cand = s.reader._term_sums(match_any & (w != word), ns)
+        words = pc.utf8_slice_codeunits(cand["term"], len(ns))
+        freqs = cand["df"].to_numpy()
         if max_hits is not None:
-            cand = (
-                cand.withColumn("cut", cut)
-                .orderBy(F.desc("cut"), F.asc("word"))
-                .limit(int(max_hits))
+            cut = sum(
+                pc.if_else(pred(words, g), b, 0.0).to_numpy() for pred, g, b in clauses
             )
-        tgt = word
-
-        @F.pandas_udf("int")
-        def lev_udf(words: pd.Series) -> pd.Series:
-            def lev(a: str, b: str) -> int:
-                prev = list(range(len(b) + 1))
-                for i, ca in enumerate(a, 1):
-                    cur = [i]
-                    for j, cb in enumerate(b, 1):
-                        cur.append(
-                            min(
-                                prev[j] + 1,
-                                cur[j - 1] + 1,
-                                prev[j - 1] + (ca != cb),
-                            )
-                        )
-                    prev = cur
-                return prev[-1]
-
-            return words.map(lambda t: lev(tgt, t))
-
-        out = (
-            cand.withColumn(
-                "score",
-                1.0
-                - lev_udf("word").cast("double")
-                / F.greatest(F.length("word"), F.lit(len(word))).cast(
-                    "double"
-                ),
-            )
-            .filter(F.col("score") >= self.accuracy)
-            .select("word", "score", "freq")
-        )
-        if mode == "more_popular":
-            out = out.filter(F.col("freq") > docfreq)
-        return out.orderBy(
-            F.desc("score"), F.desc("freq"), F.asc("word")
-        ).limit(num_sug)
-
-    def suggest_similar(
-        self, word: str, num_sug: int = 5, mode: str = "always"
-    ) -> list[SuggestWord]:
-        return [
-            SuggestWord(r["word"], float(r["score"]), int(r["freq"]))
-            for r in self.suggestions_df(word, num_sug, mode).collect()
+            order = np.lexsort((words.to_numpy(zero_copy_only=False), -cut))
+            keep = order[: int(max_hits)]
+            words, freqs = words.take(keep), freqs[keep]
+        words = words.to_numpy(zero_copy_only=False)
+        lens = np.fromiter(map(len, words), np.int64, len(words))
+        # plain Levenshtein (spell/LevenshteinDistance.java), never capped:
+        # no distance exceeds the longer string
+        bound = max(len(word), int(lens.max(initial=0)))
+        dist = osa_many(word, words, bound, transpositions=False)
+        score = 1.0 - dist / np.maximum(lens, len(word))
+        out = [
+            SuggestWord(w_, float(sc), int(fr))
+            for w_, sc, fr in zip(words, score, freqs)
+            if sc >= self.accuracy and (mode != "more_popular" or fr > docfreq)
         ]
+        return _ranked(out, num_sug)
 
 
 def prefix_suggest(searcher, prefix: str, k: int = 10) -> list[tuple[str, int]]:
     """Autocomplete lookup: top-k index terms under ``prefix`` ranked by
     docFreq weight (Lookup.java ordering: weight DESC, key ASC via
     LuceneDictionary's docFreq weights)."""
-    ns = ""
-    if searcher.fields:
-        ns = searcher.default_field + FIELD_SEP
+    ns = _namespace(searcher, None)
     pairs = searcher.reader.expand_terms_df(prefix=ns + prefix, max_terms=k)
     return [(t[len(ns):], df) for t, df in pairs]
 

@@ -143,11 +143,19 @@ def test_spark_work_budget(spark, idx, monkeypatch):
     and a match-all included. Forced onto Spark, each call is one job of
     one map-only stage of at most one task per (segment, slice), and
     ``with_url`` adds no job: the urls of the top k are read with pyarrow.
-    ``count("*")`` reads only metadata either way."""
+    ``count("*")`` reads only metadata either way. Multi-term expansion
+    and spell suggestions read the term dictionary with pyarrow, so they
+    add no job, and a Searcher keeps no per-query state."""
     from perfbench.tracing import JobCounter
 
     import lucene_spark.search.searcher as searcher_mod
+    from lucene_spark.search.complexphrase import complex_phrase_query
     from lucene_spark.search.searcher import plan_slices
+    from lucene_spark.search.spell import (
+        DirectSpellChecker,
+        NGramSpellChecker,
+        prefix_suggest,
+    )
 
     jobs = JobCounter(spark.sparkContext)
     with jobs.call("open") as gid:
@@ -188,7 +196,33 @@ def test_spark_work_budget(spark, idx, monkeypatch):
         assert [r["docid"] for r in got if r["query_id"] == "a"] == [0, 1, 2]
         assert len(got) == 6
         assert expect(jobs.counts(gid))
+        multi_term = [
+            "w012*", "w01?3", "/w01[0-9]3/", "w0123~1", "[w0120 TO w0125]",
+            '"w0001 w00*"', s.fuzzy_like_this("w0123 w0456"),
+            complex_phrase_query(s, "w0001 w0002~1"),
+        ]
+        for q in multi_term:
+            with jobs.call(f"search {q}") as gid:
+                hits = s.search(q, k=5).collect()
+            assert hits, q
+            assert expect(jobs.counts(gid)), q
+        suggest = [
+            lambda: DirectSpellChecker(s).suggest_similar("w0123x"),
+            lambda: NGramSpellChecker(s).suggest_similar("w0123"),
+            lambda: prefix_suggest(s, "w01"),
+        ]
+        for i, call in enumerate(suggest):
+            with jobs.call(f"suggest {i}") as gid:
+                assert call(), i
+            assert jobs.counts(gid) == (0, 0, 0), i
+
+    def state(obj) -> dict:
+        return {k: len(v) if hasattr(v, "__len__") else None for k, v in vars(obj).items()}
 
     calls(lambda counts: counts == (0, 0, 0))
+    before = state(s), state(s.reader)
+    got = s.search_many({str(i): f"w{i:04d}*" for i in range(200)}, k=1).collect()
+    assert len(got) > 100
+    assert (state(s), state(s.reader)) == before
     monkeypatch.setattr(searcher_mod, "WAVE_MS", 0.0)
     calls(lambda counts: counts[:2] == (1, 1) and 1 <= counts[2] <= n_tasks)

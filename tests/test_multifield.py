@@ -154,6 +154,26 @@ def test_field_prefix_expansion(searcher, fields_py):
     assert {r["docid"] for r in hits} == expect
 
 
+def test_open_ranges_stay_in_field(searcher, fields_py):
+    """An open-ended or all-open range expands only within its field's
+    namespace: no existence key, no other field's terms."""
+    from lucene_spark.search.query import TermRangeQuery
+
+    def expanded(q):
+        got = searcher.expand_multiterm(q, max_terms=100_000)
+        return {c.term for c in got.should}
+
+    def keys(field, keep):
+        toks = {t for ts in fields_py[field].values() for t in ts}
+        return {field_term(field, t) for t in toks if keep(t)}
+
+    assert expanded(searcher.parse("[* TO w0001]")) == keys("body", lambda t: t <= "w0001")
+    assert expanded(searcher.parse("[w9990 TO *]")) == keys("body", lambda t: t >= "w9990")
+    assert expanded(searcher.parse("[* TO *]")) == keys("body", lambda t: True)
+    title_tail = TermRangeQuery(field_term("title", "w0100"), None)
+    assert expanded(title_tail) == keys("title", lambda t: t >= "w0100")
+
+
 def test_cross_field_bool(searcher, fields_py):
     """title:a OR b = union with per-field scoring, summed."""
     q = "title:w0003 OR w0042"
