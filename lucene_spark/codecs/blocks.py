@@ -50,13 +50,17 @@ __all__ = [
     "encode_positions",
     "decode_positions",
     "decode_payloads",
+    "decode_rows",
+    "decode_positions_rows",
+    "decode_payloads_rows",
+    "ragged_index",
 ]
 
 ENC_CONSECUTIVE = 0  # docRange == n_docs: docids are base+1 .. base+n
 ENC_FOR_DELTA = 1    # FOR-packed deltas (delta[0] relative to base)
 ENC_BITSET = 2       # unary bitmap over (base, last_docid]
 ENC_VBYTE_TAIL = 3   # VByte deltas (tail block)
-# 4/5 are runtime pseudo-rows (singleton / delete-list, search/segment.py)
+# any other encoding is a runtime pseudo row: a pulsed singleton (index/pseudo.py)
 
 
 def skyline(freqs: np.ndarray, norms: np.ndarray) -> list[tuple[int, int]]:
@@ -318,3 +322,169 @@ def decode_block_freqs(encoding: int, freqs_enc: bytes, n_docs: int) -> np.ndarr
     if encoding == ENC_VBYTE_TAIL:
         return vbyte_decode(freqs_enc, n_docs)
     return pfor_decode(freqs_enc, n_docs)
+
+
+# --- bulk decode: many block rows in a fixed number of numpy passes ----------
+# The scalar decoders above stay the reference (the property test in
+# tests/test_codecs.py holds the bulk ones to them row by row). The bulk
+# decoders take the columns of many rows at once, as numpy arrays (object
+# arrays for the byte columns), and return flat arrays with per-row offsets:
+# row r's postings are docids[offsets[r]:offsets[r + 1]]. The number of numpy
+# passes depends on the distinct bit widths, not on the rows (the ForUtil /
+# PForUtil block-at-a-time decode, batched across blocks and terms).
+
+
+def ragged_index(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The concatenation of ``arange(s, s + n)`` for every (s, n)."""
+    lens = np.asarray(lens, dtype=np.int64)
+    ends = np.cumsum(lens)
+    if ends.size == 0 or ends[-1] == 0:
+        return np.zeros(0, dtype=np.int64)
+    shift = np.asarray(starts, dtype=np.int64) - (ends - lens)
+    return np.arange(ends[-1], dtype=np.int64) + np.repeat(shift, lens)
+
+
+def _joined(col: np.ndarray, rows: np.ndarray):
+    """(joined bytes as uint8, start and length of each row in them) of
+    ``col[rows]``."""
+    parts = col[rows]
+    lens = np.fromiter(map(len, parts), dtype=np.int64, count=rows.size)
+    raw = np.frombuffer(b"".join(parts), dtype=np.uint8)
+    return raw, np.cumsum(lens) - lens, lens
+
+
+def _unpack_full(raw, starts, widths, out, targets) -> None:
+    """FOR-unpack full blocks grouped by bit width: the block at
+    ``raw[starts[i]:]`` (16·w bytes at width w) goes to ``out[targets[i] +
+    arange(BLOCK_SIZE)]``. One ``for_unpack`` per distinct width."""
+    lane = np.arange(BLOCK_SIZE, dtype=np.int64)
+    for w in np.unique(widths):
+        g = widths == w
+        nbytes = BLOCK_SIZE * int(w) // 8
+        src = raw[(starts[g, None] + np.arange(nbytes)).ravel()]
+        out[(targets[g, None] + lane).ravel()] = for_unpack(
+            src, BLOCK_SIZE * int(g.sum()), int(w)
+        )
+
+
+def decode_rows(
+    encoding: np.ndarray,
+    n_docs: np.ndarray,
+    base_docid: np.ndarray,
+    docids_enc: np.ndarray,
+    freqs_enc: np.ndarray,
+    norms_enc: np.ndarray,
+    pseudo_freq: np.ndarray,
+    pseudo_norm: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(offsets, docids, freqs, norms) of many block rows at once, equal
+    row by row to ``decode_block_docids`` / ``decode_block_freqs`` / the
+    norm bytes. A row whose encoding is none of the four stored ones is a
+    runtime pseudo row (a pulsed singleton: n_docs=1, base=docid-1) with no
+    byte columns; its freq and norm come from ``pseudo_freq`` /
+    ``pseudo_norm``, which hold one value per pseudo row, in row order.
+
+    Docids decode as a segmented cumsum of per-row deltas over base:
+    consecutive and pseudo rows are deltas of 1, FOR rows unpack per bit
+    width, VByte tails decode in one pass over their joined streams, and
+    bitset rows take one ``unpackbits`` over their joined bytes."""
+    enc = np.asarray(encoding, dtype=np.int64)
+    n = np.asarray(n_docs, dtype=np.int64)
+    base = np.asarray(base_docid, dtype=np.int64)
+    offsets = np.zeros(n.size + 1, dtype=np.int64)
+    np.cumsum(n, out=offsets[1:])
+    starts = offsets[:-1]
+    total = int(offsets[-1])
+    deltas = np.ones(total, dtype=np.int64)
+    freqs = np.empty(total, dtype=np.int64)
+    norms = np.empty(total, dtype=np.int64)
+
+    stored = enc <= ENC_VBYTE_TAIL
+    rows = np.flatnonzero(stored)
+    freqs[starts[~stored]] = pseudo_freq
+    norms[starts[~stored]] = pseudo_norm
+    norms[ragged_index(starts[rows], n[rows])] = np.frombuffer(
+        b"".join(norms_enc[rows]), dtype=np.uint8
+    )
+
+    tail = np.flatnonzero(enc == ENC_VBYTE_TAIL)
+    if tail.size:
+        at = ragged_index(starts[tail], n[tail])
+        deltas[at] = vbyte_decode(b"".join(docids_enc[tail]), at.size)
+        freqs[at] = vbyte_decode(b"".join(freqs_enc[tail]), at.size)
+
+    packed = np.flatnonzero(enc == ENC_FOR_DELTA)
+    if packed.size:
+        raw, at, lens = _joined(docids_enc, packed)
+        widths = raw[at + lens - 1]
+        _unpack_full(raw, at, widths, deltas, starts[packed])
+
+    bitset = np.flatnonzero(enc == ENC_BITSET)
+    if bitset.size:
+        raw, at, _lens = _joined(docids_enc, bitset)
+        ones = np.flatnonzero(np.unpackbits(raw, bitorder="little"))
+        row = np.searchsorted(at * 8, ones, side="right") - 1
+        rel = ones - at[row] * 8 + 1  # docid - base
+        first = np.zeros(rel.size, dtype=bool)
+        first[np.cumsum(n[bitset]) - n[bitset]] = True
+        d = np.empty_like(rel)
+        d[0] = rel[0]
+        np.subtract(rel[1:], rel[:-1], out=d[1:])
+        d[first] = rel[first]
+        deltas[ragged_index(starts[bitset], n[bitset])] = d
+
+    # full blocks (every stored encoding but the VByte tail): PFOR freqs
+    full = np.flatnonzero(stored & (enc != ENC_VBYTE_TAIL))
+    if full.size:
+        raw, at, lens = _joined(freqs_enc, full)
+        widths, n_exc = raw[at], raw[at + 1].astype(np.int64)
+        _unpack_full(raw, at + 2, widths, freqs, starts[full])
+        ex = np.flatnonzero(n_exc)
+        if ex.size:
+            # exception indices, then their high bits, as VByte after the
+            # packed low bits (pfor_encode's layout)
+            w = widths[ex].astype(np.int64)
+            lo = at[ex] + 2 + BLOCK_SIZE * w // 8
+            vals = vbyte_decode(
+                raw[ragged_index(lo, at[ex] + lens[ex] - lo)].tobytes(),
+                int(2 * n_exc[ex].sum()),
+            )
+            k = n_exc[ex]
+            within = ragged_index(np.zeros(ex.size, np.int64), 2 * k)
+            is_idx = within < np.repeat(k, 2 * k)
+            where = np.repeat(starts[full[ex]], k) + vals[is_idx]
+            freqs[where] |= vals[~is_idx] << np.repeat(w, k)
+
+    cs = np.cumsum(deltas)
+    before = cs[starts] - deltas[starts]
+    return offsets, cs + np.repeat(base - before, n), freqs, norms
+
+
+def decode_positions_rows(positions_enc: np.ndarray, freqs: np.ndarray) -> np.ndarray:
+    """Flat positions of many rows' postings, equal row by row to
+    ``decode_positions``: one VByte pass over the joined streams, then a
+    per-doc cumsum that restarts at each doc's first (absolute) position —
+    the inverse of the builder's per-doc delta form. ``freqs`` are the flat
+    per-posting freqs of the same rows, in the same order."""
+    freqs = np.asarray(freqs, dtype=np.int64)
+    total = int(freqs.sum())
+    if total == 0:
+        return np.zeros(0, dtype=np.int64)
+    deltas = vbyte_decode(b"".join(positions_enc), total)
+    cs = np.cumsum(deltas)
+    first = np.cumsum(freqs) - freqs
+    return cs - np.repeat(cs[first] - deltas[first], freqs)
+
+
+def decode_payloads_rows(payloads_enc: np.ndarray, row_occ: np.ndarray) -> np.ndarray:
+    """Flat per-position payload ints of many rows (``decode_payloads``
+    row by row), aligned with ``decode_positions_rows``; ``row_occ`` is the
+    number of positions of each row. A row that stores no payloads (None)
+    reads -1 at each of its positions."""
+    row_occ = np.asarray(row_occ, dtype=np.int64)
+    out = np.full(int(row_occ.sum()), -1, dtype=np.int64)
+    rows = np.flatnonzero(np.not_equal(payloads_enc, None))
+    if rows.size:
+        at = ragged_index((np.cumsum(row_occ) - row_occ)[rows], row_occ[rows])
+        out[at] = vbyte_decode(b"".join(payloads_enc[rows]), at.size)
+    return out

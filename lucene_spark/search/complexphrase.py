@@ -20,7 +20,7 @@ so query cost scales with matched postings, never with the pattern.
 
 from __future__ import annotations
 
-from .query import MatchNoDocsQuery, wildcard_to_regex
+from .query import MatchNoDocsQuery
 from .spans import SpanNear, SpanNot, SpanOr, SpanTerm
 
 __all__ = ["complex_phrase_query"]
@@ -61,20 +61,17 @@ def _word_span(searcher, word: str, max_terms: int):
         base, _, edits = word.rpartition("~")
         target = _analyzed_word(searcher, base)
         matched = searcher._fuzzy_matches(
-            target, int(edits) if edits else 2, 0, ""
+            target, int(edits) if edits else 2, 0, searcher._default_ns()
         )
         if not matched:
             return None
         return SpanOr(tuple(SpanTerm(t) for t, _e, _df in sorted(matched)))
     if "*" in word or "?" in word:
-        lit, rx = wildcard_to_regex(word.lower())
-        terms = searcher.reader.expand_terms(
-            prefix=lit or None, pattern=rx, max_terms=max_terms
-        )
+        terms = searcher._expand_wildcard(word.lower(), max_terms)
         if not terms:
             return None
         return SpanOr(tuple(SpanTerm(t) for t in sorted(terms)))
-    return SpanTerm(_analyzed_word(searcher, word))
+    return SpanTerm(searcher._default_ns() + _analyzed_word(searcher, word))
 
 
 def complex_phrase_query(

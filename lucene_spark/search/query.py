@@ -1507,30 +1507,6 @@ def collect_terms(q) -> set[str]:
     return set()
 
 
-def contains_block_join(q) -> bool:
-    """True when the tree holds a ToParentBlockJoinQuery — such queries
-    must evaluate on whole segments (doc blocks never cross segments but
-    may straddle intra-segment docid slices)."""
-    if isinstance(
-        q,
-        (
-            ToParentBlockJoinQuery,
-            ToChildBlockJoinQuery,
-            ParentChildrenBlockJoinQuery,
-        ),
-    ):
-        return True
-    if isinstance(q, BooleanQuery):
-        return any(
-            contains_block_join(c) for c in (*q.must, *q.should, *q.must_not)
-        )
-    if isinstance(q, DisjunctionMaxQuery):
-        return any(contains_block_join(c) for c in q.disjuncts)
-    if isinstance(q, ConstantScoreQuery):
-        return contains_block_join(q.query)
-    return False
-
-
 def analyzed_text_intervals(
     text,
     max_gaps: int = -1,

@@ -24,11 +24,11 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 Where the tasks run is sized by their work, as IndexSearcher runs its leaf
 slices on the caller thread when it has no executor. The driver estimates
 the plan's work (``_driver_ms``: a read per task that grows with its docid
-span, Σdf of the plan's terms, dearer when positions are read, the tasks'
-docs when the plan reads the docmap, and a kernel per query) from numbers
-it already holds. Run on Spark, the same work is shared by min(tasks,
-cores) cores after the measured price of one wave, WAVE_MS
-(``_on_driver``; tools/driver_cost_probe.py fits the constants):
+span, Σdf of the plan's terms, dearer when positions are read, and the
+tasks' docs when the plan reads the docmap) from numbers it already holds.
+Run on Spark, the same work is shared by min(tasks, cores) cores after the
+measured price of one wave, WAVE_MS (``_on_driver``;
+tools/driver_cost_probe.py fits the constants):
 
 - when the driver is sooner, it runs the tasks itself, one after another,
   and merges their rows; the call launches no Spark job;
@@ -122,12 +122,11 @@ from .query import (
     WildcardQuery,
     boosted,
     collect_terms,
-    contains_block_join,
     parse_query,
     rewrite,
     wildcard_to_regex,
 )
-from .scorers import build_scorers, scoring_leaves
+from .scorers import build_scorers
 from .segment import (
     WINDOW_DOCS,
     SegmentContext,
@@ -148,87 +147,80 @@ _NO_MATCH_TERM = "\x00no-match"
 # tools/driver_cost_probe.py over perfbench.corpus indexes of 2k / 20k /
 # 100k docs in 2 segments at once (local[4], a 4-core box, medians of 5),
 # so the estimate follows the index size. Measured / fitted ms per size:
-# no postings 21.9/23.7, 65.5/61.1, 128.8/129.5; the 27 reference and
-# phrase shapes 802/728, 2897/2532, 8108/7903; "*" 32/25, 92/71, 173/178;
-# a search_many batch of 1000 queries 435/368, 2684/2540, 11844/12055.
+# no postings 21.9/23.7, 65.5/61.1, 128.8/129.5; "*" 32/25, 92/71,
+# 173/178.
 # one empty mapInPandas wave at 1 task (434 ms at 4 tasks, so for a wide
 # plan the estimate errs towards Spark)
 WAVE_MS = 245.0
 # a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span
 TASK_MS = 11.0
 TASK_DOC_MS = 0.000855
-# per posting of the plan's terms (Σdf), without / with positions
-POSTING_MS = 0.000594
-POSITION_POSTING_MS = 0.00425
+# per posting of the plan's terms (Σdf), without / with positions:
+# refitted once every task decoded its rows in one pass
+# (codecs.blocks.decode_rows), same probe at medians of 3. Measured /
+# fitted ms per size: the 27 reference and phrase shapes 1124/693,
+# 3390/2313, 7046/6943; a search_many batch of 1000 queries 265/176,
+# 1066/1602, 3656/7815. A per-query term fitted to 0, so there is none,
+# and a batch's postings overestimate it above 2k docs (its decode and
+# scores are shared by its queries); that run read the other constants
+# as WAVE_MS 352, TASK_MS 10.7, TASK_DOC_MS 0.00107, DOC_MS 0.00087.
+POSTING_MS = 0.000404
+POSITION_POSTING_MS = 0.00276
 # per doc of the tasks' spans when the plan reads the docmap
 DOC_MS = 0.000481
-# per query of the plan (a batch's kernels beyond its shared postings)
-QUERY_MS = 0.109
 
 
-def _needs_positions(q) -> bool:
+def _node_types(q, out: set) -> set:
+    """Adds the type of every node of ``q``'s tree to ``out``."""
+    out.add(type(q))
+    if isinstance(q, tuple):
+        for c in q:
+            _node_types(c, out)
+    elif dataclasses.is_dataclass(q):
+        for f in dataclasses.fields(q):
+            _node_types(getattr(q, f.name), out)
+    return out
+
+
+def _plan_reads(queries) -> tuple[bool, bool, bool, bool, bool]:
+    """From one walk of each query's tree, what a plan over ``queries``
+    needs: (a match-all, the docmap's stored docids (for the nodes whose
+    docs do not come from postings), positions, payloads, whole-segment
+    tasks (doc blocks never cross segments but may straddle docid
+    slices))."""
     from .query import (
         IntervalAtLeast,
         IntervalFilter,
         IntervalNear,
         IntervalOr,
         MultiPhraseQuery,
+        ParentChildrenBlockJoinQuery,
+        PayloadScoreQuery,
         TermAutomatonQuery,
+        ToParentBlockJoinQuery,
     )
+    from .spans import _SPAN_TYPES, PayloadFilteredTerm
 
-    from .spans import is_span
+    types: set = set()
+    for q in queries:
+        _node_types(q, types)
 
-    return any(
-        isinstance(
-            leaf,
-            (
-                PhraseQuery,
-                MultiPhraseQuery,
-                PhrasePrefixQuery,
-                IntervalNear,
-                IntervalFilter,
-                IntervalAtLeast,
-                IntervalOr,
-                TermAutomatonQuery,
-            ),
-        )
-        or is_span(leaf)
-        for leaf in scoring_leaves(q)
-    )
+    def holds(*kinds) -> bool:
+        return any(issubclass(t, kinds) for t in types)
 
-
-def _needs_payloads(q) -> bool:
-    from .query import PayloadScoreQuery
-    from .spans import PayloadFilteredTerm, is_span
-
-    def span_has_payload_node(node) -> bool:
-        if isinstance(node, PayloadFilteredTerm):
-            return True
-        for attr in ("clauses",):
-            for c in getattr(node, attr, ()):
-                if span_has_payload_node(c):
-                    return True
-        for attr in ("include", "exclude", "match", "big", "little", "clause"):
-            c = getattr(node, attr, None)
-            if c is not None and is_span(c) and span_has_payload_node(c):
-                return True
-        return False
-
-    return any(
-        isinstance(leaf, PayloadScoreQuery)
-        or (is_span(leaf) and span_has_payload_node(leaf))
-        for leaf in scoring_leaves(q)
-    )
-
-
-def _holds(q, types) -> bool:
-    """True when a node anywhere in ``q``'s tree is one of ``types``."""
-    if isinstance(q, types):
-        return True
-    if isinstance(q, tuple):
-        return any(_holds(c, types) for c in q)
-    return dataclasses.is_dataclass(q) and any(
-        _holds(getattr(q, f.name), types) for f in dataclasses.fields(q)
+    return (
+        holds(MatchAllDocsQuery),
+        holds(MatchAllDocsQuery, ToChildBlockJoinQuery),
+        holds(
+            PhraseQuery, MultiPhraseQuery, PhrasePrefixQuery, IntervalNear,
+            IntervalFilter, IntervalAtLeast, IntervalOr, TermAutomatonQuery,
+            *_SPAN_TYPES,
+        ),
+        holds(PayloadScoreQuery, PayloadFilteredTerm),
+        holds(
+            ToParentBlockJoinQuery, ToChildBlockJoinQuery,
+            ParentChildrenBlockJoinQuery,
+        ),
     )
 
 
@@ -283,20 +275,17 @@ def _arrow_schema(schema) -> pa.Schema:
     )
 
 
-def _driver_ms(
-    tasks, postings: int, positions: bool, docs: bool, n_queries: int
-) -> float:
+def _driver_ms(tasks, postings: int, positions: bool, docs: bool) -> float:
     """Estimated milliseconds of the work of ``tasks``, run one after
     another: a read per task that grows with its docid span, the postings
     of the plan's terms (Σdf, read and decoded once for all the queries;
-    dearer when positions are read), the tasks' docs when the plan reads
-    the docmap, and a kernel per query."""
+    dearer when positions are read) and the tasks' docs when the plan
+    reads the docmap."""
     span = sum(hi - lo for _seg, lo, hi in tasks)
     return (
         TASK_MS * len(tasks)
         + (TASK_DOC_MS + (DOC_MS if docs else 0.0)) * span
         + (POSITION_POSTING_MS if positions else POSTING_MS) * postings
-        + QUERY_MS * n_queries
     )
 
 
@@ -512,15 +501,28 @@ class Searcher:
         search/surround.py) with truncation terms expanded against this
         index's term dictionary (df-descending, capped — the
         BasicQueryFactory bounded budget)."""
-        from .surround import parse_surround
+        from .surround import _parse
 
-        def expand(pat: str) -> list[str]:
-            lit, rx = wildcard_to_regex(pat)
-            return self.reader.expand_terms(
-                prefix=lit or None, pattern=rx, max_terms=max_terms
-            )
+        ns = self._default_ns()
+        return _parse(
+            text,
+            partial(self._expand_wildcard, max_terms=max_terms),
+            lambda word: ns + word,
+        )
 
-        return parse_surround(text, expand=expand)
+    def _default_ns(self) -> str:
+        """The key prefix of the default field's terms ("" on a classic
+        single-field index)."""
+        return field_term(self.default_field, "") if self.fields else ""
+
+    def _expand_wildcard(self, pattern: str, max_terms: int) -> list[str]:
+        """The terms of the default field that match the bare ``*``/``?``
+        pattern ``pattern`` (df-descending, capped), for the parsers that
+        build their own leaves (surround, complex phrase)."""
+        lit, rx = wildcard_to_regex(self._default_ns() + pattern)
+        return self.reader.expand_terms(
+            prefix=lit or None, pattern=rx, max_terms=max_terms
+        )
 
     def function_match(self, predicate: str, boost: float = 1.0) -> DataFrame:
         """FunctionMatchQuery (queries/src/java/org/apache/lucene/queries/
@@ -1264,7 +1266,7 @@ class Searcher:
         DataFrame. ``scored=False`` builds no scorers (count needs none); a
         plan with no term and no match-all plans no task."""
         terms = sorted(set().union(*(collect_terms(q) for q in queries)))
-        match_all = any(_holds(q, MatchAllDocsQuery) for q in queries)
+        match_all, docs, positions, payloads, whole = _plan_reads(queries)
         seg_meta = self._seg_meta() if terms or match_all else {}
         if seg_meta and not match_all:
             # Bloom segment-skip (index/blooms.py): a segment whose bloom
@@ -1277,13 +1279,8 @@ class Searcher:
             )
             if cand is not None:
                 seg_meta = {seg: seg_meta[seg] for seg in cand}
-        # doc blocks never cross segments but may straddle docid slices:
         # block-join trees evaluate on whole segments
-        span = (
-            None
-            if any(contains_block_join(q) for q in queries)
-            else self._slice_span()
-        )
+        span = None if whole else self._slice_span()
         tasks = plan_slices(seg_meta, span)
         if not tasks:
             return _arrow_schema(schema).empty_table().to_pandas()
@@ -1291,16 +1288,7 @@ class Searcher:
         scorers = self._make_scorers(queries, tstats) if scored else {}
         # column pruning: positions/payloads are read only for queries that
         # consume them
-        positions = any(map(_needs_positions, queries))
-        skip = {
-            "positions_enc": not positions,
-            "payloads_enc": not any(map(_needs_payloads, queries)),
-        }
-        # the docmap's stored docids, for the nodes whose docs do not come
-        # from postings
-        docs = any(
-            _holds(q, (MatchAllDocsQuery, ToChildBlockJoinQuery)) for q in queries
-        )
+        skip = {"positions_enc": not positions, "payloads_enc": not payloads}
         # whether deletes exist is the reader's view: the first tombstone
         # write (add_deletes_by_query) runs these tasks while it creates
         # the directory
@@ -1319,7 +1307,7 @@ class Searcher:
         )
         postings = sum(df for df, _ttf in tstats.values())
         n = len(tasks)
-        work = _driver_ms(tasks, postings, positions, docs, len(queries))
+        work = _driver_ms(tasks, postings, positions, docs)
         if _on_driver(work, n, self.spark.sparkContext.defaultParallelism):
             ids = pd.DataFrame({"id": np.arange(n)})
             return pd.concat(list(run([ids])), ignore_index=True)
@@ -1547,7 +1535,7 @@ class Searcher:
         if self.mode != "indri_dirichlet":
             raise ValueError("indri_and requires mode='indri_dirichlet'")
         boosts = [float(b) for b in (boosts or [1.0] * len(terms))]
-        ns = self.default_field + FIELD_SEP if self.fields else ""
+        ns = self._default_ns()
         stats = self._term_stats([ns + t for t in terms])
         _, sum_ttf = self.reader.global_stats
         sum_ttf = max(sum_ttf, 1)

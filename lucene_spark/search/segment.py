@@ -3,15 +3,23 @@
 This is the per-leaf search of IndexSearcher.searchLeaf (reference:
 lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:820-860)
 re-expressed batch-wise: a segment's postings blocks for the query terms
-arrive as one Arrow batch (colocated by the index layout — no shuffle), and
-evaluation happens on decoded numpy arrays:
+arrive as one Arrow batch (colocated by the index layout — no shuffle).
+The first read that needs every block row of the batch decodes them all at
+once into flat doc, freq and norm arrays (``codecs.blocks.decode_rows``: a
+fixed number of numpy passes, however many terms and blocks), and positions
+and payloads on their first read, in one more pass. Every postings read is
+then a slice or gather of those arrays; the windowed top-k below reads
+only the blocks of the windows it visits, and decodes only those:
 
-- conjunction: successive ``np.intersect1d`` with a *block-level leapfrog*
-  prefilter — blocks of a term are only decoded if their [first,last] docid
-  span contains a current candidate (ConjunctionDISI lead/advance semantics,
-  search/ConjunctionDISI.java, at 128-doc granularity);
+- conjunction: successive ``np.isin`` with a *block-level leapfrog*
+  prefilter — a term's postings are only gathered from blocks whose
+  [first,last] docid span contains a current candidate (ConjunctionDISI
+  lead/advance semantics, search/ConjunctionDISI.java, at 128-doc
+  granularity);
 - exclusion: ``np.isin(..., invert=True)`` (ReqExclScorer);
-- phrases: position adjacency via decoded .pos runs (ExactPhraseMatcher).
+- phrases, spans and intervals: position adjacency over the occurrences of
+  the candidate docs, gathered from the flat positions
+  (``_TermPostings.occurrences``, ExactPhraseMatcher).
 
 ``search_segment`` picks the evaluator by one rule:
 
@@ -24,19 +32,22 @@ evaluation happens on decoded numpy arrays:
   evaluation stops once UB < θ (the k-th best score so far);
 - every other query runs the exhaustive evaluator + top-k.
 
-The rule is measured, not assumed (tools/evaluator_probe.py: 1M docs merged
-to one segment, k=10, 4-core VM, two runs, every result bit-identical). On
-one 1M-doc slice the windowed path takes the 9 single-term shapes in
-97–147 ms against 737–992 ms exhaustive, and two hot-term dismax queries
-in 176–217 ms against 1,480–1,781 ms; on 127k-doc slices it still wins
-1.6–2.3×, on 16k-doc slices single terms lose 17–32%. Block-max pruning
-of the 13 multi-term boolean shapes lost to the exhaustive evaluator in
-sum at 16k, 127k and 1M-doc slices (1M: 4.3 s against 3.9 s, 8.0 s
-against 7.0 s), and by 9× on ``hot AND rare`` (178 ms against 20 ms),
-where the rarest-lead leapfrog of ``_conjunction_terms`` already skips
-the work.
+The rule is measured, not assumed (tools/evaluator_probe.py: ``from_pdf``
+plus the kernel per task, k=10, 4-core VM, best of 2, every result
+bit-identical). On one 1M-doc slice the windowed path takes the 9
+single-term shapes in 209 ms against 478 ms exhaustive (the three hot
+terms 20–31 ms against 138–159 ms; the three rarest lose, 29–43 ms
+against ~1 ms), and two hot-term dismax queries in 114 ms against 701 ms.
+On 127k-doc slices of a 130k-doc segment the two paths tie (single terms
+113 against 109 ms summed, dismax 103 against 104 ms); on 16k-doc slices
+the windowed path loses (285 against 203 ms, 232 against 127 ms).
+Block-max pruning of the 13 multi-term boolean shapes lost to the
+exhaustive evaluator in sum at 16k, 127k and 1M-doc slices (1M, before
+the bulk decode: 4.3 s against 3.9 s, 8.0 s against 7.0 s), and by 9× on
+``hot AND rare``, where the rarest-lead leapfrog of ``_conjunction_terms``
+already skips the work.
 ``batch_search_segment`` keeps the dense ``_BatchEvaluator`` for term-only
-booleans: it decodes and scores each term once for a whole query batch.
+booleans: it scores each term once for a whole query batch.
 
 Float accumulation order is "ascending clause index, then doc", identical in
 the exhaustive and windowed paths, so float32 scores are bit-identical across
@@ -46,13 +57,16 @@ strategies (CheckHits-style invariant, tested).
 from __future__ import annotations
 
 import threading
+from functools import cached_property
 
 import numpy as np
 
 from ..codecs.blocks import (
-    decode_block_docids,
-    decode_block_freqs,
-    decode_positions,
+    ENC_VBYTE_TAIL,
+    decode_payloads_rows,
+    decode_positions_rows,
+    decode_rows,
+    ragged_index,
 )
 from ..functions.smallfloat import BYTE4_DECODE_TABLE, int_to_byte4
 from .query import (
@@ -93,135 +107,200 @@ WINDOW_DOCS = 4096  # MaxScoreBulkScorer.INNER_WINDOW_SIZE (:28)
 _EMPTY = np.zeros(0, dtype=np.int64)
 
 
-ENC_SINGLETON = 4
+class _FlatPostings:
+    """Every block row of one SegmentContext, decoded at once, on the first
+    read that needs them all (``codecs.blocks.decode_rows``): row r's
+    postings are ``docids[row_off[r]:row_off[r + 1]]``, and likewise
+    ``freqs`` and ``norms``. Positions and payloads decode on their first
+    read, in one pass over the rows that store them: posting p's are
+    ``positions[occ_off[p]:occ_off[p + 1]]``. A row that stores neither (a
+    feature or field-existence row, whose freq is a feature value or a
+    field length, not a count of positions) holds no occurrences. The
+    arrays are read-only, because every postings read hands out views of
+    them."""
+
+    def __init__(self, cols: dict):
+        self.cols = cols
+        n = np.asarray(cols["n_docs"], dtype=np.int64)
+        self.row_off = np.zeros(n.size + 1, dtype=np.int64)
+        np.cumsum(n, out=self.row_off[1:])
+
+    def decode(self, rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(docids, freqs, norms) of the postings of ``rows``, in row
+        order."""
+        c = self.cols
+        enc = c["encoding"][rows]
+        pseudo = enc > ENC_VBYTE_TAIL  # pulsed singletons (index/pseudo.py)
+        return decode_rows(
+            enc, c["n_docs"][rows], c["base_docid"][rows], c["docids_enc"][rows],
+            c["freqs_enc"][rows], c["norms_enc"][rows],
+            [f[0] for f in c["impact_freqs"][rows][pseudo]],
+            [m[0] for m in c["impact_norms"][rows][pseudo]],
+        )[1:]
+
+    @cached_property
+    def postings(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        out = self.decode(slice(None))
+        for a in out:
+            a.flags.writeable = False
+        return out
+
+    @property
+    def docids(self) -> np.ndarray:
+        return self.postings[0]
+
+    @property
+    def freqs(self) -> np.ndarray:
+        return self.postings[1]
+
+    @property
+    def norms(self) -> np.ndarray:
+        return self.postings[2]
+
+    @cached_property
+    def occ_n(self) -> np.ndarray:
+        """Per posting, the number of its occurrences: its freq in a row
+        that stores positions or payloads, else 0."""
+        has = np.zeros(self.row_off.size - 1, dtype=bool)
+        for c in ("positions_enc", "payloads_enc"):
+            if c in self.cols:
+                has |= np.not_equal(self.cols[c], None)
+        out = np.where(np.repeat(has, np.diff(self.row_off)), self.freqs, 0)
+        out.flags.writeable = False
+        return out
+
+    @cached_property
+    def occ_off(self) -> np.ndarray:
+        out = np.zeros(self.occ_n.size + 1, dtype=np.int64)
+        np.cumsum(self.occ_n, out=out[1:])
+        return out
+
+    @cached_property
+    def positions(self) -> np.ndarray:
+        """Per occurrence; -1 in a row that stores payloads but no
+        positions."""
+        col = self.cols["positions_enc"]
+        rows = np.flatnonzero(np.not_equal(col, None))
+        out = np.full(int(self.occ_off[-1]), -1, dtype=np.int64)
+        if rows.size:
+            occ, off = self.occ_off[self.row_off], self.row_off
+            out[ragged_index(occ[rows], occ[rows + 1] - occ[rows])] = (
+                decode_positions_rows(
+                    col[rows],
+                    self.freqs[ragged_index(off[rows], off[rows + 1] - off[rows])],
+                )
+            )
+        out.flags.writeable = False
+        return out
+
+    @cached_property
+    def payloads(self) -> np.ndarray:
+        """Per occurrence; -1 where the row stores no payloads."""
+        col = self.cols.get("payloads_enc")
+        if col is None:
+            out = np.full(int(self.occ_off[-1]), -1, dtype=np.int64)
+        else:
+            out = decode_payloads_rows(col, np.diff(self.occ_off[self.row_off]))
+        out.flags.writeable = False
+        return out
+
+
+def _members(d: np.ndarray, cand: np.ndarray) -> np.ndarray:
+    """Indices of the docids of sorted unique ``d`` that sorted unique
+    ``cand`` holds, searching the shorter array in the longer one."""
+    if cand.size < d.size:
+        i = np.searchsorted(d, cand)
+        ok = i < d.size
+        i = i[ok]
+        return i[d[i] == cand[ok]]
+    j = np.searchsorted(cand, d)
+    ok = np.flatnonzero(j < cand.size)
+    return ok[cand[j[ok]] == d[ok]]
 
 
 class _TermPostings:
-    """Lazily-decoded postings of one term within one segment.
+    """The postings of one term within one segment: its block rows [lo,
+    hi) of the context's ``_FlatPostings``. Every read is a slice or a
+    gather of the flat arrays (``decode_blocks`` decodes its blocks alone
+    until they exist); a pulsed singleton is a one-posting row."""
 
-    Column layout: per-block attributes are numpy slices of the segment's
-    Arrow batch (no per-row python dicts — the batch can hold millions of
-    block rows for hot terms)."""
+    __slots__ = ("flat", "lo", "hi")
 
-    __slots__ = (
-        "lo", "hi", "encoding", "n_docs", "base", "block_first", "block_last",
-        "docids_enc", "freqs_enc", "norms_enc", "positions_enc", "payloads_enc",
-        "impact_freqs", "impact_norms", "singleton", "_decoded",
-    )
-
-    def __init__(
-        self,
-        cols: dict,
-        lo: int,
-        hi: int,
-        singleton: dict | None = None,
-    ):
-        self.singleton = singleton
-        self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        if singleton is not None:
-            self.block_first = np.array([singleton["singleton_docid"]], dtype=np.int64)
-            self.block_last = self.block_first
-            return
-        self.lo, self.hi = lo, hi
-        self.encoding = cols["encoding"][lo:hi]
-        self.n_docs = cols["n_docs"][lo:hi]
-        self.base = cols["base_docid"][lo:hi]
-        self.block_first = cols["first_docid"][lo:hi]
-        self.block_last = cols["last_docid"][lo:hi]
-        self.docids_enc = cols["docids_enc"][lo:hi]
-        self.freqs_enc = cols["freqs_enc"][lo:hi]
-        self.norms_enc = cols["norms_enc"][lo:hi]
-        self.positions_enc = cols.get("positions_enc")
-        if self.positions_enc is not None:
-            self.positions_enc = self.positions_enc[lo:hi]
-        self.payloads_enc = cols.get("payloads_enc")
-        if self.payloads_enc is not None:
-            self.payloads_enc = self.payloads_enc[lo:hi]
-        self.impact_freqs = cols["impact_freqs"][lo:hi]
-        self.impact_norms = cols["impact_norms"][lo:hi]
+    def __init__(self, flat: _FlatPostings, lo: int, hi: int):
+        self.flat, self.lo, self.hi = flat, lo, hi
 
     @property
     def n_blocks(self) -> int:
-        return 1 if self.singleton is not None else len(self.block_first)
+        return self.hi - self.lo
+
+    @property
+    def block_first(self) -> np.ndarray:
+        return self.flat.cols["first_docid"][self.lo : self.hi]
+
+    @property
+    def block_last(self) -> np.ndarray:
+        return self.flat.cols["last_docid"][self.lo : self.hi]
 
     def block_ub(self, scorer) -> np.ndarray:
         """Per-block score upper bound from the impact skyline."""
-        if self.singleton is not None:
-            imp = np.array(
-                [[self.singleton["singleton_freq"], self.singleton["singleton_norm"]]],
-                dtype=np.int64,
-            )
-            return np.array([scorer.max_score(imp)], dtype=np.float64)
         # flatten all skylines into one score() call, then segmented max
-        counts = np.fromiter(
-            (len(x) for x in self.impact_freqs), dtype=np.int64,
-            count=len(self.impact_freqs),
-        )
-        all_f = np.concatenate([np.asarray(x, dtype=np.int64) for x in self.impact_freqs])
-        all_n = np.concatenate([np.asarray(x, dtype=np.int64) for x in self.impact_norms])
+        imp_f = self.flat.cols["impact_freqs"][self.lo : self.hi]
+        imp_n = self.flat.cols["impact_norms"][self.lo : self.hi]
+        counts = np.fromiter(map(len, imp_f), dtype=np.int64, count=len(imp_f))
+        all_f = np.concatenate([np.asarray(x, dtype=np.int64) for x in imp_f])
+        all_n = np.concatenate([np.asarray(x, dtype=np.int64) for x in imp_n])
         scores = scorer.score(all_f, all_n).astype(np.float64)
-        bounds = np.concatenate(([0], np.cumsum(counts)))
-        return np.maximum.reduceat(scores, bounds[:-1])
-
-    def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(docids, freqs, norms) of block i."""
-        got = self._decoded.get(i)
-        if got is not None:
-            return got
-        if self.singleton is not None:
-            s = self.singleton
-            out = (
-                np.array([s["singleton_docid"]], dtype=np.int64),
-                np.array([s["singleton_freq"]], dtype=np.int64),
-                np.array([s["singleton_norm"]], dtype=np.int64),
-            )
-        else:
-            d = decode_block_docids(
-                int(self.encoding[i]), self.docids_enc[i], int(self.n_docs[i]),
-                int(self.base[i]), int(self.block_last[i]),
-            )
-            f = decode_block_freqs(
-                int(self.encoding[i]), self.freqs_enc[i], int(self.n_docs[i])
-            )
-            m = np.frombuffer(self.norms_enc[i], dtype=np.uint8).astype(np.int64)
-            out = (d, f, m)
-        self._decoded[i] = out
-        return out
-
-    def decode_blocks(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        parts = [self.decode_block(int(i)) for i in idxs]
-        if not parts:
-            return _EMPTY, _EMPTY, _EMPTY
-        return tuple(np.concatenate([p[j] for p in parts]) for j in range(3))
+        return np.maximum.reduceat(scores, np.cumsum(counts) - counts)
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        return self.decode_blocks(range(self.n_blocks))
+        """(docids, freqs, norms) of every posting."""
+        f = self.flat
+        a, b = f.row_off[self.lo], f.row_off[self.hi]
+        return f.docids[a:b], f.freqs[a:b], f.norms[a:b]
 
-    def positions_for(self, block_i: int) -> np.ndarray:
-        """Flat positions of block i (requires positions indexed)."""
-        if self.singleton is not None:
-            s = self.singleton
-            return decode_positions(
-                s["singleton_positions"], np.array([s["singleton_freq"]])
-            )
-        _, f, _ = self.decode_block(block_i)
-        return decode_positions(self.positions_enc[block_i], f)
+    def decode_blocks(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(docids, freqs, norms) of the blocks ``idxs`` (ascending): a
+        gather once every row is decoded, and before that a decode of these
+        rows alone, so a path that reads only some blocks (the windowed
+        top-k) decodes only those."""
+        f = self.flat
+        rows = self.lo + np.asarray(idxs, dtype=np.int64)
+        if "postings" not in vars(f):
+            return f.decode(rows)
+        if rows.size and rows[-1] - rows[0] + 1 == rows.size:  # a run
+            a, b = f.row_off[rows[0]], f.row_off[rows[-1] + 1]
+            return f.docids[a:b], f.freqs[a:b], f.norms[a:b]
+        at = ragged_index(f.row_off[rows], f.row_off[rows + 1] - f.row_off[rows])
+        return f.docids[at], f.freqs[at], f.norms[at]
 
-    def payloads_for(self, block_i: int) -> np.ndarray | None:
-        """Flat per-position payload ints of block i (None when the index
-        carries no payloads for this term)."""
-        from ..codecs.blocks import decode_payloads
+    def occurrences(self, cand: np.ndarray | None = None, payloads: bool = False):
+        """(doc, position, norm, payload) of every occurrence of the term in
+        the sorted candidate docs ``cand`` (in every doc when None): flat
+        arrays in TermSpans order, doc-major with positions ascending.
+        payload is None unless asked for, and -1 where none is stored."""
+        f = self.flat
+        a, b = f.row_off[self.lo], f.row_off[self.hi]
+        if cand is None:
+            sel = np.arange(a, b)
+            at = np.arange(f.occ_off[a], f.occ_off[b])
+        else:
+            sel = a + _members(f.docids[a:b], cand)
+            at = ragged_index(f.occ_off[sel], f.occ_n[sel])
+        cnt = f.occ_n[sel]
+        return (
+            np.repeat(f.docids[sel], cnt),
+            f.positions[at],
+            np.repeat(f.norms[sel], cnt),
+            f.payloads[at] if payloads else None,
+        )
 
-        if self.singleton is not None:
-            s = self.singleton
-            data = s.get("singleton_payloads")
-            if data is None:
-                return None
-            return decode_payloads(data, np.array([s["singleton_freq"]]))
-        if self.payloads_enc is None or self.payloads_enc[block_i] is None:
-            return None
-        _, f, _ = self.decode_block(block_i)
-        return decode_payloads(self.payloads_enc[block_i], f)
+    def payloads(self) -> tuple[np.ndarray, np.ndarray]:
+        """(the number of occurrences of each posting, the payload of every
+        occurrence, doc-major, -1 where none is stored); reads no
+        positions."""
+        f = self.flat
+        a, b = f.row_off[self.lo], f.row_off[self.hi]
+        return f.occ_n[a:b], f.payloads[f.occ_off[a] : f.occ_off[b]]
 
     def blocks_overlapping(self, candidates: np.ndarray) -> np.ndarray:
         """Indices of blocks whose [first,last] span contains ≥1 candidate
@@ -276,54 +355,31 @@ class SegmentContext:
         doc_base: int = 0,
     ) -> "SegmentContext":
         """Build from one segment's Arrow batch of block rows (+ singleton
-        pseudo-blocks, encoding==ENC_SINGLETON) — columnar, no per-row dicts."""
-        import pandas as pd  # noqa: F401
-
+        pseudo-blocks, index/pseudo.py); the rows decode on their first
+        read (``_FlatPostings``)."""
         ckey = None
         if cache_tag is not None and len(pdf):
             seg = int(pdf["segment_id"].iloc[0])
             ckey = (cache_tag, seg, min_doc, max_doc)
+        postings: dict[str, _TermPostings] = {}
+        if len(pdf) == 0:
+            return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
         pdf = pdf.sort_values(["term", "block_no"], kind="mergesort")
         cols = {
             c: pdf[c].to_numpy()
             for c in pdf.columns
             if c not in ("segment_id", "term")
         }
+        flat = _FlatPostings(cols)
         terms = pdf["term"].to_numpy()
-        enc = cols["encoding"].astype(np.int64)
-        postings: dict[str, _TermPostings] = {}
         n = len(terms)
-        if n == 0:
-            return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
         tchange = np.empty(n, dtype=bool)
         tchange[0] = True
         tchange[1:] = terms[1:] != terms[:-1]
         starts = np.flatnonzero(tchange)
-        ends = np.concatenate((starts[1:], [n]))
-        pos_col = cols.get("positions_enc")
-        for lo, hi in zip(starts, ends):
-            term = terms[lo]
-            if enc[lo] == ENC_SINGLETON:
-                postings[term] = _TermPostings(
-                    cols,
-                    int(lo),
-                    int(hi),
-                    singleton={
-                        "singleton_docid": int(cols["first_docid"][lo]),
-                        "singleton_freq": int(cols["impact_freqs"][lo][0]),
-                        "singleton_norm": int(cols["impact_norms"][lo][0]),
-                        "singleton_positions": (
-                            pos_col[lo] if pos_col is not None else None
-                        ),
-                        "singleton_payloads": (
-                            cols["payloads_enc"][lo]
-                            if cols.get("payloads_enc") is not None
-                            else None
-                        ),
-                    },
-                )
-            else:
-                postings[term] = _TermPostings(cols, int(lo), int(hi))
+        ends = np.append(starts[1:], n)
+        for term, lo, hi in zip(terms[starts], starts.tolist(), ends.tolist()):
+            postings[term] = _TermPostings(flat, lo, hi)
         return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
 
 
@@ -1021,35 +1077,20 @@ class _SegmentSearcher:
         tp = self.term_postings(q.term)
         if tp is None:
             return _EMPTY, np.zeros(0, dtype=np.float64)
-        d_parts, agg_parts, f_parts, n_parts = [], [], [], []
-        for i in range(tp.n_blocks):
-            d, f, m = tp.decode_block(i)
-            pay = tp.payloads_for(i)
-            if pay is None:
-                # index built without payloads: every payload reads as 0
-                agg = np.zeros(d.size, dtype=np.float64)
-            else:
-                bounds = np.concatenate(([0], np.cumsum(f)))[:-1]
-                pay = pay.astype(np.float64)
-                if q.func == "sum":
-                    agg = np.add.reduceat(pay, bounds)
-                elif q.func == "max":
-                    agg = np.maximum.reduceat(pay, bounds)
-                elif q.func == "min":
-                    agg = np.minimum.reduceat(pay, bounds)
-                else:  # first occurrence's payload
-                    agg = pay[bounds]
-            d_parts.append(d)
-            agg_parts.append(agg)
-            f_parts.append(f)
-            n_parts.append(m)
-        docids = np.concatenate(d_parts)
-        scores = np.concatenate(agg_parts) * float(q.boost)
+        docids, f, m = tp.decode_all()
+        n, pay = tp.payloads()
+        # a doc with no payloads stored (-1, or no occurrences) reads 0
+        pay = np.maximum(pay, 0).astype(np.float64)
+        agg = np.zeros(docids.size, dtype=np.float64)
+        has = n > 0
+        if has.any():
+            bounds = (np.cumsum(n) - n)[has]
+            ufunc = {"sum": np.add, "max": np.maximum, "min": np.minimum}.get(q.func)
+            # else the first occurrence's payload
+            agg[has] = pay[bounds] if ufunc is None else ufunc.reduceat(pay, bounds)
+        scores = agg * float(q.boost)
         if q.include_span_score:
-            span = sc.score(
-                np.concatenate(f_parts), np.concatenate(n_parts)
-            ).astype(np.float64)
-            scores = scores * span
+            scores = scores * sc.score(f, m).astype(np.float64)
         return docids, scores.astype(dtype if q.include_span_score else np.float64)
 
     def _evaluate_dismax(self, q: DisjunctionMaxQuery) -> tuple[np.ndarray, np.ndarray]:
@@ -1123,7 +1164,7 @@ class _SegmentSearcher:
 
     def _conjunction_terms(self, term_qs: list) -> tuple[np.ndarray, np.ndarray]:
         """Leapfrog AND at block granularity: lead with the rarest term
-        (ConjunctionDISI orders by cost), decode other terms' blocks only
+        (ConjunctionDISI orders by cost), gather other terms' blocks only
         where candidates remain."""
         dtype = _float_dtype(self.ctx.scorers[term_qs[0]])
         tps = []
@@ -1135,9 +1176,9 @@ class _SegmentSearcher:
         # lead with the cheapest list (ConjunctionDISI cost order); block
         # count is the df/128 proxy for cost
         tps.sort(key=lambda p: p[1].n_blocks)
-        lead = tps[0][1]
-        cand = lead.decode_all()[0]
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+        t, lead = tps[0]
+        decoded = {t: lead.decode_blocks(np.arange(lead.n_blocks))}
+        cand = decoded[t][0]
         for t, tp in tps[1:]:
             if cand.size == 0:
                 break
@@ -1221,27 +1262,13 @@ class _SegmentSearcher:
         norms = m0[np.searchsorted(d0, docs)]
         return docs, freqs, norms, True
 
-    def _term_pos_keys(self, tp, cand: np.ndarray) -> np.ndarray:
+    @staticmethod
+    def _term_pos_keys(tp, cand: np.ndarray) -> np.ndarray:
         """Sorted (doc<<32 | position) keys of one term restricted to the
         candidate docs — the vectorized adjacency currency
         (ExactPhraseMatcher.java:38 semantics, batch-wise)."""
-        if tp.singleton is not None:
-            sd = int(tp.singleton["singleton_docid"])
-            if sd not in cand:
-                return _EMPTY
-            pos = tp.positions_for(0)
-            return (np.int64(sd) << np.int64(32)) | pos
-        parts = []
-        for bi in tp.blocks_overlapping(cand):
-            d, f, _m = tp.decode_block(int(bi))
-            flat = tp.positions_for(int(bi))
-            docrep = np.repeat(d, f)
-            keep_mask = np.isin(docrep, cand)
-            if keep_mask.any():
-                parts.append(
-                    (docrep[keep_mask] << np.int64(32)) | flat[keep_mask]
-                )
-        return np.concatenate(parts) if parts else _EMPTY
+        d, p, _n, _pl = tp.occurrences(cand)
+        return (d << np.int64(32)) | p
 
     def _multi_phrase_match(self, q: MultiPhraseQuery):
         """Union the alternatives' position keys per slot, then the same
@@ -1388,28 +1415,6 @@ class _SegmentSearcher:
             return None, _EMPTY
         return tps, cand
 
-    def _slot_doc_pos(self, tp, slot: int, cand: np.ndarray):
-        """(docids-per-occurrence, adjusted positions) of one slot
-        restricted to candidate docs — flat vectors, doc-major order."""
-        if tp.singleton is not None:
-            sd = int(tp.singleton["singleton_docid"])
-            if sd not in cand:
-                return _EMPTY, _EMPTY
-            pos = tp.positions_for(0)
-            return np.full(pos.size, sd, dtype=np.int64), pos - slot
-        dparts, pparts = [], []
-        for bi in tp.blocks_overlapping(cand):
-            d, f, _m = tp.decode_block(int(bi))
-            flat = tp.positions_for(int(bi))
-            docrep = np.repeat(d, f)
-            keep = np.isin(docrep, cand)
-            if keep.any():
-                dparts.append(docrep[keep])
-                pparts.append(flat[keep] - slot)
-        if not dparts:
-            return _EMPTY, _EMPTY
-        return np.concatenate(dparts), np.concatenate(pparts)
-
     def _sloppy_phrase_match(self, q: PhraseQuery):
         """SloppyPhraseMatcher semantics (search/SloppyPhraseMatcher.java:53):
         adjusted position = pos - slot; the advance-min sweep evaluates a
@@ -1436,9 +1441,9 @@ class _SegmentSearcher:
         m = len(tps)
         dparts, pparts, sparts = [], [], []
         for slot, tp in enumerate(tps):
-            dd, pp = self._slot_doc_pos(tp, slot, cand)
+            dd, pp = tp.occurrences(cand)[:2]
             dparts.append(dd)
-            pparts.append(pp)
+            pparts.append(pp - slot)
             sparts.append(np.full(dd.size, slot, dtype=np.int64))
         d = np.concatenate(dparts)
         p = np.concatenate(pparts)
@@ -1502,7 +1507,8 @@ class _SegmentSearcher:
             groups.setdefault(t, []).append(slot)
         per_slot: list[dict[int, np.ndarray]] = []
         for slot, tp in enumerate(tps):
-            dd, pp = self._slot_doc_pos(tp, slot, cand)
+            dd, pp = tp.occurrences(cand)[:2]
+            pp = pp - slot
             out: dict[int, np.ndarray] = {}
             if dd.size:
                 cuts = np.flatnonzero(np.concatenate(([True], dd[1:] != dd[:-1])))
@@ -1623,13 +1629,13 @@ class _SegmentSearcher:
         if any(tp is None for tp in tps):
             return np.zeros(0, dtype=np.int64)
         offs = tuple(range(len(terms))) if offsets is None else tuple(offsets)
-        dd, pp = self._slot_doc_pos(tps[0], 0, cand)
+        dd, pp = tps[0].occurrences(cand)[:2]
         if dd.size == 0:
             return np.zeros(0, dtype=np.int64)
         k0 = np.searchsorted(cand, dd) * kp + pp
         k0.sort()
         for i in range(1, len(terms)):
-            dd, pp = self._slot_doc_pos(tps[i], 0, cand)
+            dd, pp = tps[i].occurrences(cand)[:2]
             if dd.size == 0:
                 return np.zeros(0, dtype=np.int64)
             ki = np.searchsorted(cand, dd) * kp + pp
@@ -1695,7 +1701,7 @@ class _SegmentSearcher:
                     tp = self.term_postings(terms[0])
                     if tp is None:
                         continue
-                    dd, pp = self._slot_doc_pos(tp, 0, cand)
+                    dd, pp = tp.occurrences(cand)[:2]
                     if dd.size == 0:
                         continue
                     raw = np.searchsorted(cand, dd) * kp + pp
@@ -2155,109 +2161,11 @@ class _SegmentSearcher:
             return pl < value
         return pl <= value  # lte (op validated at construction)
 
-    def _span_term_rows_payload(self, term: str, cand, value: int, op: str):
-        """_span_term_rows with the stored per-position payload checked
-        against (value, op) — SpanPayloadCheckQuery's collect-and-compare
-        done as a mask over the flat payload stream (aligned with the
-        position stream by construction). A term indexed without payloads
-        matches nothing (payloadToMatch vs missing payload)."""
-        tp = self.term_postings(term)
-        if tp is None:
-            return _EMPTY, _EMPTY, _EMPTY
-        if tp.singleton is not None:
-            sd = int(tp.singleton["singleton_docid"])
-            if cand is not None and sd not in cand:
-                return _EMPTY, _EMPTY, _EMPTY
-            pl = tp.payloads_for(0)
-            if pl is None:
-                return _EMPTY, _EMPTY, _EMPTY
-            pos = tp.positions_for(0).astype(np.int64)
-            keep = self._payload_pred(pl, value, op)
-            pos = pos[keep]
-            return (
-                np.full(pos.size, sd, dtype=np.int64),
-                pos,
-                np.full(
-                    pos.size, int(tp.singleton["singleton_norm"]), dtype=np.int64
-                ),
-            )
-        blocks = (
-            tp.blocks_overlapping(cand) if cand is not None else range(tp.n_blocks)
-        )
-        dparts, pparts, nparts = [], [], []
-        for bi in blocks:
-            pl = tp.payloads_for(int(bi))
-            if pl is None:
-                continue
-            d, f, m = tp.decode_block(int(bi))
-            flat = tp.positions_for(int(bi)).astype(np.int64)
-            keep = self._payload_pred(pl, value, op)
-            docrep = np.repeat(d, f)[keep]
-            normrep = np.repeat(m, f)[keep]
-            flat = flat[keep]
-            if cand is not None:
-                inc = np.isin(docrep, cand)
-                docrep, flat, normrep = docrep[inc], flat[inc], normrep[inc]
-            if docrep.size:
-                dparts.append(docrep)
-                pparts.append(flat)
-                nparts.append(normrep)
-        if not dparts:
-            return _EMPTY, _EMPTY, _EMPTY
-        return (
-            np.concatenate(dparts),
-            np.concatenate(pparts),
-            np.concatenate(nparts),
-        )
-
-    def _span_term_rows(self, term: str, cand):
-        """(docids, positions, norms) of every occurrence of ``term`` in
-        the candidate docs (TermSpans enumeration order: doc-major,
-        positions ascending)."""
-        tp = self.term_postings(term)
-        if tp is None:
-            return _EMPTY, _EMPTY, _EMPTY
-        if tp.singleton is not None:
-            sd = int(tp.singleton["singleton_docid"])
-            if cand is not None and sd not in cand:
-                return _EMPTY, _EMPTY, _EMPTY
-            pos = tp.positions_for(0).astype(np.int64)
-            return (
-                np.full(pos.size, sd, dtype=np.int64),
-                pos,
-                np.full(
-                    pos.size, int(tp.singleton["singleton_norm"]), dtype=np.int64
-                ),
-            )
-        blocks = (
-            tp.blocks_overlapping(cand) if cand is not None else range(tp.n_blocks)
-        )
-        dparts, pparts, nparts = [], [], []
-        for bi in blocks:
-            d, f, m = tp.decode_block(int(bi))
-            flat = tp.positions_for(int(bi)).astype(np.int64)
-            docrep = np.repeat(d, f)
-            normrep = np.repeat(m, f)
-            if cand is not None:
-                keep = np.isin(docrep, cand)
-                docrep, flat, normrep = docrep[keep], flat[keep], normrep[keep]
-            if docrep.size:
-                dparts.append(docrep)
-                pparts.append(flat)
-                nparts.append(normrep)
-        if not dparts:
-            return _EMPTY, _EMPTY, _EMPTY
-        return (
-            np.concatenate(dparts),
-            np.concatenate(pparts),
-            np.concatenate(nparts),
-        )
-
     def _span_doc_superset(self, q) -> np.ndarray:
         """Sorted docid superset that could hold a match of the span tree
         (conjunctive nodes intersect, disjunctive union) — the candidate
-        restriction threaded through enumeration so only overlapping
-        postings blocks decode (the ConjunctionDISI analog for spans)."""
+        restriction threaded through enumeration so only the candidates'
+        occurrences are gathered (the ConjunctionDISI analog for spans)."""
         from .spans import (
             FieldMaskedSpan,
             PayloadFilteredTerm,
@@ -2328,11 +2236,17 @@ class _SegmentSearcher:
             # FieldMaskingSpanQuery.createWeight delegates to the masked
             # query — the mask changes getField() only, never the spans
             return self._span_enumerate(q.clause, cand)
-        if isinstance(q, SpanTerm):
-            d, p, n = self._span_term_rows(q.term, cand)
-            return d, p, p + 1, np.zeros(p.size, dtype=np.int64), n
-        if isinstance(q, PayloadFilteredTerm):
-            d, p, n = self._span_term_rows_payload(q.term, cand, q.value, q.op)
+        if isinstance(q, (SpanTerm, PayloadFilteredTerm)):
+            tp = self.term_postings(q.term)
+            if tp is None:
+                return self._SPAN_EMPTY
+            payload = isinstance(q, PayloadFilteredTerm)
+            d, p, n, pl = tp.occurrences(cand, payloads=payload)
+            if payload:
+                # SpanPayloadCheckQuery's collect-and-compare as a mask; a
+                # position without a stored payload (-1) matches nothing
+                keep = (pl >= 0) & self._payload_pred(pl, q.value, q.op)
+                d, p, n = d[keep], p[keep], n[keep]
             return d, p, p + 1, np.zeros(p.size, dtype=np.int64), n
         if isinstance(q, SpanOr):
             parts = [self._span_enumerate(c, cand) for c in q.clauses]
@@ -2754,7 +2668,7 @@ class _BatchEvaluator:
     """Cross-query amortized evaluation over one SegmentContext.
 
     The Spark analog of running Lucene's SearchTask loop against one leaf:
-    per-term postings are decoded and BM25-scored ONCE (shared across every
+    per-term postings are gathered and BM25-scored ONCE (shared across every
     query in the batch), and each boolean-of-terms query reduces to dense
     scatter-adds into a slice-sized float accumulator — O(Σ df_t) per query
     with no sorts or uniques. Float accumulation order is "must clauses in

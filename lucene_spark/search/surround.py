@@ -90,10 +90,11 @@ def _or2(a, b):
 
 
 class _Parser:
-    def __init__(self, tokens, expand: Callable | None):
+    def __init__(self, tokens, expand: Callable | None, key: Callable):
         self.toks = tokens
         self.i = 0
         self.expand = expand  # pattern -> list[str] (df-desc, capped)
+        self.key = key  # word -> term key
 
     def peek(self):
         return self.toks[self.i] if self.i < len(self.toks) else (None, None)
@@ -222,16 +223,22 @@ class _Parser:
             if len(terms) == 1:
                 return SpanTerm(terms[0])
             return SpanOr(tuple(SpanTerm(t) for t in terms))
-        return SpanTerm(word)
+        return SpanTerm(self.key(word))
 
 
 def parse_surround(query: str, expand: Callable | None = None):
     """Parse a surround-language query into the engine's AST. ``expand``
     maps a truncation pattern (``*``/``?``) to its term expansion."""
+    return _parse(query, expand, str)
+
+
+def _parse(query: str, expand: Callable | None, key: Callable):
+    """``parse_surround``, with ``key`` mapping a plain word to its term
+    key (``Searcher.surround_query`` keys it into the default field)."""
     toks = _tokenize(query)
     if not toks:
         return MatchNoDocsQuery()
-    p = _Parser(toks, expand)
+    p = _Parser(toks, expand, key)
     out = p.parse_or()
     if p.i != len(p.toks):
         raise SurroundSyntaxError(

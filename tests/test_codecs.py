@@ -4,6 +4,8 @@ impact skylines."""
 
 import numpy as np
 import pytest
+from hypothesis import given, seed, settings
+from hypothesis import strategies as st
 
 from lucene_spark.codecs.blocks import (
     ENC_BITSET,
@@ -141,3 +143,157 @@ def test_skyline_semantics():
     f = [p[0] for p in sky2]
     n = [p[1] for p in sky2]
     assert f == sorted(f) and n == sorted(n)
+
+
+# --- bulk decode ≡ scalar decode ---------------------------------------------
+
+_KINDS = ("consecutive", "packed", "bitset", "tail", "any")
+
+
+@st.composite
+def _postings(draw):
+    """Several terms' postings: one term per block encoding (consecutive,
+    FOR, bitset, VByte tail) plus random ones, PFOR exceptions, multi-byte
+    docid and position deltas, payloads on some terms, and terms stored
+    without positions whose freqs are large values (feature and
+    field-existence rows)."""
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    terms = []
+    for i, kind in enumerate(_KINDS[:4] + (_KINDS[4],) * draw(st.integers(0, 3))):
+        if kind == "any":
+            kind = _KINDS[int(rng.integers(0, 4))]
+        n = int(rng.integers(1, 127)) if kind == "tail" else int(rng.integers(128, 400))
+        # the first block's range counts from docid -1: a consecutive one
+        # starts at 0, a bitset one's stays below (width + 1) * 128 bits
+        start = {"consecutive": 0, "bitset": int(rng.integers(0, 100))}.get(
+            kind, int(rng.integers(0, 3000))
+        )
+        if kind == "consecutive":
+            docs = start + np.arange(n)
+        elif kind == "bitset":
+            docs = start + np.sort(rng.choice(2 * n, n, replace=False))
+        else:  # gaps up to 2^12 (FOR widths vary; tails get multi-byte deltas)
+            docs = start + np.cumsum(rng.integers(1, 1 << int(rng.integers(4, 13)), n))
+        freqs = rng.integers(1, 4, n)
+        # 1-7 outliers in the first block: PFOR exceptions
+        out = rng.choice(min(n, 128), min(n, int(rng.integers(1, 8))), replace=False)
+        freqs[out] = rng.integers(8, 40, out.size)
+        pos = np.concatenate(
+            [np.cumsum(rng.integers(1, 300, f)) for f in freqs]
+        )  # multi-byte position deltas
+        pay = rng.integers(0, 1 << 16, pos.size) if rng.random() < 0.6 else None
+        terms.append((f"t{i}", docs, freqs, rng.integers(0, 256, n), pos, pay))
+    for i in range(draw(st.integers(1, 2))):  # no positions, freq = a value
+        n = int(rng.integers(1, 400))
+        docs = np.sort(rng.choice(3000, n, replace=False))
+        terms.append((f"b{i}", docs, rng.integers(1, 1 << 16, n),
+                      rng.integers(0, 256, n), None, None))
+    n_single = draw(st.integers(1, 4))
+    singles = [
+        (f"s{i}", int(rng.integers(0, 5000)), int(rng.integers(1, 4)),
+         int(rng.integers(0, 256)), ("pos", "pay", "bare")[i % 3])
+        for i in range(n_single)
+    ]
+    return terms, singles, draw(st.integers(0, 2**32 - 1))
+
+
+@seed(20261018)
+@settings(max_examples=40, deadline=None)
+@given(_postings())
+def test_bulk_decode_matches_scalar(case):
+    """A ``SegmentContext``'s one-pass decode of every row equals
+    the scalar decoders row by row: docids, freqs, norms, positions and
+    payloads, through ``decode_all``, ``decode_blocks`` of block subsets
+    that are not contiguous (before and after the context's full decode),
+    and ``occurrences``; pulsed singletons enter as
+    ``singleton_pseudo_rows``."""
+    import pandas as pd
+
+    from lucene_spark.codecs.blocks import (
+        decode_payloads,
+        decode_positions,
+        encode_positions,
+    )
+    from lucene_spark.index.pseudo import singleton_pseudo_rows
+    from lucene_spark.index.schemas import POSTINGS_COLS
+    from lucene_spark.search.segment import SegmentContext
+
+    terms, singles, pick = case
+    rng = np.random.default_rng(pick)
+    rows, want = [], {}
+    for term, docs, freqs, norms, pos, pay in terms:
+        for r in encode_term_postings(docs, freqs, norms, positions=pos, payloads=pay):
+            f, m = zip(*r.pop("impacts"))
+            rows.append({"term": term, "impact_freqs": f, "impact_norms": m, **r})
+        want[term] = (docs, freqs, norms, pos, pay)
+    seen = {r["encoding"] for r in rows}
+    assert seen == {ENC_CONSECUTIVE, ENC_FOR_DELTA, ENC_BITSET, ENC_VBYTE_TAIL}
+    assert any(r["freqs_enc"][1] for r in rows if r["encoding"] != ENC_VBYTE_TAIL)
+    cols = [c for c in POSTINGS_COLS if c != "segment_id"]
+    pdf = pd.DataFrame(rows)[cols]
+    for t, d, f, n, kind in singles:
+        pos1 = np.cumsum(rng.integers(1, 300, f)) if kind != "bare" else None
+        pay1 = rng.integers(0, 1 << 16, f) if kind == "pay" else None
+        want[t] = ([d], [f], [n], pos1, pay1)
+    td = pd.DataFrame({
+        "term": [t for t, *_ in singles],
+        "singleton_docid": [d for _t, d, *_ in singles],
+        "singleton_freq": [f for _t, _d, f, *_ in singles],
+        "singleton_norm": [n for _t, _d, _f, n, _k in singles],
+        "singleton_positions": [
+            None if want[t][3] is None else encode_positions(np.array([f]), want[t][3])
+            for t, _d, f, *_ in singles
+        ],
+        "singleton_payloads": [
+            None if want[t][4] is None else vbyte_encode(want[t][4])
+            for t, *_ in singles
+        ],
+    })
+    pdf = pd.concat([pdf, singleton_pseudo_rows(td)[cols]], ignore_index=True)
+    pdf = pdf.sample(frac=1.0, random_state=int(pick % 2**31)).assign(segment_id=0)
+    ctx = SegmentContext.from_pdf(pdf, {}, 0, 1 << 20)
+    lazy = SegmentContext.from_pdf(pdf, {}, 0, 1 << 20)  # only decode_blocks
+
+    for term, (docs, freqs, norms, pos, pay) in want.items():
+        tp = ctx.postings[term]
+        for got, exp in zip(tp.decode_all(), (docs, freqs, norms)):
+            assert np.array_equal(got, exp), term
+        # row by row against the scalar decoders
+        blocks = pdf[pdf["term"] == term].sort_values("block_no")
+        per_block = []
+        for r in blocks.itertuples():
+            if r.encoding > ENC_VBYTE_TAIL:
+                d, f = np.array([r.first_docid]), np.array([r.impact_freqs[0]])
+            else:
+                d = decode_block_docids(
+                    r.encoding, r.docids_enc, r.n_docs, r.base_docid, r.last_docid
+                )
+                f = decode_block_freqs(r.encoding, r.freqs_enc, r.n_docs)
+            if r.positions_enc is None:  # no occurrences
+                p = np.zeros(0, dtype=np.int64)
+            else:
+                p = decode_positions(r.positions_enc, f)
+            y = decode_payloads(r.payloads_enc, f) if r.payloads_enc is not None else None
+            per_block.append((d, f, p, y))
+        sub = np.flatnonzero(rng.random(tp.n_blocks) < 0.5)
+        if tp.n_blocks >= 3:
+            sub = np.union1d(sub, [0, tp.n_blocks - 1])  # a gap or the whole run
+        for d, f, _m in (lazy.postings[term].decode_blocks(sub), tp.decode_blocks(sub)):
+            assert np.array_equal(d, np.concatenate([per_block[i][0] for i in sub] or [[]]))
+            assert np.array_equal(f, np.concatenate([per_block[i][1] for i in sub] or [[]]))
+        occ = np.asarray(freqs) if pos is not None else np.zeros(len(docs), np.int64)
+        od, op, on, oy = tp.occurrences(payloads=True)
+        assert np.array_equal(od, np.repeat(docs, occ))
+        assert np.array_equal(on, np.repeat(norms, occ))
+        assert np.array_equal(op, np.concatenate([b[2] for b in per_block]))
+        assert np.array_equal(op, pos if pos is not None else [])
+        exp_y = [b[3] if b[3] is not None else np.full(b[2].size, -1) for b in per_block]
+        assert np.array_equal(oy, np.concatenate(exp_y))
+        if pay is not None:
+            assert np.array_equal(oy, pay)
+        n_occ, pl = tp.payloads()
+        assert np.array_equal(n_occ, occ) and np.array_equal(pl, oy)
+        cand = np.sort(rng.choice(np.asarray(docs), max(1, len(docs) // 3), replace=False))
+        cd, cp, _cn, _cy = tp.occurrences(cand)
+        keep = np.isin(od, cand)
+        assert np.array_equal(cd, od[keep]) and np.array_equal(cp, op[keep])

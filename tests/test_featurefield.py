@@ -128,6 +128,27 @@ def test_feature_boosted_ranking(spark, feat_index):
     assert got[:20] == want[:20]
 
 
+def test_feature_should_next_to_phrase(spark, feat_index):
+    """The FeatureField recipe with a positional MUST: one search task
+    reads the phrase's positions and the feature rows, which store none
+    (their freq is the encoded value); each doc scores phrase + feature."""
+    d, pr = feat_index
+    s = Searcher(spark, d)
+    phrase = s.parse('"alpha beta"')
+    feat = FeatureQuery("pagerank", "saturation", weight=2.0, pivot=10.0)
+    hits = s.search(BooleanQuery(must=(phrase,), should=(feat,)), k=120, with_url=True)
+    hits = hits.collect()
+    assert len(hits) == 120  # every doc holds the phrase
+    assert [r["url"] for r in hits][:20] == sorted(pr, key=lambda u: (-pr[u], u))[:20]
+    p_sc = {r["docid"]: r["score"] for r in s.search(phrase, k=120).collect()}
+    f_sc = {
+        r["docid"]: r["score"]
+        for r in s.search(BooleanQuery(should=(feat,)), k=120).collect()
+    }
+    for r in hits:
+        assert r["score"] == pytest.approx(p_sc[r["docid"]] + f_sc[r["docid"]], rel=1e-6)
+
+
 def test_feature_requires_fields(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("index_feat_bad"))
     df = spark.createDataFrame(

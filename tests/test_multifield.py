@@ -174,6 +174,56 @@ def test_open_ranges_stay_in_field(searcher, fields_py):
     assert expanded(title_tail) == keys("title", lambda t: t >= "w0100")
 
 
+def test_complex_phrase_and_surround_stay_in_field(searcher):
+    """Complex-phrase and surround leaves are keyed into the default
+    field's namespace, plain words and expansions alike; bare keys match
+    nothing on a multi-field index."""
+    from lucene_spark.search.complexphrase import complex_phrase_query
+
+    def count(q):
+        return searcher.count(q)
+
+    exact = count('"w0000 w0001"')
+    assert exact > 0
+    for cp in ("w0000 w0001", "w0000 (w0001 -w9999)"):
+        assert count(complex_phrase_query(searcher, cp)) == exact, cp
+    # an ordered span near lies between the exact and the sloppy phrase
+    sloppy = count(complex_phrase_query(searcher, "w0000 w0001", slop=5))
+    assert exact < sloppy <= count('"w0000 w0001"~5')
+    assert count(complex_phrase_query(searcher, "w0000 w000*")) == count(
+        '"w0000 w000*"'
+    )
+    assert count(complex_phrase_query(searcher, "w0000 w0001~1")) >= exact
+    assert count(searcher.surround_query("w0000 W w0001")) == exact
+    assert count(searcher.surround_query("w0000 W w000*")) == count('"w0000 w000*"')
+
+
+def test_exists_and_phrase_in_one_batch(searcher):
+    """A search_many batch that holds a FieldExistsQuery and a BM25F query
+    (whose existence rows store no positions; their freq is a field
+    length) next to a phrase and a span query answers each as a search of
+    its own."""
+    from lucene_spark.search.query import FieldExistsQuery
+    from lucene_spark.search.spans import SpanNear, SpanTerm
+
+    ns = field_term("body", "")
+    queries = {
+        "exists": FieldExistsQuery("title"),
+        "phrase": '"w0000 w0001"',
+        "span": SpanNear((SpanTerm(ns + "w0000"), SpanTerm(ns + "w0002")), slop=3),
+        "mixed": "_exists_:title AND \"w0000 w0001\"",
+        "bm25f": searcher.combined_field_query("w0003 w0042", {"body": 1.0, "title": 3.0}),
+    }
+    k = N_DOCS
+    got = {}
+    for r in searcher.search_many(queries, k=k).collect():
+        got.setdefault(r["query_id"], []).append((r["docid"], r["score"]))
+    for qid, q in queries.items():
+        alone = [(r["docid"], r["score"]) for r in searcher.search(q, k=k).collect()]
+        assert alone, qid
+        assert got.get(qid) == alone, qid
+
+
 def test_cross_field_bool(searcher, fields_py):
     """title:a OR b = union with per-field scoring, summed."""
     q = "title:w0003 OR w0042"

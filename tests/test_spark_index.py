@@ -157,12 +157,13 @@ def test_pruned_equals_exhaustive(searcher, oracle):
         assert many.get(f"q{i}", []) == want, q
 
 
-def test_windowed_topk_contract_on_skew(spark, tmp_path_factory):
+def test_windowed_topk_contract_on_skew(spark, tmp_path_factory, monkeypatch):
     """Under impact skew (a few very-high-freq docs, the real-web-text
     shape), the windowed block-max top-k that ``search_segment`` runs for a
     term and for a term dismax must (a) return exactly the exhaustive
-    evaluator's top-k and (b) decode fewer than half of its blocks. A
-    conjunction runs the exhaustive evaluator itself."""
+    evaluator's top-k and (b) gather and score fewer than half of its
+    blocks: the distinct (term, block) pairs read through ``decode_blocks``
+    / ``decode_all``. A conjunction runs the exhaustive evaluator itself."""
     import glob
 
     import pyarrow.parquet as pq
@@ -176,6 +177,7 @@ def test_windowed_topk_contract_on_skew(spark, tmp_path_factory):
     from lucene_spark.search.segment import (
         SegmentContext,
         _SegmentSearcher,
+        _TermPostings,
         _topk,
         search_segment,
     )
@@ -208,11 +210,25 @@ def test_windowed_topk_contract_on_skew(spark, tmp_path_factory):
         [term, dismax, conj], {"wa": (n, n), "wb": (n, n)}, n, 3 * n, "lucene"
     )
 
+    gathered: set = set()
+
+    def decode_blocks(tp, idxs):
+        gathered.update((tp.lo, int(i)) for i in idxs)
+        return blocks(tp, idxs)
+
+    def decode_all(tp):
+        gathered.update((tp.lo, i) for i in range(tp.n_blocks))
+        return every(tp)
+
+    blocks, every = _TermPostings.decode_blocks, _TermPostings.decode_all
+    monkeypatch.setattr(_TermPostings, "decode_blocks", decode_blocks)
+    monkeypatch.setattr(_TermPostings, "decode_all", decode_all)
+
     def run(q, fn):
         ctx = SegmentContext.from_pdf(sub, scorers, 0, n)
+        gathered.clear()
         dd, ss = fn(ctx, q)
-        decoded = sum(len(tp._decoded) for tp in ctx.postings.values())
-        return (list(dd), [np.float32(x) for x in ss]), decoded
+        return (list(dd), [np.float32(x) for x in ss]), len(gathered)
 
     def exhaustive(ctx, q):
         return _topk(*_SegmentSearcher(ctx, 5).evaluate(q), 5)

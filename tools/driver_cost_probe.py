@@ -17,9 +17,9 @@ Measures, at local[--cores]:
 Each figure is the median of --reps timed runs after one warm-up. The
 constants of ``searcher._driver_ms`` are fitted over all sizes at once, so
 that the estimate follows the index size: the per-task read as a line in
-the task's docid span, then the cost per posting (per positions posting),
-per docmap doc and per query by least squares on what the earlier terms
-leave. It prints each size's measured against fitted ms, then the
+the task's docid span, then the cost per posting (per positions posting)
+and per docmap doc by least squares on what the earlier terms leave. The
+batch is measured against the fit, not fitted. It prints each size's measured against fitted ms, then the
 constants; WAVE_MS is the 1-task wave.
 
 Usage:
@@ -58,7 +58,7 @@ from lucene_spark.search.query import collect_terms  # noqa: E402
 from lucene_spark.search.searcher import (  # noqa: E402
     _all_body,
     _batch_body,
-    _needs_positions,
+    _plan_reads,
     _run_slice,
     _top_k_body,
     plan_slices,
@@ -107,7 +107,7 @@ def driver_ms(searcher, queries: list, body, reps: int) -> tuple[float, dict]:
     tstats = searcher._term_stats(terms)
     seg_meta = searcher._seg_meta()
     tasks = plan_slices(seg_meta, searcher._slice_span())
-    positions = any(map(_needs_positions, queries))
+    positions = _plan_reads(queries)[2]
     cols = [c for c in POSTINGS_COLS if c != "payloads_enc"]
     if not positions:
         cols.remove("positions_enc")
@@ -154,7 +154,6 @@ def probe_index(searcher, args) -> dict:
         searcher, list(parsed.values()), partial(_batch_body, queries=parsed, k=K),
         max(1, args.reps // 2),
     )
-    out["n_queries"] = len(parsed)
     return out
 
 
@@ -162,8 +161,7 @@ def fit(rows: dict) -> dict[str, float]:
     """The constants of ``searcher._driver_ms``, fitted over every size:
     the per-task read as a line in the task's docid span, then each
     per-unit cost by least squares through the origin on what the earlier
-    terms leave (a posting of a term, a positions posting, a docmap doc,
-    a query)."""
+    terms leave (a posting of a term, a positions posting, a docmap doc)."""
     absent = [r["absent"] for r in rows.values()]
     slope, icept = np.polyfit(
         [inp["docs"] / inp["tasks"] for _ms, inp in absent],
@@ -188,22 +186,16 @@ def fit(rows: dict) -> dict[str, float]:
     c["DOC_MS"] = through_origin([
         (r["all"][1]["docs"], r["all"][0] - read(r["all"][1])) for r in rows.values()
     ])
-    pts = []
-    for r in rows.values():
-        ms, inp = r["batch"]
-        per = c["POSITION_POSTING_MS" if inp["positions"] else "POSTING_MS"]
-        pts.append((r["n_queries"], ms - read(inp) - per * inp["postings"]))
-    c["QUERY_MS"] = through_origin(pts)
     return c
 
 
-def predicted(c: dict, inp: dict, n_queries: int = 1, docs: bool = False) -> float:
+def predicted(c: dict, inp: dict, docs: bool = False) -> float:
     """``searcher._driver_ms`` of ``inp`` under the constants ``c``."""
     per = c["POSITION_POSTING_MS" if inp["positions"] else "POSTING_MS"]
     return (
         c["TASK_MS"] * inp["tasks"]
         + (c["TASK_DOC_MS"] + (c["DOC_MS"] if docs else 0.0)) * inp["docs"]
-        + per * inp["postings"] + c["QUERY_MS"] * n_queries
+        + per * inp["postings"]
     )
 
 
@@ -253,8 +245,7 @@ def main() -> int:
                 f"| {n_docs} | {inp['tasks']} | {inp['docs'] / inp['tasks']:.0f} "
                 f"| {ms:.1f} / {predicted(c, inp):.1f} | {terms:.0f} / {fitted:.0f} "
                 f"| {r['all'][0]:.0f} / {predicted(c, r['all'][1], docs=True):.0f} "
-                f"| {r['batch'][0]:.0f} / "
-                f"{predicted(c, r['batch'][1], r['n_queries']):.0f} |"
+                f"| {r['batch'][0]:.0f} / {predicted(c, r['batch'][1]):.0f} |"
             )
         print("\nconstants for search/searcher.py:")
         print(f"WAVE_MS = {waves[1]:.0f}")

@@ -12,10 +12,11 @@ through
   ``_topk``),
 
 at each docid slice span. Every per-slice top-k must be bit-identical
-(docids and float32 scores) between the two. Prints best-of-R kernel
-milliseconds per shape and span; ``SegmentContext.from_pdf`` is outside the
-timed region and every timed call gets a fresh context, so no decode is
-cached across calls.
+(docids and float32 scores) between the two. Prints best-of-R
+milliseconds per shape and span of ``SegmentContext.from_pdf`` plus the
+kernel (which decodes the postings it reads), summed over the tasks: every
+timed call builds a fresh context, so nothing decoded is cached across
+calls.
 
 ``--batch N`` replays instead one ``perfbench.corpus.batch_queries`` batch
 of N queries per slice through ``batch_search_segment`` (the dense batch
@@ -139,15 +140,16 @@ def exhaustive(ctx: SegmentContext, ast, k: int):
 
 
 def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
-    """Best-of-reps Σ over tasks of fn's time, and the last rep's results."""
+    """Best-of-reps Σ over tasks of the time of from_pdf and fn, and the
+    last rep's results."""
     best, results = float("inf"), []
     for _ in range(reps):
         total, results = 0.0, []
         for pdf, lo, hi in tasks:
+            t0 = time.perf_counter()
             # True selects the pruned paths on a checkout that still has the
             # prune flag (to measure it); the current from_pdf ignores it
             ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi, True)
-            t0 = time.perf_counter()
             d, s = fn(ctx, ast, k)
             total += time.perf_counter() - t0
             results.append((d.tolist(), np.asarray(s, dtype=np.float32).tobytes()))
