@@ -9,9 +9,10 @@ semantics of Apache Lucene (reference: /root/reference, base version 11.0.0):
   (delta + FOR / VByte / unary-bitset, 128-doc blocks, block-max impacts),
 - shuffle-based sorted segment merge into a global term dictionary,
 - top-k BM25 (k1=1.2, b=0.75): windowed block-max pruning for single
-  terms and term dismax, an exhaustive leapfrog evaluator for everything
-  else, rank-identical to Lucene's scoring contract (float32, tie-break
-  score DESC then docid ASC).
+  terms and term dismax on wide slices, an exhaustive evaluator (booleans
+  in dense slice-wide accumulators) for everything else and for query
+  batches, rank-identical to Lucene's scoring contract (float32,
+  tie-break score DESC then docid ASC).
 
 The index is a set of columnar tables (Parquet here; Iceberg in production —
 the layout maps 1:1 onto Iceberg partitioned tables and snapshot commits).

@@ -968,9 +968,11 @@ _TOKEN_RE = re.compile(
         (?P<lparen>\() | (?P<rparen>\)) |
         (?P<and>AND\b) | (?P<or>OR\b) | (?P<not>NOT\b) |
         (?P<plus>\+) | (?P<minus>-(?=\S)) | (?P<stray_minus>-) |
-        (?P<range>[\[\{]\s*(?P<range_lo>\S+)\s+TO\s+(?P<range_hi>\S+)\s*[\]\}])
+        (?P<range>(?:(?P<range_field>[^\s()\[\]{}":/\\]+):)?(?P<range_open>[\[\{])
+            \s*(?P<range_lo>\S+)\s+TO\s+(?P<range_hi>\S+)\s*(?P<range_close>[\]\}]))
             (?P<range_suffix>\^[0-9.]+)? |
-        (?P<regex>/(?P<regex_body>(?:[^/\\]|\\.)*)/)(?P<regex_suffix>\^[0-9.]+)? |
+        (?P<regex>(?:(?P<regex_field>[^\s()\[\]{}":/\\]+):(?!//))?
+            /(?P<regex_body>(?:[^/\\]|\\.)*)/)(?P<regex_suffix>\^[0-9.]+)? |
         (?P<phrase>"(?P<phrase_body>(?:[^"\\]|\\.)*)")(?P<phrase_suffix>(?:~\d+)?(?:\^[0-9.]+)?) |
         (?P<word>(?:\\.|[^\s()+\-"/\\])(?:\\.|[^\s()"\\])*)
     )""",
@@ -1022,15 +1024,18 @@ class _Tokens:
                     break
             else:
                 if m.group("range") is not None:
-                    incl_lo = m.group("range").lstrip()[0] == "["
-                    incl_hi = m.group("range").rstrip()[-1] == "]"
+                    incl_lo = m.group("range_open") == "["
+                    incl_hi = m.group("range_close") == "]"
                     boost = float((m.group("range_suffix") or "^1")[1:])
                     self.toks.append(
-                        ("range", (m.group("range_lo"), m.group("range_hi"), incl_lo, incl_hi, boost))
+                        ("range", (m.group("range_lo"), m.group("range_hi"), incl_lo,
+                                   incl_hi, boost, m.group("range_field")))
                     )
                 elif m.group("regex") is not None:
                     boost = float((m.group("regex_suffix") or "^1")[1:])
-                    self.toks.append(("regex", (m.group("regex_body"), boost)))
+                    self.toks.append(
+                        ("regex", (m.group("regex_body"), boost, m.group("regex_field")))
+                    )
                 elif m.group("phrase") is not None:
                     suffix = m.group("phrase_suffix") or ""
                     slop_m = re.search(r"~(\d+)", suffix)
@@ -1167,20 +1172,25 @@ def _make_leaf(kind: str, val, analyzer, fmap=None) -> object:
         return boosted(
             PhraseQuery(tuple(key(None, t.term) for t in toks), slop=slop), boost
         )
+    # a ``field:`` prefix keys the bounds or the pattern into its field (an
+    # empty pattern takes none: ``http://x`` tokenizes as a word)
     if kind == "range":
-        lo, hi, incl_lo, incl_hi, boost = val
+        lo, hi, incl_lo, incl_hi, boost, field = val
+        if field is not None and lo == hi == "*" and fmap is not None:
+            # ``field:[* TO *]``: every term of the field, past its bare key
+            lo, incl_lo = "", False
         return boosted(
             TermRangeQuery(
-                None if lo == "*" else key(None, lo.lower()),
-                None if hi == "*" else key(None, hi.lower()),
+                None if lo == "*" else key(field, lo.lower()),
+                None if hi == "*" else key(field, hi.lower()),
                 include_lower=incl_lo,
                 include_upper=incl_hi,
             ),
             boost,
         )
     if kind == "regex":
-        body, boost = val
-        return boosted(RegexpQuery(body), boost)
+        body, boost, field = val
+        return boosted(RegexpQuery(key(field, body) if fmap else body), boost)
     return _make_word_leaf(val, analyzer, fmap)
 
 

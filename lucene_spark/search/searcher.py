@@ -51,7 +51,10 @@ entry point      kernel (segment.py)       result shape
                                            call; ``with_url`` reads the k
                                            urls with pyarrow
 ``search_many``  ``batch_search_segment``  top k per query_id, merged on the
-                                           driver inside the call
+                 (``search_segment`` per   driver inside the call
+                 query on one context,
+                 so the queries share its
+                 scored terms)
 ``search_all``   ``exhaustive_hits``       every hit, no cut: local rows
                                            when run on the driver, else the
                                            lazy Spark stage
@@ -128,6 +131,7 @@ from .query import (
 )
 from .scorers import build_scorers
 from .segment import (
+    MAX_SPAN,
     WINDOW_DOCS,
     SegmentContext,
     _SegmentSearcher,
@@ -226,8 +230,12 @@ def _plan_reads(queries) -> tuple[bool, bool, bool, bool, bool]:
 
 def plan_slices(seg_meta: dict, span: int | None) -> list[tuple[int, int, int]]:
     """(segment, lo, hi) of every search task: the stored docids [lo, hi)
-    where a segment's range meets one ``span``-doc window (the whole range
-    when ``span`` is None), widest first.
+    where a segment's range meets one window of ``span`` docs, at most
+    ``MAX_SPAN``, the bound of the arrays a task sizes by its span; widest
+    first. A ``span`` of None plans one task per segment instead, for
+    block-join trees, whose doc blocks never cross segments but may
+    straddle slices: such a task allocates those arrays (up to 13 bytes a
+    doc) for its whole segment.
 
     On Spark, task i runs as partition i and the scheduler launches
     partitions in order, so widest first (LPT) lets the short partial
@@ -241,8 +249,9 @@ def plan_slices(seg_meta: dict, span: int | None) -> list[tuple[int, int, int]]:
         if not span:
             out.append((seg, lo, hi))
             continue
-        for sl in range(lo // span, (hi - 1) // span + 1):
-            out.append((seg, max(lo, sl * span), min(hi, (sl + 1) * span)))
+        step = min(span, MAX_SPAN)
+        for sl in range(lo // step, (hi - 1) // step + 1):
+            out.append((seg, max(lo, sl * step), min(hi, (sl + 1) * step)))
     return sorted(out, key=lambda t: t[1] - t[2])
 
 
@@ -371,9 +380,9 @@ class Searcher:
         # IndexSearcher.java:106-108): None = auto-pick a docid span that
         # gives about defaultParallelism tasks, so a few merged segments
         # still fan out across every core in one wave; 0 = one task per
-        # segment. The span shapes the tasks wherever they run; whether
-        # they run on the driver or on Spark is sized by their work
-        # (``_slices``).
+        # segment (up to MAX_SPAN docs). The span shapes the tasks wherever
+        # they run; whether they run on the driver or on Spark is sized by
+        # their work (``_slices``).
         self.slice_docs = slice_docs
         from ..index.builder import get_analyzer
 
@@ -428,16 +437,17 @@ class Searcher:
 
         return key
 
-    def _slice_span(self) -> int | None:
-        """Docid span per search slice, or None for one slice per segment.
-        The auto span aims at ``defaultParallelism`` tasks, so a plan that
-        runs on Spark runs in one wave."""
+    def _slice_span(self) -> int:
+        """Docid span per search slice; ``MAX_SPAN`` for one slice per
+        segment, up to that bound. The auto span aims at
+        ``defaultParallelism`` tasks, so a plan that runs on Spark runs in
+        one wave."""
         if self.slice_docs is not None:
-            return self.slice_docs or None
+            return self.slice_docs or MAX_SPAN
         n_seg = len(self.reader.manifest_rows)
         par = self.spark.sparkContext.defaultParallelism
         if n_seg >= par:
-            return None  # segment-level parallelism already saturates cores
+            return MAX_SPAN  # segment-level parallelism already saturates cores
         total = self.reader.global_stats[0]
         span = max(WINDOW_DOCS, -(-total // par))
         return ((span + WINDOW_DOCS - 1) // WINDOW_DOCS) * WINDOW_DOCS
@@ -1044,20 +1054,24 @@ class Searcher:
                 return MatchNoDocsQuery()
             return BooleanQuery(should=tuple(TermQuery(t, q.boost) for t in terms))
         if isinstance(q, RegexpQuery):
-            rx = q.pattern
+            pfx, rx = "", q.pattern
+            if self.fields:
+                # the regex applies to the token, anchored inside its field's
+                # namespace: the parser keys the pattern into its field, and
+                # a bare pattern searches the default field
+                cut = rx.find(FIELD_SEP) + 1
+                pfx = rx[:cut] if cut else field_term(self.default_field, "")
+                rx = rx[cut:]
             if not rx.startswith("^"):
                 rx = "^" + rx
             if not rx.endswith("$"):
                 rx = rx + "$"
-            pfx = None
-            if self.fields:
-                # regex applies to the token; anchor it inside the default
-                # field's namespace
-                import re as _re
+            import re as _re
 
-                pfx = field_term(self.default_field, "")
-                rx = "^" + _re.escape(pfx) + rx[1:]
-            terms = self.reader.expand_terms(prefix=pfx, pattern=rx, max_terms=max_terms)
+            rx = "^" + _re.escape(pfx) + rx[1:]
+            terms = self.reader.expand_terms(
+                prefix=pfx or None, pattern=rx, max_terms=max_terms
+            )
             if not terms:
                 return MatchNoDocsQuery()
             return BooleanQuery(should=tuple(TermQuery(t, q.boost) for t in terms))

@@ -11,26 +11,34 @@ and payloads on their first read, in one more pass. Every postings read is
 then a slice or gather of those arrays; the windowed top-k below reads
 only the blocks of the windows it visits, and decodes only those:
 
-- conjunction: successive ``np.isin`` with a *block-level leapfrog*
-  prefilter — a term's postings are only gathered from blocks whose
-  [first,last] docid span contains a current candidate (ConjunctionDISI
-  lead/advance semantics, search/ConjunctionDISI.java, at 128-doc
-  granularity);
-- exclusion: ``np.isin(..., invert=True)`` (ReqExclScorer);
+- boolean: BooleanScorer's bucket array, one window as wide as the task's
+  docid slice (``MAX_SPAN`` bounds it). Each clause's slice-relative docids
+  and scores scatter-add into span-sized score and match-count arrays, and
+  only the touched entries are reset; a term's slice-relative docids and
+  scores are memoised per context, so the queries of a batch score a term
+  once. A conjunction's candidates are its shortest MUST clause's docs
+  that every MUST clause counted;
+- exclusion: a span-sized mark array (ReqExclScorer);
 - phrases, spans and intervals: position adjacency over the occurrences of
   the candidate docs, gathered from the flat positions
   (``_TermPostings.occurrences``, ExactPhraseMatcher).
 
-``search_segment`` picks the evaluator by one rule:
+``search_segment`` is the one place that picks an evaluator, for ``search``
+and ``search_many`` alike (``batch_search_segment`` runs it per query):
 
-- a ``TermQuery``, or a ``DisjunctionMaxQuery`` whose disjuncts are all
-  ``TermQuery``, runs the windowed block-max top-k (ImpactsDISI /
-  MaxScoreCache semantics, search/MaxScoreCache.java:72-79, with the
-  WANDScorer dismax bound): the docid space is cut into 4096-doc windows
+- in ``search``, on a slice wider than one window, a ``TermQuery``, or a
+  ``DisjunctionMaxQuery`` whose disjuncts are all ``TermQuery``, runs the
+  windowed block-max top-k (ImpactsDISI / MaxScoreCache semantics,
+  search/MaxScoreCache.java:72-79, with the WANDScorer dismax bound): the
+  docid space is cut into 4096-doc windows
   (MaxScoreBulkScorer.INNER_WINDOW_SIZE), each window's upper bound comes
-  from the per-block impact skylines, windows run in descending-UB order and
-  evaluation stops once UB < θ (the k-th best score so far);
-- every other query runs the exhaustive evaluator + top-k.
+  from the per-block impact skylines, windows run in descending-UB order
+  and evaluation stops once UB < θ (the k-th best score so far);
+- every other query, every query on a slice of one window (which leaves
+  the windowed top-k nothing to skip) and every query of a ``search_many``
+  batch runs the exhaustive evaluator + top-k. A batch shares one context
+  per task, which scores each term once for all its queries, so a term's
+  top-k there is one partition of memoised scores.
 
 The rule is measured, not assumed (tools/evaluator_probe.py: ``from_pdf``
 plus the kernel per task, k=10, 4-core VM, best of 2, every result
@@ -40,14 +48,23 @@ terms 20–31 ms against 138–159 ms; the three rarest lose, 29–43 ms
 against ~1 ms), and two hot-term dismax queries in 114 ms against 701 ms.
 On 127k-doc slices of a 130k-doc segment the two paths tie (single terms
 113 against 109 ms summed, dismax 103 against 104 ms); on 16k-doc slices
-the windowed path loses (285 against 203 ms, 232 against 127 ms).
+the windowed path loses (285 against 203 ms, 232 against 127 ms). In a
+batch of 1000 ``perfbench`` queries (``batch_queries``) on the 130k-doc
+segment, its 339 single-term queries took 3987 ms windowed against 707 ms
+over the memoised scores on 16k-doc slices, and 1615 against 468 ms on
+the whole segment.
 Block-max pruning of the 13 multi-term boolean shapes lost to the
 exhaustive evaluator in sum at 16k, 127k and 1M-doc slices (1M, before
-the bulk decode: 4.3 s against 3.9 s, 8.0 s against 7.0 s), and by 9× on
-``hot AND rare``, where the rarest-lead leapfrog of ``_conjunction_terms``
-already skips the work.
-``batch_search_segment`` keeps the dense ``_BatchEvaluator`` for term-only
-booleans: it scores each term once for a whole query batch.
+the bulk decode: 4.3 s against 3.9 s, 8.0 s against 7.0 s).
+A sparse boolean evaluator (``np.unique`` / ``np.isin``, with a
+rarest-lead block leapfrog for conjunctions) measured the same in sum on
+the 13 boolean shapes of a 130k-doc segment (498 against 504 ms dense on
+the whole segment, 689 against 734 ms on 16k-doc slices, inside the
+probe's run-to-run spread: the phrase shape read 497 to 660 ms across
+runs); it won only where
+list lengths differ by orders of magnitude (``hot AND rare``: 3.9 against
+20.5 ms, 13 against 45 ms), because the leapfrog left the hot list
+undecoded.
 
 Float accumulation order is "ascending clause index, then doc", identical in
 the exhaustive and windowed paths, so float32 scores are bit-identical across
@@ -99,10 +116,16 @@ __all__ = [
     "search_segment",
     "exhaustive_hits",
     "batch_search_segment",
+    "MAX_SPAN",
     "WINDOW_DOCS",
 ]
 
 WINDOW_DOCS = 4096  # MaxScoreBulkScorer.INNER_WINDOW_SIZE (:28)
+# docs per search task (``searcher.plan_slices`` cuts every task at it): the
+# bound of every array a task sizes by its docid span, the boolean
+# accumulators (13 bytes a doc at float64, ~440 MB) and the filter bitsets
+# (2 bytes a doc)
+MAX_SPAN = 1 << 25
 
 _EMPTY = np.zeros(0, dtype=np.int64)
 
@@ -338,9 +361,11 @@ class SegmentContext:
         # the range, so it is not np.arange(min_doc, max_doc).
         self.docs: np.ndarray | None = None
         self.cache_key = cache_key
-        # per-leaf (docids, scores) memo shared across a batch of queries
-        # evaluated against this context (search_many runs hundreds of
-        # queries per (segment, slice) task; hot terms repeat across them)
+        # shared by every query evaluated against this context (search_many
+        # runs hundreds per (segment, slice) task; hot terms repeat across
+        # them): per term, its slice-relative (docids, scores) and its
+        # block-max window map; per score dtype, the boolean accumulators
+        # (``_SegmentSearcher._accumulators``)
         self.eval_cache: dict = {}
 
     @classmethod
@@ -469,19 +494,15 @@ def _float_dtype(scorer) -> np.dtype:
 def _topk(docids: np.ndarray, scores: np.ndarray, k: int):
     if k <= 0 or docids.size == 0:
         return _EMPTY, scores[:0]
-    if docids.size <= k:
-        order = np.lexsort((docids, -scores.astype(np.float64)))
-        return docids[order], scores[order]
-    # partial select, then resolve boundary ties (score == kth) by docid ASC
-    idx = np.argpartition(-scores.astype(np.float64), k - 1)[:k]
-    kth = scores[idx].min()
-    above = np.flatnonzero(scores > kth)
-    tied = np.flatnonzero(scores == kth)
-    tied = tied[np.argsort(docids[tied], kind="stable")][: k - above.size]
-    sel = np.concatenate((above, tied))
-    order = np.lexsort((docids[sel], -scores[sel].astype(np.float64)))
-    sel = sel[order]
-    return docids[sel], scores[sel]
+    neg = -scores
+    if docids.size > k:
+        # every hit scoring at least the k-th best, boundary ties included;
+        # the sort below resolves them by docid ASC
+        sel = np.flatnonzero(neg <= np.partition(neg, k - 1)[k - 1])
+        order = sel[np.lexsort((docids[sel], neg[sel]))[:k]]
+    else:
+        order = np.lexsort((docids, neg))
+    return docids[order], scores[order]
 
 
 def _containment_antichain(doc_i, starts, ends, kp, return_index=False):
@@ -629,23 +650,6 @@ def _atleast_replay(doc_subs, m: int):
     return emitted
 
 
-def _sum_contributions(parts: list[tuple[np.ndarray, np.ndarray]], dtype):
-    """Union-sum (docid, score) contributions; adds happen in list order for
-    each doc (DisjunctionSumScorer float order)."""
-    parts = [p for p in parts if p[0].size]
-    if not parts:
-        return _EMPTY, np.zeros(0, dtype=dtype)
-    if len(parts) == 1:
-        # already sorted-unique (one term's postings) — skip the unique
-        return parts[0][0], parts[0][1].astype(dtype, copy=False)
-    alld = np.concatenate([p[0] for p in parts])
-    alls = np.concatenate([p[1] for p in parts])
-    uniq, inv = np.unique(alld, return_inverse=True)
-    sums = np.zeros(uniq.size, dtype=dtype)
-    np.add.at(sums, inv, alls.astype(dtype))
-    return uniq, sums
-
-
 class _SegmentSearcher:
     def __init__(self, ctx: SegmentContext, k: int):
         self.ctx = ctx
@@ -665,7 +669,7 @@ class _SegmentSearcher:
         if (
             span > 0
             and min(base.size, d.size) * 32 >= span  # DENSITY_THRESHOLD_INVERSE
-            and span <= (1 << 26)  # bitset alloc bound: 64 MB of bools
+            and span <= MAX_SPAN  # block-join tasks may be wider
         ):
             lo, hi = self.ctx.min_doc, self.ctx.max_doc
             acc = np.zeros(span, dtype=bool)
@@ -780,7 +784,7 @@ class _SegmentSearcher:
                     )
                     if base.size == 0:
                         return _EMPTY
-                if q.min_should_match > 0 and q.should:
+                if q.min_should_match > 0:
                     cnt = np.zeros(base.size, dtype=np.int64)
                     for c in q.should:
                         d = self.matching_docs(c)
@@ -817,19 +821,11 @@ class _SegmentSearcher:
     def evaluate(self, q) -> tuple[np.ndarray, np.ndarray]:
         """Returns (sorted docids, scores aligned)."""
         if isinstance(q, TermQuery):
-            got = self.ctx.eval_cache.get(q)
-            if got is not None:
-                return got
-            tp = self.term_postings(q.term)
-            sc = self.ctx.scorers[q]
-            dtype = _float_dtype(sc)
-            if tp is None:
-                out = (_EMPTY, np.zeros(0, dtype=dtype))
-            else:
-                d, f, m = tp.decode_all()
-                out = (d, sc.score(f, m).astype(dtype))
-            self.ctx.eval_cache[q] = out
-            return out
+            d, s = self._rel(q)
+            return d + self.ctx.min_doc, s
+        if isinstance(q, BooleanQuery):
+            d, s = self._evaluate_bool(q)
+            return d + self.ctx.min_doc, s
         if isinstance(q, PhraseQuery):
             return self._phrase_scores(q)
         if isinstance(q, MultiPhraseQuery):
@@ -876,8 +872,6 @@ class _SegmentSearcher:
             return self._evaluate_child_join(q)
         if isinstance(q, ParentChildrenBlockJoinQuery):
             return self._evaluate_parent_children(q)
-        if isinstance(q, BooleanQuery):
-            return self._evaluate_bool(q)
         raise TypeError(f"unsupported query node {type(q)}")
 
     def _child_docs_of(self, pd: np.ndarray, parents: np.ndarray):
@@ -1111,106 +1105,101 @@ class _SegmentSearcher:
         out = maxs + q.tie_breaker * (sums - maxs)
         return uniq, out.astype(dtype)
 
-    def _evaluate_bool(self, q: BooleanQuery) -> tuple[np.ndarray, np.ndarray]:
-        must, should, must_not = list(q.must), list(q.should), list(q.must_not)
-        msm = q.min_should_match
-        if must:
-            if all(isinstance(c, TermQuery) for c in must):
-                base, score = self._conjunction_terms(must)
-            else:
-                base, score = self._conjunction_general(must)
-            if base.size and should:
-                # ReqOptSumScorer: optional clauses add to required matches;
-                # with msm > 0 a required doc must also match ≥ msm SHOULDs
-                parts = [(base, score)]
-                n_matched = np.zeros(base.size, dtype=np.int64)
-                for c in should:
-                    d, s = self.evaluate(c)
-                    mask = np.isin(d, base)
-                    d, s = d[mask], s[mask]
-                    parts.append((d, s))
-                    if msm > 0 and d.size:
-                        n_matched[np.searchsorted(base, d)] += 1
-                keep_docs = base if msm <= 0 else base[n_matched >= msm]
-                base, score = _sum_contributions(parts, score.dtype)
-                if msm > 0:
-                    keep = np.isin(base, keep_docs)
-                    base, score = base[keep], score[keep]
-        elif should:
-            parts = [self.evaluate(c) for c in should]
-            dtype = parts[0][1].dtype if parts else np.float32
-            if msm > 1:
-                counts_d = [p[0] for p in parts if p[0].size]
-                if counts_d:
-                    alld = np.concatenate(counts_d)
-                    uniq, cnt = np.unique(alld, return_counts=True)
-                    keep_docs = uniq[cnt >= msm]
+    def _rel(self, q) -> tuple[np.ndarray, np.ndarray]:
+        """(slice-relative docids, scores) of a scored clause. A term's are
+        memoised per context, as the queries of a batch share their terms."""
+        if isinstance(q, TermQuery):
+            got = self.ctx.eval_cache.get(q)
+            if got is None:
+                tp = self.term_postings(q.term)
+                sc = self.ctx.scorers[q]
+                dtype = _float_dtype(sc)
+                if tp is None:
+                    got = (_EMPTY, np.zeros(0, dtype=dtype))
                 else:
-                    keep_docs = _EMPTY
-                base, score = _sum_contributions(parts, dtype)
-                keep = np.isin(base, keep_docs)
-                base, score = base[keep], score[keep]
-            else:
-                base, score = _sum_contributions(parts, dtype)
-        else:
+                    # the slice's postings only: straddling blocks hold docs
+                    # of the neighbouring slices
+                    d, f, m = tp.decode_all()
+                    lo = self.ctx.min_doc
+                    a, b = np.searchsorted(d, (lo, self.ctx.max_doc))
+                    got = (d[a:b] - lo, sc.score(f[a:b], m[a:b]).astype(dtype))
+                self.ctx.eval_cache[q] = got
+            return got
+        if isinstance(q, BooleanQuery):
+            return self._evaluate_bool(q)
+        d, s = self.evaluate(q)
+        keep = (d >= self.ctx.min_doc) & (d < self.ctx.max_doc)
+        return d[keep] - self.ctx.min_doc, s[keep]
+
+    def _accumulators(self, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The context's slice-wide (score, match count, exclusion mark)
+        arrays for ``dtype`` scores, all zero between boolean evaluations."""
+        key = ("acc", np.dtype(dtype))
+        got = self.ctx.eval_cache.get(key)
+        if got is None:
+            n = max(self.ctx.max_doc - self.ctx.min_doc, 0)
+            got = self.ctx.eval_cache[key] = (
+                np.zeros(n, dtype=dtype),
+                np.zeros(n, dtype=np.int32),
+                np.zeros(n, dtype=bool),
+            )
+        return got
+
+    def _evaluate_bool(self, q: BooleanQuery) -> tuple[np.ndarray, np.ndarray]:
+        """Scored BooleanQuery as (sorted slice-relative docids, scores):
+        BooleanScorer's bucket array, one window as wide as the slice. Every
+        clause is evaluated first, so a nested boolean is done with the
+        accumulators before this one scatters into them; the indices it
+        touched are reset on the way out. Scores add in "MUST clauses in
+        clause order, then SHOULD clauses in clause order", each operand cast
+        to the accumulator dtype (the first clause's) before the add."""
+        must = [self._rel(c) for c in q.must]
+        should = [self._rel(c) for c in q.should]
+        if not (must or should):
             return _EMPTY, np.zeros(0, dtype=np.float32)
-        if base.size and must_not:
-            excl = [self.matching_docs(c) for c in must_not]
-            excl = np.concatenate([e for e in excl if e.size]) if any(e.size for e in excl) else _EMPTY
-            if excl.size:
-                keep = np.isin(base, excl, invert=True)
-                base, score = base[keep], score[keep]
-        return base, score
-
-    def _conjunction_terms(self, term_qs: list) -> tuple[np.ndarray, np.ndarray]:
-        """Leapfrog AND at block granularity: lead with the rarest term
-        (ConjunctionDISI orders by cost), gather other terms' blocks only
-        where candidates remain."""
-        dtype = _float_dtype(self.ctx.scorers[term_qs[0]])
-        tps = []
-        for tq in term_qs:
-            tp = self.term_postings(tq.term)
-            if tp is None:
+        dtype = (must or should)[0][1].dtype
+        if must:
+            lead = min((d for d, _s in must), key=len)
+            if not lead.size:
                 return _EMPTY, np.zeros(0, dtype=dtype)
-            tps.append((tq.term, tp))
-        # lead with the cheapest list (ConjunctionDISI cost order); block
-        # count is the df/128 proxy for cost
-        tps.sort(key=lambda p: p[1].n_blocks)
-        t, lead = tps[0]
-        decoded = {t: lead.decode_blocks(np.arange(lead.n_blocks))}
-        cand = decoded[t][0]
-        for t, tp in tps[1:]:
-            if cand.size == 0:
-                break
-            idxs = tp.blocks_overlapping(cand)
-            d, f, m = tp.decode_blocks(idxs)
-            decoded[t] = (d, f, m)
-            cand = cand[np.isin(cand, d)]
-        if cand.size == 0:
-            return _EMPTY, np.zeros(0, dtype=dtype)
-        # score in original clause order
-        score = np.zeros(cand.size, dtype=dtype)
-        for tq in term_qs:
-            tp = self.term_postings(tq.term)
-            d, f, m = decoded.get(tq.term) or tp.decode_all()
-            pos = np.searchsorted(d, cand)
-            sc = self.ctx.scorers[tq]
-            score += sc.score(f[pos], m[pos]).astype(dtype)
-        return cand, score
-
-    def _conjunction_general(self, clauses) -> tuple[np.ndarray, np.ndarray]:
-        evaluated = [self.evaluate(c) for c in clauses]
-        base = evaluated[0][0]
-        for d, _s in evaluated[1:]:
-            base = base[np.isin(base, d)]
-            if base.size == 0:
-                break
-        dtype = evaluated[0][1].dtype
-        score = np.zeros(base.size, dtype=dtype)
-        for d, s in evaluated:
-            pos = np.searchsorted(d, base)
-            score += s[pos].astype(dtype)
-        return base, score
+        msm = q.min_should_match
+        # SHOULD matches are counted for minShouldMatch, and without MUST
+        # clauses to find the union
+        count = msm > 0 or not must
+        acc, cnt, excl = self._accumulators(dtype)
+        touched = [d for d, _s in must + should]  # to zero on the way out
+        try:
+            for d, s in must:
+                acc[d] += s if s.dtype == dtype else s.astype(dtype)
+                cnt[d] += 1
+            if must:
+                cand = lead[cnt[lead] == len(must)]
+            for d, s in should:
+                acc[d] += s if s.dtype == dtype else s.astype(dtype)
+                if count:
+                    cnt[d] += 1
+            if not must:
+                if sum(map(len, touched)) * 32 >= cnt.size:  # dense: one pass
+                    cand = np.flatnonzero(cnt)
+                else:
+                    cand = np.unique(np.concatenate(touched))
+                touched = [cand]  # the union of the clauses
+            if msm > 1 or must and msm > 0:  # ReqOptSumScorer's msm too
+                cand = cand[cnt[cand] >= len(must) + msm]
+            if cand.size and q.must_not:
+                lo, hi = self.ctx.min_doc, self.ctx.max_doc
+                out = [self.matching_docs(c) for c in q.must_not]
+                out = [d[(d >= lo) & (d < hi)] - lo for d in out]
+                for d in out:
+                    excl[d] = True
+                cand = cand[~excl[cand]]
+                for d in out:
+                    excl[d] = False
+            return cand, acc[cand]
+        finally:
+            for d in touched:
+                acc[d] = 0
+                cnt[d] = 0
 
     # --- phrases --------------------------------------------------------
     def _phrase_match(self, q: PhraseQuery):
@@ -2650,181 +2639,18 @@ def _term_window_map(tp: _TermPostings, ubs: np.ndarray, off: int, n_win: int):
     return t_ub, wins_s, blocks_s
 
 
-def _batch_bool_parts(q):
-    """Decompose a query into (must, should, must_not, msm) tuples of
-    TermQuery leaves if it is expressible in the batched dense evaluator
-    (any boolean combination of plain term leaves), else None."""
-    if isinstance(q, TermQuery):
-        return (), (q,), (), 0
-    if not isinstance(q, BooleanQuery):
-        return None
-    clauses = (*q.must, *q.should, *q.must_not)
-    if not all(isinstance(c, TermQuery) for c in clauses):
-        return None
-    return q.must, q.should, q.must_not, q.min_should_match
-
-
-class _BatchEvaluator:
-    """Cross-query amortized evaluation over one SegmentContext.
-
-    The Spark analog of running Lucene's SearchTask loop against one leaf:
-    per-term postings are gathered and BM25-scored ONCE (shared across every
-    query in the batch), and each boolean-of-terms query reduces to dense
-    scatter-adds into a slice-sized float accumulator — O(Σ df_t) per query
-    with no sorts or uniques. Float accumulation order is "must clauses in
-    clause order, then should clauses in clause order", matching the
-    exhaustive evaluator bit-for-bit (same operands, same order), so results
-    are rank- and score-identical to ``search_segment``.
-    """
-
-    # slices bigger than this fall back to per-query evaluation rather than
-    # allocating unbounded dense accumulators (a slice is normally bounded
-    # by the searcher's docid span — this is a web-scale guard rail)
-    MAX_SPAN = 1 << 25  # 32M docs ≈ 128MB float32 + flags
-
-    def __init__(self, ctx: SegmentContext, dtype):
-        self.ctx = ctx
-        self.span = ctx.max_doc - ctx.min_doc
-        self.acc = np.zeros(self.span, dtype=dtype)
-        self.mcnt = np.zeros(self.span, dtype=np.int32)  # MUST-match counter
-        self.scnt = np.zeros(self.span, dtype=np.int32)  # SHOULD counter (msm)
-        self.seen = np.zeros(self.span, dtype=bool)  # OR candidate collection
-        self.excl = np.zeros(self.span, dtype=bool)  # MUST_NOT marks
-        self.del_mask = None
-        if ctx.deleted is not None:
-            didx = ctx.deleted - ctx.min_doc
-            didx = didx[(didx >= 0) & (didx < self.span)]
-            if didx.size:
-                self.del_mask = np.zeros(self.span, dtype=bool)
-                self.del_mask[didx] = True
-
-    def leaf(self, tq: TermQuery):
-        """(slice-relative idx, scores) of one term leaf, memoized."""
-        got = self.ctx.eval_cache.get(("bleaf", tq))
-        if got is not None:
-            return got
-        tp = self.ctx.postings.get(tq.term)
-        if tp is None:
-            out = (_EMPTY, np.zeros(0, dtype=self.acc.dtype))
-        else:
-            d, f, m = tp.decode_all()
-            sel = (d >= self.ctx.min_doc) & (d < self.ctx.max_doc)
-            if not sel.all():
-                d, f, m = d[sel], f[sel], m[sel]
-            sc = self.ctx.scorers[tq]
-            out = (d - self.ctx.min_doc, sc.score(f, m).astype(self.acc.dtype))
-        self.ctx.eval_cache[("bleaf", tq)] = out
-        return out
-
-    def evaluate(self, must, should, must_not, msm, k: int):
-        # single-term fast path: no accumulation needed at all
-        if len(must) + len(should) == 1 and not must_not:
-            tq = (tuple(must) + tuple(should))[0]
-            idx, s = self.leaf(tq)
-            if self.del_mask is not None and idx.size:
-                keep = ~self.del_mask[idx]
-                idx, s = idx[keep], s[keep]
-            return _topk(idx + self.ctx.min_doc, s, k)
-        acc, mcnt, scnt, seen, excl = (
-            self.acc, self.mcnt, self.scnt, self.seen, self.excl,
-        )
-        t_acc: list[np.ndarray] = []  # touched idx per accumulator, for reset
-        t_m: list[np.ndarray] = []
-        t_s: list[np.ndarray] = []
-        t_seen: list[np.ndarray] = []
-        t_ex: list[np.ndarray] = []
-        cand = _EMPTY
-        try:
-            if must:
-                lead = None
-                dead = False
-                for tq in must:
-                    idx, s = self.leaf(tq)
-                    if idx.size == 0:
-                        dead = True
-                        break
-                    acc[idx] += s
-                    mcnt[idx] += 1
-                    t_acc.append(idx)
-                    t_m.append(idx)
-                    if lead is None or idx.size < lead.size:
-                        lead = idx
-                if dead:
-                    return _EMPTY, np.zeros(0, dtype=acc.dtype)
-                cand = lead[mcnt[lead] == len(must)]
-                for tq in should:
-                    idx, s = self.leaf(tq)
-                    acc[idx] += s
-                    t_acc.append(idx)
-                    if msm > 0:
-                        scnt[idx] += 1
-                        t_s.append(idx)
-                if msm > 0 and cand.size:
-                    cand = cand[scnt[cand] >= msm]
-            elif should:
-                parts = []
-                for tq in should:
-                    idx, s = self.leaf(tq)
-                    acc[idx] += s
-                    t_acc.append(idx)
-                    if msm > 1:
-                        scnt[idx] += 1
-                        t_s.append(idx)
-                    new = idx[~seen[idx]]
-                    seen[new] = True
-                    t_seen.append(new)
-                    parts.append(new)
-                cand = np.concatenate(parts) if parts else _EMPTY
-                if msm > 1 and cand.size:
-                    cand = cand[scnt[cand] >= msm]
-            if cand.size and must_not:
-                for tq in must_not:
-                    idx, _s = self.leaf(tq)
-                    excl[idx] = True
-                    t_ex.append(idx)
-                cand = cand[~excl[cand]]
-            if cand.size and self.del_mask is not None:
-                cand = cand[~self.del_mask[cand]]
-            scores = acc[cand]
-            return _topk(cand + self.ctx.min_doc, scores, k)
-        finally:
-            for idx in t_acc:
-                acc[idx] = 0
-            for idx in t_m:
-                mcnt[idx] = 0
-            for idx in t_s:
-                scnt[idx] = 0
-            for idx in t_seen:
-                seen[idx] = False
-            for idx in t_ex:
-                excl[idx] = False
-
-
 def batch_search_segment(
     ctx: SegmentContext, queries: dict[str, object], k: int
 ) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """Top-k per query for a BATCH of queries against one segment slice.
-
-    Boolean-of-terms queries (the overwhelming bulk of a web query log) run
-    through the shared dense evaluator; anything else (phrases, dismax,
-    constant-score, nested booleans) falls back to per-query
-    ``search_segment``. Returns (query_ids, docids, scores) flattened."""
-    dtype = None
-    evaluator = None
+    """Top-k per query for a BATCH of queries against one segment slice:
+    ``search_segment`` per query on the one context, so the queries share
+    its decoded postings, term scores and accumulators. Returns
+    (query_ids, docids, scores) flattened."""
     qids: list[str] = []
     docid_parts: list[np.ndarray] = []
     score_parts: list[np.ndarray] = []
     for qid, q in queries.items():
-        parts = _batch_bool_parts(q)
-        if parts is not None and (ctx.max_doc - ctx.min_doc) <= _BatchEvaluator.MAX_SPAN:
-            must, should, must_not, msm = parts
-            if evaluator is None:
-                first_leaf = (tuple(must) + tuple(should))[0]
-                dtype = _float_dtype(ctx.scorers[first_leaf])
-                evaluator = _BatchEvaluator(ctx, dtype)
-            d, s = evaluator.evaluate(must, should, must_not, msm, k)
-        else:
-            d, s = search_segment(ctx, q, k)
+        d, s = search_segment(ctx, q, k, shared=True)
         if d.size:
             qids.extend([qid] * d.size)
             docid_parts.append(d)
@@ -2846,34 +2672,40 @@ def exhaustive_hits(
     ctx: SegmentContext, query, after: tuple | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Every live hit (docid, score) of this segment slice, unsorted."""
-    d, sc = _SegmentSearcher(ctx, 0).evaluate(query)
-    # docid-slice mask: straddling blocks decode docs owned by neighbor
-    # slices; each doc must be scored by exactly one (segment, slice) task
-    mask = (d >= ctx.min_doc) & (d < ctx.max_doc)
-    if ctx.deleted is not None:
-        mask &= np.isin(d, ctx.deleted, invert=True)  # live-docs check
-    if not mask.all():
-        d, sc = d[mask], sc[mask]
+    # the slice's hits only: straddling blocks decode docs owned by
+    # neighbour slices; each doc must be scored by exactly one task
+    d, sc = _SegmentSearcher(ctx, 0)._rel(query)
+    d = d + ctx.min_doc
+    if ctx.deleted is not None and d.size:
+        keep = np.isin(d, ctx.deleted, invert=True)  # live-docs check
+        d, sc = d[keep], sc[keep]
     if after is not None:
         d, sc = _after_filter(d, sc, after)
     return d, sc
 
 
 def search_segment(
-    ctx: SegmentContext, query, k: int, after: tuple | None = None
+    ctx: SegmentContext, query, k: int, after: tuple | None = None,
+    shared: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k (docids, scores) for this segment, tie-break score DESC then
     docid ASC (HitQueue.java:76-82). ``after=(score, docid)`` restricts to
-    hits ranking strictly below the anchor (searchAfter pagination)."""
+    hits ranking strictly below the anchor (searchAfter pagination).
+    ``shared``: the context serves a batch of queries, which score each term
+    once into its memo. The one place an evaluator is picked (module
+    docstring)."""
     if k <= 0:
         return _EMPTY, np.zeros(0, dtype=np.float64)
-    s = _SegmentSearcher(ctx, k)
-    if isinstance(query, TermQuery):
-        return s.blockmax_topk([query], 0.0, k, after=after)
-    if isinstance(query, DisjunctionMaxQuery) and all(
-        isinstance(c, TermQuery) for c in query.disjuncts
-    ):
-        return s.blockmax_topk(
-            list(query.disjuncts), query.tie_breaker, k, after=after
-        )
+    # a slice of one window leaves the windowed top-k nothing to skip, and a
+    # batch's memoised term scores make the exhaustive top-k one partition
+    if not shared and ctx.max_doc - ctx.min_doc > WINDOW_DOCS:
+        s = _SegmentSearcher(ctx, k)
+        if isinstance(query, TermQuery):
+            return s.blockmax_topk([query], 0.0, k, after=after)
+        if isinstance(query, DisjunctionMaxQuery) and all(
+            isinstance(c, TermQuery) for c in query.disjuncts
+        ):
+            return s.blockmax_topk(
+                list(query.disjuncts), query.tie_breaker, k, after=after
+            )
     return _topk(*exhaustive_hits(ctx, query, after), k)

@@ -117,3 +117,21 @@ def test_driver_and_spark_plans_agree(index, monkeypatch, name):
     assert driver["count"] == len(expect)
     assert [(d, sc) for qid, d, sc in driver["many"] if qid == "q"] == sorted(want[:4])
 
+
+
+def test_plan_slices_bounds_task_span():
+    """No planned task is wider than ``MAX_SPAN`` docs, whatever the slice
+    span, so the arrays a task sizes by its span stay bounded; a
+    block-join plan (span None) keeps whole segments."""
+    from lucene_spark.search.segment import MAX_SPAN
+
+    meta = {0: (0, 0, 1000), 1: (1000, 7, 2 * MAX_SPAN + 5)}
+    for span in (3 * MAX_SPAN, MAX_SPAN, 4096):
+        tasks = searcher_mod.plan_slices(meta, span)
+        assert all(0 < hi - lo <= MAX_SPAN for _seg, lo, hi in tasks), span
+        for seg, (_base, lo, hi) in meta.items():
+            mine = sorted((a, b) for s, a, b in tasks if s == seg)
+            assert mine[0][0] == lo and mine[-1][1] == hi, span
+            assert all(b == c for (_a, b), (c, _d) in zip(mine, mine[1:])), span
+    whole = searcher_mod.plan_slices(meta, None)
+    assert sorted(whole) == [(0, 0, 1000), (1, 7, 2 * MAX_SPAN + 5)]

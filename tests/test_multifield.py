@@ -7,6 +7,8 @@ Reference semantics: search/CombinedFieldQuery.java:273-315 (pseudo stats),
 MultiNormsLeafSimScorer (weighted norm sum, Math.round), FieldExistsQuery.java:39.
 """
 
+import re
+
 import numpy as np
 import pytest
 
@@ -172,6 +174,21 @@ def test_open_ranges_stay_in_field(searcher, fields_py):
     assert expanded(searcher.parse("[* TO *]")) == keys("body", lambda t: True)
     title_tail = TermRangeQuery(field_term("title", "w0100"), None)
     assert expanded(title_tail) == keys("title", lambda t: t >= "w0100")
+    # a field prefix keys a range's bounds and a regexp into that field
+    assert expanded(searcher.parse("title:[w0100 TO w0200]")) == keys(
+        "title", lambda t: "w0100" <= t <= "w0200"
+    )
+    assert expanded(searcher.parse("title:/w01[0-9]+/")) == keys(
+        "title", lambda t: re.fullmatch("w01[0-9]+", t) is not None
+    )
+    assert expanded(searcher.parse("title:[* TO *]")) == keys("title", lambda t: True)
+    assert expanded(searcher.parse("/w01[0-9]+/")) == keys(
+        "body", lambda t: re.fullmatch("w01[0-9]+", t) is not None
+    )
+    # an empty pattern after ``name:`` is no regexp: a URL stays one word
+    url = TermQuery(field_term("body", "example.com"))
+    assert searcher.parse("http://example.com") == url
+    assert searcher.parse("+http://example.com") == url
 
 
 def test_complex_phrase_and_surround_stay_in_field(searcher):

@@ -84,17 +84,29 @@ def test_reference_query_rank_identity(searcher, oracle, qid, qs):
 
 
 def test_pruned_equals_exhaustive(searcher, oracle):
-    """CheckHits analog: ``search()`` — windowed block-max for terms and
-    term dismax, the exhaustive evaluator otherwise — returns exactly the
-    brute-force oracle's top-k (docids and float32 bits), and exactly what
-    the batched ``search_many()`` path returns."""
+    """CheckHits analog: ``search()`` returns exactly the brute-force
+    oracle's top-k (docids and float32 bits), and exactly what the batched
+    ``search_many()`` path returns. The fixture's slices are one block-max
+    window wide, so both run the exhaustive evaluator; the windowed
+    block-max top-k is run on the same tasks for every term and term-dismax
+    query and checked against the oracle too."""
+    from lucene_spark.index.reader import read_slice
+    from lucene_spark.index.schemas import POSTINGS_COLS
     from lucene_spark.search.query import (
         BooleanQuery,
         DisjunctionMaxQuery,
+        PhraseQuery,
         TermQuery,
+        collect_terms,
     )
+    from lucene_spark.search.searcher import plan_slices
+    from lucene_spark.search.segment import SegmentContext, _SegmentSearcher, _topk
 
     queries = [
+        # terms
+        "w0000",
+        "w0350",
+        TermQuery("w0001", boost=2.0),
         # disjunctions
         "w0000 OR w0001",
         "w0001 OR w0002 OR w0100 OR w0203 OR w9999",
@@ -140,6 +152,20 @@ def test_pruned_equals_exhaustive(searcher, oracle):
             disjuncts=(TermQuery("w0000", boost=2.0), TermQuery("w8000")),
             tie_breaker=0.5,
         ),
+        # nested clauses of the boolean accumulators
+        "(w0000 OR w0001) AND w0100",
+        "+(w0000 w0001) +w0100 -w0002",
+        DisjunctionMaxQuery(
+            disjuncts=(
+                BooleanQuery(should=(TermQuery("w0000"), TermQuery("w0001"))),
+                BooleanQuery(must=(TermQuery("w0002"), TermQuery("w0100"))),
+            ),
+            tie_breaker=0.2,
+        ),
+        BooleanQuery(
+            must=(TermQuery("w0001"),),
+            should=(PhraseQuery(("w0000", "w0001")), TermQuery("w0100")),
+        ),
     ]
     batch = searcher.search_many(
         {f"q{i}": q for i, q in enumerate(queries)}, k=10
@@ -155,6 +181,30 @@ def test_pruned_equals_exhaustive(searcher, oracle):
         got = [(r["docid"], np.float32(r["score"])) for r in searcher.search(q, k=10).collect()]
         assert got == want, q
         assert many.get(f"q{i}", []) == want, q
+        ast = searcher._prepared(q)
+        if isinstance(ast, TermQuery):
+            term_qs, tie = [ast], 0.0
+        elif isinstance(ast, DisjunctionMaxQuery) and all(
+            isinstance(c, TermQuery) for c in ast.disjuncts
+        ):
+            term_qs, tie = list(ast.disjuncts), ast.tie_breaker
+        else:
+            continue
+        terms = sorted(collect_terms(ast))
+        scorers = searcher._make_scorers([ast], searcher._term_stats(terms))
+        meta = searcher._seg_meta()
+        ds, ss = [], []
+        for seg, lo, hi in plan_slices(meta, searcher._slice_span()):
+            pdf, deleted, _docs = read_slice(
+                searcher.reader.index_dir, None, seg, lo, hi, terms, POSTINGS_COLS
+            )
+            ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi)
+            ctx.deleted = deleted
+            d, s = _SegmentSearcher(ctx, 10).blockmax_topk(term_qs, tie, 10)
+            ds.append(d + meta[seg][0])
+            ss.append(s)
+        d, s = _topk(np.concatenate(ds), np.concatenate(ss), 10)
+        assert list(zip(d.tolist(), s.astype(np.float32))) == want, q
 
 
 def test_windowed_topk_contract_on_skew(spark, tmp_path_factory, monkeypatch):

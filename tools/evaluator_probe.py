@@ -19,11 +19,13 @@ timed call builds a fresh context, so nothing decoded is cached across
 calls.
 
 ``--batch N`` replays instead one ``perfbench.corpus.batch_queries`` batch
-of N queries per slice through ``batch_search_segment`` (the dense batch
-evaluator ``search_many`` runs) and through a per-query ``search_segment``
-loop, checks that every per-query top-k is bit-identical, and prints
-best-of-R milliseconds per query family — the evidence for keeping the
-batch evaluator.
+of N queries per slice through ``batch_search_segment`` (what
+``search_many`` runs: every query exhaustive over the context's memoised
+term scores) and through a per-query ``search_segment`` loop (what
+``search`` runs: windowed for terms and term dismax on slices wider than
+one window), checks that every per-query top-k is bit-identical, and
+prints best-of-R milliseconds per query family — the evidence for running
+a batch's terms exhaustive.
 
 Usage:
     python tools/evaluator_probe.py [--docs 100000] [--spans 16384,126976,0]
@@ -201,7 +203,7 @@ def ranked(d, s) -> list:
 
 
 def batch_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
-    """One query batch per (segment, slice) task, through the dense
+    """One query batch per (segment, slice) task, through
     ``batch_search_segment`` (what ``search_many`` runs) and through a
     per-query ``search_segment`` loop (what ``search`` runs), each on one
     context per slice shared by the whole batch. The batch kernel is called
