@@ -103,20 +103,29 @@ def vbyte_encode_concat(
 
 
 def vbyte_decode(data: bytes, n: int | None = None) -> np.ndarray:
-    """Decode a VByte stream to an int64 array."""
+    """Decode a VByte stream to an int64 array; with ``n``, raise
+    ValueError unless it holds exactly ``n`` values."""
     if not data:
         return np.zeros(0, dtype=np.int64)
     b = np.frombuffer(data, dtype=np.uint8)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    starts = np.empty(ends.size, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    idx = np.arange(b.size)
-    group = np.searchsorted(ends, idx)
-    shift = (idx - starts[group]).astype(np.uint64)
-    out = np.zeros(ends.size, dtype=np.uint64)
-    np.add.at(out, group, (b & 0x7F).astype(np.uint64) << (np.uint64(7) * shift))
-    out = out.astype(np.int64)
+    if b.max() < 0x80:  # every value one byte (freqs, most deltas)
+        out = b.astype(np.int64)
+    else:
+        ends = np.flatnonzero(b < 0x80)
+        if not ends.size or ends[-1] != b.size - 1:
+            raise ValueError("truncated VByte stream")
+        starts = np.empty(ends.size, dtype=np.int64)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        out = (b[starts] & 0x7F).astype(np.int64)
+        # one pass per byte place (at most 5), over the values that long
+        longer = np.flatnonzero(ends > starts)
+        place = 1
+        while longer.size:
+            at = starts[longer] + place
+            out[longer] |= (b[at] & 0x7F).astype(np.int64) << (7 * place)
+            longer = longer[ends[longer] > at]
+            place += 1
     if n is not None and out.size != n:
         raise ValueError(f"expected {n} values, decoded {out.size}")
     return out

@@ -6,17 +6,22 @@ back into one-doc pseudo blocks (encoding=ENC_SINGLETON), so the rest of
 their pipeline sees a uniform block stream:
 
 - merge reads whole segments through Spark (``singleton_pseudo_blocks``);
-- a search task reads its own (segment, docid slice) with pyarrow
-  (``singleton_pseudo_rows``, called by ``index.reader.read_slice``).
+- a search task takes its pulsed singletons from the plan: the driver's
+  term-stats read returns the matched rows' singleton columns too, per
+  segment (``singletons_by_segment``, called by
+  ``index.reader.IndexReader.term_plan``), and each task cuts its docid
+  range out of its segment's (``pseudo_rows``, called by
+  ``index.reader.read_slice``), so no task reads the term dictionary.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["ENC_SINGLETON", "singleton_pseudo_blocks", "singleton_pseudo_rows"]
+__all__ = ["ENC_SINGLETON", "pseudo_rows", "singleton_pseudo_blocks", "singletons_by_segment"]
 
 ENC_SINGLETON = 4
 
@@ -47,25 +52,58 @@ def singleton_pseudo_blocks(term_dict: DataFrame, with_positions: bool) -> DataF
     )
 
 
-def singleton_pseudo_rows(td: pd.DataFrame) -> pd.DataFrame:
-    """The pandas twin of ``singleton_pseudo_blocks``, without
-    ``segment_id``: the pseudo blocks of the pulsed term_dict rows ``td``.
-    Positions and payloads come from ``singleton_positions`` /
-    ``singleton_payloads`` when ``td`` holds them and are null otherwise."""
-    docid = td["singleton_docid"]
-    return pd.DataFrame({
-        "term": td["term"],
-        "block_no": 0,
-        "n_docs": 1,
+def singletons_by_segment(rows: pa.Table, seg: np.ndarray) -> dict[int, dict[str, np.ndarray]]:
+    """segment_id → the pulsed singletons among the term_dict ``rows``
+    (``term``, ``singleton_docid`` / ``_freq`` / ``_norm`` and, when read,
+    ``singleton_positions`` / ``_payloads``; row i of segment ``seg[i]``,
+    every ``singleton_docid`` set) as numpy columns sorted by docid:
+    ``term``, ``docid``, ``freq``, ``norm`` and ``positions_enc`` /
+    ``payloads_enc`` when read."""
+    if not rows.num_rows:
+        return {}
+    docid = rows["singleton_docid"].to_numpy().astype(np.int64, copy=False)
+    order = np.lexsort((docid, seg))
+    cols = {
+        "term": rows["term"].to_numpy(),
+        "docid": docid,
+        "freq": rows["singleton_freq"].to_numpy().astype(np.int64, copy=False),
+        "norm": rows["singleton_norm"].to_numpy().astype(np.int64, copy=False),
+    }
+    for c, name in (("singleton_positions", "positions_enc"), ("singleton_payloads", "payloads_enc")):
+        if c in rows.column_names:
+            cols[name] = rows[c].to_numpy()
+    seg = np.asarray(seg)[order]
+    cuts = [0, *(np.flatnonzero(seg[1:] != seg[:-1]) + 1).tolist(), seg.size]
+    return {
+        int(seg[a]): {c: v[order[a:b]] for c, v in cols.items()}
+        for a, b in zip(cuts[:-1], cuts[1:])
+    }
+
+
+def pseudo_rows(single: dict[str, np.ndarray], lo: int, hi: int, names) -> dict[str, np.ndarray]:
+    """The ``names`` columns (``index.reader.read_slice``'s layout) of one
+    pseudo block per singleton of ``single`` (one segment's
+    ``singletons_by_segment``) with a docid in [lo, hi). Positions and
+    payloads are null where ``single`` does not hold them."""
+    a, b = np.searchsorted(single["docid"], [lo, hi])
+    docid = single["docid"][a:b]
+    n = docid.size
+    none = np.full(n, None, dtype=object)
+    out = {
+        "term": single["term"][a:b],
+        "block_no": np.zeros(n, dtype=np.int64),
+        "n_docs": np.ones(n, dtype=np.int64),
         "base_docid": docid - 1,
         "first_docid": docid,
         "last_docid": docid,
-        "encoding": ENC_SINGLETON,
-        "docids_enc": None,
-        "freqs_enc": None,
-        "norms_enc": None,
-        "positions_enc": td.get("singleton_positions"),
-        "payloads_enc": td.get("singleton_payloads"),
-        "impact_freqs": [[int(f)] for f in td["singleton_freq"]],
-        "impact_norms": [[int(n)] for n in td["singleton_norm"]],
-    })
+        "encoding": np.full(n, ENC_SINGLETON, dtype=np.int64),
+        "docids_enc": none,
+        "freqs_enc": none,
+        "norms_enc": none,
+        "impact_freqs": single["freq"][a:b],
+        "impact_norms": single["norm"][a:b],
+        "impact_off": np.arange(n + 1, dtype=np.int64),
+    }
+    for c in ("positions_enc", "payloads_enc"):
+        out[c] = single[c][a:b] if c in single else none
+    return {c: out[c] for c in names}

@@ -10,17 +10,22 @@ Everything the driver reads to plan a query is *planning-sized* and is
 read with pyarrow, with no Spark job: the segment manifest and field_stats
 (one row per segment, from the commit point's directory, so a snapshot
 reader sees its snapshot) and every query-time read of the term dictionary
-(``term_stats``, ``expand_terms_df``, ``fuzzy_terms``): filters over the
-manifest's ``kind=1`` partitions, summed per term by ``_term_sums`` — the
-in-process terms-dictionary walk of Lucene's MultiTermQuery rewrite.
-Each search task reads its own postings (``read_slice``), and the stored
-docids of its docmap partition when its query matches docs without
-postings, in a Spark task or, for a plan the driver finishes sooner than
-one Spark wave, in the driver process. The urls of a top k
-(``doc_urls``) and the live doc count (``live_doc_count``) are read on the
-driver too. The DataFrame views (``term_dict``, ``postings``, ``docmap``,
-``field_stats``, ``deletes``) serve Spark-side work such as merges,
-compaction, Bloom building and index checks.
+(``term_plan``, ``term_stats``, ``expand_terms_df``, ``fuzzy_terms``):
+filters over the manifest's ``kind=1`` partitions, summed per term by
+``_term_sums`` — the in-process terms-dictionary walk of Lucene's
+MultiTermQuery rewrite. A search call reads the term dictionary once:
+``term_plan`` returns the global stats of the plan's terms together with
+their pulsed singletons per segment, which the plan hands to its tasks.
+Each search task reads its own postings (``read_slice``: its segment's
+``kind=2`` partition, straight into numpy columns with no pandas frame),
+takes its pulsed singletons from the plan, and reads the stored docids of
+its docmap partition when its query matches docs without postings, in a
+Spark task or, for a plan the driver finishes sooner than one Spark wave,
+in the driver process. The urls of a top k (``doc_urls``) and the live doc
+count (``live_doc_count``) are read on the driver too. The DataFrame views
+(``term_dict``, ``postings``, ``docmap``, ``field_stats``, ``deletes``)
+serve Spark-side work such as merges, compaction, Bloom building and index
+checks.
 """
 
 from __future__ import annotations
@@ -29,35 +34,73 @@ import os
 from functools import cached_property
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .builder import FIELD_SEP
-from .pseudo import singleton_pseudo_rows
-from .schemas import DOCMAP_COLS, KIND_BLOCK, KIND_DOC, KIND_TERM, POSTINGS_COLS, TERM_DICT_COLS
+from .pseudo import pseudo_rows, singletons_by_segment
+from .schemas import (
+    DOCMAP_COLS,
+    KIND_BLOCK,
+    KIND_DOC,
+    KIND_TERM,
+    POSTINGS_COLS,
+    TERM_DICT_COLS,
+    UNIFIED_BUILD_SCHEMA,
+)
 from .smallio import read_driver_table
 
 __all__ = ["IndexReader", "read_slice"]
 
+# the Arrow type of every data-tree column, for the nulls of a column an
+# older index lacks; ``__filename`` is the scan's source file
+_TYPES = {f.name: f.type for f in to_arrow_schema(UNIFIED_BUILD_SCHEMA)}
+_TYPES["__filename"] = pa.string()
 
-def _read_parquet(path: str, columns: list[str], where) -> pd.DataFrame:
-    """``columns`` of the rows of parquet directory ``path`` that pass the
-    pyarrow expression ``where``. A missing directory reads as no rows and
-    a column an older index lacks as nulls, as ``_select_compat`` reads
-    them through Spark."""
-    if not os.path.isdir(path):
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in columns})
-    data = ds.dataset(path, format="parquet")
-    have = [c for c in columns if c in data.schema.names]
-    out = data.to_table(columns=have, filter=where).to_pandas()
+
+def _dataset(path: str) -> ds.Dataset | None:
+    """The parquet dataset of directory ``path``; None when it is missing."""
+    return ds.dataset(path, format="parquet") if os.path.isdir(path) else None
+
+
+def _read_table(data: ds.Dataset | None, columns: list[str], where) -> pa.Table:
+    """``columns`` of the rows of ``data`` that pass the pyarrow expression
+    ``where``. No dataset reads as no rows and a column an older index
+    lacks as nulls, as ``_select_compat`` reads them through Spark."""
+    if data is None:
+        return pa.table({c: pa.array([], _TYPES[c]) for c in columns})
+    have = [c for c in columns if c in data.schema.names or c == "__filename"]
+    out = data.to_table(columns=have, filter=where)
     for c in columns:
         if c not in have:
-            out[c] = None
-    return out[columns]
+            out = out.append_column(c, pa.nulls(out.num_rows, _TYPES[c]))
+    return out.select(columns)
+
+
+def _columns(t: pa.Table) -> dict[str, np.ndarray]:
+    """The columns of block rows ``t`` as numpy arrays, in ``t``'s order:
+    integers as int64, strings and bytes as object arrays (None for null),
+    and each impact list column flat, its values in row order, with the
+    rows' offsets into them as ``impact_off`` (both lists of a row have
+    its skyline's length)."""
+    out, off = {}, None
+    for c in t.column_names:
+        col = t[c]
+        if pa.types.is_list(col.type):
+            arr = col.combine_chunks()
+            out[c] = arr.flatten().to_numpy().astype(np.int64, copy=False)
+            off = arr.offsets.to_numpy()
+        elif pa.types.is_integer(col.type):
+            out[c] = col.to_numpy().astype(np.int64, copy=False)
+        else:
+            out[c] = col.to_numpy()
+    if off is not None:
+        out["impact_off"] = (off - off[0]).astype(np.int64, copy=False)
+    return out
 
 
 def _prefix(prefix: str) -> ds.Expression:
@@ -81,6 +124,20 @@ def _namespace(ns: str) -> ds.Expression:
     return ~pc.match_substring(term, FIELD_SEP)
 
 
+def _summed(rows: pa.Table, cols) -> pa.Table:
+    """(term, *cols) of term-dictionary ``rows``, summed per term."""
+    sums = rows.group_by("term").aggregate([(c, "sum") for c in cols])
+    return sums.select(["term", *[f"{c}_sum" for c in cols]]).rename_columns(["term", *cols])
+
+
+def _stats(sums: pa.Table) -> dict[str, tuple[int, int]]:
+    """term → (df, ttf) of ``_summed`` (term, df, ttf) rows."""
+    return {
+        t: (int(df), int(ttf))
+        for t, df, ttf in zip(*(sums[c].to_pylist() for c in ("term", "df", "ttf")))
+    }
+
+
 def read_slice(
     index_dir: str,
     deletes_dir: str | None,
@@ -90,50 +147,58 @@ def read_slice(
     terms: list[str],
     cols: list[str],
     docs: bool = False,
-) -> tuple[pd.DataFrame, np.ndarray | None, np.ndarray | None]:
+    singles: dict | None = None,
+) -> tuple[dict[str, np.ndarray], np.ndarray | None, np.ndarray | None]:
     """What the search task of segment ``seg``, stored docids [lo, hi),
     reads with pyarrow from the segment's own directories, filtered by
-    ``term IN terms`` and the docid range: ``cols`` (of POSTINGS_COLS) of
-    the block rows overlapping the range plus the pulsed singletons inside
-    it as pseudo blocks, the sorted deleted docids of the range in
-    ``deletes_dir`` (None when there are none, or no ``deletes_dir``), and,
-    when ``docs`` is set, the sorted stored docids of the range from the
-    segment's docmap (None otherwise). The docmap is the only record of
-    which docs the range holds: compaction drops docs without renumbering.
+    ``term IN terms`` and the docid range, straight into numpy:
+
+    - ``cols`` (of POSTINGS_COLS, without ``segment_id``) of the block rows
+      overlapping the range, in ``_columns``' layout (the impact lists
+      flat, with ``impact_off``), then one pseudo block per pulsed
+      singleton inside the range. The singletons come from the plan, not
+      from the term dictionary: ``singles`` is the per-segment map of
+      ``IndexReader.term_plan`` for ``terms`` (None holds none). The rows
+      are in no particular order (``SegmentContext.from_columns`` sorts
+      them);
+    - the sorted deleted docids of the range in ``deletes_dir`` (None when
+      there are none, or no ``deletes_dir``);
+    - when ``docs`` is set, the sorted stored docids of the range from the
+      segment's docmap (None otherwise). The docmap is the only record of
+      which docs the range holds: compaction drops docs without
+      renumbering.
+
     Positions and payloads are read only when ``cols`` holds them."""
-    in_terms = ds.field("term").isin(pa.array(terms, pa.string()))
-    blocks = _read_parquet(
-        f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}",
+    blocks = _columns(_read_table(
+        _dataset(f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}"),
         [c for c in cols if c != "segment_id"],
-        in_terms & (ds.field("last_docid") >= lo) & (ds.field("first_docid") < hi),
-    )
-    single = ds.field("singleton_docid")
-    td = _read_parquet(
-        f"{index_dir}/data/kind={KIND_TERM}/segment_id={seg}",
-        ["term", "singleton_docid", "singleton_freq", "singleton_norm"]
-        + (["singleton_positions"] if "positions_enc" in cols else [])
-        + (["singleton_payloads"] if "payloads_enc" in cols else []),
-        in_terms & (single >= lo) & (single < hi),
-    )
-    if len(td):
-        singles = singleton_pseudo_rows(td)[blocks.columns]
-        blocks = pd.concat([blocks, singles], ignore_index=True) if len(blocks) else singles
+        ds.field("term").isin(pa.array(terms, pa.string()))
+        & (ds.field("last_docid") >= lo) & (ds.field("first_docid") < hi),
+    ))
+    if singles and seg in singles:
+        pseudo = pseudo_rows(singles[seg], lo, hi, list(blocks))
+        if pseudo["term"].size:
+            end = blocks["impact_off"][-1]
+            blocks = {
+                c: np.concatenate([v, pseudo[c][1:] + end] if c == "impact_off" else [v, pseudo[c]])
+                for c, v in blocks.items()
+            }
     docid = ds.field("docid")
     in_range = (docid >= lo) & (docid < hi)
     deleted = None
     if deletes_dir is not None:
-        dels = _read_parquet(
-            deletes_dir, ["docid"], (ds.field("segment_id") == seg) & in_range
+        dels = _read_table(
+            _dataset(deletes_dir), ["docid"], (ds.field("segment_id") == seg) & in_range
         )
-        if len(dels):
-            deleted = np.unique(dels["docid"].to_numpy(dtype=np.int64))
+        if dels.num_rows:
+            deleted = np.unique(dels["docid"].to_numpy().astype(np.int64, copy=False))
     stored = None
     if docs:
-        dm = _read_parquet(
-            f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}", ["docid"], in_range
+        dm = _read_table(
+            _dataset(f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}"), ["docid"], in_range
         )
-        stored = np.sort(dm["docid"].to_numpy(dtype=np.int64))
-    return blocks.assign(segment_id=seg)[cols], deleted, stored
+        stored = np.sort(dm["docid"].to_numpy().astype(np.int64, copy=False))
+    return blocks, deleted, stored
 
 
 class IndexReader:
@@ -293,12 +358,12 @@ class IndexReader:
     def doc_urls(self, seg: int, docids: np.ndarray) -> dict[int, str]:
         """stored docid → url of ``docids`` in segment ``seg``, read with
         pyarrow from the segment's docmap partition."""
-        dm = _read_parquet(
-            f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}",
+        dm = _read_table(
+            _dataset(f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}"),
             ["docid", "url"],
             ds.field("docid").isin(pa.array(docids, pa.int64())),
         )
-        return dict(zip(dm["docid"].tolist(), dm["url"].tolist()))
+        return dict(zip(dm["docid"].to_pylist(), dm["url"].to_pylist()))
 
     def live_doc_count(self) -> int:
         """Docs of the manifest's segments minus their distinct deleted
@@ -312,11 +377,11 @@ class IndexReader:
             if os.path.isdir(path):
                 n += ds.dataset(path, format="parquet").count_rows()
         if self.deletes_dir is not None:
-            dels = _read_parquet(
-                self.deletes_dir, ["segment_id", "docid"],
+            dels = _read_table(
+                _dataset(self.deletes_dir), ["segment_id", "docid"],
                 ds.field("segment_id").isin(pa.array(live, pa.int32())),
             )
-            n -= len(dels.drop_duplicates())
+            n -= dels.group_by(["segment_id", "docid"]).aggregate([]).num_rows
         return n
 
     @cached_property
@@ -370,26 +435,23 @@ class IndexReader:
         parts = [ds.dataset(d, format="parquet") for d in dirs if os.path.isdir(d)]
         return ds.dataset(parts) if parts else None
 
+    def _term_rows(
+        self, where: ds.Expression, ns: str | None, cols: list[str]
+    ) -> pa.Table:
+        """``cols`` of the live segments' term-dictionary rows passing
+        ``where``: the one query-time read of the term dictionary. ``ns``
+        (see ``_namespace``) confines an expansion to one field's keys;
+        None reads keys as given."""
+        if ns is not None:
+            where = _namespace(ns) & where
+        return _read_table(self._term_dicts, cols, where)
+
     def _term_sums(
         self, where: ds.Expression, ns: str | None = None, cols: tuple[str, ...] = ("df",)
     ) -> pa.Table:
-        """(term, *cols) of the live segments' term-dictionary rows passing
-        ``where``, summed per term: the one query-time read of the term
-        dictionary. ``ns`` (see ``_namespace``) confines an expansion to
-        one field's keys; None reads keys as given."""
-        if ns is not None:
-            where = _namespace(ns) & where
-        if self._term_dicts is None:
-            return pa.table({"term": pa.array([], pa.string()),
-                             **{c: pa.array([], pa.int64()) for c in cols}})
-        sums = (
-            self._term_dicts.to_table(columns=["term", *cols], filter=where)
-            .group_by("term")
-            .aggregate([(c, "sum") for c in cols])
-        )
-        return sums.select(["term", *[f"{c}_sum" for c in cols]]).rename_columns(
-            ["term", *cols]
-        )
+        """(term, *cols) of the rows ``_term_rows`` reads, summed per
+        term."""
+        return _summed(self._term_rows(where, ns, ["term", *cols]), cols)
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """Global (docFreq, totalTermFreq) per term (TermStatistics analog),
@@ -397,11 +459,37 @@ class IndexReader:
         absent from the result."""
         if not terms:
             return {}
-        sums = self._term_sums(ds.field("term").isin(terms), cols=("df", "ttf"))
-        return {
-            t: (int(df), int(ttf))
-            for t, df, ttf in zip(*(sums[c].to_pylist() for c in ("term", "df", "ttf")))
-        }
+        return _stats(self._term_sums(ds.field("term").isin(terms), cols=("df", "ttf")))
+
+    def term_plan(
+        self,
+        terms: list[str],
+        positions: bool = False,
+        payloads: bool = False,
+        stats_only: tuple[str, ...] = (),
+    ) -> tuple[dict[str, tuple[int, int]], dict[int, dict[str, np.ndarray]]]:
+        """``term_stats`` of ``terms`` and ``stats_only`` and, from the same
+        read, the pulsed singletons of ``terms`` per segment
+        (``pseudo.singletons_by_segment``, with their positions and payloads
+        when asked for): what a search plan needs of the term dictionary.
+        Its tasks take their singletons from the second map
+        (``read_slice``), so they read no term dictionary."""
+        if not terms and not stats_only:
+            return {}, {}
+        cols = ["term", "df", "ttf", "singleton_docid", "singleton_freq", "singleton_norm"]
+        cols += ["singleton_positions"] if positions else []
+        cols += ["singleton_payloads"] if payloads else []
+        term = ds.field("term")
+        rows = self._term_rows(term.isin([*terms, *stats_only]), None, [*cols, "__filename"])
+        pulsed = pc.is_valid(rows["singleton_docid"])
+        if stats_only:
+            pulsed = pc.and_(pulsed, pc.is_in(rows["term"], pa.array(terms, pa.string())))
+        singles = rows.filter(pulsed)
+        files = singles["__filename"].to_pylist()
+        # a partition file's directory is segment_id=N
+        seg_of = {f: int(os.path.basename(os.path.dirname(f)).split("=")[1]) for f in set(files)}
+        seg = [seg_of[f] for f in files]
+        return _stats(_summed(rows, ("df", "ttf"))), singletons_by_segment(singles, seg)
 
     def expand_terms(
         self,

@@ -3,20 +3,24 @@
 Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 
 - planning (Weight creation) happens on the driver with no Spark job:
-  parse → rewrite → multi-term expansion → a pyarrow ``term IN (...)`` read
-  of the live segments' term dictionaries for global TermStatistics
-  (``IndexReader.term_stats``) and the ``field_stats`` rows read at open
-  for CollectionStatistics (IndexSearcher.java:1140-1150 — stats are summed
+  parse → rewrite → multi-term expansion → one pyarrow ``term IN (...)``
+  read of the live segments' term dictionaries (``IndexReader.term_plan``)
+  for global TermStatistics and the plan terms' pulsed singletons per
+  segment, and the ``field_stats`` rows read at open for
+  CollectionStatistics (IndexSearcher.java:1140-1150 — stats are summed
   across segments BEFORE scoring; per-segment IDF would break rank identity);
 - the driver also plans the task list (``plan_slices``): one
   (segment, lo, hi) per manifest segment its term Blooms keep and per docid
   slice, widest first;
 - each task reads its own rows with pyarrow (``index.reader.read_slice``,
   the per-leaf read of IndexSearcher.searchLeaf): the block rows of its
-  segment's partition directory with ``term IN (...)`` and the docid range
-  as filters, its pulsed singletons as pseudo blocks and its deletes.
-  Positions and payloads are read only for queries that consume them —
-  column pruning;
+  segment's ``kind=2`` partition with ``term IN (...)`` and the docid range
+  as filters, straight into numpy columns, and its deletes; it takes its
+  pulsed singletons in its docid range from the plan as pseudo blocks, so
+  no task reads the term dictionary, and builds its ``SegmentContext``
+  from those columns (``SegmentContext.from_columns``) with no pandas
+  frame. Positions and payloads are read only for queries that consume
+  them — column pruning;
 - each task evaluates locally (segment.py) and emits ≤ k hits, which are
   merged by (score DESC, docid ASC) — the TopDocs.merge analog
   (search/TopDocs.java:206-234).
@@ -110,11 +114,16 @@ from .query import (
     DisjunctionMaxQuery,
     FieldExistsQuery,
     FuzzyQuery,
+    IntervalAtLeast,
+    IntervalFilter,
+    IntervalNear,
+    IntervalOr,
     MatchAllDocsQuery,
     MatchNoDocsQuery,
     PhrasePrefixQuery,
     PhraseWildcardQuery,
     PhraseQuery,
+    ParentChildrenBlockJoinQuery,
     PrefixQuery,
     RegexpQuery,
     SynonymQuery,
@@ -122,6 +131,7 @@ from .query import (
     TermQuery,
     TermRangeQuery,
     ToChildBlockJoinQuery,
+    ToParentBlockJoinQuery,
     WildcardQuery,
     boosted,
     collect_terms,
@@ -142,6 +152,22 @@ from .segment import (
 
 __all__ = ["Searcher", "wildcard_to_regex"]
 
+# the multi-term leaves that expand against the term dictionary
+_MULTITERM = (
+    PrefixQuery, WildcardQuery, RegexpQuery, TermRangeQuery, FuzzyQuery,
+    PhrasePrefixQuery, PhraseWildcardQuery,
+)
+# the fields of each compound query type that hold its sub-queries (one
+# query or a tuple of them)
+_CHILDREN = {
+    BooleanQuery: ("must", "should", "must_not"),
+    DisjunctionMaxQuery: ("disjuncts",),
+    ConstantScoreQuery: ("query",),
+    ToParentBlockJoinQuery: ("child", "parents"),
+    ToChildBlockJoinQuery: ("parent", "parents"),
+    ParentChildrenBlockJoinQuery: ("child", "parents"),
+}
+
 # analyzer output never contains NUL, so this term matches no posting —
 # the stand-in for an interval slot whose multiterm leaf expanded to
 # nothing (the slot stays in place; it simply never has occurrences)
@@ -156,9 +182,16 @@ _NO_MATCH_TERM = "\x00no-match"
 # one empty mapInPandas wave at 1 task (434 ms at 4 tasks, so for a wide
 # plan the estimate errs towards Spark)
 WAVE_MS = 245.0
-# a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span
-TASK_MS = 11.0
-TASK_DOC_MS = 0.000855
+# a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span.
+# Refitted once a task read only its postings partition, straight into
+# numpy, and took its pulsed singletons from the plan (``read_slice``),
+# same probe at medians of 3: the read alone takes 6.4 / 11.5 / 23.3 ms
+# per task of 1k / 5k / 25k docs with no postings to read; measured /
+# fitted ms per size with no postings 17.9/19.5, 49.9/46.2, 82.1/82.7.
+# That run read the other constants as WAVE_MS 267, POSTING_MS 0.000242,
+# POSITION_POSTING_MS 0.00192, DOC_MS 0.000395.
+TASK_MS = 9.28
+TASK_DOC_MS = 0.000456
 # per posting of the plan's terms (Σdf), without / with positions:
 # refitted once every task decoded its rows in one pass
 # (codecs.blocks.decode_rows), same probe at medians of 3. Measured /
@@ -192,17 +225,7 @@ def _plan_reads(queries) -> tuple[bool, bool, bool, bool, bool]:
     docs do not come from postings), positions, payloads, whole-segment
     tasks (doc blocks never cross segments but may straddle docid
     slices))."""
-    from .query import (
-        IntervalAtLeast,
-        IntervalFilter,
-        IntervalNear,
-        IntervalOr,
-        MultiPhraseQuery,
-        ParentChildrenBlockJoinQuery,
-        PayloadScoreQuery,
-        TermAutomatonQuery,
-        ToParentBlockJoinQuery,
-    )
+    from .query import MultiPhraseQuery, PayloadScoreQuery, TermAutomatonQuery
     from .spans import _SPAN_TYPES, PayloadFilteredTerm
 
     types: set = set()
@@ -265,9 +288,9 @@ def _run_slice(batches, tasks, read, body, scorers, seg_meta, cache_tag):
         for i in batch["id"]:
             seg, lo, hi = tasks[i]
             doc_base = seg_meta[seg][0]
-            pdf, deleted, docs = read(seg, lo, hi)
-            ctx = SegmentContext.from_pdf(
-                pdf, scorers, lo, hi, cache_tag=cache_tag, doc_base=doc_base,
+            cols, deleted, docs = read(seg, lo, hi)
+            ctx = SegmentContext.from_columns(
+                cols, scorers, lo, hi, seg, cache_tag=cache_tag, doc_base=doc_base,
             )
             ctx.deleted = deleted
             ctx.docs = docs
@@ -861,113 +884,48 @@ class Searcher:
 
     # --- multi-term expansion (ScoringRewrite / TopTermsRewrite layer) ---
     def expand_multiterm(self, q, max_terms: int = 128):
-        if isinstance(
-            q,
-            (
-                PrefixQuery,
-                WildcardQuery,
-                RegexpQuery,
-                TermRangeQuery,
-                FuzzyQuery,
-                PhrasePrefixQuery,
-                PhraseWildcardQuery,
-            ),
-        ):
+        """``q`` with every multi-term leaf expanded against the term
+        dictionary, and ``q`` itself when none of its nodes changes, so a
+        parsed query with nothing to expand needs no second rewrite."""
+        if isinstance(q, _MULTITERM):
             return self._expand_leaf(q, max_terms)
-        if isinstance(q, BooleanQuery):
-            return BooleanQuery(
-                must=tuple(self.expand_multiterm(c, max_terms) for c in q.must),
-                should=tuple(self.expand_multiterm(c, max_terms) for c in q.should),
-                must_not=tuple(self.expand_multiterm(c, max_terms) for c in q.must_not),
-                min_should_match=q.min_should_match,
-            )
-        if isinstance(q, DisjunctionMaxQuery):
-            return DisjunctionMaxQuery(
-                disjuncts=tuple(self.expand_multiterm(c, max_terms) for c in q.disjuncts),
-                tie_breaker=q.tie_breaker,
-            )
-        if isinstance(q, ConstantScoreQuery):
-            return ConstantScoreQuery(
-                query=self.expand_multiterm(q.query, max_terms), boost=q.boost
-            )
-        from .query import ToParentBlockJoinQuery
-
-        if isinstance(q, ToParentBlockJoinQuery):
-            return ToParentBlockJoinQuery(
-                self.expand_multiterm(q.child, max_terms),
-                self.expand_multiterm(q.parents, max_terms),
-                q.score_mode,
-                q.boost,
-            )
-        if isinstance(q, ToChildBlockJoinQuery):
-            return ToChildBlockJoinQuery(
-                self.expand_multiterm(q.parent, max_terms),
-                self.expand_multiterm(q.parents, max_terms),
-                q.boost,
-            )
-        from .query import ParentChildrenBlockJoinQuery
-
-        if isinstance(q, ParentChildrenBlockJoinQuery):
-            return ParentChildrenBlockJoinQuery(
-                self.expand_multiterm(q.child, max_terms),
-                self.expand_multiterm(q.parents, max_terms),
-                q.parent_docid,
-                q.boost,
-            )
         if isinstance(q, FieldExistsQuery):
             # constant-score over the per-field existence list
             # (FieldExistsQuery.java:39 — norms-existence there)
             return ConstantScoreQuery(
                 query=TermQuery(exists_term(q.field)), boost=q.boost
             )
-        from .query import (
-            IntervalAtLeast,
-            IntervalFilter,
-            IntervalNear,
-            IntervalOr,
-        )
-
-        if isinstance(q, IntervalNear):
-            return self._expand_interval_leaves(q)
-        if isinstance(q, IntervalOr):
-            return IntervalOr(
-                tuple(self._expand_side(s) for s in q.sources),
-                q.pivot,
-                q.boost,
-            )
-        if isinstance(q, IntervalFilter):
-            return IntervalFilter(
-                self._expand_side(q.source),
-                self._expand_side(q.reference),
-                q.kind,
-                q.pivot,
-                q.boost,
-            )
-        if isinstance(q, IntervalAtLeast):
-            return self._expand_atleast(q)
-        return q
+        if isinstance(q, (IntervalNear, IntervalOr, IntervalFilter, IntervalAtLeast)):
+            return self._expand_side(q)
+        fields = next((f for t, f in _CHILDREN.items() if isinstance(q, t)), ())
+        changed = {}
+        for name in fields:
+            old = getattr(q, name)
+            if isinstance(old, tuple):
+                new = tuple(self.expand_multiterm(c, max_terms) for c in old)
+                if any(a is not b for a, b in zip(old, new)):
+                    changed[name] = new
+            elif (new := self.expand_multiterm(old, max_terms)) is not old:
+                changed[name] = new
+        return dataclasses.replace(q, **changed) if changed else q
 
     def _expand_side(self, side):
-        """Expand one IntervalFilter side (an IntervalNear or an
-        IntervalAtLeast)."""
-        from .query import IntervalAtLeast, IntervalFilter, IntervalOr
-
+        """Expand an interval source (an IntervalNear, IntervalOr,
+        IntervalFilter or IntervalAtLeast); ``side`` itself when nothing
+        in it expands."""
         if isinstance(side, IntervalAtLeast):
             return self._expand_atleast(side)
         if isinstance(side, IntervalOr):
-            return IntervalOr(
-                tuple(self._expand_side(s) for s in side.sources),
-                side.pivot,
-                side.boost,
-            )
+            sources = tuple(self._expand_side(s) for s in side.sources)
+            if all(a is b for a, b in zip(sources, side.sources)):
+                return side
+            return dataclasses.replace(side, sources=sources)
         if isinstance(side, IntervalFilter):
-            return IntervalFilter(
-                self._expand_side(side.source),
-                self._expand_side(side.reference),
-                side.kind,
-                side.pivot,
-                side.boost,
-            )
+            source = self._expand_side(side.source)
+            reference = self._expand_side(side.reference)
+            if source is side.source and reference is side.reference:
+                return side
+            return dataclasses.replace(side, source=source, reference=reference)
         return self._expand_interval_leaves(side)
 
     def _expand_atleast(self, q):
@@ -975,8 +933,6 @@ class Searcher:
         whose multiterm leaf expands to nothing keeps its place in the
         source list (the reference's per-source intervals() just returns
         no intervals for it) as a never-matching sentinel term."""
-        from .query import IntervalAtLeast, IntervalNear
-
         if not q._has_multiterm():
             return q
         new_sources = []
@@ -999,11 +955,7 @@ class Searcher:
         slot is conjunctive), so the slot becomes impossible and the whole
         source matches nothing; more than max_expansions matches raises,
         like the reference's too-many-terms IllegalStateException."""
-        from .query import (
-            IntervalPrefix,
-            IntervalWildcard,
-            MatchNoDocsQuery,
-        )
+        from .query import IntervalPrefix, IntervalWildcard
 
         if not q._has_multiterm():
             return q
@@ -1224,7 +1176,8 @@ class Searcher:
         )
 
     def _prepared(self, query, max_terms: int = 128, analyzer: str | None = None):
-        if isinstance(query, str):
+        parsed = isinstance(query, str)
+        if parsed:
             if analyzer is not None:
                 # per-call analyzer override: analyze THIS query with the
                 # named chain (the query-side of per-document language
@@ -1248,11 +1201,14 @@ class Searcher:
                 "analyzer= applies only to string queries; "
                 f"got {type(query).__name__}"
             )
-        return rewrite(self.expand_multiterm(query, max_terms))
+        expanded = self.expand_multiterm(query, max_terms)
+        # parse_query rewrote a string query to a fixpoint already
+        return expanded if parsed and expanded is query else rewrite(expanded)
 
-    def _make_scorers(self, queries: list, tstats: dict) -> dict:
+    def _make_scorers(self, queries: list, tstats: dict, est: dict | None = None) -> dict:
         """Scorers of ``queries`` from ``tstats``, the ``_term_stats`` of
-        their terms."""
+        their terms, and, on a multi-field index, ``est``, those of the
+        fields' existence terms (read here when not given)."""
         doc_count, sum_ttf = self.reader.global_stats
         if doc_count == 0:
             return {}
@@ -1260,7 +1216,8 @@ class Searcher:
         if self.fields:
             # per-field CollectionStatistics from the existence lists
             # (df = docCount(field), ttf = sumTotalTermFreq(field))
-            est = self._term_stats([exists_term(f) for f in self.fields])
+            if est is None:
+                est = self._term_stats([exists_term(f) for f in self.fields])
             field_stats = {f: est[exists_term(f)] for f in self.fields}
         return build_scorers(
             queries, tstats, doc_count, sum_ttf, self.mode, field_stats=field_stats
@@ -1298,8 +1255,16 @@ class Searcher:
         tasks = plan_slices(seg_meta, span)
         if not tasks:
             return _arrow_schema(schema).empty_table().to_pandas()
-        tstats = self._term_stats(terms)
-        scorers = self._make_scorers(queries, tstats) if scored else {}
+        # the call's one term-dictionary read: global stats, the field
+        # existence stats of a multi-field index and the pulsed singletons
+        # its tasks take for their docid ranges
+        exists = tuple(exists_term(f) for f in self.fields) if scored and self.fields else ()
+        got, singles = self.reader.term_plan(terms, positions, payloads, stats_only=exists)
+        tstats = {t: got.get(t, (0, 0)) for t in terms}
+        scorers = (
+            self._make_scorers(queries, tstats, {t: got.get(t, (0, 0)) for t in exists})
+            if scored else {}
+        )
         # column pruning: positions/payloads are read only for queries that
         # consume them
         skip = {"positions_enc": not positions, "payloads_enc": not payloads}
@@ -1313,6 +1278,7 @@ class Searcher:
             terms=terms,
             cols=[c for c in POSTINGS_COLS if not skip.get(c)],
             docs=docs,
+            singles={s: v for s, v in singles.items() if s in seg_meta},
         )
         tag = self._cache_tag()
         run = partial(

@@ -3,7 +3,8 @@
 This is the per-leaf search of IndexSearcher.searchLeaf (reference:
 lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:820-860)
 re-expressed batch-wise: a segment's postings blocks for the query terms
-arrive as one Arrow batch (colocated by the index layout — no shuffle).
+arrive as the numpy columns of one pyarrow read (``index.reader.read_slice``;
+colocated by the index layout — no shuffle).
 The first read that needs every block row of the batch decodes them all at
 once into flat doc, freq and norm arrays (``codecs.blocks.decode_rows``: a
 fixed number of numpy passes, however many terms and blocks), and positions
@@ -140,7 +141,10 @@ class _FlatPostings:
     feature or field-existence row, whose freq is a feature value or a
     field length, not a count of positions) holds no occurrences. The
     arrays are read-only, because every postings read hands out views of
-    them."""
+    them. ``cols`` are the rows in (term, block_no) order, in
+    ``index.reader.read_slice``'s layout without ``term``: row r's impact
+    skyline is ``impact_freqs`` / ``impact_norms`` [impact_off[r]:
+    impact_off[r + 1]]."""
 
     def __init__(self, cols: dict):
         self.cols = cols
@@ -150,15 +154,15 @@ class _FlatPostings:
 
     def decode(self, rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docids, freqs, norms) of the postings of ``rows``, in row
-        order."""
+        order. A pulsed singleton's freq and norm are its one impact."""
         c = self.cols
         enc = c["encoding"][rows]
-        pseudo = enc > ENC_VBYTE_TAIL  # pulsed singletons (index/pseudo.py)
+        # pulsed singletons (index/pseudo.py)
+        at = c["impact_off"][:-1][rows][enc > ENC_VBYTE_TAIL]
         return decode_rows(
             enc, c["n_docs"][rows], c["base_docid"][rows], c["docids_enc"][rows],
             c["freqs_enc"][rows], c["norms_enc"][rows],
-            [f[0] for f in c["impact_freqs"][rows][pseudo]],
-            [m[0] for m in c["impact_norms"][rows][pseudo]],
+            c["impact_freqs"][at], c["impact_norms"][at],
         )[1:]
 
     @cached_property
@@ -265,15 +269,14 @@ class _TermPostings:
         return self.flat.cols["last_docid"][self.lo : self.hi]
 
     def block_ub(self, scorer) -> np.ndarray:
-        """Per-block score upper bound from the impact skyline."""
-        # flatten all skylines into one score() call, then segmented max
-        imp_f = self.flat.cols["impact_freqs"][self.lo : self.hi]
-        imp_n = self.flat.cols["impact_norms"][self.lo : self.hi]
-        counts = np.fromiter(map(len, imp_f), dtype=np.int64, count=len(imp_f))
-        all_f = np.concatenate([np.asarray(x, dtype=np.int64) for x in imp_f])
-        all_n = np.concatenate([np.asarray(x, dtype=np.int64) for x in imp_n])
-        scores = scorer.score(all_f, all_n).astype(np.float64)
-        return np.maximum.reduceat(scores, np.cumsum(counts) - counts)
+        """Per-block score upper bound from the impact skyline: one
+        ``score`` call over the blocks' flat impacts, then a segmented
+        max."""
+        c = self.flat.cols
+        off = c["impact_off"][self.lo : self.hi + 1]
+        a, b = off[0], off[-1]
+        scores = scorer.score(c["impact_freqs"][a:b], c["impact_norms"][a:b])
+        return np.maximum.reduceat(scores.astype(np.float64), off[:-1] - a)
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docids, freqs, norms) of every posting."""
@@ -336,7 +339,10 @@ class _TermPostings:
 
 
 class SegmentContext:
-    """Everything the evaluator needs for one segment."""
+    """Everything the evaluator needs for one segment's docid slice.
+    Search tasks build it from ``index.reader.read_slice``'s numpy columns
+    (``from_columns``); ``from_pdf`` is a pandas adapter over that, kept
+    for ``perfbench/layers.py``."""
 
     def __init__(
         self,
@@ -369,6 +375,48 @@ class SegmentContext:
         self.eval_cache: dict = {}
 
     @classmethod
+    def from_columns(
+        cls,
+        cols: dict[str, np.ndarray],
+        scorers,
+        min_doc: int,
+        max_doc: int,
+        seg: int | None = None,
+        cache_tag: str | None = None,
+        doc_base: int = 0,
+    ) -> "SegmentContext":
+        """Build from one (segment, slice) task's block rows and pulsed
+        singleton pseudo blocks (index/pseudo.py) as numpy columns in
+        ``index.reader.read_slice``'s layout, in any row order: one stable
+        sort puts them in (term, block_no) order, and they decode on their
+        first read (``_FlatPostings``). ``cache_tag`` keys the filter LRU
+        by (tag, ``seg``, slice) when the task holds rows."""
+        term = cols["term"]
+        ckey = None
+        if cache_tag is not None and term.size:
+            ckey = (cache_tag, seg, min_doc, max_doc)
+        postings: dict[str, _TermPostings] = {}
+        if term.size:
+            by_block = np.argsort(cols["block_no"], kind="stable")
+            order = by_block[np.argsort(term[by_block], kind="stable")]
+            off = cols["impact_off"]
+            n_imp = np.diff(off)[order]
+            at = ragged_index(off[order], n_imp)
+            flat = {c: v[order] for c, v in cols.items() if c != "impact_off"}
+            flat["impact_off"] = np.zeros(order.size + 1, dtype=np.int64)
+            np.cumsum(n_imp, out=flat["impact_off"][1:])
+            for c in ("impact_freqs", "impact_norms"):
+                flat[c] = cols[c][at]
+                flat[c].flags.writeable = False  # scorers get views of them
+            term = flat.pop("term")
+            starts = np.flatnonzero(np.r_[True, term[1:] != term[:-1]])
+            ends = np.append(starts[1:], term.size)
+            fp = _FlatPostings(flat)
+            for t, lo, hi in zip(term[starts], starts.tolist(), ends.tolist()):
+                postings[t] = _TermPostings(fp, lo, hi)
+        return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
+
+    @classmethod
     def from_pdf(
         cls,
         pdf,
@@ -379,33 +427,24 @@ class SegmentContext:
         cache_tag: str | None = None,
         doc_base: int = 0,
     ) -> "SegmentContext":
-        """Build from one segment's Arrow batch of block rows (+ singleton
-        pseudo-blocks, index/pseudo.py); the rows decode on their first
-        read (``_FlatPostings``)."""
-        ckey = None
-        if cache_tag is not None and len(pdf):
-            seg = int(pdf["segment_id"].iloc[0])
-            ckey = (cache_tag, seg, min_doc, max_doc)
-        postings: dict[str, _TermPostings] = {}
-        if len(pdf) == 0:
-            return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
-        pdf = pdf.sort_values(["term", "block_no"], kind="mergesort")
+        """``from_columns`` over a pandas frame of POSTINGS_COLS rows (the
+        impact columns as per-row lists): a thin adapter, kept for
+        ``perfbench/layers.py`` and tests that build their rows with
+        pandas. Search tasks call ``from_columns``."""
+        seg = int(pdf["segment_id"].iloc[0]) if len(pdf) else None
         cols = {
             c: pdf[c].to_numpy()
             for c in pdf.columns
-            if c not in ("segment_id", "term")
+            if c not in ("segment_id", "impact_freqs", "impact_norms")
         }
-        flat = _FlatPostings(cols)
-        terms = pdf["term"].to_numpy()
-        n = len(terms)
-        tchange = np.empty(n, dtype=bool)
-        tchange[0] = True
-        tchange[1:] = terms[1:] != terms[:-1]
-        starts = np.flatnonzero(tchange)
-        ends = np.append(starts[1:], n)
-        for term, lo, hi in zip(terms[starts], starts.tolist(), ends.tolist()):
-            postings[term] = _TermPostings(flat, lo, hi)
-        return cls(postings, scorers, min_doc, max_doc, None, ckey, doc_base)
+        n_imp = np.fromiter(map(len, pdf["impact_freqs"]), dtype=np.int64, count=len(pdf))
+        cols["impact_off"] = np.zeros(len(pdf) + 1, dtype=np.int64)
+        np.cumsum(n_imp, out=cols["impact_off"][1:])
+        for c in ("impact_freqs", "impact_norms"):
+            cols[c] = np.fromiter(
+                (x for row in pdf[c] for x in row), dtype=np.int64, count=int(n_imp.sum())
+            )
+        return cls.from_columns(cols, scorers, min_doc, max_doc, seg, cache_tag, doc_base)
 
 
 class _FilterLRU:

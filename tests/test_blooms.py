@@ -226,3 +226,37 @@ def test_spark_work_budget(spark, idx, monkeypatch):
     assert (state(s), state(s.reader)) == before
     monkeypatch.setattr(searcher_mod, "WAVE_MS", 0.0)
     calls(lambda counts: counts[:2] == (1, 1) and 1 <= counts[2] <= n_tasks)
+
+
+def test_search_tasks_read_no_term_dictionary(spark, idx, monkeypatch):
+    """The term dictionary is read once per call, by the plan: a task of a
+    driver-run ``search()`` opens its segment's postings partition and no
+    ``kind=1`` partition, and still finds a pulsed singleton (the marker
+    doc's term), which it takes from the plan."""
+    import pyarrow.dataset as pads
+
+    import lucene_spark.search.searcher as searcher_mod
+
+    s = Searcher(spark, idx, stopwords=STOP)
+    opened, in_task = [], [False]
+    real_dataset, real_read = pads.dataset, searcher_mod.read_slice
+
+    def dataset(source, *a, **kw):
+        if in_task[0]:
+            opened.append(str(source))
+        return real_dataset(source, *a, **kw)
+
+    def read_slice(*a, **kw):
+        in_task[0] = True
+        try:
+            return real_read(*a, **kw)
+        finally:
+            in_task[0] = False
+
+    monkeypatch.setattr(pads, "dataset", dataset)
+    monkeypatch.setattr(searcher_mod, "read_slice", read_slice)
+    hits = s.search("uniqmarkerterm OR w0002", k=3, with_url=True).collect()
+    assert hits[0]["url"] == "https://marker.example/1"
+    assert s.count("uniqmarkerterm") == 1
+    assert any("/kind=2/" in p for p in opened)
+    assert not [p for p in opened if "/kind=1/" in p]

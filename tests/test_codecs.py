@@ -40,6 +40,67 @@ def test_vbyte_roundtrip(seed):
     assert (vbyte_decode(vbyte_encode(v), n) == v).all()
 
 
+def _vbyte_decode_reference(data: bytes, n: int | None = None) -> np.ndarray:
+    """The earlier ``vbyte_decode``: each byte's value by ``np.searchsorted``
+    over the value ends, summed into place with ``np.add.at``."""
+    if not data:
+        return np.zeros(0, dtype=np.int64)
+    b = np.frombuffer(data, dtype=np.uint8)
+    ends = np.flatnonzero((b & 0x80) == 0)
+    starts = np.empty(ends.size, dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    idx = np.arange(b.size)
+    group = np.searchsorted(ends, idx)
+    shift = (idx - starts[group]).astype(np.uint64)
+    out = np.zeros(ends.size, dtype=np.uint64)
+    np.add.at(out, group, (b & 0x7F).astype(np.uint64) << (np.uint64(7) * shift))
+    out = out.astype(np.int64)
+    if n is not None and out.size != n:
+        raise ValueError(f"expected {n} values, decoded {out.size}")
+    return out
+
+
+@seed(20261019)
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.integers(0, 0x7F),
+            st.integers(0x80, 2**14 - 1),
+            st.integers(0, 2**35 - 1),
+        ),
+        max_size=300,
+    ),
+    st.integers(-2, 2),
+)
+def test_vbyte_decode_matches_reference(values, n_off):
+    """``vbyte_decode`` equals the earlier decoder on one-byte and
+    multi-byte values alike, and both raise the same error when the stream
+    holds other than ``n`` values."""
+    data = vbyte_encode(np.array(values, dtype=np.int64))
+    n = len(values) + n_off
+    assert np.array_equal(vbyte_decode(data), values)
+    if n_off == 0 or not data:
+        got = vbyte_decode(data, n)
+        assert got.dtype == np.int64
+        assert np.array_equal(got, _vbyte_decode_reference(data, n))
+        return
+    with pytest.raises(ValueError) as want:
+        _vbyte_decode_reference(data, n)
+    with pytest.raises(ValueError) as got:
+        vbyte_decode(data, n)
+    assert str(got.value) == str(want.value)
+
+
+def test_vbyte_decode_rejects_a_truncated_stream():
+    """A stream that ends inside a value (a continuation byte last) is an
+    error, not a silently shorter array."""
+    data = vbyte_encode(np.array([5, 300, 2**20]))
+    with pytest.raises(ValueError, match="truncated"):
+        vbyte_decode(data[:-1])
+
+
 @pytest.mark.parametrize("seed", range(8))
 def test_for_roundtrip(seed):
     rng = np.random.default_rng(seed + 100)
@@ -205,8 +266,8 @@ def test_bulk_decode_matches_scalar(case):
     the scalar decoders row by row: docids, freqs, norms, positions and
     payloads, through ``decode_all``, ``decode_blocks`` of block subsets
     that are not contiguous (before and after the context's full decode),
-    and ``occurrences``; pulsed singletons enter as
-    ``singleton_pseudo_rows``."""
+    and ``occurrences``; pulsed singletons enter as ``pseudo_rows`` of
+    their ``singletons_by_segment`` columns."""
     import pandas as pd
 
     from lucene_spark.codecs.blocks import (
@@ -214,7 +275,9 @@ def test_bulk_decode_matches_scalar(case):
         decode_positions,
         encode_positions,
     )
-    from lucene_spark.index.pseudo import singleton_pseudo_rows
+    import pyarrow as pa
+
+    from lucene_spark.index.pseudo import pseudo_rows, singletons_by_segment
     from lucene_spark.index.schemas import POSTINGS_COLS
     from lucene_spark.search.segment import SegmentContext
 
@@ -235,21 +298,26 @@ def test_bulk_decode_matches_scalar(case):
         pos1 = np.cumsum(rng.integers(1, 300, f)) if kind != "bare" else None
         pay1 = rng.integers(0, 1 << 16, f) if kind == "pay" else None
         want[t] = ([d], [f], [n], pos1, pay1)
-    td = pd.DataFrame({
+    td = pa.table({
         "term": [t for t, *_ in singles],
         "singleton_docid": [d for _t, d, *_ in singles],
         "singleton_freq": [f for _t, _d, f, *_ in singles],
         "singleton_norm": [n for _t, _d, _f, n, _k in singles],
-        "singleton_positions": [
+        "singleton_positions": pa.array([
             None if want[t][3] is None else encode_positions(np.array([f]), want[t][3])
             for t, _d, f, *_ in singles
-        ],
-        "singleton_payloads": [
+        ], pa.binary()),
+        "singleton_payloads": pa.array([
             None if want[t][4] is None else vbyte_encode(want[t][4])
             for t, *_ in singles
-        ],
+        ], pa.binary()),
     })
-    pdf = pd.concat([pdf, singleton_pseudo_rows(td)[cols]], ignore_index=True)
+    pseudo = pseudo_rows(singletons_by_segment(td, [0] * len(singles))[0], 0, 1 << 20, cols)
+    pseudo = pd.DataFrame(pseudo).assign(
+        impact_freqs=[[f] for f in pseudo["impact_freqs"]],
+        impact_norms=[[m] for m in pseudo["impact_norms"]],
+    )
+    pdf = pd.concat([pdf, pseudo], ignore_index=True)
     pdf = pdf.sample(frac=1.0, random_state=int(pick % 2**31)).assign(segment_id=0)
     ctx = SegmentContext.from_pdf(pdf, {}, 0, 1 << 20)
     lazy = SegmentContext.from_pdf(pdf, {}, 0, 1 << 20)  # only decode_blocks

@@ -135,3 +135,37 @@ def test_plan_slices_bounds_task_span():
             assert all(b == c for (_a, b), (c, _d) in zip(mine, mine[1:])), span
     whole = searcher_mod.plan_slices(meta, None)
     assert sorted(whole) == [(0, 0, 1000), (1, 7, 2 * MAX_SPAN + 5)]
+
+
+def test_prepared_keeps_a_parsed_tree_with_nothing_to_expand(index, monkeypatch):
+    """``expand_multiterm`` hands back the node itself when nothing under
+    it expands, so ``_prepared`` returns the parsed (already rewritten)
+    tree as it is, with no second rewrite. A prefix or fuzzy leaf inside a
+    boolean still expands, and the expanded tree is rewritten; a query
+    object, which no parser rewrote, is always rewritten."""
+    from lucene_spark.search.query import BooleanQuery, FuzzyQuery, PrefixQuery, rewrite
+
+    s = index[0]
+    rewrites = []
+
+    def counted(q):
+        rewrites.append(q)
+        return rewrite(q)
+
+    monkeypatch.setattr(searcher_mod, "rewrite", counted)
+    text = "w0000 AND (w0003 OR w0100) AND NOT w0002"
+    parsed = s.parse(text)
+    assert isinstance(parsed, BooleanQuery)
+    assert s.expand_multiterm(parsed) is parsed
+    assert s._prepared(text) == parsed and rewrites == []
+    for text, leaf in (("w0000 AND (w010* OR w0003)", PrefixQuery),
+                       ("w0000 OR w0100~1", FuzzyQuery)):
+        parsed = s.parse(text)
+        assert leaf in searcher_mod._node_types(parsed, set())
+        got = s._prepared(text)
+        assert rewrites and rewrites[-1] == s.expand_multiterm(parsed)
+        assert got == rewrite(s.expand_multiterm(parsed))
+        assert leaf not in searcher_mod._node_types(got, set())
+    n = len(rewrites)
+    obj = BooleanQuery(must=(BooleanQuery(should=(TermQuery("w0000"),)),))
+    assert s._prepared(obj) == rewrite(obj) and len(rewrites) == n + 1

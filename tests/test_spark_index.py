@@ -191,14 +191,16 @@ def test_pruned_equals_exhaustive(searcher, oracle):
         else:
             continue
         terms = sorted(collect_terms(ast))
-        scorers = searcher._make_scorers([ast], searcher._term_stats(terms))
+        tstats, singles = searcher.reader.term_plan(terms)
+        scorers = searcher._make_scorers([ast], {t: tstats.get(t, (0, 0)) for t in terms})
         meta = searcher._seg_meta()
         ds, ss = [], []
         for seg, lo, hi in plan_slices(meta, searcher._slice_span()):
-            pdf, deleted, _docs = read_slice(
-                searcher.reader.index_dir, None, seg, lo, hi, terms, POSTINGS_COLS
+            cols, deleted, _docs = read_slice(
+                searcher.reader.index_dir, None, seg, lo, hi, terms, POSTINGS_COLS,
+                singles=singles,
             )
-            ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi)
+            ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
             ctx.deleted = deleted
             d, s = _SegmentSearcher(ctx, 10).blockmax_topk(term_qs, tie, 10)
             ds.append(d + meta[seg][0])

@@ -6,7 +6,10 @@ Measures, at local[--cores]:
 (a) one empty ``mapInPandas`` wave (``spark.range(0, n, 1, n)`` through an
     identity function, collected) at 1 task and at ``defaultParallelism``
     tasks — the fixed price of running a plan on Spark;
-(b) the driver-side cost of the engine's own task body, ``_run_slice`` over
+(b) the read layer alone, per task of the auto span: ``read_slice`` with
+    no postings to read (the fixed cost of a task) and with 2 terms, and
+    ``SegmentContext.from_columns`` on what the 2-term read returned;
+(c) the driver-side cost of the engine's own task body, ``_run_slice`` over
     the ``plan_slices`` tasks of the auto span with ``read_slice``, on
     seeded ``perfbench.corpus`` indexes (2 segments, positions indexed, as
     the benchmark builds them) of each ``--docs`` size: a term no segment
@@ -19,8 +22,9 @@ constants of ``searcher._driver_ms`` are fitted over all sizes at once, so
 that the estimate follows the index size: the per-task read as a line in
 the task's docid span, then the cost per posting (per positions posting)
 and per docmap doc by least squares on what the earlier terms leave. The
-batch is measured against the fit, not fitted. It prints each size's measured against fitted ms, then the
-constants; WAVE_MS is the 1-task wave.
+batch is measured against the fit, not fitted. It prints the read layer's
+ms per task, each size's measured against fitted ms, then the constants;
+WAVE_MS is the 1-task wave.
 
 Usage:
     python tools/driver_cost_probe.py [--docs 2000,20000,100000] [--seed 1]
@@ -55,6 +59,7 @@ from lucene_spark.fixtures import reference_queries  # noqa: E402
 from lucene_spark.index.reader import read_slice  # noqa: E402
 from lucene_spark.index.schemas import POSTINGS_COLS  # noqa: E402
 from lucene_spark.search.query import collect_terms  # noqa: E402
+from lucene_spark.search.segment import SegmentContext  # noqa: E402
 from lucene_spark.search.searcher import (  # noqa: E402
     _all_body,
     _batch_body,
@@ -65,6 +70,8 @@ from lucene_spark.search.searcher import (  # noqa: E402
 )
 
 K = 10
+# the 2-term read of (b): a hot and a mid-frequency fixture term
+READ_TERMS = ["w0000", "w0100"]
 
 
 def _median_ms(fn, reps: int) -> float:
@@ -104,16 +111,17 @@ def driver_ms(searcher, queries: list, body, reps: int) -> tuple[float, dict]:
     """Median ms of ``_run_slice`` over the plan's tasks in this process,
     and the plan's cost inputs as ``Searcher._slices`` counts them."""
     terms = sorted(set().union(*(collect_terms(q) for q in queries)))
-    tstats = searcher._term_stats(terms)
     seg_meta = searcher._seg_meta()
     tasks = plan_slices(seg_meta, searcher._slice_span())
     positions = _plan_reads(queries)[2]
+    got, singles = searcher.reader.term_plan(terms, positions)
+    tstats = {t: got.get(t, (0, 0)) for t in terms}
     cols = [c for c in POSTINGS_COLS if c != "payloads_enc"]
     if not positions:
         cols.remove("positions_enc")
     read = partial(
         read_slice, searcher.reader.index_dir, None, terms=terms, cols=cols,
-        docs=not terms,
+        docs=not terms, singles=singles,
     )
     run = partial(
         _run_slice, tasks=tasks, read=read, body=body,
@@ -130,6 +138,29 @@ def driver_ms(searcher, queries: list, body, reps: int) -> tuple[float, dict]:
     }
 
 
+def read_layer_ms(searcher, terms: list[str], reps: int) -> tuple[float, float]:
+    """Median ms per task of ``read_slice`` of ``terms`` over the auto-span
+    tasks, and of ``SegmentContext.from_columns`` on what it read."""
+    _stats, singles = searcher.reader.term_plan(terms)
+    tasks = plan_slices(searcher._seg_meta(), searcher._slice_span())
+    cols = [c for c in POSTINGS_COLS if c not in ("positions_enc", "payloads_enc")]
+
+    def read():
+        return [
+            read_slice(searcher.reader.index_dir, None, seg, lo, hi, terms, cols,
+                       singles=singles)[0]
+            for seg, lo, hi in tasks
+        ]
+
+    got = read()
+
+    def build():
+        for c, (_seg, lo, hi) in zip(got, tasks):
+            SegmentContext.from_columns(c, {}, lo, hi)
+
+    return _median_ms(read, reps) / len(tasks), _median_ms(build, reps) / len(tasks)
+
+
 def probe_index(searcher, args) -> dict:
     """Timed plans on one index: (ms, cost inputs) per shape."""
     from perfbench.corpus import batch_queries
@@ -138,7 +169,11 @@ def probe_index(searcher, args) -> dict:
         return driver_ms(searcher, [q], partial(_top_k_body, query=q, k=K, after=None),
                          args.reps)
 
-    out = {"absent": top_k(searcher._prepared("zzzzabsentterm"))}
+    out = {
+        "read_none": read_layer_ms(searcher, [], args.reps)[0],
+        "read_2": read_layer_ms(searcher, READ_TERMS, args.reps),
+        "absent": top_k(searcher._prepared("zzzzabsentterm")),
+    }
     out["terms"] = [top_k(searcher._prepared(qs)) for _qid, qs in reference_queries()]
     out["terms"] += [
         top_k(searcher._prepared(qs))
@@ -234,6 +269,13 @@ def main() -> int:
                 Searcher(spark, idx, stopwords=ENGLISH_STOP_WORDS), args
             )
         c = fit(rows)
+        print("\n| docs | docs/task | read ms/task, no postings | read ms/task, "
+              "2 terms | from_columns ms/task, 2 terms |")
+        print("|---:|---:|---:|---:|---:|")
+        for n_docs, r in rows.items():
+            inp = r["absent"][1]
+            print(f"| {n_docs} | {inp['docs'] / inp['tasks']:.0f} | {r['read_none']:.2f} "
+                  f"| {r['read_2'][0]:.2f} | {r['read_2'][1]:.2f} |")
         print("\n| docs | tasks | docs/task | absent ms | term shapes ms, "
               "measured / fitted (sum) | * ms | batch ms |")
         print("|---:|---:|---:|---:|---:|---:|---:|")

@@ -4,8 +4,8 @@
 Builds a seeded ``generate_webtext`` index (N docs, 8 segments merged to
 one) in a temp dir, then, for each reference query shape, replays on the
 driver the rows every (segment, slice) task reads (planned and read by the
-engine's own ``search.searcher.plan_slices`` and ``index.reader.read_slice``)
-through
+engine's own ``search.searcher.plan_slices``, ``IndexReader.term_plan`` and
+``index.reader.read_slice``) through
 
 - ``search_segment`` (the path the engine picks), and
 - the exhaustive evaluator (``_SegmentSearcher.evaluate`` + slice mask +
@@ -13,7 +13,7 @@ through
 
 at each docid slice span. Every per-slice top-k must be bit-identical
 (docids and float32 scores) between the two. Prints best-of-R
-milliseconds per shape and span of ``SegmentContext.from_pdf`` plus the
+milliseconds per shape and span of ``SegmentContext.from_columns`` plus the
 kernel (which decodes the postings it reads), summed over the tasks: every
 timed call builds a fresh context, so nothing decoded is cached across
 calls.
@@ -142,16 +142,14 @@ def exhaustive(ctx: SegmentContext, ast, k: int):
 
 
 def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
-    """Best-of-reps Σ over tasks of the time of from_pdf and fn, and the
-    last rep's results."""
+    """Best-of-reps Σ over tasks of the time of from_columns and fn, and
+    the last rep's results."""
     best, results = float("inf"), []
     for _ in range(reps):
         total, results = 0.0, []
-        for pdf, lo, hi in tasks:
+        for cols, lo, hi in tasks:
             t0 = time.perf_counter()
-            # True selects the pruned paths on a checkout that still has the
-            # prune flag (to measure it); the current from_pdf ignores it
-            ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi, True)
+            ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
             d, s = fn(ctx, ast, k)
             total += time.perf_counter() - t0
             results.append((d.tolist(), np.asarray(s, dtype=np.float32).tobytes()))
@@ -159,15 +157,18 @@ def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
     return 1e3 * best, results
 
 
-def read_tasks(index_dir: str, seg_meta: dict, span: int, terms) -> list:
-    """(rows, lo, hi) of every (segment, slice) task for ``terms``."""
+def read_tasks(reader, seg_meta: dict, span: int, terms) -> list:
+    """(columns, lo, hi) of every (segment, slice) task for ``terms``."""
+    terms = sorted(terms)
+    _stats, singles = reader.term_plan(terms, positions=True, payloads=True)
     return [
-        (read_slice(index_dir, None, seg, lo, hi, sorted(terms), POSTINGS_COLS)[0], lo, hi)
+        (read_slice(reader.index_dir, None, seg, lo, hi, terms, POSTINGS_COLS,
+                    singles=singles)[0], lo, hi)
         for seg, lo, hi in plan_slices(seg_meta, span)
     ]
 
 
-def shape_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
+def shape_report(asts, scorers, reader, seg_meta, spans, args) -> bool:
     """Per reference shape: ``search_segment`` against the exhaustive
     evaluator. True when every top-k is bit-identical."""
     print("| shape | family | span | search_segment ms | exhaustive ms | identical |")
@@ -176,7 +177,7 @@ def shape_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
     all_identical = True
     for span in spans:
         for qid, ast in asts.items():
-            tasks = read_tasks(index_dir, seg_meta, span, collect_terms(ast))
+            tasks = read_tasks(reader, seg_meta, span, collect_terms(ast))
             kms, kres = kernel_ms(tasks, scorers[qid], ast, args.k, search_segment, args.reps)
             ems, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
             same = kres == eres
@@ -202,7 +203,7 @@ def ranked(d, s) -> list:
     return [(int(d[i]), s[i].tobytes()) for i in order]
 
 
-def batch_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
+def batch_report(asts, scorers, reader, seg_meta, spans, args) -> bool:
     """One query batch per (segment, slice) task, through
     ``batch_search_segment`` (what ``search_many`` runs) and through a
     per-query ``search_segment`` loop (what ``search`` runs), each on one
@@ -220,16 +221,16 @@ def batch_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
     terms = set().union(*(collect_terms(a) for a in asts.values()))
     all_identical = True
     for span in spans:
-        tasks = read_tasks(index_dir, seg_meta, span, terms)
+        tasks = read_tasks(reader, seg_meta, span, terms)
         best_b = {f: float("inf") for f in by_fam}
         best_l = dict(best_b)
         same = {f: True for f in by_fam}
         for _ in range(args.reps):
             t_b = dict.fromkeys(by_fam, 0.0)
             t_l = dict.fromkeys(by_fam, 0.0)
-            for pdf, lo, hi in tasks:
+            for cols, lo, hi in tasks:
                 got: dict[str, list] = {}
-                ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi)
+                ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
                 for fam, qs in by_fam.items():
                     t0 = time.perf_counter()
                     qids, d, s = batch_search_segment(ctx, qs, args.k)
@@ -238,7 +239,7 @@ def batch_report(asts, scorers, index_dir, seg_meta, spans, args) -> bool:
                     for qid in qs:
                         m = qids == qid
                         got[qid] = ranked(d[m], s[m])
-                ctx = SegmentContext.from_pdf(pdf, scorers, lo, hi)
+                ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
                 for fam, qs in by_fam.items():
                     for qid, ast in qs.items():
                         t0 = time.perf_counter()
@@ -308,7 +309,7 @@ def main() -> int:
         spark.stop()
         spark = None
         report = batch_report if args.batch else shape_report
-        return 0 if report(asts, scorers, idx, seg_meta, spans, args) else 1
+        return 0 if report(asts, scorers, searcher.reader, seg_meta, spans, args) else 1
     finally:
         if spark is not None:
             spark.stop()
