@@ -78,18 +78,6 @@ class Bm25Scorer:
             np.float32
         )
 
-    def max_score(self, impacts: np.ndarray) -> np.float32:
-        """Upper bound over a block's (freq, norm) impact skyline.
-
-        MaxScoreCache.computeMaxScore analog (lucene/core/src/java/org/
-        apache/lucene/search/MaxScoreCache.java:72-79).
-        ``impacts`` is an (n, 2) int array of (freq, norm) pairs.
-        """
-        if len(impacts) == 0:
-            return np.float32(np.inf)
-        s = self.score(impacts[:, 0], impacts[:, 1])
-        return np.float32(s.max())
-
 
 @dataclass(frozen=True)
 class DoubleBm25Scorer:

@@ -90,10 +90,3 @@ class FeatureScorer:
         if self.mode == "lucene":
             return out.astype(np.float32)  # final (float) cast (:338/:478)
         return out
-
-    def max_score(self, impacts: np.ndarray):
-        """Monotone in freq -> UB = score(max freq in the skyline)."""
-        if len(impacts) == 0:
-            return np.float32(np.inf) if self.mode == "lucene" else float("inf")
-        s = self.score(impacts[:, 0], impacts[:, 1])
-        return s.max() if self.mode == "lucene" else float(s.max())

@@ -23,11 +23,19 @@ TermStatistics that way); per-doc freq summing happens in segment.py.
 A TermQuery carrying ``df_override`` scores with that docFreq instead of its
 own — TopTermsBlendedFreqScoringRewrite / BlendedTermQuery.adjustFrequencies
 semantics used by FuzzyQuery expansion (search/BlendedTermQuery.java:47).
+
+Block-max bounds: a block's impact skyline pair (freq f, norm byte n)
+stands for every posting of the block with freq ≤ f and norm byte ≥ n, so
+``score(f, n)`` bounds those postings for any scorer non-decreasing in freq
+and non-increasing in the norm byte (the SimScorer contract). Every term
+scorer here keeps it except ``SweetSpotScorer``, whose length norm rises
+toward its plateau: it alone defines ``impact_bound``, which
+``segment._TermPostings.block_ub`` calls in place of ``score``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 
@@ -94,11 +102,6 @@ class QuantizedDoubleBm25:
         inv = self.cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         return self.weight - self.weight / (1.0 + freqs * inv)
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class LMDirichletScorer:
@@ -137,11 +140,6 @@ class LMDirichletScorer:
         )
         return np.maximum(s, 0.0)
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class LMJelinekMercerScorer:
@@ -153,8 +151,9 @@ class LMJelinekMercerScorer:
 
     clamped at 0 like the reference. dl is the SmallFloat-quantized stored
     length; the per-norm-byte cache holds ((1-λ)/dl) / (λ·p) so scoring is
-    one ln per posting. Monotone increasing in freq and decreasing in dl —
-    the block-max impact-skyline pruning bound stays valid unchanged."""
+    one ln per posting. Non-decreasing in freq and non-increasing in dl, so
+    its ``score`` at a skyline pair is a block-max bound (module
+    docstring)."""
 
     weight: float
     cache: np.ndarray  # float64[256]: ((1-λ)/dl) / (λ·p) per norm byte
@@ -175,11 +174,6 @@ class LMJelinekMercerScorer:
             1.0 + freqs * self.cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         )
         return np.maximum(s, 0.0)
-
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
 
 
 _LOG_2 = float(np.log(2.0))
@@ -216,8 +210,9 @@ class ClassicScorer:
 
     dl is the SmallFloat-quantized length like every scorer here. Computed
     in float64 with the same expression order so the DuckDB oracle
-    reproduces it bit-for-bit at 4-decimal rounding. Monotone increasing in
-    freq and decreasing in dl ⇒ the impact-skyline pruning bound holds."""
+    reproduces it bit-for-bit at 4-decimal rounding. Non-decreasing in freq
+    and non-increasing in dl, so its ``score`` at a skyline pair is a
+    block-max bound (module docstring)."""
 
     weight: float
     cache: np.ndarray  # float64[256]: TFIDF normTable
@@ -234,11 +229,6 @@ class ClassicScorer:
             * np.sqrt(f)
             * self.cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         )
-
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
 
 
 def _classic_norm_table() -> np.ndarray:
@@ -277,15 +267,13 @@ class SweetSpotScorer:
     Reference defaults (ln 1/1/0.5, tf 0/0) degrade to Classic exactly.
 
     lengthNorm is NOT monotone in dl (it rises toward the plateau from
-    below), so ``max_score`` bounds with the table's global max instead of
-    trusting the skyline's norm ordering — a valid, slightly loose bound
-    that keeps block-max pruning safe for any plateau."""
+    below), so a skyline pair's ``score`` does not bound the longer docs
+    it stands for: block-max bounds come from ``impact_bound``."""
 
     weight: float
     tf_base: float
     tf_min: float
     cache: np.ndarray       # float64[256]: plateau normTable
-    cache_max: float
 
     @classmethod
     def create(
@@ -312,7 +300,6 @@ class SweetSpotScorer:
             tf_base=float(tf_base),
             tf_min=float(tf_min),
             cache=norm,
-            cache_max=float(norm.max()),
         )
 
     def _tf(self, freqs: np.ndarray) -> np.ndarray:
@@ -331,10 +318,12 @@ class SweetSpotScorer:
             * self.cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         )
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float((self.weight * self._tf(impacts[:, 0])).max() * self.cache_max)
+    def impact_bound(self, freqs: np.ndarray, norms: np.ndarray) -> np.ndarray:
+        """A bound of ``score`` over every posting with freq ≤ ``freqs`` and
+        norm byte ≥ ``norms``: the score with the norm table replaced by its
+        suffix max (baselineTf is non-decreasing in freq)."""
+        bound = np.maximum.accumulate(self.cache[::-1])[::-1]
+        return replace(self, cache=bound).score(freqs, norms)
 
 
 @dataclass(frozen=True)
@@ -386,11 +375,6 @@ class DFRGB2Scorer:
             (self.b - (self.b - self.a) / (1.0 + tfn)) * self.ae1p
         )
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class IBLLScorer:
@@ -423,11 +407,6 @@ class IBLLScorer:
         tfn = f * self.tfn_cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         return self.weight * -np.log(self.lam / (tfn + self.lam))
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class DFIScorer:
@@ -459,11 +438,6 @@ class DFIScorer:
             measure = (f - e) * (f - e) / e
             s = self.weight * (np.log(measure + 1.0) / _LOG_2)
         return np.where(f <= e, 0.0, s)
-
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
 
 
 @dataclass(frozen=True)
@@ -503,11 +477,6 @@ class AxiomaticF2EXPScorer:
         s = self.weight * ((f / (f + den)) * self.idf_part)
         return np.maximum(s, 0.0)
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class DFRInL2Scorer:
@@ -542,11 +511,6 @@ class DFRInL2Scorer:
         f = np.asarray(freqs, dtype=np.float64)
         tfn = f * self.tfn_cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         return self.weight * (self.a * (1.0 - 1.0 / (1.0 + tfn)))
-
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
 
 
 @dataclass(frozen=True)
@@ -599,11 +563,6 @@ class IBSPLScorer:
         p = np.where(p == self.lam, bump, p)
         return self.weight * -np.log((p - self.lam) / (1.0 - self.lam))
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class AxiomaticF1LOGScorer:
@@ -644,11 +603,6 @@ class AxiomaticF1LOGScorer:
         ln_c = self.ln_cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         return np.maximum(self.weight * (tf * ln_c * self.idf_part), 0.0)
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class IndriDirichletScorer:
@@ -682,26 +636,19 @@ class IndriDirichletScorer:
         den = self.den_cache[np.asarray(norms, dtype=np.int64) & 0xFF]
         return self.weight * np.log((f + self.mu_cp) / den)
 
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(self.score(impacts[:, 0], impacts[:, 1]).max())
-
 
 @dataclass(frozen=True)
 class BooleanScorer:
     """BooleanSimilarity (similarities/BooleanSimilarity.java:31): score =
     boost, independent of freq, norm and collection stats — filter-style
-    matching where only the match count (via clause sums) ranks. Trivially
-    monotone, so every pruning bound holds (max_score == boost)."""
+    matching where only the match count (via clause sums) ranks. Constant,
+    so its ``score`` at a skyline pair is a block-max bound (module
+    docstring)."""
 
     weight: float
 
     def score(self, freqs: np.ndarray, norms: np.ndarray) -> np.ndarray:
         return np.full(np.asarray(freqs).shape, self.weight, dtype=np.float64)
-
-    def max_score(self, impacts: np.ndarray) -> float:
-        return float(self.weight)
 
 
 @dataclass(frozen=True)
@@ -720,11 +667,6 @@ class SumSimScorer:
         for sub in self.subs[1:]:
             out = out + sub.score(freqs, norms)
         return out
-
-    def max_score(self, impacts: np.ndarray) -> float:
-        if len(impacts) == 0:
-            return float("inf")
-        return float(sum(s.max_score(impacts) for s in self.subs))
 
 
 @dataclass(frozen=True)
@@ -759,9 +701,6 @@ class IntervalSaturationScorer:
             return self.weight * (np.float32(1.0) - p / (p + f))
         f = np.asarray(freqs, dtype=np.float64)
         return self.weight * (1.0 - self.pivot / (self.pivot + f))
-
-    def max_score(self, impacts=None) -> float:
-        return float(self.weight)
 
 
 def make_term_scorer(
@@ -874,7 +813,6 @@ def make_phrase_scorer(
             tf_base=proto.tf_base,
             tf_min=proto.tf_min,
             cache=proto.cache,
-            cache_max=proto.cache_max,
         )
     if mode == "multi_bm25_classic":
         # each wrapped similarity handles the multi-term stats its own way

@@ -361,7 +361,7 @@ def _all_body(ctx, query) -> pd.DataFrame:
 def _count_body(ctx, query) -> pd.DataFrame:
     # docid-set algebra only (TotalHitCountCollector): no scorers, no top-k,
     # no float work
-    d = _SegmentSearcher(ctx, 0).matching_docs(query)
+    d = _SegmentSearcher(ctx).matching_docs(query)
     d = d[(d >= ctx.min_doc) & (d < ctx.max_doc)]
     if ctx.deleted is not None and d.size:
         d = d[np.isin(d, ctx.deleted, invert=True)]

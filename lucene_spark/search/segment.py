@@ -22,7 +22,10 @@ only the blocks of the windows it visits, and decodes only those:
 - exclusion: a span-sized mark array (ReqExclScorer);
 - phrases, spans and intervals: position adjacency over the occurrences of
   the candidate docs, gathered from the flat positions
-  (``_TermPostings.occurrences``, ExactPhraseMatcher).
+  (``_TermPostings.occurrences``, ExactPhraseMatcher). The candidates are
+  the first term's docs that every other term holds
+  (``_TermPostings.intersect``, one ``np.isin`` per term over its flat
+  docids).
 
 ``search_segment`` is the one place that picks an evaluator, for ``search``
 and ``search_many`` alike (``batch_search_segment`` runs it per query):
@@ -34,7 +37,10 @@ and ``search_many`` alike (``batch_search_segment`` runs it per query):
   docid space is cut into 4096-doc windows
   (MaxScoreBulkScorer.INNER_WINDOW_SIZE), each window's upper bound comes
   from the per-block impact skylines, windows run in descending-UB order
-  and evaluation stops once UB < θ (the k-th best score so far);
+  and evaluation stops once UB < θ (the k-th best score so far). The
+  per-block bound, ``_TermPostings.block_ub``, is the engine's one
+  block-max bound and holds for every scoring mode (``scorers`` module
+  docstring: SweetSpot's plateau needs its own bound table);
 - every other query, every query on a slice of one window (which leaves
   the windowed top-k nothing to skip) and every query of a ``search_many``
   batch runs the exhaustive evaluator + top-k. A batch shares one context
@@ -269,13 +275,16 @@ class _TermPostings:
         return self.flat.cols["last_docid"][self.lo : self.hi]
 
     def block_ub(self, scorer) -> np.ndarray:
-        """Per-block score upper bound from the impact skyline: one
-        ``score`` call over the blocks' flat impacts, then a segmented
-        max."""
+        """Per-block score upper bound, the engine's one block-max bound:
+        the scorer's ``score`` at every pair of the blocks' impact
+        skylines in one call, or its ``impact_bound`` where it defines one
+        (the bound contract is in the ``scorers`` module docstring), then a
+        segmented max."""
         c = self.flat.cols
         off = c["impact_off"][self.lo : self.hi + 1]
         a, b = off[0], off[-1]
-        scores = scorer.score(c["impact_freqs"][a:b], c["impact_norms"][a:b])
+        bound = getattr(scorer, "impact_bound", scorer.score)
+        scores = bound(c["impact_freqs"][a:b], c["impact_norms"][a:b])
         return np.maximum.reduceat(scores.astype(np.float64), off[:-1] - a)
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -283,6 +292,10 @@ class _TermPostings:
         f = self.flat
         a, b = f.row_off[self.lo], f.row_off[self.hi]
         return f.docids[a:b], f.freqs[a:b], f.norms[a:b]
+
+    def intersect(self, cand: np.ndarray) -> np.ndarray:
+        """The docids of sorted ``cand`` that the term holds."""
+        return cand[np.isin(cand, self.decode_all()[0])]
 
     def decode_blocks(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docids, freqs, norms) of the blocks ``idxs`` (ascending): a
@@ -327,15 +340,6 @@ class _TermPostings:
         f = self.flat
         a, b = f.row_off[self.lo], f.row_off[self.hi]
         return f.occ_n[a:b], f.payloads[f.occ_off[a] : f.occ_off[b]]
-
-    def blocks_overlapping(self, candidates: np.ndarray) -> np.ndarray:
-        """Indices of blocks whose [first,last] span contains ≥1 candidate
-        (block-granularity leapfrog advance)."""
-        if candidates.size == 0:
-            return np.zeros(0, dtype=np.int64)
-        lo = np.searchsorted(candidates, self.block_first, side="left")
-        hi = np.searchsorted(candidates, self.block_last, side="right")
-        return np.flatnonzero(hi > lo)
 
 
 class SegmentContext:
@@ -428,9 +432,10 @@ class SegmentContext:
         doc_base: int = 0,
     ) -> "SegmentContext":
         """``from_columns`` over a pandas frame of POSTINGS_COLS rows (the
-        impact columns as per-row lists): a thin adapter, kept for
-        ``perfbench/layers.py`` and tests that build their rows with
-        pandas. Search tasks call ``from_columns``."""
+        impact columns as per-row lists): a thin adapter whose only caller
+        is ``perfbench/layers.py``; it goes when that replay reads its
+        tasks with ``read_slice``. Search tasks and tests call
+        ``from_columns``."""
         seg = int(pdf["segment_id"].iloc[0]) if len(pdf) else None
         cols = {
             c: pdf[c].to_numpy()
@@ -690,9 +695,8 @@ def _atleast_replay(doc_subs, m: int):
 
 
 class _SegmentSearcher:
-    def __init__(self, ctx: SegmentContext, k: int):
+    def __init__(self, ctx: SegmentContext):
         self.ctx = ctx
-        self.k = k
 
     def term_postings(self, term: str) -> _TermPostings | None:
         return self.ctx.postings.get(term)
@@ -798,6 +802,12 @@ class _SegmentSearcher:
                 return _EMPTY
             pd = pd[np.isin(pd, parents)]
             return self._child_docs_of(pd, parents)[0]
+        if isinstance(q, ParentChildrenBlockJoinQuery):
+            lo, p = self._children_range(q)
+            if p is None:
+                return _EMPTY
+            cd = self.matching_docs(q.child)
+            return cd[(cd > lo) & (cd < p)]
         if isinstance(q, MatchAllDocsQuery):
             return self.ctx.docs
         if isinstance(q, MatchNoDocsQuery):
@@ -953,24 +963,32 @@ class _SegmentSearcher:
         scores = np.repeat(ps.astype(np.float64) * q.boost, counts).astype(dtype)
         return children, scores
 
-    def _evaluate_parent_children(self, q: ParentChildrenBlockJoinQuery):
-        """ParentChildrenBlockJoinQuery: the matching children of ONE
-        parent doc, each keeping its own child score
+    def _children_range(self, q: ParentChildrenBlockJoinQuery):
+        """(previous parent, parent): the stored docids strictly between
+        them are the children of ``q.parent_docid``
         (ParentChildrenBlockJoinQuery.java:88-131 — childrenIterator
-        bounded to (prevParent, parentDoc), score = childScorer.score()).
-        Segments not containing ``parent_docid`` match nothing."""
+        bounded to (prevParent, parentDoc)). The parent is None when this
+        segment slice does not hold it or ``q.parents`` does not match it."""
         # global → segment-local docid (Lucene's context.docBase subtraction,
         # ParentChildrenBlockJoinQuery.java:88-97)
         p = int(q.parent_docid) - self.ctx.doc_base
-        cd_empty = np.zeros(0, dtype=np.float32)
         if not (self.ctx.min_doc <= p < self.ctx.max_doc):
-            return _EMPTY, cd_empty
+            return None, None
         parents = self.matching_docs(q.parents)
         pos = np.searchsorted(parents, p)
         if pos >= parents.size or parents[pos] != p:
             # the docid is not a parent under this filter — no children
-            return _EMPTY, cd_empty
-        lo = parents[pos - 1] if pos > 0 else self.ctx.min_doc - 1
+            return None, None
+        return (parents[pos - 1] if pos > 0 else self.ctx.min_doc - 1), p
+
+    def _evaluate_parent_children(self, q: ParentChildrenBlockJoinQuery):
+        """ParentChildrenBlockJoinQuery: the matching children of ONE
+        parent doc, each keeping its own child score (score =
+        childScorer.score()). Segments not containing ``parent_docid``
+        match nothing."""
+        lo, p = self._children_range(q)
+        if p is None:
+            return _EMPTY, np.zeros(0, dtype=np.float32)
         cd, cs = self.evaluate(q.child)
         dtype = cs.dtype if cs.size else np.float32
         keep = (cd > lo) & (cd < p)
@@ -1258,14 +1276,12 @@ class _SegmentSearcher:
             if tp is None:
                 return _EMPTY, _EMPTY, _EMPTY, False
             tps.append(tp)
-        # candidates: docs containing all terms (block-leapfrog like AND)
+        # candidates: docs containing all terms
         cand = tps[0].decode_all()[0]
         for tp in tps[1:]:
             if cand.size == 0:
                 return _EMPTY, _EMPTY, _EMPTY, False
-            idxs = tp.blocks_overlapping(cand)
-            d = tp.decode_blocks(idxs)[0]
-            cand = cand[np.isin(cand, d)]
+            cand = tp.intersect(cand)
         if cand.size == 0:
             return _EMPTY, _EMPTY, _EMPTY, False
         # explicit positions allow gaps (PhraseQuery.Builder.add(term, pos),
@@ -1373,9 +1389,7 @@ class _SegmentSearcher:
             for tp in tps[1:]:
                 if cand.size == 0:
                     break
-                idxs = tp.blocks_overlapping(cand)
-                d = tp.decode_blocks(idxs)[0]
-                cand = cand[np.isin(cand, d)]
+                cand = tp.intersect(cand)
             if cand.size == 0:
                 continue
             starts = self._term_pos_keys(tps[0], cand)
@@ -1436,9 +1450,7 @@ class _SegmentSearcher:
         for tp in tps[1:]:
             if cand.size == 0:
                 return None, _EMPTY
-            idxs = tp.blocks_overlapping(cand)
-            d = tp.decode_blocks(idxs)[0]
-            cand = cand[np.isin(cand, d)]
+            cand = tp.intersect(cand)
         if cand.size == 0:
             return None, _EMPTY
         return tps, cand
@@ -1697,11 +1709,7 @@ class _SegmentSearcher:
                     if tp is None:
                         ld = _EMPTY
                         break
-                    if cand is None:
-                        td = tp.decode_all()[0]
-                    else:
-                        td = tp.decode_blocks(tp.blocks_overlapping(cand))[0]
-                    ld = td if ld is None else ld[np.isin(ld, td)]
+                    ld = tp.decode_all()[0] if ld is None else tp.intersect(ld)
                     if ld.size == 0:
                         break
                 if ld is not None and ld.size:
@@ -2713,7 +2721,7 @@ def exhaustive_hits(
     """Every live hit (docid, score) of this segment slice, unsorted."""
     # the slice's hits only: straddling blocks decode docs owned by
     # neighbour slices; each doc must be scored by exactly one task
-    d, sc = _SegmentSearcher(ctx, 0)._rel(query)
+    d, sc = _SegmentSearcher(ctx)._rel(query)
     d = d + ctx.min_doc
     if ctx.deleted is not None and d.size:
         keep = np.isin(d, ctx.deleted, invert=True)  # live-docs check
@@ -2738,7 +2746,7 @@ def search_segment(
     # a slice of one window leaves the windowed top-k nothing to skip, and a
     # batch's memoised term scores make the exhaustive top-k one partition
     if not shared and ctx.max_doc - ctx.min_doc > WINDOW_DOCS:
-        s = _SegmentSearcher(ctx, k)
+        s = _SegmentSearcher(ctx)
         if isinstance(query, TermQuery):
             return s.blockmax_topk([query], 0.0, k, after=after)
         if isinstance(query, DisjunctionMaxQuery) and all(

@@ -288,3 +288,21 @@ def test_parent_children_rewrite():
         rewrite(ParentChildrenBlockJoinQuery(MatchNoDocsQuery(), PARENTS, 4)),
         MatchNoDocsQuery,
     )
+
+
+def test_parent_children_filter_context(searcher, corpus, docmap):
+    """count, a constant-score wrap and a MUST_NOT clause evaluate the
+    query as a docid set: the children ``search`` returns."""
+    alpha = {r["docid"] for r in searcher.search(TermQuery("alpha"), k=100000).collect()}
+    checked = 0
+    for g in (0, 17, N_FAMILIES - 1):
+        _kids, parent = _family_of(corpus, docmap, g)
+        q = ParentChildrenBlockJoinQuery(TermQuery("alpha"), PARENTS, parent)
+        hits = {r["docid"] for r in searcher.search(q, k=50).collect()}
+        assert searcher.count(q) == len(hits), g
+        assert searcher.count(ConstantScoreQuery(q)) == len(hits), g
+        rest = BooleanQuery(should=(TermQuery("alpha"),), must_not=(q,))
+        got = {r["docid"] for r in searcher.search(rest, k=100000).collect()}
+        assert got == alpha - hits, g
+        checked += len(hits)
+    assert checked > 0, "fixture should match somewhere"

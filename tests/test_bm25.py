@@ -59,19 +59,49 @@ def test_float32_evaluation_order():
     assert got == want and got.dtype == np.float32
 
 
-def test_max_score_upper_bounds_block():
-    sc = Bm25Scorer.create(10, 10_000, 1_000_000)
-    rng = np.random.default_rng(1)
-    freqs = rng.integers(1, 100, 500)
-    lens = rng.integers(1, 5000, 500)
-    norms = int_to_byte4(lens)
-    scores = sc.score(freqs, norms)
-    # the skyline upper bound must dominate every member score
-    from lucene_spark.codecs.blocks import skyline
+#: every scoring mode of ``scorers.make_term_scorer``
+MODES = (
+    "lucene", "double", "lm_dirichlet", "lm_jelinek_mercer", "boolean",
+    "classic", "sweet_spot", "dfr_gb2", "ib_ll", "dfi_chi2", "axiomatic_f2exp",
+    "dfr_inl2", "ib_spl", "axiomatic_f1log", "indri_dirichlet",
+    "multi_bm25_classic",
+)
 
-    sky = np.array(skyline(freqs, norms))
-    ub = sc.max_score(sky)
-    assert (scores <= ub + 1e-9).all()
+
+@pytest.mark.parametrize("mode", MODES)
+def test_block_ub_bounds_every_posting(mode):
+    """``_TermPostings.block_ub`` over the impact skylines the builder
+    writes (``skylines_grouped``) is at least the score of every posting
+    of its block, under random term and collection stats. Lengths cluster
+    around SweetSpot's 40..120 plateau, where a shorter doc's skyline pair
+    stands for a longer doc that scores higher."""
+    from lucene_spark.codecs.blocks import skylines_grouped
+    from lucene_spark.search.scorers import make_term_scorer
+    from lucene_spark.search.segment import _FlatPostings, _TermPostings
+
+    rng = np.random.default_rng(MODES.index(mode))
+    for _ in range(20):
+        n_blocks = int(rng.integers(1, 40))
+        sizes = rng.integers(1, 129, n_blocks)
+        block = np.repeat(np.arange(n_blocks), sizes)
+        freqs = rng.zipf(1.6, block.size).clip(1, 1000)
+        lens = np.maximum(freqs, rng.choice([1, 4, 30, 60, 100, 200, 3000], block.size)
+                          + rng.integers(0, 30, block.size))
+        norms = int_to_byte4(lens).astype(np.int64) & 0xFF
+        sky_f, sky_n, bounds = skylines_grouped(block, freqs, norms)
+        tp = _TermPostings(_FlatPostings({
+            "n_docs": sizes, "impact_off": bounds,
+            "impact_freqs": sky_f, "impact_norms": sky_n,
+        }), 0, n_blocks)
+        doc_count = int(rng.integers(block.size, 10 * block.size + 10))
+        df = int(rng.integers(1, doc_count + 1))
+        ttf = int(freqs.sum()) + int(rng.integers(0, 100))
+        sum_ttf = ttf + int(rng.integers(doc_count, 50 * doc_count))
+        sc = make_term_scorer(mode, df, doc_count, sum_ttf, boost=float(rng.uniform(0.5, 3)), ttf=ttf)
+        scores = np.asarray(sc.score(freqs, norms), dtype=np.float64)
+        best = np.maximum.reduceat(scores, np.r_[0, np.cumsum(sizes)[:-1]])
+        ub = tp.block_ub(sc)
+        assert (ub >= best).all(), (mode, np.flatnonzero(ub < best))
 
 
 def test_double_scorer_matches_formula():

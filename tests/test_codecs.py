@@ -268,8 +268,6 @@ def test_bulk_decode_matches_scalar(case):
     that are not contiguous (before and after the context's full decode),
     and ``occurrences``; pulsed singletons enter as ``pseudo_rows`` of
     their ``singletons_by_segment`` columns."""
-    import pandas as pd
-
     from lucene_spark.codecs.blocks import (
         decode_payloads,
         decode_positions,
@@ -278,6 +276,7 @@ def test_bulk_decode_matches_scalar(case):
     import pyarrow as pa
 
     from lucene_spark.index.pseudo import pseudo_rows, singletons_by_segment
+    from lucene_spark.index.reader import _TYPES, _columns
     from lucene_spark.index.schemas import POSTINGS_COLS
     from lucene_spark.search.segment import SegmentContext
 
@@ -293,7 +292,6 @@ def test_bulk_decode_matches_scalar(case):
     assert seen == {ENC_CONSECUTIVE, ENC_FOR_DELTA, ENC_BITSET, ENC_VBYTE_TAIL}
     assert any(r["freqs_enc"][1] for r in rows if r["encoding"] != ENC_VBYTE_TAIL)
     cols = [c for c in POSTINGS_COLS if c != "segment_id"]
-    pdf = pd.DataFrame(rows)[cols]
     for t, d, f, n, kind in singles:
         pos1 = np.cumsum(rng.integers(1, 300, f)) if kind != "bare" else None
         pay1 = rng.integers(0, 1 << 16, f) if kind == "pay" else None
@@ -313,35 +311,38 @@ def test_bulk_decode_matches_scalar(case):
         ], pa.binary()),
     })
     pseudo = pseudo_rows(singletons_by_segment(td, [0] * len(singles))[0], 0, 1 << 20, cols)
-    pseudo = pd.DataFrame(pseudo).assign(
-        impact_freqs=[[f] for f in pseudo["impact_freqs"]],
-        impact_norms=[[m] for m in pseudo["impact_norms"]],
+    rows += [
+        {c: [v[i]] if c.startswith("impact_") else v[i] for c, v in pseudo.items()}
+        for i in range(pseudo["term"].size)
+    ]
+    # read_slice's columns, rows in any order
+    table = pa.Table.from_pylist(
+        [rows[i] for i in rng.permutation(len(rows))], pa.schema([(c, _TYPES[c]) for c in cols])
     )
-    pdf = pd.concat([pdf, pseudo], ignore_index=True)
-    pdf = pdf.sample(frac=1.0, random_state=int(pick % 2**31)).assign(segment_id=0)
-    ctx = SegmentContext.from_pdf(pdf, {}, 0, 1 << 20)
-    lazy = SegmentContext.from_pdf(pdf, {}, 0, 1 << 20)  # only decode_blocks
+    ctx = SegmentContext.from_columns(_columns(table), {}, 0, 1 << 20)
+    lazy = SegmentContext.from_columns(_columns(table), {}, 0, 1 << 20)  # only decode_blocks
 
     for term, (docs, freqs, norms, pos, pay) in want.items():
         tp = ctx.postings[term]
         for got, exp in zip(tp.decode_all(), (docs, freqs, norms)):
             assert np.array_equal(got, exp), term
         # row by row against the scalar decoders
-        blocks = pdf[pdf["term"] == term].sort_values("block_no")
+        blocks = sorted((r for r in rows if r["term"] == term), key=lambda r: r["block_no"])
         per_block = []
-        for r in blocks.itertuples():
-            if r.encoding > ENC_VBYTE_TAIL:
-                d, f = np.array([r.first_docid]), np.array([r.impact_freqs[0]])
+        for r in blocks:
+            if r["encoding"] > ENC_VBYTE_TAIL:
+                d, f = np.array([r["first_docid"]]), np.array([r["impact_freqs"][0]])
             else:
                 d = decode_block_docids(
-                    r.encoding, r.docids_enc, r.n_docs, r.base_docid, r.last_docid
+                    r["encoding"], r["docids_enc"], r["n_docs"], r["base_docid"], r["last_docid"]
                 )
-                f = decode_block_freqs(r.encoding, r.freqs_enc, r.n_docs)
-            if r.positions_enc is None:  # no occurrences
+                f = decode_block_freqs(r["encoding"], r["freqs_enc"], r["n_docs"])
+            if r["positions_enc"] is None:  # no occurrences
                 p = np.zeros(0, dtype=np.int64)
             else:
-                p = decode_positions(r.positions_enc, f)
-            y = decode_payloads(r.payloads_enc, f) if r.payloads_enc is not None else None
+                p = decode_positions(r["positions_enc"], f)
+            pay_enc = r["payloads_enc"]
+            y = decode_payloads(pay_enc, f) if pay_enc is not None else None
             per_block.append((d, f, p, y))
         sub = np.flatnonzero(rng.random(tp.n_blocks) < 0.5)
         if tp.n_blocks >= 3:

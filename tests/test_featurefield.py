@@ -88,13 +88,6 @@ def test_missing_params_raise():
         FeatureScorer("lucene", "nope", 1.0, pivot=1.0)
 
 
-def test_max_score_is_monotone_bound():
-    sc = FeatureScorer("lucene", "saturation", 2.0, pivot=10.0)
-    impacts = np.array([[int(encode_feature([5.0])[0]), 0],
-                        [int(encode_feature([40.0])[0]), 0]])
-    assert sc.max_score(impacts) == sc.score(encode_feature([40.0]))[0]
-
-
 @pytest.fixture(scope="module")
 def feat_index(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("index_feat"))

@@ -5,10 +5,11 @@ byte-budget eviction, and cache bypass without a tag."""
 import glob
 
 import numpy as np
-import pyarrow.parquet as pq
 import pytest
 
 from lucene_spark.index import build_index
+from lucene_spark.index.reader import IndexReader, read_slice
+from lucene_spark.index.schemas import POSTINGS_COLS
 from lucene_spark.search import Searcher
 from lucene_spark.search.query import BooleanQuery, ConstantScoreQuery, TermQuery
 from lucene_spark.search.scorers import build_scorers
@@ -23,7 +24,8 @@ N = 500
 
 
 @pytest.fixture(scope="module")
-def seg_pdf(spark, tmp_path_factory):
+def seg_cols(spark, tmp_path_factory):
+    """(segment id, the ``read_slice`` columns of ``wa`` and ``wb``)."""
     rows = [
         (f"doc://{i:06d}", "wa wb" if i % 3 == 0 else "wa filler%d" % i)
         for i in range(N)
@@ -36,56 +38,56 @@ def seg_pdf(spark, tmp_path_factory):
         num_segments=1,
         stopwords=None,
     )
-    pdf = pq.read_table(glob.glob(f"{d}/data/kind=2/segment_id=*")[0]).to_pandas()
-    sub = pdf[pdf["term"].isin(["wa", "wb"])].copy()
-    sub["segment_id"] = 0
-    return sub
+    seg = int(glob.glob(f"{d}/data/kind=2/segment_id=*")[0].rsplit("=", 1)[1])
+    singles = IndexReader(None, d).term_plan(["wa", "wb"])[1]
+    return seg, read_slice(d, None, seg, 0, N, ["wa", "wb"], POSTINGS_COLS, singles=singles)[0]
 
 
-def _ctx(seg_pdf, scorers, tag):
-    return SegmentContext.from_pdf(seg_pdf, scorers, 0, N, True, cache_tag=tag)
+def _ctx(seg_cols, scorers, tag=None):
+    seg, cols = seg_cols
+    return SegmentContext.from_columns(cols, scorers, 0, N, seg, cache_tag=tag)
 
 
-def _run(seg_pdf, tag):
+def _run(seg_cols, tag):
     # constant-score filter context: goes through matching_docs
     q = ConstantScoreQuery(
         query=BooleanQuery(must=(TermQuery("wa"),), must_not=(TermQuery("wb"),)),
         boost=1.5,
     )
     scorers = build_scorers([q], {"wa": (N, N), "wb": (N // 3, N // 3)}, N, 2 * N, "lucene")
-    ctx = _ctx(seg_pdf, scorers, tag)
+    ctx = _ctx(seg_cols, scorers, tag)
     return search_segment(ctx, q, 10)
 
 
-def test_admission_then_hit(seg_pdf):
+def test_admission_then_hit(seg_cols):
     FILTER_CACHE.clear()
-    d1, s1 = _run(seg_pdf, "tagA")
+    d1, s1 = _run(seg_cols, "tagA")
     assert FILTER_CACHE.hits == 0 and len(FILTER_CACHE.data) == 0  # 1st sighting
-    d2, s2 = _run(seg_pdf, "tagA")
+    d2, s2 = _run(seg_cols, "tagA")
     # admitted on 2nd sighting — one entry per filter node (outer bool +
     # each term leaf), the per-(query, leaf) granularity of LRUQueryCache
     assert len(FILTER_CACHE.data) >= 1
-    d3, s3 = _run(seg_pdf, "tagA")
+    d3, s3 = _run(seg_cols, "tagA")
     assert FILTER_CACHE.hits >= 1  # 3rd run served from cache
     assert list(d1) == list(d2) == list(d3)
     assert [np.float32(x) for x in s1] == [np.float32(x) for x in s3]
 
 
-def test_generation_tag_isolates(seg_pdf):
+def test_generation_tag_isolates(seg_cols):
     FILTER_CACHE.clear()
-    _run(seg_pdf, "tagA")
-    _run(seg_pdf, "tagA")
+    _run(seg_cols, "tagA")
+    _run(seg_cols, "tagA")
     assert len(FILTER_CACHE.data) >= 1
     hits_before = FILTER_CACHE.hits
-    _run(seg_pdf, "tagB")  # new index generation: no cross-tag reuse
+    _run(seg_cols, "tagB")  # new index generation: no cross-tag reuse
     assert FILTER_CACHE.hits == hits_before
 
 
-def test_no_tag_bypasses_cache(seg_pdf):
+def test_no_tag_bypasses_cache(seg_cols):
     FILTER_CACHE.clear()
     q = ConstantScoreQuery(query=TermQuery("wb"), boost=2.0)
     scorers = build_scorers([q], {"wb": (N // 3, N // 3)}, N, 2 * N, "lucene")
-    ctx = SegmentContext.from_pdf(seg_pdf, scorers, 0, N, True)  # no tag
+    ctx = _ctx(seg_cols, scorers)  # no tag
     search_segment(ctx, q, 10)
     search_segment(ctx, q, 10)
     assert FILTER_CACHE.hits == 0 and len(FILTER_CACHE.data) == 0
@@ -124,7 +126,7 @@ def test_dense_intersect_matches_sparse():
         span = int(rng.integers(100, 5000))
         lo = int(rng.integers(0, 1000))
         ctx = SegmentContext({}, {}, lo, lo + span)
-        s = _SegmentSearcher(ctx, 10)
+        s = _SegmentSearcher(ctx)
         # dense sets: > span/32 members, within [lo, lo+span)
         a = np.unique(rng.integers(lo, lo + span, size=span // 2)).astype(np.int64)
         b = np.unique(rng.integers(lo, lo + span, size=span // 2)).astype(np.int64)

@@ -202,24 +202,57 @@ def test_pruned_equals_exhaustive(searcher, oracle):
             )
             ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
             ctx.deleted = deleted
-            d, s = _SegmentSearcher(ctx, 10).blockmax_topk(term_qs, tie, 10)
+            d, s = _SegmentSearcher(ctx).blockmax_topk(term_qs, tie, 10)
             ds.append(d + meta[seg][0])
             ss.append(s)
         d, s = _topk(np.concatenate(ds), np.concatenate(ss), 10)
         assert list(zip(d.tolist(), s.astype(np.float32))) == want, q
 
 
+#: every scoring mode of ``scorers.make_term_scorer``
+MODES = (
+    "lucene", "double", "lm_dirichlet", "lm_jelinek_mercer", "boolean",
+    "classic", "sweet_spot", "dfr_gb2", "ib_ll", "dfi_chi2", "axiomatic_f2exp",
+    "dfr_inl2", "ib_spl", "axiomatic_f1log", "indri_dirichlet",
+    "multi_bm25_classic",
+)
+
+
+def _skew_texts(n: int) -> list[str]:
+    """A few very-high-freq docs inside window 0 (the real-web-text
+    impact skew)."""
+    hot = " ".join(["wa"] * 60 + ["wb"] * 60)
+    return [
+        hot if i in (7, 100, 300, 500, 1000, 2000) else "wa wb filler%d" % i
+        for i in range(n)
+    ]
+
+
+def _plateau_texts(n: int) -> list[str]:
+    """SweetSpot's length-norm plateau (40..120 terms): the one
+    80-term doc with ``wa`` outscores the short docs that hold it three
+    times, while its block's skyline keeps only the pair of a shorter doc
+    of the same freq."""
+    out = ["wb wc wd"] * n
+    out[:384] = ["wa wa wa wb"] * 384
+    out[5000] = " ".join(["wa"] + ["we"] * 79)
+    out[5001:5200] = ["wa wb wc wd"] * 199
+    return out
+
+
 def test_windowed_topk_contract_on_skew(spark, tmp_path_factory, monkeypatch):
-    """Under impact skew (a few very-high-freq docs, the real-web-text
-    shape), the windowed block-max top-k that ``search_segment`` runs for a
-    term and for a term dismax must (a) return exactly the exhaustive
-    evaluator's top-k and (b) gather and score fewer than half of its
-    blocks: the distinct (term, block) pairs read through ``decode_blocks``
-    / ``decode_all``. A conjunction runs the exhaustive evaluator itself."""
+    """For a term and a term dismax, the windowed block-max top-k that
+    ``search_segment`` runs on a slice wider than one window must return
+    exactly the exhaustive evaluator's top-k, docids and scores
+    bit-identical, under every scoring mode, on two fixtures: impact skew
+    and SweetSpot's length-norm plateau. On the skew fixture in ``lucene``
+    mode it must also gather and score fewer than half of the blocks: the
+    distinct (term, block) pairs read through ``decode_blocks`` /
+    ``decode_all``. A conjunction runs the exhaustive evaluator itself."""
     import glob
 
-    import pyarrow.parquet as pq
-
+    from lucene_spark.index.reader import IndexReader, read_slice
+    from lucene_spark.index.schemas import POSTINGS_COLS
     from lucene_spark.search.query import (
         BooleanQuery,
         DisjunctionMaxQuery,
@@ -234,33 +267,11 @@ def test_windowed_topk_contract_on_skew(spark, tmp_path_factory, monkeypatch):
         search_segment,
     )
 
-    n = 40960  # 10 block-max windows of 4096 docs
-    rows = []
-    for i in range(n):
-        if i in (7, 100, 300, 500, 1000, 2000):  # skew inside window 0
-            text = " ".join(["wa"] * 60 + ["wb"] * 60)
-        else:
-            text = "wa wb filler%d" % i
-        rows.append((f"doc://{i:06d}", text))
-    d = str(tmp_path_factory.mktemp("idx_skew"))
-    build_index(
-        spark,
-        spark.createDataFrame(rows, "url string, text string"),
-        d,
-        num_segments=1,
-        stopwords=None,
-    )
-    pdf = pq.read_table(glob.glob(f"{d}/data/kind=2/segment_id=*")[0]).to_pandas()
-    sub = pdf[pdf["term"].isin(["wa", "wb"])].copy()
-    sub["segment_id"] = 0
     term = TermQuery("wa")
     dismax = DisjunctionMaxQuery(
         disjuncts=(TermQuery("wa"), TermQuery("wb")), tie_breaker=0.1
     )
     conj = BooleanQuery(must=(TermQuery("wa"), TermQuery("wb")))
-    scorers = build_scorers(
-        [term, dismax, conj], {"wa": (n, n), "wb": (n, n)}, n, 3 * n, "lucene"
-    )
 
     gathered: set = set()
 
@@ -276,25 +287,45 @@ def test_windowed_topk_contract_on_skew(spark, tmp_path_factory, monkeypatch):
     monkeypatch.setattr(_TermPostings, "decode_blocks", decode_blocks)
     monkeypatch.setattr(_TermPostings, "decode_all", decode_all)
 
-    def run(q, fn):
-        ctx = SegmentContext.from_pdf(sub, scorers, 0, n)
-        gathered.clear()
-        dd, ss = fn(ctx, q)
-        return (list(dd), [np.float32(x) for x in ss]), len(gathered)
-
     def exhaustive(ctx, q):
-        return _topk(*_SegmentSearcher(ctx, 5).evaluate(q), 5)
+        return _topk(*_SegmentSearcher(ctx).evaluate(q), 5)
 
     def kept(ctx, q):
         return search_segment(ctx, q, 5)
 
-    for q in (term, dismax, conj):
-        got, dec_kept = run(q, kept)
-        want, dec_exh = run(q, exhaustive)
-        assert len(got[0]) == 5
-        assert got == want, q
-        if q is not conj:
-            assert dec_kept < dec_exh * 0.5, (q, dec_kept, dec_exh)
+    # 10 and 2 block-max windows of 4096 docs
+    for name, texts in (("skew", _skew_texts(40960)), ("plateau", _plateau_texts(8192))):
+        n = len(texts)
+        d = str(tmp_path_factory.mktemp(f"idx_{name}"))
+        build_index(
+            spark,
+            spark.createDataFrame(
+                [(f"doc://{i:06d}", t) for i, t in enumerate(texts)], "url string, text string"
+            ),
+            d,
+            num_segments=1,
+            stopwords=None,
+        )
+        reader = IndexReader(None, d)
+        tstats, singles = reader.term_plan(["wa", "wb"])
+        seg = int(glob.glob(f"{d}/data/kind=2/segment_id=*")[0].rsplit("=", 1)[1])
+        cols = read_slice(d, None, seg, 0, n, ["wa", "wb"], POSTINGS_COLS, singles=singles)[0]
+
+        def run(q, fn, scorers):
+            ctx = SegmentContext.from_columns(cols, scorers, 0, n)
+            gathered.clear()
+            dd, ss = fn(ctx, q)
+            return (dd.tolist(), ss.dtype, ss.tobytes()), len(gathered)
+
+        for mode in MODES:
+            scorers = build_scorers([term, dismax, conj], tstats, *reader.global_stats, mode)
+            for q in (term, dismax, conj):
+                got, dec_kept = run(q, kept, scorers)
+                want, dec_exh = run(q, exhaustive, scorers)
+                assert len(got[0]) == 5
+                assert got == want, (name, mode, q)
+                if name == "skew" and mode == "lucene" and q is not conj:
+                    assert dec_kept < dec_exh * 0.5, (q, dec_kept, dec_exh)
 
 
 def test_prefix_query(searcher, oracle):

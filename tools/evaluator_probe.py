@@ -13,10 +13,10 @@ engine's own ``search.searcher.plan_slices``, ``IndexReader.term_plan`` and
 
 at each docid slice span. Every per-slice top-k must be bit-identical
 (docids and float32 scores) between the two. Prints best-of-R
-milliseconds per shape and span of ``SegmentContext.from_columns`` plus the
-kernel (which decodes the postings it reads), summed over the tasks: every
-timed call builds a fresh context, so nothing decoded is cached across
-calls.
+milliseconds, and the median of the R, per shape and span of
+``SegmentContext.from_columns`` plus the kernel (which decodes the
+postings it reads), summed over the tasks: every timed call builds a
+fresh context, so nothing decoded is cached across calls.
 
 ``--batch N`` replays instead one ``perfbench.corpus.batch_queries`` batch
 of N queries per slice through ``batch_search_segment`` (what
@@ -24,8 +24,9 @@ of N queries per slice through ``batch_search_segment`` (what
 term scores) and through a per-query ``search_segment`` loop (what
 ``search`` runs: windowed for terms and term dismax on slices wider than
 one window), checks that every per-query top-k is bit-identical, and
-prints best-of-R milliseconds per query family — the evidence for running
-a batch's terms exhaustive.
+prints best-of-R milliseconds per query family, each family on a fresh
+context of each slice, and for the whole batch on one context — the
+evidence for running a batch's terms exhaustive.
 
 Usage:
     python tools/evaluator_probe.py [--docs 100000] [--spans 16384,126976,0]
@@ -136,15 +137,15 @@ def make_scorers(searcher, asts: list) -> dict:
 
 
 def exhaustive(ctx: SegmentContext, ast, k: int):
-    d, s = _SegmentSearcher(ctx, k).evaluate(ast)
+    d, s = _SegmentSearcher(ctx).evaluate(ast)
     keep = (d >= ctx.min_doc) & (d < ctx.max_doc)
     return _topk(d[keep], s[keep], k)
 
 
 def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
-    """Best-of-reps Σ over tasks of the time of from_columns and fn, and
-    the last rep's results."""
-    best, results = float("inf"), []
+    """Best-of-reps and median Σ over tasks of the time of from_columns and
+    fn, and the last rep's results."""
+    totals, results = [], []
     for _ in range(reps):
         total, results = 0.0, []
         for cols, lo, hi in tasks:
@@ -153,8 +154,8 @@ def kernel_ms(tasks, scorers, ast, k: int, fn, reps: int):
             d, s = fn(ctx, ast, k)
             total += time.perf_counter() - t0
             results.append((d.tolist(), np.asarray(s, dtype=np.float32).tobytes()))
-        best = min(best, total)
-    return 1e3 * best, results
+        totals.append(total)
+    return 1e3 * min(totals), 1e3 * float(np.median(totals)), results
 
 
 def read_tasks(reader, seg_meta: dict, span: int, terms) -> list:
@@ -171,22 +172,25 @@ def read_tasks(reader, seg_meta: dict, span: int, terms) -> list:
 def shape_report(asts, scorers, reader, seg_meta, spans, args) -> bool:
     """Per reference shape: ``search_segment`` against the exhaustive
     evaluator. True when every top-k is bit-identical."""
-    print("| shape | family | span | search_segment ms | exhaustive ms | identical |")
-    print("|---|---|---:|---:|---:|---|")
+    print("| shape | family | span | search_segment ms | exhaustive ms | median ms | identical |")
+    print("|---|---|---:|---:|---:|---|---|")
     totals: dict[tuple[str, int], list[float]] = {}
     all_identical = True
     for span in spans:
         for qid, ast in asts.items():
             tasks = read_tasks(reader, seg_meta, span, collect_terms(ast))
-            kms, kres = kernel_ms(tasks, scorers[qid], ast, args.k, search_segment, args.reps)
-            ems, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
+            kms, kmed, kres = kernel_ms(
+                tasks, scorers[qid], ast, args.k, search_segment, args.reps
+            )
+            ems, emed, eres = kernel_ms(tasks, scorers[qid], ast, args.k, exhaustive, args.reps)
             same = kres == eres
             all_identical &= same
             t = totals.setdefault((family(qid), span), [0.0, 0.0])
             t[0] += kms
             t[1] += ems
             print(f"| {qid} | {family(qid)} | {span or 'segment'} | "
-                  f"{kms:.1f} | {ems:.1f} | {'yes' if same else 'NO'} |", flush=True)
+                  f"{kms:.1f} | {ems:.1f} | {kmed:.1f} / {emed:.1f} | "
+                  f"{'yes' if same else 'NO'} |", flush=True)
     print()
     print("| family | span | search_segment ms | exhaustive ms |")
     print("|---|---:|---:|---:|")
@@ -206,57 +210,62 @@ def ranked(d, s) -> list:
 def batch_report(asts, scorers, reader, seg_meta, spans, args) -> bool:
     """One query batch per (segment, slice) task, through
     ``batch_search_segment`` (what ``search_many`` runs) and through a
-    per-query ``search_segment`` loop (what ``search`` runs), each on one
-    context per slice shared by the whole batch. The batch kernel is called
-    once per family on that shared context, so its decode memo is shared
-    across families as in one whole-batch call. True when every per-query
+    per-query ``search_segment`` loop (what ``search`` runs). Each query
+    family runs on a fresh context of the slice on each side, so every
+    family pays its own decode and term scoring, whatever the batch's
+    family order; the **all** row runs the whole batch on one fresh context
+    a side, as one ``search_many`` call would. True when every per-query
     top-k is bit-identical."""
     by_fam: dict[str, dict] = {}
     for qid, ast in asts.items():
         by_fam.setdefault(family(qid), {})[qid] = ast
+    groups = {**by_fam, "**all**": asts}
     print(f"# batch of {len(asts)} queries: "
           + ", ".join(f"{f} {len(q)}" for f, q in sorted(by_fam.items())))
     print("| span | slices | family | queries | batch ms | per-query loop ms | identical |")
     print("|---:|---:|---|---:|---:|---:|---|")
     terms = set().union(*(collect_terms(a) for a in asts.values()))
+
+    def run_batch(ctx, qs) -> tuple[float, dict]:
+        t0 = time.perf_counter()
+        qids, d, s = batch_search_segment(ctx, qs, args.k)
+        dt = time.perf_counter() - t0
+        qids = np.asarray(qids, dtype=object)
+        return dt, {qid: ranked(d[qids == qid], s[qids == qid]) for qid in qs}
+
+    def run_loop(ctx, qs) -> tuple[float, dict]:
+        dt, got = 0.0, {}
+        for qid, ast in qs.items():
+            t0 = time.perf_counter()
+            d, s = search_segment(ctx, ast, args.k)
+            dt += time.perf_counter() - t0
+            got[qid] = ranked(d, s)
+        return dt, got
+
     all_identical = True
     for span in spans:
         tasks = read_tasks(reader, seg_meta, span, terms)
-        best_b = {f: float("inf") for f in by_fam}
+        best_b = {f: float("inf") for f in groups}
         best_l = dict(best_b)
-        same = {f: True for f in by_fam}
+        same = {f: True for f in groups}
         for _ in range(args.reps):
-            t_b = dict.fromkeys(by_fam, 0.0)
-            t_l = dict.fromkeys(by_fam, 0.0)
+            t_b = dict.fromkeys(groups, 0.0)
+            t_l = dict.fromkeys(groups, 0.0)
             for cols, lo, hi in tasks:
-                got: dict[str, list] = {}
-                ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
-                for fam, qs in by_fam.items():
-                    t0 = time.perf_counter()
-                    qids, d, s = batch_search_segment(ctx, qs, args.k)
-                    t_b[fam] += time.perf_counter() - t0
-                    qids = np.asarray(qids, dtype=object)
-                    for qid in qs:
-                        m = qids == qid
-                        got[qid] = ranked(d[m], s[m])
-                ctx = SegmentContext.from_columns(cols, scorers, lo, hi)
-                for fam, qs in by_fam.items():
-                    for qid, ast in qs.items():
-                        t0 = time.perf_counter()
-                        d, s = search_segment(ctx, ast, args.k)
-                        t_l[fam] += time.perf_counter() - t0
-                        same[fam] &= ranked(d, s) == got[qid]
-            for fam in by_fam:
+                for fam, qs in groups.items():
+                    dt_b, got_b = run_batch(SegmentContext.from_columns(cols, scorers, lo, hi), qs)
+                    dt_l, got_l = run_loop(SegmentContext.from_columns(cols, scorers, lo, hi), qs)
+                    t_b[fam] += dt_b
+                    t_l[fam] += dt_l
+                    same[fam] &= got_l == got_b
+            for fam in groups:
                 best_b[fam] = min(best_b[fam], t_b[fam])
                 best_l[fam] = min(best_l[fam], t_l[fam])
-        for fam, qs in sorted(by_fam.items()):
+        for fam, qs in sorted(by_fam.items()) + [("**all**", asts)]:
             all_identical &= same[fam]
             print(f"| {span or 'segment'} | {len(tasks)} | {fam} | {len(qs)} | "
                   f"{1e3 * best_b[fam]:.1f} | {1e3 * best_l[fam]:.1f} | "
                   f"{'yes' if same[fam] else 'NO'} |", flush=True)
-        print(f"| {span or 'segment'} | {len(tasks)} | **all** | {len(asts)} | "
-              f"**{1e3 * sum(best_b.values()):.1f}** | "
-              f"**{1e3 * sum(best_l.values()):.1f}** | |", flush=True)
     print(f"\nall bit-identical: {all_identical}")
     return all_identical
 
