@@ -17,7 +17,6 @@ their pipeline sees a uniform block stream:
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,26 +51,28 @@ def singleton_pseudo_blocks(term_dict: DataFrame, with_positions: bool) -> DataF
     )
 
 
-def singletons_by_segment(rows: pa.Table, seg: np.ndarray) -> dict[int, dict[str, np.ndarray]]:
+def singletons_by_segment(
+    rows: dict[str, np.ndarray], seg: np.ndarray
+) -> dict[int, dict[str, np.ndarray]]:
     """segment_id → the pulsed singletons among the term_dict ``rows``
-    (``term``, ``singleton_docid`` / ``_freq`` / ``_norm`` and, when read,
-    ``singleton_positions`` / ``_payloads``; row i of segment ``seg[i]``,
-    every ``singleton_docid`` set) as numpy columns sorted by docid:
-    ``term``, ``docid``, ``freq``, ``norm`` and ``positions_enc`` /
-    ``payloads_enc`` when read."""
-    if not rows.num_rows:
+    (numpy columns ``term``, ``singleton_docid`` / ``_freq`` / ``_norm``
+    and, when read, ``singleton_positions`` / ``_payloads``; row i of
+    segment ``seg[i]``, every ``singleton_docid`` set) as numpy columns
+    sorted by docid: ``term``, ``docid``, ``freq``, ``norm`` and
+    ``positions_enc`` / ``payloads_enc`` when read."""
+    docid = rows["singleton_docid"].astype(np.int64, copy=False)
+    if not docid.size:
         return {}
-    docid = rows["singleton_docid"].to_numpy().astype(np.int64, copy=False)
     order = np.lexsort((docid, seg))
     cols = {
-        "term": rows["term"].to_numpy(),
+        "term": rows["term"],
         "docid": docid,
-        "freq": rows["singleton_freq"].to_numpy().astype(np.int64, copy=False),
-        "norm": rows["singleton_norm"].to_numpy().astype(np.int64, copy=False),
+        "freq": rows["singleton_freq"].astype(np.int64, copy=False),
+        "norm": rows["singleton_norm"].astype(np.int64, copy=False),
     }
     for c, name in (("singleton_positions", "positions_enc"), ("singleton_payloads", "payloads_enc")):
-        if c in rows.column_names:
-            cols[name] = rows[c].to_numpy()
+        if c in rows:
+            cols[name] = rows[c]
     seg = np.asarray(seg)[order]
     cuts = [0, *(np.flatnonzero(seg[1:] != seg[:-1]) + 1).tolist(), seg.size]
     return {

@@ -481,15 +481,25 @@ class IndexReader:
         cols += ["singleton_payloads"] if payloads else []
         term = ds.field("term")
         rows = self._term_rows(term.isin([*terms, *stats_only]), None, [*cols, "__filename"])
-        pulsed = pc.is_valid(rows["singleton_docid"])
+        # one numpy pass over the read; an integer column with nulls comes
+        # out as float64 with NaN, exact for these counts and docids
+        col = {c: rows[c].to_numpy() for c in rows.column_names}
+        keys, row_key = np.unique(col["term"], return_inverse=True)
+        df, ttf = (
+            np.bincount(row_key, col[c], keys.size).astype(np.int64).tolist()
+            for c in ("df", "ttf")
+        )
+        stats = dict(zip(keys.tolist(), zip(df, ttf)))
+        docid = col["singleton_docid"]
+        pulsed = ~np.isnan(docid) if docid.dtype.kind == "f" else np.ones(docid.size, bool)
         if stats_only:
-            pulsed = pc.and_(pulsed, pc.is_in(rows["term"], pa.array(terms, pa.string())))
-        singles = rows.filter(pulsed)
-        files = singles["__filename"].to_pylist()
+            pulsed &= np.isin(col["term"], terms)
+        singles = {c: v[pulsed] for c, v in col.items()}
+        files = singles["__filename"]
         # a partition file's directory is segment_id=N
         seg_of = {f: int(os.path.basename(os.path.dirname(f)).split("=")[1]) for f in set(files)}
         seg = [seg_of[f] for f in files]
-        return _stats(_summed(rows, ("df", "ttf"))), singletons_by_segment(singles, seg)
+        return stats, singletons_by_segment(singles, seg)
 
     def expand_terms(
         self,

@@ -178,24 +178,16 @@ class LMJelinekMercerScorer:
 
 _LOG_2 = float(np.log(2.0))
 
-#: every float64 scoring mode (everything except the float32 ``lucene``
-#: rank-identical BM25); all share the double evaluation path
-DOUBLE_MODES = frozenset(
-    {
-        "double",
-        "lm_dirichlet",
-        "lm_jelinek_mercer",
-        "boolean",
-        "classic",
-        "sweet_spot",
-        "dfr_gb2",
-        "ib_ll",
-        "dfi_chi2",
-        "axiomatic_f2exp",
-        "indri_dirichlet",
-        "multi_bm25_classic",
-    }
+#: every scoring mode of ``make_term_scorer``: the float32 ``lucene``
+#: rank-identical BM25 first, then the float64 modes
+MODES = (
+    "lucene", "double", "lm_dirichlet", "lm_jelinek_mercer", "boolean",
+    "classic", "sweet_spot", "dfr_gb2", "ib_ll", "dfi_chi2", "axiomatic_f2exp",
+    "dfr_inl2", "ib_spl", "axiomatic_f1log", "indri_dirichlet",
+    "multi_bm25_classic",
 )
+#: every float64 scoring mode; all share the double evaluation path
+DOUBLE_MODES = frozenset(MODES[1:])
 
 
 @dataclass(frozen=True)

@@ -59,13 +59,21 @@ entry point      kernel (segment.py)       result shape
                  query on one context,
                  so the queries share its
                  scored terms)
-``search_all``   ``exhaustive_hits``       every hit, no cut: local rows
-                                           when run on the driver, else the
-                                           lazy Spark stage
+``search_all``   ``exhaustive_hits``       every hit, no cut: the rows in
+                                           the driver when run there, else
+                                           the lazy Spark stage
 ``count``        ``matching_docs``         per-slice counts summed on the
                                            driver; ``count("*")`` reads only
                                            metadata
 ===============  ========================  ==================================
+
+The merged rows of ``search`` and ``search_many`` (wherever their tasks
+ran) and of a driver-run ``search_all`` come back as ``LocalHits``, a
+DataFrame that holds them in the driver, as IndexSearcher.search returns
+its TopDocs in memory: ``collect``, ``toPandas``, ``count``, ``take``,
+``head``, ``first``, ``isEmpty``, ``schema`` and ``columns`` answer from
+the rows with no JVM call. The first Spark operation on it (``select``,
+``join``, ``show``, ...) makes the rows an Arrow local relation, once.
 
 MatchAllDocsQuery runs in the same kernel, at the top level or inside a
 tree: a plan that holds one also reads each task's stored docids from its
@@ -92,7 +100,7 @@ field's namespace:
 from __future__ import annotations
 
 import dataclasses
-from functools import partial
+from functools import cached_property, partial
 
 import numpy as np
 import pandas as pd
@@ -100,8 +108,17 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    _create_row,
+)
 
 from ..index.builder import FIELD_SEP, exists_term, field_term
 from ..index.reader import IndexReader, read_slice
@@ -167,6 +184,15 @@ _CHILDREN = {
     ToChildBlockJoinQuery: ("parent", "parents"),
     ParentChildrenBlockJoinQuery: ("child", "parents"),
 }
+
+# search_many's rows
+BATCH_HIT_SCHEMA = StructType(
+    [
+        StructField("query_id", StringType(), True),
+        StructField("docid", LongType(), True),
+        StructField("score", DoubleType(), True),
+    ]
+)
 
 # analyzer output never contains NUL, so this term matches no posting —
 # the stand-in for an interval slot whose multiterm leaf expanded to
@@ -305,6 +331,65 @@ def _arrow_schema(schema) -> pa.Schema:
     return to_arrow_schema(
         DataType.fromDDL(schema) if isinstance(schema, str) else schema
     )
+
+
+class LocalHits(ClassicDataFrame):
+    """The merged rows of a call as a Spark DataFrame, held in the driver
+    as Lucene's IndexSearcher.search holds its TopDocs: ``collect``,
+    ``toPandas``, ``count``, ``take``/``head``/``first``, ``isEmpty``,
+    ``schema`` and ``columns`` answer from the rows, with the values and
+    dtypes the JVM gives for the same rows, and launch no job. Any other
+    operation (``select``, ``join``, ``show``, ``explain``, ...) reads
+    ``_jdf``, which makes the rows an Arrow local relation, once."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic DataFrame's __new__ wraps a JVM frame, which this
+        # one builds only when a Spark operation asks for it
+        return object.__new__(cls)
+
+    def __init__(self, session: SparkSession, schema: StructType, pdf=None):
+        self._session = session
+        self._sc = session.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._schema = schema
+        # one column per field, with the dtype Spark's toPandas gives it
+        self._rows = pd.DataFrame(
+            {
+                f.name: np.asarray([] if pdf is None else pdf[f.name], f.type.to_pandas_dtype())
+                for f in _arrow_schema(schema)
+            }
+        )
+
+    @property
+    def schema(self) -> StructType:
+        return self._schema
+
+    @cached_property
+    def _jdf(self):
+        table = pa.Table.from_pandas(
+            self._rows, schema=_arrow_schema(self._schema), preserve_index=False
+        )
+        return self._session.createDataFrame(table, self._schema)._jdf
+
+    def collect(self) -> list:
+        return self.take(len(self._rows))
+
+    def take(self, num: int) -> list:
+        if num < 0:
+            return super().take(num)  # Spark's error for a negative limit
+        fields = self.columns
+        cols = (self._rows[f].to_numpy()[:num].tolist() for f in fields)
+        return [_create_row(fields, values) for values in zip(*cols)]
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._rows.copy()
+
+    def count(self) -> int:
+        return len(self._rows)
+
+    def isEmpty(self) -> bool:
+        return self._rows.empty
 
 
 def _driver_ms(tasks, postings: int, positions: bool, docs: bool) -> float:
@@ -620,7 +705,7 @@ class Searcher:
         sorted and overlapping/adjacent ones coalesced driver-side, so the
         scan evaluates the minimal disjunction. Constant score = boost."""
         if not ranges:
-            return self._empty_hits().select("docid", "score")
+            return LocalHits(self.spark, SEARCH_HIT_SCHEMA)
         merged: list[list[float]] = []
         for lo, hi in sorted((float(a), float(b)) for a, b in ranges):
             if merged and lo <= merged[-1][1]:
@@ -1306,13 +1391,15 @@ class Searcher:
         ``with_url``, by (score DESC, docid ASC); ``after=(score, docid)``
         pages past that anchor (searchAfter). The tasks run and their hits
         are merged during this call, in the driver process or as one Spark
-        stage; the returned DataFrame holds the merged rows."""
+        stage. The returned ``LocalHits`` holds the merged rows: collecting
+        them, ``toPandas`` and ``count`` run no Spark job and make no JVM
+        call; a Spark operation on it builds their local relation."""
         query = self._prepared(query, analyzer=analyzer)
         body = partial(_top_k_body, query=query, k=k, after=after)
         top = _top(_to_pandas(self._slices([query], body, SEARCH_HIT_SCHEMA)), k)
         if with_url:
-            return self._local_rows(URL_HIT_SCHEMA, self._with_urls(top))
-        return self._local_rows(SEARCH_HIT_SCHEMA, top)
+            return LocalHits(self.spark, URL_HIT_SCHEMA, self._with_urls(top))
+        return LocalHits(self.spark, SEARCH_HIT_SCHEMA, top)
 
     def search_many(self, queries: dict[str, object], k: int = 10) -> DataFrame:
         """Batched top-k for many queries in at most ONE Spark job.
@@ -1325,16 +1412,19 @@ class Searcher:
         (the Spark analog of Lucene's SearchTask loop throughput,
         benchmark/byTask/tasks/SearchTask.java). The tasks run during this
         call, in the driver process when that is sooner than a Spark
-        wave; the returned DataFrame holds the merged rows.
+        wave. The returned ``LocalHits`` holds the merged rows, answered
+        as ``search``'s are.
 
         Returns (query_id, docid, score), k rows per query, ordered within
         each query by (score DESC, docid ASC): the rows ``search(q, k)``
         gives.
         """
+        if not all(isinstance(qid, str) for qid in queries):
+            # the query_id column is a string column
+            raise TypeError("search_many query ids must be str")
         parsed = {qid: self._prepared(q) for qid, q in queries.items()}
         body = partial(_batch_body, queries=parsed, k=k)
-        schema = "query_id string, docid long, score double"
-        hits = _to_pandas(self._slices(list(parsed.values()), body, schema))
+        hits = _to_pandas(self._slices(list(parsed.values()), body, BATCH_HIT_SCHEMA))
         top = (
             hits.sort_values(
                 ["query_id", "score", "docid"], ascending=[True, False, True]
@@ -1342,17 +1432,21 @@ class Searcher:
             .groupby("query_id", sort=False)
             .head(k)
         )
-        return self._local_rows(schema, top)
+        return LocalHits(self.spark, BATCH_HIT_SCHEMA, top)
 
     def search_all(self, query) -> DataFrame:
         """All matching (docid, score) rows, distributed (no top-k cut) —
-        the building block for field-sort / rescoring / function scoring."""
+        the building block for field-sort / rescoring / function scoring.
+        A plan run in the driver process returns its rows as ``LocalHits``,
+        answered as ``search``'s are; a plan run on Spark returns the lazy
+        one-stage ``mapInPandas`` DataFrame, which runs when an action
+        asks for its rows."""
         query = self._prepared(query)
         body = partial(_all_body, query=query)
         hits = self._slices([query], body, SEARCH_HIT_SCHEMA)
         if isinstance(hits, DataFrame):
             return hits
-        return self._local_rows(SEARCH_HIT_SCHEMA, hits)
+        return LocalHits(self.spark, SEARCH_HIT_SCHEMA, hits)
 
     def search_sorted_by(
         self,
@@ -1767,19 +1861,3 @@ class Searcher:
         return pd.DataFrame(
             {"docid": docid, "url": url, "score": top["score"].to_numpy()}
         )
-
-    def _local_rows(self, schema, pdf: pd.DataFrame | None = None) -> DataFrame:
-        """The rows of ``pdf`` (none when None) as a DataFrame of ``schema``
-        (a StructType or DDL string), made from an Arrow table: a local
-        relation, so collecting it runs no Spark job and starts no Python
-        worker."""
-        st = DataType.fromDDL(schema) if isinstance(schema, str) else schema
-        arrow = _arrow_schema(st)
-        table = (
-            arrow.empty_table() if pdf is None
-            else pa.Table.from_pandas(pdf, schema=arrow, preserve_index=False)
-        )
-        return self.spark.createDataFrame(table, st)
-
-    def _empty_hits(self) -> DataFrame:
-        return self._local_rows(SEARCH_HIT_SCHEMA)

@@ -140,10 +140,11 @@ def test_spark_work_budget(spark, idx, monkeypatch):
     """Planning reads on the driver: opening a Searcher launches no Spark
     job. A plan on this 401-doc index costs less than one Spark wave, so
     every call runs in the driver process and launches none, url lookups
-    and a match-all included. Forced onto Spark, each call is one job of
-    one map-only stage of at most one task per (segment, slice), and
-    ``with_url`` adds no job: the urls of the top k are read with pyarrow.
-    ``count("*")`` reads only metadata either way. Multi-term expansion
+    and a match-all included, and neither does ``toPandas()`` of its
+    result. Forced onto Spark, each call is one job of one map-only stage
+    of at most one task per (segment, slice), and ``with_url`` adds no
+    job: the urls of the top k are read with pyarrow. ``count("*")``
+    reads only metadata either way. Multi-term expansion
     and spell suggestions read the term dictionary with pyarrow, so they
     add no job, and a Searcher keeps no per-query state."""
     from perfbench.tracing import JobCounter
@@ -220,6 +221,16 @@ def test_spark_work_budget(spark, idx, monkeypatch):
         return {k: len(v) if hasattr(v, "__len__") else None for k, v in vars(obj).items()}
 
     calls(lambda counts: counts == (0, 0, 0))
+    # a driver-run result answers toPandas() from its rows, as it does
+    # collect()
+    for name, call in [
+        ("search", lambda: s.search("w0002 OR w0003", k=5)),
+        ("search_all", lambda: s.search_all("w0004 AND w0005")),
+    ]:
+        with jobs.call(f"{name} toPandas") as gid:
+            pdf = call().toPandas()
+        assert len(pdf) > 0, name
+        assert jobs.counts(gid) == (0, 0, 0), name
     before = state(s), state(s.reader)
     got = s.search_many({str(i): f"w{i:04d}*" for i in range(200)}, k=1).collect()
     assert len(got) > 100

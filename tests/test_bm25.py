@@ -8,6 +8,7 @@ import pytest
 
 from lucene_spark.functions.bm25 import Bm25Scorer, DoubleBm25Scorer, idf_value
 from lucene_spark.functions.smallfloat import int_to_byte4
+from lucene_spark.search.scorers import MODES
 
 
 def test_idf_value_golden():
@@ -59,15 +60,6 @@ def test_float32_evaluation_order():
     assert got == want and got.dtype == np.float32
 
 
-#: every scoring mode of ``scorers.make_term_scorer``
-MODES = (
-    "lucene", "double", "lm_dirichlet", "lm_jelinek_mercer", "boolean",
-    "classic", "sweet_spot", "dfr_gb2", "ib_ll", "dfi_chi2", "axiomatic_f2exp",
-    "dfr_inl2", "ib_spl", "axiomatic_f1log", "indri_dirichlet",
-    "multi_bm25_classic",
-)
-
-
 @pytest.mark.parametrize("mode", MODES)
 def test_block_ub_bounds_every_posting(mode):
     """``_TermPostings.block_ub`` over the impact skylines the builder
@@ -110,3 +102,19 @@ def test_double_scorer_matches_formula():
     idf = math.log(1 + (10 - 2 + 0.5) / (2 + 0.5))
     want = idf * 3 / (3 + 1.2 * (1 - 0.75 + 0.75 * 10 / 10))
     assert got == pytest.approx(want, rel=1e-12)
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_interval_scorer_every_mode(mode):
+    """An interval query scores under every scoring mode: the saturation
+    ``boost * freq / (freq + pivot)``, float32 in ``lucene`` mode and
+    float64 in every other."""
+    from lucene_spark.search.query import IntervalNear
+    from lucene_spark.search.scorers import build_scorers
+
+    q = IntervalNear(terms=("a", "b"))
+    sc = build_scorers([q], {"a": (3, 5), "b": (2, 2)}, 100, 1000, mode)[q]
+    got = sc.score(np.array([1.0, 3.0]))
+    assert got.dtype == (np.float32 if mode == "lucene" else np.float64)
+    want = q.boost * np.array([1.0, 3.0]) / (np.array([1.0, 3.0]) + q.pivot)
+    np.testing.assert_allclose(got, want, rtol=1e-6)

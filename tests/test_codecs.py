@@ -310,6 +310,7 @@ def test_bulk_decode_matches_scalar(case):
             for t, *_ in singles
         ], pa.binary()),
     })
+    td = {c: td[c].to_numpy() for c in td.column_names}
     pseudo = pseudo_rows(singletons_by_segment(td, [0] * len(singles))[0], 0, 1 << 20, cols)
     rows += [
         {c: [v[i]] if c.startswith("impact_") else v[i] for c, v in pseudo.items()}

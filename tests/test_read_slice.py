@@ -84,7 +84,9 @@ def _check_index(index_dir: str, deletes_dir, *, positions: bool, payloads: bool
         pulsed = sorted(t["term"] for t in td if t["singleton_docid"] is not None)
         blocked = sorted(t["term"] for t in td if t["singleton_docid"] is None)
         terms = pulsed[::7] + blocked[::11] + ["zzzz-absent"]
-        _stats, singles = r.term_plan(terms, positions, payloads)
+        stats, singles = r.term_plan(terms, positions, payloads)
+        # its per-term sums equal term_stats' pyarrow group_by
+        assert stats == r.term_stats(terms)
         dels = set()
         if deletes_dir is not None:
             dels = {

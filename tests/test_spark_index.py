@@ -12,6 +12,7 @@ from lucene_spark.index import build_index
 from lucene_spark.oracle.pyindex import PyIndex
 from lucene_spark.search import Searcher
 from lucene_spark.search.query import parse_query
+from lucene_spark.search.scorers import MODES
 
 N_DOCS = 400
 N_SEGMENTS = 5
@@ -207,15 +208,6 @@ def test_pruned_equals_exhaustive(searcher, oracle):
             ss.append(s)
         d, s = _topk(np.concatenate(ds), np.concatenate(ss), 10)
         assert list(zip(d.tolist(), s.astype(np.float32))) == want, q
-
-
-#: every scoring mode of ``scorers.make_term_scorer``
-MODES = (
-    "lucene", "double", "lm_dirichlet", "lm_jelinek_mercer", "boolean",
-    "classic", "sweet_spot", "dfr_gb2", "ib_ll", "dfi_chi2", "axiomatic_f2exp",
-    "dfr_inl2", "ib_spl", "axiomatic_f1log", "indri_dirichlet",
-    "multi_bm25_classic",
-)
 
 
 def _skew_texts(n: int) -> list[str]:

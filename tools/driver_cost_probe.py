@@ -15,7 +15,10 @@ Measures, at local[--cores]:
     the benchmark builds them) of each ``--docs`` size: a term no segment
     holds (the reads alone), the reference term, boolean and phrase
     shapes (top-k kernel), ``*`` (docmap docs) and one ``batch_queries``
-    batch through the ``search_many`` kernel.
+    batch through the ``search_many`` kernel;
+(d) the result layer: ``search(q).collect()`` of the reference queries
+    against the same calls' parse, ``_slices`` and top-k merge alone (the
+    call less the building of its result rows), per size.
 
 Each figure is the median of --reps timed runs after one warm-up. The
 constants of ``searcher._driver_ms`` are fitted over all sizes at once, so
@@ -23,8 +26,8 @@ that the estimate follows the index size: the per-task read as a line in
 the task's docid span, then the cost per posting (per positions posting)
 and per docmap doc by least squares on what the earlier terms leave. The
 batch is measured against the fit, not fitted. It prints the read layer's
-ms per task, each size's measured against fitted ms, then the constants;
-WAVE_MS is the 1-task wave.
+ms per task, the result layer, each size's measured against fitted ms,
+then the constants; WAVE_MS is the 1-task wave.
 
 Usage:
     python tools/driver_cost_probe.py [--docs 2000,20000,100000] [--seed 1]
@@ -57,7 +60,7 @@ os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 from lucene_spark.constants import ENGLISH_STOP_WORDS  # noqa: E402
 from lucene_spark.fixtures import reference_queries  # noqa: E402
 from lucene_spark.index.reader import read_slice  # noqa: E402
-from lucene_spark.index.schemas import POSTINGS_COLS  # noqa: E402
+from lucene_spark.index.schemas import POSTINGS_COLS, SEARCH_HIT_SCHEMA  # noqa: E402
 from lucene_spark.search.query import collect_terms  # noqa: E402
 from lucene_spark.search.segment import SegmentContext  # noqa: E402
 from lucene_spark.search.searcher import (  # noqa: E402
@@ -65,6 +68,8 @@ from lucene_spark.search.searcher import (  # noqa: E402
     _batch_body,
     _plan_reads,
     _run_slice,
+    _to_pandas,
+    _top,
     _top_k_body,
     plan_slices,
 )
@@ -161,6 +166,23 @@ def read_layer_ms(searcher, terms: list[str], reps: int) -> tuple[float, float]:
     return _median_ms(read, reps) / len(tasks), _median_ms(build, reps) / len(tasks)
 
 
+def result_rows_ms(searcher, queries: list[str], reps: int) -> tuple[float, float]:
+    """Median over ``queries`` of the median ms of ``search(q, k=K)
+    .collect()``, and of the same call's parse, ``_slices`` and top-k
+    merge alone; the difference is what building the result rows costs."""
+
+    def merged(q):
+        p = searcher._prepared(q)
+        body = partial(_top_k_body, query=p, k=K, after=None)
+        return _top(_to_pandas(searcher._slices([p], body, SEARCH_HIT_SCHEMA)), K)
+
+    whole, part = [], []
+    for q in queries:
+        whole.append(_median_ms(lambda q=q: searcher.search(q, k=K).collect(), reps))
+        part.append(_median_ms(lambda q=q: merged(q), reps))
+    return statistics.median(whole), statistics.median(part)
+
+
 def probe_index(searcher, args) -> dict:
     """Timed plans on one index: (ms, cost inputs) per shape."""
     from perfbench.corpus import batch_queries
@@ -173,6 +195,7 @@ def probe_index(searcher, args) -> dict:
         "read_none": read_layer_ms(searcher, [], args.reps)[0],
         "read_2": read_layer_ms(searcher, READ_TERMS, args.reps),
         "absent": top_k(searcher._prepared("zzzzabsentterm")),
+        "result": result_rows_ms(searcher, [qs for _qid, qs in reference_queries()], args.reps),
     }
     out["terms"] = [top_k(searcher._prepared(qs)) for _qid, qs in reference_queries()]
     out["terms"] += [
@@ -276,6 +299,12 @@ def main() -> int:
             inp = r["absent"][1]
             print(f"| {n_docs} | {inp['docs'] / inp['tasks']:.0f} | {r['read_none']:.2f} "
                   f"| {r['read_2'][0]:.2f} | {r['read_2'][1]:.2f} |")
+        print("\n| docs | search(q).collect() ms | parse + _slices + merge ms "
+              "| result rows ms |")
+        print("|---:|---:|---:|---:|")
+        for n_docs, r in rows.items():
+            whole, part = r["result"]
+            print(f"| {n_docs} | {whole:.1f} | {part:.1f} | {whole - part:.1f} |")
         print("\n| docs | tasks | docs/task | absent ms | term shapes ms, "
               "measured / fitted (sum) | * ms | batch ms |")
         print("|---:|---:|---:|---:|---:|---:|---:|")
