@@ -26,11 +26,30 @@ count (``live_doc_count``) are read on the driver too. The DataFrame views
 (``term_dict``, ``postings``, ``docmap``, ``field_stats``, ``deletes``)
 serve Spark-side work such as merges, compaction, Bloom building and index
 checks.
+
+Every one of those query-time reads goes through ``SEGMENT_CACHE``, a
+process-wide LRU of decoded parquet columns: a segment is opened once per
+process, as Lucene's SegmentCoreReaders open it once per reader, and each
+read then filters the decoded columns in memory with the same pyarrow
+expressions a parquet scan would take. An entry is one column of one
+partition directory (a ``kind=K/segment_id=N`` partition or the commit's
+``deletes`` directory), decoded whole on the first read that asks for
+it; a column no read asks for (``positions_enc``, ``payloads_enc`` for
+queries without them) is never decoded. The key is the directory plus the
+(name, size, mtime_ns) of its parquet files, listed on every read: Spark
+writes fresh part names, so a rebuild at the same path, a merge, a
+compaction, addIndexes and each new delete batch make a new key, and a
+Searcher sees later delete batches. The cache holds at most
+``SEGMENT_CACHE.max_bytes`` of decoded columns, least recently used out
+first (256 MB, see the constant). Driver-run plans and Spark tasks share
+the code; a reused Python worker keeps its cache across tasks and jobs.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 from functools import cached_property
 
 import numpy as np
@@ -57,26 +76,122 @@ from .smallio import read_driver_table
 __all__ = ["IndexReader", "read_slice"]
 
 # the Arrow type of every data-tree column, for the nulls of a column an
-# older index lacks; ``__filename`` is the scan's source file
+# older index lacks
 _TYPES = {f.name: f.type for f in to_arrow_schema(UNIFIED_BUILD_SCHEMA)}
-_TYPES["__filename"] = pa.string()
+# what a partition's open handle (its dataset and column names) is charged
+_META_BYTES = 4 << 10
 
 
-def _dataset(path: str) -> ds.Dataset | None:
-    """The parquet dataset of directory ``path``; None when it is missing."""
-    return ds.dataset(path, format="parquet") if os.path.isdir(path) else None
+class _ColumnCache:
+    """Process-wide LRU of decoded parquet columns, bounded by their Arrow
+    bytes (``max_bytes``); see the module docstring. Plans that run in the
+    driver process may read on several caller threads at once, hence the
+    lock; a column two threads miss together is decoded twice and cached
+    once."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self.lock = threading.Lock()
+        self.data: OrderedDict[tuple, tuple[object, int]] = OrderedDict()
+        self.bytes = 0
+
+    def get(self, key):
+        with self.lock:
+            hit = self.data.get(key)
+            if hit is None:
+                return None
+            self.data.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        """Cache ``value`` unless it alone passes the bound, evicting the
+        least recently used entries until the bytes fit."""
+        with self.lock:
+            if key in self.data or nbytes > self.max_bytes:
+                return
+            self.data[key] = (value, nbytes)
+            self.bytes += nbytes
+            while self.bytes > self.max_bytes:
+                _key, (_value, n) = self.data.popitem(last=False)
+                self.bytes -= n
+
+    def clear(self) -> None:
+        with self.lock:
+            self.data.clear()
+            self.bytes = 0
 
 
-def _read_table(data: ds.Dataset | None, columns: list[str], where) -> pa.Table:
-    """``columns`` of the rows of ``data`` that pass the pyarrow expression
-    ``where``. No dataset reads as no rows and a column an older index
-    lacks as nulls, as ``_select_compat`` reads them through Spark."""
-    if data is None:
+# The bound, per process (the driver and each Python worker). Decoded
+# columns are larger than their parquet: every column of a 1k-doc segment
+# of the benchmark corpus decodes to 1.2 MB from 0.4 MB (``kind=2``), 1.3
+# MB from 0.08 MB (``kind=1``) and 0.17 MB from 0.02 MB (docmap); a
+# 500k-term ``kind=1`` partition to 72 MB from 5 MB, 64 MB of it without
+# the singleton positions and payloads.
+SEGMENT_CACHE = _ColumnCache(256 << 20)
+
+
+def _open(path: str) -> tuple | None:
+    """(key, dataset, column names, row count) of partition directory
+    ``path``, the key being ``path`` and the (name, size, mtime_ns) of its
+    parquet files (names starting with ``.`` or ``_`` skipped, as Spark and
+    pyarrow skip them); None when it is missing or holds no file. Listing
+    the directory is the only file-system call of a warm read."""
+    try:
+        with os.scandir(path) as it:
+            files = tuple(sorted(
+                (e.name, st.st_size, st.st_mtime_ns)
+                for e in it if e.name[0] not in "._" and e.is_file()
+                for st in (e.stat(),)
+            ))
+    except FileNotFoundError:
+        return None
+    if not files:
+        return None
+    key = (path, files)
+    meta = SEGMENT_CACHE.get(key)
+    if meta is None:
+        data = ds.dataset([f"{path}/{name}" for name, _size, _mtime in files], format="parquet")
+        meta = (data, frozenset(data.schema.names), data.count_rows())
+        SEGMENT_CACHE.put(key, meta, _META_BYTES)
+    return (key, *meta)
+
+
+def _in(name: str, values, typ: pa.DataType = pa.string()):
+    """The row mask ``name IN values`` of a table, for ``_read_table``."""
+    value_set = pa.array(values, typ)
+    return lambda t: pc.is_in(t[name], value_set=value_set)
+
+
+def _span(name: str, lo: int, hi: int):
+    """The row mask ``lo <= name < hi`` of a table, for ``_read_table``."""
+    return lambda t: pc.and_(pc.greater_equal(t[name], lo), pc.less(t[name], hi))
+
+
+def _read_table(path: str, columns: list[str], where, keys: tuple[str, ...]) -> pa.Table:
+    """``columns`` of the rows of partition directory ``path`` that pass
+    ``where``, over the columns ``keys``: a pyarrow expression, or a
+    function of the table that returns its boolean row mask (the fixed-cost
+    reads of a search call use masks, which skip building an Acero plan:
+    0.2 against 0.6 ms on a 5.7k-row partition). Each column comes whole
+    from ``SEGMENT_CACHE``, decoded from parquet on a miss. A missing
+    directory reads as no rows and a column an older index lacks as nulls,
+    as ``_select_compat`` reads them through Spark."""
+    part = _open(path)
+    if part is None:
         return pa.table({c: pa.array([], _TYPES[c]) for c in columns})
-    have = [c for c in columns if c in data.schema.names or c == "__filename"]
-    out = data.to_table(columns=have, filter=where)
+    key, data, names, _rows = part
+    want = [c for c in dict.fromkeys([*keys, *columns]) if c in names]
+    got = {c: SEGMENT_CACHE.get((*key, c)) for c in want}
+    missing = [c for c, v in got.items() if v is None]
+    if missing:
+        decoded = data.to_table(columns=missing)
+        for c in missing:
+            got[c] = decoded[c].combine_chunks()
+            SEGMENT_CACHE.put((*key, c), got[c], got[c].nbytes)
+    out = pa.table(got)
+    out = out.filter(where(out) if callable(where) else where)
     for c in columns:
-        if c not in have:
+        if c not in names:
             out = out.append_column(c, pa.nulls(out.num_rows, _TYPES[c]))
     return out.select(columns)
 
@@ -150,8 +265,13 @@ def read_slice(
     singles: dict | None = None,
 ) -> tuple[dict[str, np.ndarray], np.ndarray | None, np.ndarray | None]:
     """What the search task of segment ``seg``, stored docids [lo, hi),
-    reads with pyarrow from the segment's own directories, filtered by
-    ``term IN terms`` and the docid range, straight into numpy:
+    reads from the segment's own directories, filtered by ``term IN terms``
+    and the docid range, straight into numpy. Each read filters the
+    partition's decoded columns in ``SEGMENT_CACHE`` with pyarrow; the
+    first read of a column in this process decodes it from parquet for the
+    whole partition, and later reads decode nothing while the partition's
+    files (names, sizes, mtimes: the key) are unchanged and the column is
+    not evicted (the cache's bound, 256 MB per process):
 
     - ``cols`` (of POSTINGS_COLS, without ``segment_id``) of the block rows
       overlapping the range, in ``_columns``' layout (the impact lists
@@ -168,12 +288,17 @@ def read_slice(
       which docs the range holds: compaction drops docs without
       renumbering.
 
-    Positions and payloads are read only when ``cols`` holds them."""
+    Positions and payloads are read, and decoded, only when ``cols`` holds
+    them. The deletes are keyed by the delete files present at this read,
+    so a task sees every delete batch committed before it."""
     blocks = _columns(_read_table(
-        _dataset(f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}"),
+        f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}",
         [c for c in cols if c != "segment_id"],
-        ds.field("term").isin(pa.array(terms, pa.string()))
-        & (ds.field("last_docid") >= lo) & (ds.field("first_docid") < hi),
+        lambda t: pc.and_(
+            _in("term", terms)(t),
+            pc.and_(pc.greater_equal(t["last_docid"], lo), pc.less(t["first_docid"], hi)),
+        ),
+        ("term", "first_docid", "last_docid"),
     ))
     if singles and seg in singles:
         pseudo = pseudo_rows(singles[seg], lo, hi, list(blocks))
@@ -183,19 +308,19 @@ def read_slice(
                 c: np.concatenate([v, pseudo[c][1:] + end] if c == "impact_off" else [v, pseudo[c]])
                 for c, v in blocks.items()
             }
-    docid = ds.field("docid")
-    in_range = (docid >= lo) & (docid < hi)
+    in_range = _span("docid", lo, hi)
     deleted = None
     if deletes_dir is not None:
         dels = _read_table(
-            _dataset(deletes_dir), ["docid"], (ds.field("segment_id") == seg) & in_range
+            deletes_dir, ["docid"], lambda t: pc.and_(pc.equal(t["segment_id"], seg), in_range(t)),
+            ("segment_id", "docid"),
         )
         if dels.num_rows:
             deleted = np.unique(dels["docid"].to_numpy().astype(np.int64, copy=False))
     stored = None
     if docs:
         dm = _read_table(
-            _dataset(f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}"), ["docid"], in_range
+            f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}", ["docid"], in_range, ("docid",)
         )
         stored = np.sort(dm["docid"].to_numpy().astype(np.int64, copy=False))
     return blocks, deleted, stored
@@ -357,11 +482,13 @@ class IndexReader:
 
     def doc_urls(self, seg: int, docids: np.ndarray) -> dict[int, str]:
         """stored docid → url of ``docids`` in segment ``seg``, read with
-        pyarrow from the segment's docmap partition."""
+        pyarrow from the segment's docmap partition (through
+        ``SEGMENT_CACHE``)."""
         dm = _read_table(
-            _dataset(f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}"),
+            f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}",
             ["docid", "url"],
-            ds.field("docid").isin(pa.array(docids, pa.int64())),
+            _in("docid", docids, pa.int64()),
+            ("docid",),
         )
         return dict(zip(dm["docid"].to_pylist(), dm["url"].to_pylist()))
 
@@ -369,17 +496,17 @@ class IndexReader:
         """Docs of the manifest's segments minus their distinct deleted
         docs: the docmap row counts come from parquet metadata, the deletes
         are read as they stand now (a Searcher sees later delete batches,
-        as its search tasks do)."""
+        as its search tasks do), both through ``SEGMENT_CACHE``."""
         live = [int(r["segment_id"]) for r in self.manifest_rows]
         n = 0
         for seg in live:
-            path = f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}"
-            if os.path.isdir(path):
-                n += ds.dataset(path, format="parquet").count_rows()
+            part = _open(f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}")
+            n += 0 if part is None else part[3]
         if self.deletes_dir is not None:
             dels = _read_table(
-                _dataset(self.deletes_dir), ["segment_id", "docid"],
-                ds.field("segment_id").isin(pa.array(live, pa.int32())),
+                self.deletes_dir, ["segment_id", "docid"],
+                _in("segment_id", live, pa.int32()),
+                ("segment_id",),
             )
             n -= dels.group_by(["segment_id", "docid"]).aggregate([]).num_rows
         return n
@@ -425,29 +552,38 @@ class IndexReader:
         )
 
     @cached_property
-    def _term_dicts(self) -> ds.Dataset | None:
-        """The ``kind=1`` partitions of the manifest's segments as one
-        pyarrow dataset, built once: the commit point is immutable."""
-        dirs = [
-            f"{self.index_dir}/data/kind={KIND_TERM}/segment_id={r['segment_id']}"
+    def _term_dicts(self) -> list[tuple[int, str]]:
+        """(segment_id, ``kind=1`` partition directory) of the manifest's
+        segments: the commit point is immutable."""
+        return [
+            (int(r["segment_id"]),
+             f"{self.index_dir}/data/kind={KIND_TERM}/segment_id={r['segment_id']}")
             for r in self.manifest_rows
         ]
-        parts = [ds.dataset(d, format="parquet") for d in dirs if os.path.isdir(d)]
-        return ds.dataset(parts) if parts else None
 
     def _term_rows(
-        self, where: ds.Expression, ns: str | None, cols: list[str]
+        self, where, ns: str | None, cols: list[str]
     ) -> pa.Table:
         """``cols`` of the live segments' term-dictionary rows passing
-        ``where``: the one query-time read of the term dictionary. ``ns``
-        (see ``_namespace``) confines an expansion to one field's keys;
-        None reads keys as given."""
+        ``where``, over ``term`` (see ``_read_table``): the one query-time
+        read of the term dictionary, through ``SEGMENT_CACHE``. ``ns`` (see
+        ``_namespace``) confines an expansion to one field's keys; None
+        reads keys as given. ``segment_id`` is the row's segment."""
         if ns is not None:
             where = _namespace(ns) & where
-        return _read_table(self._term_dicts, cols, where)
+        read = [c for c in cols if c != "segment_id"]
+        parts = []
+        for seg, path in self._term_dicts:
+            t = _read_table(path, read, where, ("term",))
+            if "segment_id" in cols:
+                t = t.append_column("segment_id", pa.array(np.full(t.num_rows, seg, np.int32)))
+            parts.append(t.select(cols))
+        if not parts:
+            return pa.table({c: pa.array([], _TYPES[c]) for c in cols})
+        return pa.concat_tables(parts, promote_options="permissive")
 
     def _term_sums(
-        self, where: ds.Expression, ns: str | None = None, cols: tuple[str, ...] = ("df",)
+        self, where, ns: str | None = None, cols: tuple[str, ...] = ("df",)
     ) -> pa.Table:
         """(term, *cols) of the rows ``_term_rows`` reads, summed per
         term."""
@@ -459,7 +595,7 @@ class IndexReader:
         absent from the result."""
         if not terms:
             return {}
-        return _stats(self._term_sums(ds.field("term").isin(terms), cols=("df", "ttf")))
+        return _stats(self._term_sums(_in("term", terms), cols=("df", "ttf")))
 
     def term_plan(
         self,
@@ -479,8 +615,7 @@ class IndexReader:
         cols = ["term", "df", "ttf", "singleton_docid", "singleton_freq", "singleton_norm"]
         cols += ["singleton_positions"] if positions else []
         cols += ["singleton_payloads"] if payloads else []
-        term = ds.field("term")
-        rows = self._term_rows(term.isin([*terms, *stats_only]), None, [*cols, "__filename"])
+        rows = self._term_rows(_in("term", [*terms, *stats_only]), None, [*cols, "segment_id"])
         # one numpy pass over the read; an integer column with nulls comes
         # out as float64 with NaN, exact for these counts and docids
         col = {c: rows[c].to_numpy() for c in rows.column_names}
@@ -495,11 +630,7 @@ class IndexReader:
         if stats_only:
             pulsed &= np.isin(col["term"], terms)
         singles = {c: v[pulsed] for c, v in col.items()}
-        files = singles["__filename"]
-        # a partition file's directory is segment_id=N
-        seg_of = {f: int(os.path.basename(os.path.dirname(f)).split("=")[1]) for f in set(files)}
-        seg = [seg_of[f] for f in files]
-        return stats, singletons_by_segment(singles, seg)
+        return stats, singletons_by_segment(singles, singles["segment_id"])
 
     def expand_terms(
         self,

@@ -15,7 +15,9 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 - each task reads its own rows with pyarrow (``index.reader.read_slice``,
   the per-leaf read of IndexSearcher.searchLeaf): the block rows of its
   segment's ``kind=2`` partition with ``term IN (...)`` and the docid range
-  as filters, straight into numpy columns, and its deletes; it takes its
+  as filters, straight into numpy columns, and its deletes, filtering the
+  partition's decoded columns, which the process decodes from parquet once
+  (``index.reader.SEGMENT_CACHE``); it takes its
   pulsed singletons in its docid range from the plan as pseudo blocks, so
   no task reads the term dictionary, and builds its ``SegmentContext``
   from those columns (``SegmentContext.from_columns``) with no pandas
@@ -27,9 +29,9 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 
 Where the tasks run is sized by their work, as IndexSearcher runs its leaf
 slices on the caller thread when it has no executor. The driver estimates
-the plan's work (``_driver_ms``: a read per task that grows with its docid
-span, Σdf of the plan's terms, dearer when positions are read, and the
-tasks' docs when the plan reads the docmap) from numbers it already holds.
+the plan's work (``_driver_ms``: a fixed warm read per task, Σdf of the
+plan's terms, dearer when positions are read, and the tasks' docs when the
+plan reads the docmap) from numbers it already holds.
 Run on Spark, the same work is shared by min(tasks, cores) cores after the
 measured price of one wave, WAVE_MS (``_on_driver``;
 tools/driver_cost_probe.py fits the constants):
@@ -201,23 +203,25 @@ _NO_MATCH_TERM = "\x00no-match"
 
 # Where a plan runs (``Searcher._slices``, ``_on_driver``). Fitted by
 # tools/driver_cost_probe.py over perfbench.corpus indexes of 2k / 20k /
-# 100k docs in 2 segments at once (local[4], a 4-core box, medians of 5),
-# so the estimate follows the index size. Measured / fitted ms per size:
-# no postings 21.9/23.7, 65.5/61.1, 128.8/129.5; "*" 32/25, 92/71,
-# 173/178.
-# one empty mapInPandas wave at 1 task (434 ms at 4 tasks, so for a wide
-# plan the estimate errs towards Spark)
+# 100k docs in 2 segments at once (local[4], a 4-core box), so the
+# estimate follows the index size; each constant names the run it comes
+# from.
+# one empty mapInPandas wave at 1 task, medians of 5 (434 ms at 4 tasks,
+# so for a wide plan the estimate errs towards Spark); later runs read
+# 219-352 ms
 WAVE_MS = 245.0
-# a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span.
-# Refitted once a task read only its postings partition, straight into
-# numpy, and took its pulsed singletons from the plan (``read_slice``),
-# same probe at medians of 3: the read alone takes 6.4 / 11.5 / 23.3 ms
-# per task of 1k / 5k / 25k docs with no postings to read; measured /
-# fitted ms per size with no postings 17.9/19.5, 49.9/46.2, 82.1/82.7.
-# That run read the other constants as WAVE_MS 267, POSTING_MS 0.000242,
-# POSITION_POSTING_MS 0.00192, DOC_MS 0.000395.
-TASK_MS = 9.28
-TASK_DOC_MS = 0.000456
+# a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span, priced
+# warm. Refitted once every read filtered decoded columns that the process
+# keeps (``index.reader.SEGMENT_CACHE``), same probe at medians of 3: the
+# read alone takes 0.80 / 0.55 / 1.04 ms warm and 7.1 / 6.9 / 18.4 ms cold
+# (the first touch of a segment in a process) per task of 1k / 5k / 25k
+# docs with no postings to read; measured / fitted ms per size with no
+# postings 2.6/3.3, 8.3/6.6, 6.2/6.6. The warm read no longer grows with
+# the span, so TASK_DOC_MS fits to 0. That run read the other constants as
+# WAVE_MS 243, POSTING_MS 0.000289, POSITION_POSTING_MS 0.00208,
+# DOC_MS 9.73e-05.
+TASK_MS = 1.64
+TASK_DOC_MS = 0.0
 # per posting of the plan's terms (Σdf), without / with positions:
 # refitted once every task decoded its rows in one pass
 # (codecs.blocks.decode_rows), same probe at medians of 3. Measured /
@@ -394,10 +398,10 @@ class LocalHits(ClassicDataFrame):
 
 def _driver_ms(tasks, postings: int, positions: bool, docs: bool) -> float:
     """Estimated milliseconds of the work of ``tasks``, run one after
-    another: a read per task that grows with its docid span, the postings
-    of the plan's terms (Σdf, read and decoded once for all the queries;
-    dearer when positions are read) and the tasks' docs when the plan
-    reads the docmap."""
+    another: a read per task (priced warm, its partitions' columns already
+    decoded in the process), the postings of the plan's terms (Σdf, read
+    and decoded once for all the queries; dearer when positions are read)
+    and the tasks' docs when the plan reads the docmap."""
     span = sum(hi - lo for _seg, lo, hi in tasks)
     return (
         TASK_MS * len(tasks)
@@ -928,8 +932,11 @@ class Searcher:
 
     def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """Global (docFreq, totalTermFreq) of each of ``terms``, (0, 0) for
-        a term no live segment holds. Uncached: a read costs milliseconds
-        and no Spark job, so a long-lived Searcher keeps no per-term state."""
+        a term no live segment holds. No per-term state: the read filters
+        the term dictionaries' decoded columns, which the reader's
+        byte-bounded, process-wide ``SEGMENT_CACHE`` keeps (decoded from
+        parquet on the first read), so it costs no Spark job and a
+        long-lived Searcher holds nothing per term."""
         got = self.reader.term_stats(terms)
         return {t: got.get(t, (0, 0)) for t in terms}
 

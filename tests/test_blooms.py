@@ -243,11 +243,14 @@ def test_search_tasks_read_no_term_dictionary(spark, idx, monkeypatch):
     """The term dictionary is read once per call, by the plan: a task of a
     driver-run ``search()`` opens its segment's postings partition and no
     ``kind=1`` partition, and still finds a pulsed singleton (the marker
-    doc's term), which it takes from the plan."""
+    doc's term), which it takes from the plan. The decoded-column cache is
+    emptied first, so the task's partitions are opened, not found warm."""
     import pyarrow.dataset as pads
 
     import lucene_spark.search.searcher as searcher_mod
+    from lucene_spark.index.reader import SEGMENT_CACHE
 
+    SEGMENT_CACHE.clear()
     s = Searcher(spark, idx, stopwords=STOP)
     opened, in_task = [], [False]
     real_dataset, real_read = pads.dataset, searcher_mod.read_slice

@@ -8,7 +8,10 @@ Measures, at local[--cores]:
     tasks — the fixed price of running a plan on Spark;
 (b) the read layer alone, per task of the auto span: ``read_slice`` with
     no postings to read (the fixed cost of a task) and with 2 terms, and
-    ``SegmentContext.from_columns`` on what the 2-term read returned;
+    ``SegmentContext.from_columns`` on what the 2-term read returned. The
+    no-postings read is timed warm and cold: cold runs each read on an
+    empty decoded-column cache (``index.reader.SEGMENT_CACHE``, where the
+    version has one), the first touch of a segment in a process;
 (c) the driver-side cost of the engine's own task body, ``_run_slice`` over
     the ``plan_slices`` tasks of the auto span with ``read_slice``, on
     seeded ``perfbench.corpus`` indexes (2 segments, positions indexed, as
@@ -20,7 +23,8 @@ Measures, at local[--cores]:
     against the same calls' parse, ``_slices`` and top-k merge alone (the
     call less the building of its result rows), per size.
 
-Each figure is the median of --reps timed runs after one warm-up. The
+Each figure is the median of --reps timed runs after one warm-up (the
+cold read has no warm-up). The
 constants of ``searcher._driver_ms`` are fitted over all sizes at once, so
 that the estimate follows the index size: the per-task read as a line in
 the task's docid span, then the cost per posting (per positions posting)
@@ -143,9 +147,19 @@ def driver_ms(searcher, queries: list, body, reps: int) -> tuple[float, dict]:
     }
 
 
-def read_layer_ms(searcher, terms: list[str], reps: int) -> tuple[float, float]:
+def drop_cache() -> None:
+    """Empty the reader's decoded-column cache, where the version has one."""
+    from lucene_spark.index import reader
+
+    cache = getattr(reader, "SEGMENT_CACHE", None)
+    if cache is not None:
+        cache.clear()
+
+
+def read_layer_ms(searcher, terms: list[str], reps: int) -> tuple[float, float, float]:
     """Median ms per task of ``read_slice`` of ``terms`` over the auto-span
-    tasks, and of ``SegmentContext.from_columns`` on what it read."""
+    tasks, warm and cold, and of ``SegmentContext.from_columns`` on what
+    it read."""
     _stats, singles = searcher.reader.term_plan(terms)
     tasks = plan_slices(searcher._seg_meta(), searcher._slice_span())
     cols = [c for c in POSTINGS_COLS if c not in ("positions_enc", "payloads_enc")]
@@ -157,13 +171,20 @@ def read_layer_ms(searcher, terms: list[str], reps: int) -> tuple[float, float]:
             for seg, lo, hi in tasks
         ]
 
-    got = read()
+    cold = []
+    for _ in range(reps):
+        drop_cache()
+        t0 = time.perf_counter()
+        got = read()
+        cold.append(1e3 * (time.perf_counter() - t0))
 
     def build():
         for c, (_seg, lo, hi) in zip(got, tasks):
             SegmentContext.from_columns(c, {}, lo, hi)
 
-    return _median_ms(read, reps) / len(tasks), _median_ms(build, reps) / len(tasks)
+    n = len(tasks)
+    return (statistics.median(cold) / n, _median_ms(read, reps) / n,
+            _median_ms(build, reps) / n)
 
 
 def result_rows_ms(searcher, queries: list[str], reps: int) -> tuple[float, float]:
@@ -192,7 +213,7 @@ def probe_index(searcher, args) -> dict:
                          args.reps)
 
     out = {
-        "read_none": read_layer_ms(searcher, [], args.reps)[0],
+        "read_none": read_layer_ms(searcher, [], args.reps)[:2],
         "read_2": read_layer_ms(searcher, READ_TERMS, args.reps),
         "absent": top_k(searcher._prepared("zzzzabsentterm")),
         "result": result_rows_ms(searcher, [qs for _qid, qs in reference_queries()], args.reps),
@@ -292,13 +313,13 @@ def main() -> int:
                 Searcher(spark, idx, stopwords=ENGLISH_STOP_WORDS), args
             )
         c = fit(rows)
-        print("\n| docs | docs/task | read ms/task, no postings | read ms/task, "
-              "2 terms | from_columns ms/task, 2 terms |")
-        print("|---:|---:|---:|---:|---:|")
+        print("\n| docs | docs/task | read ms/task, no postings, cold | read ms/task, "
+              "no postings | read ms/task, 2 terms | from_columns ms/task, 2 terms |")
+        print("|---:|---:|---:|---:|---:|---:|")
         for n_docs, r in rows.items():
             inp = r["absent"][1]
-            print(f"| {n_docs} | {inp['docs'] / inp['tasks']:.0f} | {r['read_none']:.2f} "
-                  f"| {r['read_2'][0]:.2f} | {r['read_2'][1]:.2f} |")
+            print(f"| {n_docs} | {inp['docs'] / inp['tasks']:.0f} | {r['read_none'][0]:.2f} "
+                  f"| {r['read_none'][1]:.2f} | {r['read_2'][1]:.2f} | {r['read_2'][2]:.2f} |")
         print("\n| docs | search(q).collect() ms | parse + _slices + merge ms "
               "| result rows ms |")
         print("|---:|---:|---:|---:|")

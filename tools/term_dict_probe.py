@@ -10,7 +10,13 @@ Then it times, per shape, the first call and the median of --reps more:
 - ``reader.expand_terms_df`` for prefix, wildcard, regexp and range
   shapes, with the arguments ``Searcher`` passes for them;
 - ``searcher._fuzzy_matches`` for ``sorting~1`` and ``sorting~2`` at
-  ``prefix_length`` 0 and 2.
+  ``prefix_length`` 0 and 2;
+- ``reader.term_plan`` of four ``NEIGHBOURS`` (a search call's
+  ``term IN (...)`` read).
+
+The first call of each shape runs on an empty decoded-column cache
+(``index.reader.SEGMENT_CACHE``, where the version has one), so it
+decodes the parquet it reads; the later calls are warm.
 
 Both names and signatures are the engine's own, so the probe runs
 unchanged on any version that has them. Each row also prints the number of
@@ -28,6 +34,7 @@ local[4] on a shared 4-core box.
 from __future__ import annotations
 
 import argparse
+import glob
 import hashlib
 import os
 import shutil
@@ -38,6 +45,7 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
@@ -111,7 +119,18 @@ def shapes(reader, searcher) -> list[tuple[str, object]]:
         for pl in (0, 2):
             out.append((f"fuzzy sorting~{edits} prefix_length={pl}",
                         lambda e=edits, p=pl: sorted(searcher._fuzzy_matches("sorting", e, p))))
+    out.append(("term IN (4 terms)",
+                lambda: sorted(reader.term_plan(NEIGHBOURS[:4])[0].items())))
     return out
+
+
+def drop_cache() -> None:
+    """Empty the reader's decoded-column cache, where the version has one."""
+    from lucene_spark.index import reader
+
+    cache = getattr(reader, "SEGMENT_CACHE", None)
+    if cache is not None:
+        cache.clear()
 
 
 def main() -> int:
@@ -143,13 +162,15 @@ def main() -> int:
             print(f"# built {path} in {build(spark, args.terms, args.seed, path):.0f} s")
         searcher = Searcher(spark, path)
         reader = searcher.reader
-        n = reader._term_dicts.count_rows() if hasattr(reader, "_term_dicts") else None
+        n = sum(pq.ParquetFile(f).metadata.num_rows
+                for f in glob.glob(f"{path}/data/kind=1/segment_id=*/*.parquet"))
         print(f"# local[{args.cores}], {n} term-dict rows; "
-              f"first call, then median of {args.reps}")
+              f"first call (cold), then median of {args.reps}")
         print("| shape | first ms | median ms | terms | digest |")
         print("|---|---:|---:|---:|---|")
         for label, call in shapes(reader, searcher):
             times = []
+            drop_cache()
             for _ in range(args.reps + 1):
                 t0 = time.perf_counter()
                 got = call()
