@@ -30,19 +30,30 @@ checks.
 Every one of those query-time reads goes through ``SEGMENT_CACHE``, a
 process-wide LRU of decoded parquet columns: a segment is opened once per
 process, as Lucene's SegmentCoreReaders open it once per reader, and each
-read then filters the decoded columns in memory with the same pyarrow
-expressions a parquet scan would take. An entry is one column of one
-partition directory (a ``kind=K/segment_id=N`` partition or the commit's
-``deletes`` directory), decoded whole on the first read that asks for
-it; a column no read asks for (``positions_enc``, ``payloads_enc`` for
-queries without them) is never decoded. The key is the directory plus the
-(name, size, mtime_ns) of its parquet files, listed on every read: Spark
-writes fresh part names, so a rebuild at the same path, a merge, a
-compaction, addIndexes and each new delete batch make a new key, and a
-Searcher sees later delete batches. The cache holds at most
-``SEGMENT_CACHE.max_bytes`` of decoded columns, least recently used out
-first (256 MB, see the constant). Driver-run plans and Spark tasks share
-the code; a reused Python worker keeps its cache across tasks and jobs.
+read then filters the decoded columns in memory. Every read states its
+filter one way: a dict of column → predicate, a pyarrow compute function
+of that column's values returning its boolean row mask; a row passes when
+every predicate does, and the dict's keys are the columns the filter
+decodes. An entry is one column of one partition directory (a
+``kind=K/segment_id=N`` partition or the commit's ``deletes`` directory),
+decoded whole on the first read that asks for it; a column no read asks
+for (``positions_enc``, ``payloads_enc`` for queries without them) is
+never decoded. The key is the directory plus the (name, size, mtime_ns)
+of its parquet files, listed on every read: Spark writes fresh part names,
+so a rebuild at the same path, a merge, a compaction, addIndexes and each
+new delete batch make a new key, and a Searcher sees later delete
+batches. The cache holds at most ``SEGMENT_CACHE.max_bytes`` of decoded
+columns, least recently used out first (256 MB, see the constant); the
+partitions' open handles (dataset, row count, each column's Arrow size
+estimated from the parquet footers) are kept beside them, outside the
+bound. Two reads cache nothing and filter each record batch as the scan
+decodes it, as a plain parquet read does, so that they cost a cold read
+every time but never more memory than the scan: a read whose columns
+would take more than a quarter of the bound, and the postings reads of a
+plan whose postings columns together pass the bound (``warm_segments``),
+which would otherwise evict each other before being read again.
+Driver-run plans and Spark tasks share the code; a reused Python worker
+keeps its cache across tasks and jobs.
 """
 
 from __future__ import annotations
@@ -50,7 +61,7 @@ from __future__ import annotations
 import os
 import threading
 from collections import OrderedDict
-from functools import cached_property
+from functools import cached_property, reduce
 
 import numpy as np
 import pyarrow as pa
@@ -73,18 +84,21 @@ from .schemas import (
 )
 from .smallio import read_driver_table
 
-__all__ = ["IndexReader", "read_slice"]
+__all__ = ["IndexReader", "read_slice", "warm_segments"]
 
 # the Arrow type of every data-tree column, for the nulls of a column an
 # older index lacks
 _TYPES = {f.name: f.type for f in to_arrow_schema(UNIFIED_BUILD_SCHEMA)}
-# what a partition's open handle (its dataset and column names) is charged
-_META_BYTES = 4 << 10
+# partition handles kept per process, one per partition
+# directory a query has read (a segment has three, plus the deletes)
+_MAX_HANDLES = 4096
 
 
 class _ColumnCache:
     """Process-wide LRU of decoded parquet columns, bounded by their Arrow
-    bytes (``max_bytes``); see the module docstring. Plans that run in the
+    bytes (``max_bytes``); see the module docstring. Beside them, apart
+    from the bound so that columns never evict them, an LRU of at most
+    ``_MAX_HANDLES`` partition handles (``_open``). Plans that run in the
     driver process may read on several caller threads at once, hence the
     lock; a column two threads miss together is decoded twice and cached
     once."""
@@ -94,6 +108,21 @@ class _ColumnCache:
         self.lock = threading.Lock()
         self.data: OrderedDict[tuple, tuple[object, int]] = OrderedDict()
         self.bytes = 0
+        self.handles: OrderedDict[tuple, tuple] = OrderedDict()
+
+    def handle(self, key, make):
+        """The handle of partition ``key``, ``make()`` on a miss."""
+        with self.lock:
+            got = self.handles.get(key)
+            if got is not None:
+                self.handles.move_to_end(key)
+                return got
+        got = make()
+        with self.lock:
+            self.handles[key] = got
+            if len(self.handles) > _MAX_HANDLES:
+                self.handles.popitem(last=False)
+        return got
 
     def get(self, key):
         with self.lock:
@@ -119,6 +148,7 @@ class _ColumnCache:
         with self.lock:
             self.data.clear()
             self.bytes = 0
+            self.handles.clear()
 
 
 # The bound, per process (the driver and each Python worker). Decoded
@@ -130,12 +160,12 @@ class _ColumnCache:
 SEGMENT_CACHE = _ColumnCache(256 << 20)
 
 
-def _open(path: str) -> tuple | None:
-    """(key, dataset, column names, row count) of partition directory
-    ``path``, the key being ``path`` and the (name, size, mtime_ns) of its
-    parquet files (names starting with ``.`` or ``_`` skipped, as Spark and
-    pyarrow skip them); None when it is missing or holds no file. Listing
-    the directory is the only file-system call of a warm read."""
+def _files(path: str) -> tuple | None:
+    """The cache key of partition directory ``path``: ``path`` and the
+    (name, size, mtime_ns) of its parquet files (names starting with ``.``
+    or ``_`` skipped, as Spark and pyarrow skip them); None when it is
+    missing or holds no file. Listing the directory is the only
+    file-system call of a warm read."""
     try:
         with os.scandir(path) as it:
             files = tuple(sorted(
@@ -145,55 +175,131 @@ def _open(path: str) -> tuple | None:
             ))
     except FileNotFoundError:
         return None
-    if not files:
+    return (path, files) if files else None
+
+
+def _footers(data: ds.Dataset) -> tuple[int, dict[str, int]]:
+    """The row count of ``data``'s files and, per column, its estimated
+    decoded Arrow bytes, from the parquet footers: the row count times the
+    width of a fixed-width type, else the column's uncompressed page bytes
+    plus its offsets."""
+    rows, pages = 0, {}
+    for frag in data.get_fragments():
+        md = frag.metadata
+        rows += md.num_rows
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                name = col.path_in_schema.split(".")[0]
+                pages[name] = pages.get(name, 0) + col.total_uncompressed_size
+    return rows, {
+        f.name: rows * _width(f.type) or pages.get(f.name, 0) + 4 * rows for f in data.schema
+    }
+
+
+def _width(typ: pa.DataType) -> int:
+    """Bytes per value of a fixed-width type, 0 for any other (or bool)."""
+    try:
+        return typ.bit_width // 8
+    except ValueError:
+        return 0
+
+
+def _open(path: str) -> tuple | None:
+    """(key, dataset, row count, column → estimated Arrow bytes) of
+    partition directory ``path`` (see ``_files``, ``_footers``); None when
+    it is missing or holds no file."""
+    key = _files(path)
+    if key is None:
         return None
-    key = (path, files)
-    meta = SEGMENT_CACHE.get(key)
-    if meta is None:
-        data = ds.dataset([f"{path}/{name}" for name, _size, _mtime in files], format="parquet")
-        meta = (data, frozenset(data.schema.names), data.count_rows())
-        SEGMENT_CACHE.put(key, meta, _META_BYTES)
-    return (key, *meta)
+
+    def make():
+        data = ds.dataset([f"{path}/{name}" for name, _size, _mtime in key[1]], format="parquet")
+        return (data, *_footers(data))
+
+    return (key, *SEGMENT_CACHE.handle(key, make))
 
 
-def _in(name: str, values, typ: pa.DataType = pa.string()):
-    """The row mask ``name IN values`` of a table, for ``_read_table``."""
+def _in(values, typ: pa.DataType = pa.string()):
+    """The predicate ``IN values``."""
     value_set = pa.array(values, typ)
-    return lambda t: pc.is_in(t[name], value_set=value_set)
+    return lambda col: pc.is_in(col, value_set=value_set)
 
 
-def _span(name: str, lo: int, hi: int):
-    """The row mask ``lo <= name < hi`` of a table, for ``_read_table``."""
-    return lambda t: pc.and_(pc.greater_equal(t[name], lo), pc.less(t[name], hi))
+def _span(lo: int, hi: int):
+    """The predicate ``lo <= value < hi``."""
+    return lambda col: pc.and_(pc.greater_equal(col, lo), pc.less(col, hi))
 
 
-def _read_table(path: str, columns: list[str], where, keys: tuple[str, ...]) -> pa.Table:
+def _all(preds: list):
+    """The predicate that holds where every one of ``preds`` holds."""
+    return lambda col: reduce(pc.and_, [p(col) for p in preds])
+
+
+def _filtered(t, where: dict):
+    """The rows of table or record batch ``t`` whose column ``c`` passes
+    ``where[c]``, for every key ``c``."""
+    masks = [pred(t[c]) for c, pred in where.items()]
+    return t.filter(reduce(pc.and_, masks)) if masks else t
+
+
+def _read_table(path: str, columns: list[str], where: dict, keep: bool = True) -> pa.Table:
     """``columns`` of the rows of partition directory ``path`` that pass
-    ``where``, over the columns ``keys``: a pyarrow expression, or a
-    function of the table that returns its boolean row mask (the fixed-cost
-    reads of a search call use masks, which skip building an Acero plan:
-    0.2 against 0.6 ms on a 5.7k-row partition). Each column comes whole
-    from ``SEGMENT_CACHE``, decoded from parquet on a miss. A missing
-    directory reads as no rows and a column an older index lacks as nulls,
-    as ``_select_compat`` reads them through Spark."""
+    ``where`` (column → predicate, see the module docstring). Each column
+    comes whole from ``SEGMENT_CACHE``, decoded from parquet on a miss,
+    unless ``keep`` is unset or the columns read would take more than a
+    quarter of the bound: then the scan filters each batch it decodes and
+    caches nothing. A missing directory reads as no rows and a column an
+    older index lacks as nulls, as ``_select_compat`` reads them through
+    Spark."""
     part = _open(path)
     if part is None:
         return pa.table({c: pa.array([], _TYPES[c]) for c in columns})
-    key, data, names, _rows = part
-    want = [c for c in dict.fromkeys([*keys, *columns]) if c in names]
-    got = {c: SEGMENT_CACHE.get((*key, c)) for c in want}
-    missing = [c for c, v in got.items() if v is None]
-    if missing:
-        decoded = data.to_table(columns=missing)
-        for c in missing:
-            got[c] = decoded[c].combine_chunks()
-            SEGMENT_CACHE.put((*key, c), got[c], got[c].nbytes)
-    out = pa.table(got)
-    out = out.filter(where(out) if callable(where) else where)
+    key, data, _rows, sizes = part
+    want = [c for c in dict.fromkeys([*where, *columns]) if c in sizes]
+    if not keep or sum(sizes[c] for c in want) > SEGMENT_CACHE.max_bytes // 4:
+        out = pa.Table.from_batches(
+            [_filtered(b, where) for b in data.to_batches(columns=want)],
+            pa.schema([data.schema.field(c) for c in want]),
+        )
+    else:
+        got = {c: SEGMENT_CACHE.get((*key, c)) for c in want}
+        missing = [c for c, v in got.items() if v is None]
+        if missing:
+            decoded = data.to_table(columns=missing)
+            for c in missing:
+                got[c] = decoded[c]
+                SEGMENT_CACHE.put((*key, c), got[c], got[c].nbytes)
+        out = _filtered(pa.table(got), where)
     for c in columns:
-        if c not in names:
+        if c not in sizes:
             out = out.append_column(c, pa.nulls(out.num_rows, _TYPES[c]))
     return out.select(columns)
+
+
+def warm_segments(index_dir: str, segs, cols: list[str]) -> set[int] | None:
+    """The segments of ``segs`` whose postings columns ``read_slice``
+    reads for ``cols`` this process holds decoded, under the key of the
+    files there now, so that their reads decode no parquet. A segment this
+    process has not opened is cold (and opening it is left to the read).
+    None when those columns of all the opened ``segs`` together pass the
+    bound: read in turn and cached, each would evict another before it is
+    read again, so the plan's reads should not be kept
+    (``read_slice(keep=False)``)."""
+    warm, total = set(), 0
+    for seg in segs:
+        key = _files(f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}")
+        with SEGMENT_CACHE.lock:
+            meta = None if key is None else SEGMENT_CACHE.handles.get(key)
+        if meta is None:
+            continue
+        sizes = meta[2]
+        want = [c for c in ("term", "first_docid", "last_docid", *cols) if c in sizes]
+        total += sum(sizes[c] for c in want)
+        if all(SEGMENT_CACHE.get((*key, c)) is not None for c in want):
+            warm.add(seg)
+    return warm if total <= SEGMENT_CACHE.max_bytes else None
 
 
 def _columns(t: pa.Table) -> dict[str, np.ndarray]:
@@ -218,25 +324,19 @@ def _columns(t: pa.Table) -> dict[str, np.ndarray]:
     return out
 
 
-def _prefix(prefix: str) -> ds.Expression:
-    """``term`` starts with ``prefix``, as comparisons that row-group
-    min/max statistics prune on (UTF-8 byte order is code point order)."""
-    term = ds.field("term")
-    nxt = ord(prefix[-1]) + 1
-    nxt += 0x800 if nxt == 0xD800 else 0  # no string holds a surrogate
-    upper = term < prefix[:-1] + chr(nxt) if nxt <= 0x10FFFF else pc.starts_with(term, prefix)
-    return (term >= prefix) & upper
+def _prefix(prefix: str):
+    """The predicate: a term starts with ``prefix``."""
+    return lambda term: pc.starts_with(term, prefix)
 
 
-def _namespace(ns: str) -> ds.Expression:
-    """The keys of namespace ``ns``: a field's ``"<field>\\x1f"`` without
-    the field's existence key (``exists_term``), or, for ``""``, the keys of
-    a classic single-field index, i.e. none holding FIELD_SEP (field and
-    feature keys)."""
-    term = ds.field("term")
+def _namespace(ns: str):
+    """The predicate of the keys of namespace ``ns``: a field's
+    ``"<field>\\x1f"`` without the field's existence key (``exists_term``),
+    or, for ``""``, the keys of a classic single-field index, i.e. none
+    holding FIELD_SEP (field and feature keys)."""
     if ns:
-        return (term > ns) & (term < ns[:-1] + chr(ord(FIELD_SEP) + 1))
-    return ~pc.match_substring(term, FIELD_SEP)
+        return lambda term: pc.and_(pc.starts_with(term, ns), pc.not_equal(term, ns))
+    return lambda term: pc.invert(pc.match_substring(term, FIELD_SEP))
 
 
 def _summed(rows: pa.Table, cols) -> pa.Table:
@@ -263,6 +363,7 @@ def read_slice(
     cols: list[str],
     docs: bool = False,
     singles: dict | None = None,
+    keep: bool = True,
 ) -> tuple[dict[str, np.ndarray], np.ndarray | None, np.ndarray | None]:
     """What the search task of segment ``seg``, stored docids [lo, hi),
     reads from the segment's own directories, filtered by ``term IN terms``
@@ -271,7 +372,11 @@ def read_slice(
     first read of a column in this process decodes it from parquet for the
     whole partition, and later reads decode nothing while the partition's
     files (names, sizes, mtimes: the key) are unchanged and the column is
-    not evicted (the cache's bound, 256 MB per process):
+    not evicted (the cache's bound, 256 MB per process). The postings
+    partition is filtered while it is scanned, and not cached, when
+    ``keep`` is unset (a plan whose postings columns pass the bound, see
+    ``warm_segments``) or its read columns would take more than a quarter
+    of the bound:
 
     - ``cols`` (of POSTINGS_COLS, without ``segment_id``) of the block rows
       overlapping the range, in ``_columns``' layout (the impact lists
@@ -294,11 +399,12 @@ def read_slice(
     blocks = _columns(_read_table(
         f"{index_dir}/data/kind={KIND_BLOCK}/segment_id={seg}",
         [c for c in cols if c != "segment_id"],
-        lambda t: pc.and_(
-            _in("term", terms)(t),
-            pc.and_(pc.greater_equal(t["last_docid"], lo), pc.less(t["first_docid"], hi)),
-        ),
-        ("term", "first_docid", "last_docid"),
+        {
+            "term": _in(terms),
+            "last_docid": lambda col: pc.greater_equal(col, lo),
+            "first_docid": lambda col: pc.less(col, hi),
+        },
+        keep,
     ))
     if singles and seg in singles:
         pseudo = pseudo_rows(singles[seg], lo, hi, list(blocks))
@@ -308,19 +414,19 @@ def read_slice(
                 c: np.concatenate([v, pseudo[c][1:] + end] if c == "impact_off" else [v, pseudo[c]])
                 for c, v in blocks.items()
             }
-    in_range = _span("docid", lo, hi)
+    in_range = _span(lo, hi)
     deleted = None
     if deletes_dir is not None:
         dels = _read_table(
-            deletes_dir, ["docid"], lambda t: pc.and_(pc.equal(t["segment_id"], seg), in_range(t)),
-            ("segment_id", "docid"),
+            deletes_dir, ["docid"],
+            {"segment_id": lambda col: pc.equal(col, seg), "docid": in_range},
         )
         if dels.num_rows:
             deleted = np.unique(dels["docid"].to_numpy().astype(np.int64, copy=False))
     stored = None
     if docs:
         dm = _read_table(
-            f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}", ["docid"], in_range, ("docid",)
+            f"{index_dir}/data/kind={KIND_DOC}/segment_id={seg}", ["docid"], {"docid": in_range}
         )
         stored = np.sort(dm["docid"].to_numpy().astype(np.int64, copy=False))
     return blocks, deleted, stored
@@ -487,8 +593,7 @@ class IndexReader:
         dm = _read_table(
             f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}",
             ["docid", "url"],
-            _in("docid", docids, pa.int64()),
-            ("docid",),
+            {"docid": _in(docids, pa.int64())},
         )
         return dict(zip(dm["docid"].to_pylist(), dm["url"].to_pylist()))
 
@@ -501,12 +606,11 @@ class IndexReader:
         n = 0
         for seg in live:
             part = _open(f"{self.index_dir}/data/kind={KIND_DOC}/segment_id={seg}")
-            n += 0 if part is None else part[3]
+            n += 0 if part is None else part[2]
         if self.deletes_dir is not None:
             dels = _read_table(
                 self.deletes_dir, ["segment_id", "docid"],
-                _in("segment_id", live, pa.int32()),
-                ("segment_id",),
+                {"segment_id": _in(live, pa.int32())},
             )
             n -= dels.group_by(["segment_id", "docid"]).aggregate([]).num_rows
         return n
@@ -562,19 +666,20 @@ class IndexReader:
         ]
 
     def _term_rows(
-        self, where, ns: str | None, cols: list[str]
+        self, where: list, ns: str | None, cols: list[str]
     ) -> pa.Table:
-        """``cols`` of the live segments' term-dictionary rows passing
-        ``where``, over ``term`` (see ``_read_table``): the one query-time
-        read of the term dictionary, through ``SEGMENT_CACHE``. ``ns`` (see
-        ``_namespace``) confines an expansion to one field's keys; None
-        reads keys as given. ``segment_id`` is the row's segment."""
+        """``cols`` of the live segments' term-dictionary rows whose term
+        passes every predicate of ``where`` (see ``_read_table``): the one
+        query-time read of the term dictionary, through ``SEGMENT_CACHE``.
+        ``ns`` (see ``_namespace``) confines an expansion to one field's
+        keys; None reads keys as given. ``segment_id`` is the row's
+        segment."""
         if ns is not None:
-            where = _namespace(ns) & where
+            where = [_namespace(ns), *where]
         read = [c for c in cols if c != "segment_id"]
         parts = []
         for seg, path in self._term_dicts:
-            t = _read_table(path, read, where, ("term",))
+            t = _read_table(path, read, {"term": _all(where)} if where else {})
             if "segment_id" in cols:
                 t = t.append_column("segment_id", pa.array(np.full(t.num_rows, seg, np.int32)))
             parts.append(t.select(cols))
@@ -583,7 +688,7 @@ class IndexReader:
         return pa.concat_tables(parts, promote_options="permissive")
 
     def _term_sums(
-        self, where, ns: str | None = None, cols: tuple[str, ...] = ("df",)
+        self, where: list, ns: str | None = None, cols: tuple[str, ...] = ("df",)
     ) -> pa.Table:
         """(term, *cols) of the rows ``_term_rows`` reads, summed per
         term."""
@@ -595,7 +700,7 @@ class IndexReader:
         absent from the result."""
         if not terms:
             return {}
-        return _stats(self._term_sums(_in("term", terms), cols=("df", "ttf")))
+        return _stats(self._term_sums([_in(terms)], cols=("df", "ttf")))
 
     def term_plan(
         self,
@@ -615,7 +720,7 @@ class IndexReader:
         cols = ["term", "df", "ttf", "singleton_docid", "singleton_freq", "singleton_norm"]
         cols += ["singleton_positions"] if positions else []
         cols += ["singleton_payloads"] if payloads else []
-        rows = self._term_rows(_in("term", [*terms, *stats_only]), None, [*cols, "segment_id"])
+        rows = self._term_rows([_in([*terms, *stats_only])], None, [*cols, "segment_id"])
         # one numpy pass over the read; an integer column with nulls comes
         # out as float64 with NaN, exact for these counts and docids
         col = {c: rows[c].to_numpy() for c in rows.column_names}
@@ -668,20 +773,21 @@ class IndexReader:
         ``high``, so an open-ended range stays inside its field.
         ``pattern`` is an anchored RE2 regex; one RE2 rejects raises
         ValueError."""
-        term = ds.field("term")
-        where = pc.scalar(True)
+        where = []
         if prefix:
-            where &= _prefix(prefix)
+            where.append(_prefix(prefix))
         if low is not None:
-            where &= term >= low if include_low else term > low
+            above = pc.greater_equal if include_low else pc.greater
+            where.append(lambda term: above(term, low))
         if high is not None:
-            where &= term <= high if include_high else term < high
+            below = pc.less_equal if include_high else pc.less
+            where.append(lambda term: below(term, high))
         if pattern is not None:
             try:  # compile once up front, so a bad pattern names itself
                 pc.match_substring_regex(pa.array([""]), pattern)
             except pa.ArrowInvalid as e:
                 raise ValueError(f"invalid term pattern {pattern!r}: {e}") from None
-            where &= pc.match_substring_regex(term, pattern)
+            where.append(lambda term: pc.match_substring_regex(term, pattern))
         key = prefix or low or high or ""
         sums = self._term_sums(where, key[: key.find(FIELD_SEP) + 1])
         top = sums.sort_by([("df", "descending"), ("term", "ascending")]).slice(0, max_terms)
@@ -703,13 +809,12 @@ class IndexReader:
         invariants, filter the read; ``osa_many`` verifies what is left."""
         from ..search.fuzzy import osa_many
 
-        length = pc.utf8_length(ds.field("term"))
-        where = (length >= len(ns) + max(0, len(target) - max_edits)) & (
-            length <= len(ns) + len(target) + max_edits
-        )
+        band = _span(len(ns) + max(0, len(target) - max_edits),
+                     len(ns) + len(target) + max_edits + 1)
+        where = [lambda term: band(pc.utf8_length(term))]
         head = ns + target[: min(prefix_len, len(target))]
         if head:
-            where &= _prefix(head)
+            where.append(_prefix(head))
         sums = self._term_sums(where, ns).sort_by("term")
         words = pc.utf8_slice_codeunits(sums["term"], len(ns))
         edits = osa_many(target, words.to_numpy(zero_copy_only=False), max_edits,

@@ -29,9 +29,11 @@ Execution model = Lucene's per-leaf search + TopDocs.merge, Spark-first:
 
 Where the tasks run is sized by their work, as IndexSearcher runs its leaf
 slices on the caller thread when it has no executor. The driver estimates
-the plan's work (``_driver_ms``: a fixed warm read per task, Σdf of the
-plan's terms, dearer when positions are read, and the tasks' docs when the
-plan reads the docmap) from numbers it already holds.
+the plan's work (``_driver_ms``: a read per task, a fixed one when this
+process already holds its segment's decoded columns and else a cold one
+that grows with its docid span, Σdf of the plan's terms, dearer when
+positions are read, and the tasks' docs when the plan reads the docmap)
+from numbers it already holds.
 Run on Spark, the same work is shared by min(tasks, cores) cores after the
 measured price of one wave, WAVE_MS (``_on_driver``;
 tools/driver_cost_probe.py fits the constants):
@@ -123,7 +125,7 @@ from pyspark.sql.types import (
 )
 
 from ..index.builder import FIELD_SEP, exists_term, field_term
-from ..index.reader import IndexReader, read_slice
+from ..index.reader import IndexReader, read_slice, warm_segments
 from ..index.schemas import POSTINGS_COLS, SEARCH_HIT_SCHEMA, URL_HIT_SCHEMA
 from .fuzzy import fuzzy_similarity
 from .query import (
@@ -210,18 +212,22 @@ _NO_MATCH_TERM = "\x00no-match"
 # so for a wide plan the estimate errs towards Spark); later runs read
 # 219-352 ms
 WAVE_MS = 245.0
-# a task's read: TASK_MS + TASK_DOC_MS per doc of its docid span, priced
-# warm. Refitted once every read filtered decoded columns that the process
-# keeps (``index.reader.SEGMENT_CACHE``), same probe at medians of 3: the
-# read alone takes 0.80 / 0.55 / 1.04 ms warm and 7.1 / 6.9 / 18.4 ms cold
-# (the first touch of a segment in a process) per task of 1k / 5k / 25k
+# a task's read: TASK_MS, the warm read of columns the process keeps
+# decoded (``index.reader.SEGMENT_CACHE``), which does not grow with the
+# span, plus, for a task whose segment this process does not hold decoded
+# (``index.reader.warm_segments``: none of a plan whose columns pass the
+# bound, nor a segment too large to cache), the cold read's extra
+# COLD_TASK_MS + COLD_DOC_MS per doc of its docid span. Refitted once
+# every read filtered decoded columns, same probe at medians of 3: the
+# read alone takes 0.59 / 0.54 / 1.10 ms warm and 6.76 / 4.87 / 12.55 ms
+# cold (fitted extra 4.85 / 5.91 / 11.18 ms) per task of 1k / 5k / 25k
 # docs with no postings to read; measured / fitted ms per size with no
-# postings 2.6/3.3, 8.3/6.6, 6.2/6.6. The warm read no longer grows with
-# the span, so TASK_DOC_MS fits to 0. That run read the other constants as
-# WAVE_MS 243, POSTING_MS 0.000289, POSITION_POSTING_MS 0.00208,
-# DOC_MS 9.73e-05.
-TASK_MS = 1.64
-TASK_DOC_MS = 0.0
+# postings, warm, 2.1/3.4, 4.7/6.8, 9.4/6.8. That run read the other
+# constants as WAVE_MS 294, POSTING_MS 0.000275, POSITION_POSTING_MS
+# 0.00218, DOC_MS 0.000102.
+TASK_MS = 1.69
+COLD_TASK_MS = 4.59
+COLD_DOC_MS = 0.000264
 # per posting of the plan's terms (Σdf), without / with positions:
 # refitted once every task decoded its rows in one pass
 # (codecs.blocks.decode_rows), same probe at medians of 3. Measured /
@@ -396,16 +402,20 @@ class LocalHits(ClassicDataFrame):
         return self._rows.empty
 
 
-def _driver_ms(tasks, postings: int, positions: bool, docs: bool) -> float:
+def _driver_ms(tasks, warm: set, postings: int, positions: bool, docs: bool) -> float:
     """Estimated milliseconds of the work of ``tasks``, run one after
-    another: a read per task (priced warm, its partitions' columns already
-    decoded in the process), the postings of the plan's terms (Σdf, read
-    and decoded once for all the queries; dearer when positions are read)
-    and the tasks' docs when the plan reads the docmap."""
+    another in this process: a read per task, dearer by a cold read that
+    grows with its docid span unless its segment is in ``warm`` (its
+    postings columns already decoded here, ``index.reader.warm_segments``),
+    the postings of the plan's terms (Σdf, read and decoded once for all
+    the queries; dearer when positions are read) and the tasks' docs when
+    the plan reads the docmap."""
     span = sum(hi - lo for _seg, lo, hi in tasks)
+    cold = [hi - lo for seg, lo, hi in tasks if seg not in warm]
     return (
         TASK_MS * len(tasks)
-        + (TASK_DOC_MS + (DOC_MS if docs else 0.0)) * span
+        + COLD_TASK_MS * len(cold) + COLD_DOC_MS * sum(cold)
+        + (DOC_MS if docs else 0.0) * span
         + (POSITION_POSTING_MS if positions else POSTING_MS) * postings
     )
 
@@ -1360,6 +1370,10 @@ class Searcher:
         # column pruning: positions/payloads are read only for queries that
         # consume them
         skip = {"positions_enc": not positions, "payloads_enc": not payloads}
+        cols = [c for c in POSTINGS_COLS if not skip.get(c)]
+        # which segments this process holds decoded; None when the plan's
+        # postings columns pass the cache's bound, so its reads keep none
+        warm = warm_segments(self.reader.index_dir, sorted({s for s, _lo, _hi in tasks}), cols)
         # whether deletes exist is the reader's view: the first tombstone
         # write (add_deletes_by_query) runs these tasks while it creates
         # the directory
@@ -1368,9 +1382,10 @@ class Searcher:
             self.reader.index_dir,
             self.reader.deletes_dir,
             terms=terms,
-            cols=[c for c in POSTINGS_COLS if not skip.get(c)],
+            cols=cols,
             docs=docs,
             singles={s: v for s, v in singles.items() if s in seg_meta},
+            keep=warm is not None,
         )
         tag = self._cache_tag()
         run = partial(
@@ -1379,7 +1394,7 @@ class Searcher:
         )
         postings = sum(df for df, _ttf in tstats.values())
         n = len(tasks)
-        work = _driver_ms(tasks, postings, positions, docs)
+        work = _driver_ms(tasks, warm or set(), postings, positions, docs)
         if _on_driver(work, n, self.spark.sparkContext.defaultParallelism):
             ids = pd.DataFrame({"id": np.arange(n)})
             return pd.concat(list(run([ids])), ignore_index=True)

@@ -58,8 +58,8 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -306,11 +306,15 @@ class NGramSpellChecker:
             if self.b_end > 0:
                 clauses.append((pc.ends_with, grams[-1], self.b_end))
             clauses.extend((pc.match_substring, g, 1.0) for g in grams)
-        w = pc.utf8_slice_codeunits(ds.field("term"), len(ns))
-        match_any = pc.scalar(False)
-        for pred, g, _b in clauses:
-            match_any |= pred(w, g)
-        cand = s.reader._term_sums(match_any & (w != word), ns)
+
+        def candidate(term):
+            w = pc.utf8_slice_codeunits(term, len(ns))
+            match_any = pa.scalar(False)
+            for pred, g, _b in clauses:
+                match_any = pc.or_(match_any, pred(w, g))
+            return pc.and_(match_any, pc.not_equal(w, word))
+
+        cand = s.reader._term_sums([candidate], ns)
         words = pc.utf8_slice_codeunits(cand["term"], len(ns))
         freqs = cand["df"].to_numpy()
         if max_hits is not None:

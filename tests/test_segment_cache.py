@@ -9,6 +9,7 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as papq
 import pytest
 
+import lucene_spark.index.reader as reader_mod
 import lucene_spark.search.searcher as searcher_mod
 from lucene_spark.constants import ENGLISH_STOP_WORDS as STOP
 from lucene_spark.fixtures import generate_webtext
@@ -16,7 +17,8 @@ from lucene_spark.index import build_index
 from lucene_spark.index.compaction import compact_deletes
 from lucene_spark.index.deletes import add_deletes_by_query, add_deletes_by_url
 from lucene_spark.index.merge import merge_segments
-from lucene_spark.index.reader import SEGMENT_CACHE
+from lucene_spark.index.reader import SEGMENT_CACHE, warm_segments
+from lucene_spark.index.schemas import POSTINGS_COLS
 from lucene_spark.oracle.pyindex import PyIndex, topk_sort
 from lucene_spark.search import Searcher
 
@@ -129,25 +131,97 @@ def test_searcher_sees_a_later_delete_batch(spark, corpora, tmp_path, monkeypatc
 
 
 def test_cache_stays_inside_its_bound(spark, corpora, tmp_path, monkeypatch):
-    """With a bound smaller than what the calls decode, the cached bytes
-    never pass it, they are the sum of the entries, and the answers hold."""
+    """With a bound one byte short of what the calls decode, the cached
+    bytes never pass it, they are the sum of the entries, and the answers
+    hold."""
     rows = corpora[1]
     d = str(tmp_path / "idx")
     _build(spark, d, rows, segments=4)
     s = Searcher(spark, d, stopwords=STOP)
     monkeypatch.setattr(searcher_mod, "WAVE_MS", float("inf"))
+    calls = [lambda: _answers(s)]
+    for q in QUERIES:
+        calls += [lambda q=q: s.search(q, k=K, with_url=True).collect(),
+                  lambda q=q: s.count(q), lambda: s.search("*", k=K).collect()]
     SEGMENT_CACHE.clear()
     want = _answers(s)
-    full = SEGMENT_CACHE.bytes
-    monkeypatch.setattr(SEGMENT_CACHE, "max_bytes", full // 3)
+    for call in calls:
+        call()
+    monkeypatch.setattr(SEGMENT_CACHE, "max_bytes", SEGMENT_CACHE.bytes - 1)
     SEGMENT_CACHE.clear()
-    for q in QUERIES * 2:
-        for call in (lambda: s.search(q, k=K, with_url=True).collect(),
-                     lambda: s.count(q), lambda: s.search("*", k=K).collect()):
-            call()
-            assert SEGMENT_CACHE.bytes <= SEGMENT_CACHE.max_bytes
-            assert SEGMENT_CACHE.bytes == sum(n for _v, n in SEGMENT_CACHE.data.values())
+    cached = {}
+    for call in calls * 2:
+        call()
+        assert SEGMENT_CACHE.bytes <= SEGMENT_CACHE.max_bytes
+        assert SEGMENT_CACHE.bytes == sum(n for _v, n in SEGMENT_CACHE.data.values())
+        cached.update((k, n) for k, (_v, n) in SEGMENT_CACHE.data.items())
+    # columns were cached, and more of them than fit at once
+    assert sum(cached.values()) > SEGMENT_CACHE.max_bytes
     assert _answers(s) == want
+    SEGMENT_CACHE.clear()
+
+
+def test_partitions_too_large_to_cache_are_filtered_while_scanned(
+    spark, corpora, tmp_path, monkeypatch
+):
+    """With a bound smaller than any partition's read columns, every read
+    filters its scan and caches no column, the answers hold, and no
+    segment counts as warm when placing a plan."""
+    rows = corpora[1]
+    d = str(tmp_path / "idx")
+    _build(spark, d, rows)
+    s = Searcher(spark, d, stopwords=STOP)
+    monkeypatch.setattr(searcher_mod, "WAVE_MS", float("inf"))
+    SEGMENT_CACHE.clear()
+    want = _answers(s)
+    segs = sorted(s.reader.doc_counts)
+    cols = [c for c in POSTINGS_COLS if c not in ("positions_enc", "payloads_enc")]
+    assert warm_segments(d, segs, cols) == set(segs)
+    monkeypatch.setattr(SEGMENT_CACHE, "max_bytes", 4096)
+    SEGMENT_CACHE.clear()
+    assert _answers(s) == want
+    assert not SEGMENT_CACHE.data
+    assert warm_segments(d, segs, cols) is None
+    SEGMENT_CACHE.clear()
+
+
+def test_warm_segments_follow_what_the_cache_holds(spark, corpora, tmp_path, monkeypatch):
+    """A segment is warm once a read has decoded its postings columns, and
+    cold again after the cache is emptied; when the plan's postings
+    columns together pass the bound, no segment counts as warm and the
+    plan's reads keep none of them."""
+    rows = corpora[0]
+    d = str(tmp_path / "idx")
+    _build(spark, d, rows, segments=6)
+    s = Searcher(spark, d, stopwords=STOP)
+    monkeypatch.setattr(searcher_mod, "WAVE_MS", float("inf"))
+    segs = sorted(s.reader.doc_counts)
+    cols = [c for c in POSTINGS_COLS if c not in ("positions_enc", "payloads_enc")]
+    SEGMENT_CACHE.clear()
+    assert warm_segments(d, segs, cols) == set()
+    s.search("w0001", k=K).collect()
+    assert warm_segments(d, segs, cols) == set(segs)
+    # positions were never read
+    assert warm_segments(d, segs, [*cols, "positions_enc"]) == set()
+    # a bound one byte short of the plan's columns: none is warm for the
+    # whole plan, every one for a plan of five, each segment's columns
+    # fitting a quarter of the bound
+    sizes = [reader_mod._open(f"{d}/data/kind=2/segment_id={seg}")[3] for seg in segs]
+    each = [sum(z[c] for c in ("term", "first_docid", "last_docid", *cols) if c in z)
+            for z in sizes]
+    monkeypatch.setattr(SEGMENT_CACHE, "max_bytes", sum(each) - 1)
+    assert max(each) <= SEGMENT_CACHE.max_bytes // 4
+    assert warm_segments(d, segs, cols) is None
+    assert warm_segments(d, segs[:5], cols) == set(segs[:5])
+    # such a plan (a match-all, over every segment), its partitions
+    # opened, reads past the cache: its postings columns are not kept
+    SEGMENT_CACHE.clear()
+    for seg in segs:
+        reader_mod._open(f"{d}/data/kind=2/segment_id={seg}")
+    top = s.search("*", k=K).collect()
+    assert not [k for k in SEGMENT_CACHE.data if "/kind=2/" in k[0]]
+    monkeypatch.setattr(SEGMENT_CACHE, "max_bytes", 256 << 20)
+    assert s.search("*", k=K).collect() == top
     SEGMENT_CACHE.clear()
 
 

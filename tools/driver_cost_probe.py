@@ -24,14 +24,15 @@ Measures, at local[--cores]:
     call less the building of its result rows), per size.
 
 Each figure is the median of --reps timed runs after one warm-up (the
-cold read has no warm-up). The
-constants of ``searcher._driver_ms`` are fitted over all sizes at once, so
-that the estimate follows the index size: the per-task read as a line in
+cold read has no warm-up). The constants of ``searcher._driver_ms`` are
+fitted over all sizes at once, so that the estimate follows the index
+size: the warm per-task read, the cold read's extra per task as a line in
 the task's docid span, then the cost per posting (per positions posting)
-and per docmap doc by least squares on what the earlier terms leave. The
-batch is measured against the fit, not fitted. It prints the read layer's
-ms per task, the result layer, each size's measured against fitted ms,
-then the constants; WAVE_MS is the 1-task wave.
+and per docmap doc by least squares on what the read leaves. The batch is
+measured against the fit, not fitted. It prints the read layer's ms per
+task (cold, the fitted cold extra, warm), the result layer, each size's
+measured against fitted ms (warm), then the constants; WAVE_MS is the
+1-task wave.
 
 Usage:
     python tools/driver_cost_probe.py [--docs 2000,20000,100000] [--seed 1]
@@ -77,6 +78,7 @@ from lucene_spark.search.searcher import (  # noqa: E402
     _top_k_body,
     plan_slices,
 )
+from probe_cache import drop_cache  # noqa: E402
 
 K = 10
 # the 2-term read of (b): a hot and a mid-frequency fixture term
@@ -145,15 +147,6 @@ def driver_ms(searcher, queries: list, body, reps: int) -> tuple[float, dict]:
         "docs": sum(hi - lo for _s, lo, hi in tasks),
         "positions": positions,
     }
-
-
-def drop_cache() -> None:
-    """Empty the reader's decoded-column cache, where the version has one."""
-    from lucene_spark.index import reader
-
-    cache = getattr(reader, "SEGMENT_CACHE", None)
-    if cache is not None:
-        cache.clear()
 
 
 def read_layer_ms(searcher, terms: list[str], reps: int) -> tuple[float, float, float]:
@@ -238,23 +231,28 @@ def probe_index(searcher, args) -> dict:
 
 def fit(rows: dict) -> dict[str, float]:
     """The constants of ``searcher._driver_ms``, fitted over every size:
-    the per-task read as a line in the task's docid span, then each
-    per-unit cost by least squares through the origin on what the earlier
-    terms leave (a posting of a term, a positions posting, a docmap doc)."""
-    absent = [r["absent"] for r in rows.values()]
-    slope, icept = np.polyfit(
-        [inp["docs"] / inp["tasks"] for _ms, inp in absent],
-        [ms / inp["tasks"] for ms, inp in absent], 1,
-    )
-    c = {"TASK_MS": max(0.0, icept), "TASK_DOC_MS": max(0.0, slope)}
-
-    def read(inp):
-        return c["TASK_MS"] * inp["tasks"] + c["TASK_DOC_MS"] * inp["docs"]
+    the warm per-task read by least squares through the origin on the
+    tasks of the (warm) absent-term plans; the cold read's extra per task
+    as a line in the task's docid span through the cold less the warm
+    no-postings read; then each per-unit cost through the origin on what
+    the read leaves (a posting of a term, a positions posting, a docmap
+    doc)."""
 
     def through_origin(points):
         x = np.array([p[0] for p in points], dtype=float)
         y = np.array([p[1] for p in points], dtype=float)
         return max(0.0, float(x @ y / (x @ x)))
+
+    c = {"TASK_MS": through_origin([(inp["tasks"], ms) for ms, inp in
+                                    (r["absent"] for r in rows.values())])}
+    slope, icept = np.polyfit(
+        [r["absent"][1]["docs"] / r["absent"][1]["tasks"] for r in rows.values()],
+        [r["read_none"][0] - r["read_none"][1] for r in rows.values()], 1,
+    )
+    c["COLD_TASK_MS"], c["COLD_DOC_MS"] = max(0.0, icept), max(0.0, slope)
+
+    def read(inp):
+        return c["TASK_MS"] * inp["tasks"]
 
     for key, pos in (("POSTING_MS", False), ("POSITION_POSTING_MS", True)):
         c[key] = through_origin([
@@ -269,11 +267,12 @@ def fit(rows: dict) -> dict[str, float]:
 
 
 def predicted(c: dict, inp: dict, docs: bool = False) -> float:
-    """``searcher._driver_ms`` of ``inp`` under the constants ``c``."""
+    """``searcher._driver_ms`` of ``inp``, every segment warm, under the
+    constants ``c``."""
     per = c["POSITION_POSTING_MS" if inp["positions"] else "POSTING_MS"]
     return (
         c["TASK_MS"] * inp["tasks"]
-        + (c["TASK_DOC_MS"] + (c["DOC_MS"] if docs else 0.0)) * inp["docs"]
+        + (c["DOC_MS"] if docs else 0.0) * inp["docs"]
         + per * inp["postings"]
     )
 
@@ -313,12 +312,15 @@ def main() -> int:
                 Searcher(spark, idx, stopwords=ENGLISH_STOP_WORDS), args
             )
         c = fit(rows)
-        print("\n| docs | docs/task | read ms/task, no postings, cold | read ms/task, "
-              "no postings | read ms/task, 2 terms | from_columns ms/task, 2 terms |")
-        print("|---:|---:|---:|---:|---:|---:|")
+        print("\n| docs | docs/task | read ms/task, no postings, cold | cold less warm, "
+              "fitted | read ms/task, no postings | read ms/task, 2 terms "
+              "| from_columns ms/task, 2 terms |")
+        print("|---:|---:|---:|---:|---:|---:|---:|")
         for n_docs, r in rows.items():
             inp = r["absent"][1]
-            print(f"| {n_docs} | {inp['docs'] / inp['tasks']:.0f} | {r['read_none'][0]:.2f} "
+            per = inp["docs"] / inp["tasks"]
+            print(f"| {n_docs} | {per:.0f} | {r['read_none'][0]:.2f} "
+                  f"| {c['COLD_TASK_MS'] + c['COLD_DOC_MS'] * per:.2f} "
                   f"| {r['read_none'][1]:.2f} | {r['read_2'][1]:.2f} | {r['read_2'][2]:.2f} |")
         print("\n| docs | search(q).collect() ms | parse + _slices + merge ms "
               "| result rows ms |")

@@ -55,6 +55,7 @@ sys.path.insert(0, ROOT)
 os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from lucene_spark.search.query import wildcard_to_regex  # noqa: E402
+from probe_cache import drop_cache  # noqa: E402
 
 WORDS_PER_DOC = 50
 COMMON = 1000  # the Zipf-drawn head of the vocabulary
@@ -124,15 +125,6 @@ def shapes(reader, searcher) -> list[tuple[str, object]]:
     return out
 
 
-def drop_cache() -> None:
-    """Empty the reader's decoded-column cache, where the version has one."""
-    from lucene_spark.index import reader
-
-    cache = getattr(reader, "SEGMENT_CACHE", None)
-    if cache is not None:
-        cache.clear()
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--terms", type=int, default=1_000_000)
@@ -163,7 +155,8 @@ def main() -> int:
         searcher = Searcher(spark, path)
         reader = searcher.reader
         n = sum(pq.ParquetFile(f).metadata.num_rows
-                for f in glob.glob(f"{path}/data/kind=1/segment_id=*/*.parquet"))
+                for r in reader.manifest_rows
+                for f in glob.glob(f"{path}/data/kind=1/segment_id={r['segment_id']}/*.parquet"))
         print(f"# local[{args.cores}], {n} term-dict rows; "
               f"first call (cold), then median of {args.reps}")
         print("| shape | first ms | median ms | terms | digest |")
